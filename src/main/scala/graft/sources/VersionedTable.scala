@@ -5,6 +5,9 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField, StructType}
+
+import VersionedTable.CommitConflict
 
 /** Transactional versioned table — the reference's appendable
   * versioned block DB (`block/mod.rs:152-293`) generalized into the
@@ -20,8 +23,8 @@ import org.apache.spark.sql.functions._
   *     to a temp file and atomically renamed to `v%06d.manifest`;
   *     `CREATE_NEW` rename semantics double as optimistic concurrency
   *     control — two writers committing the same next version race on
-  *     the rename and exactly one wins ([[CommitConflict]] for the
-  *     loser). The `LATEST` pointer is then swapped atomically.
+  *     the rename and exactly one wins ([[VersionedTable.CommitConflict]]
+  *     for the loser). The `LATEST` pointer is then swapped atomically.
   *   - **Snapshot isolation / time travel**: readers resolve a
   *     version once and read only that manifest's immutable files;
   *     later commits never disturb them. [[read]] accepts an explicit
@@ -42,11 +45,18 @@ import org.apache.spark.sql.functions._
   *   - **Retention**: [[vacuum]] deletes data files unreferenced by
   *     the kept manifests (age out old versions without breaking
   *     pinned readers inside the retention window).
+  *   - **Metadata from the commit**: a version's schema is derived
+  *     from its commits — each written bucket directory's schema is
+  *     the committed rows' schema, recorded as the write happens. A
+  *     footer is read only for a directory this instance did not
+  *     write (another writer's, or one from before a restart), once per
+  *     directory. The set of populated buckets is the set of
+  *     `__bucket=` directories the write created, so a commit without
+  *     zone maps runs no job beyond its write. The on-disk format
+  *     (manifests, stats sidecars, data layout) is the same either way.
   */
 class VersionedTable(spark: SparkSession, baseDir: String, nBuckets: Int = 16) {
   require(nBuckets > 0)
-
-  final class CommitConflict(msg: String) extends RuntimeException(msg)
 
   private val manifestDir = Paths.get(baseDir, "_manifests")
   private val latestFile = Paths.get(baseDir, "LATEST")
@@ -100,15 +110,38 @@ class VersionedTable(spark: SparkSession, baseDir: String, nBuckets: Int = 16) {
     * per-dir `spark.read.parquet` + unionByName would pay one driver
     * file-listing/footer pass per bucket dir (O(nBuckets) analysis
     * time on every action). */
-  private def unionDirs(dirs: Seq[String], schema: org.apache.spark.sql.types.StructType): DataFrame =
+  private def unionDirs(dirs: Seq[String], schema: StructType): DataFrame =
     spark.read.schema(schema).parquet(dirs: _*)
 
   /** the widened schema of `version` = union of every bucket dir's
-    * schema (driver-side footer reads only — one file per dir, never
-    * data). Partial reads ([[lookup]], [[readPruned]]) conform to this
+    * schema. Partial reads ([[lookup]], [[readPruned]]) conform to this
     * so their result schema never depends on WHICH buckets were probed
-    * after an evolving merge. */
-  private val schemaCache = scala.collection.concurrent.TrieMap.empty[Int, org.apache.spark.sql.types.StructType]
+    * after an evolving merge. Safe to memoize: a committed version's
+    * files are immutable. */
+  private val schemaCache = scala.collection.concurrent.TrieMap.empty[Int, StructType]
+
+  /** schema of each bucket directory (relative path), as a parquet read
+    * reports it. A commit records the dirs it writes; a dir this
+    * instance did not write (another writer's, or one from before a
+    * restart) costs one footer read, once. Data dirs are writer-unique
+    * and immutable, so an entry never goes stale. */
+  private val dirSchemas = scala.collection.concurrent.TrieMap.empty[String, StructType]
+
+  private[sources] def cachedVersions: Set[Int] = schemaCache.keySet.toSet
+  private[sources] def cachedDirs: Set[String] = dirSchemas.keySet.toSet
+
+  private def dirSchema(rel: String): StructType =
+    dirSchemas.getOrElseUpdate(rel, spark.read.parquet(s"$baseDir/$rel").schema)
+
+  /** `t` as a parquet read of it returns it: Spark writes every field,
+    * array element and map value as nullable. */
+  private def asNullable(t: DataType): DataType = t match {
+    case s: StructType =>
+      StructType(s.fields.map(f => f.copy(dataType = asNullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(asNullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(asNullable(m.keyType), asNullable(m.valueType), valueContainsNull = true)
+    case other => other
+  }
 
   /** widest of two column types under the standard numeric ladder,
     * kept WITHIN a domain (byte→short→int→long, or float→double);
@@ -116,8 +149,7 @@ class VersionedTable(spark: SparkSession, baseDir: String, nBuckets: Int = 16) {
     * widening: long/int values above 2^24 lose precision as float
     * (2^53 as double), so cross-domain re-types are rejected rather
     * than silently accepted. */
-  private def widest(a: org.apache.spark.sql.types.DataType,
-                     b: org.apache.spark.sql.types.DataType): Option[org.apache.spark.sql.types.DataType] = {
+  private def widest(a: DataType, b: DataType): Option[DataType] = {
     import org.apache.spark.sql.types._
     if (a == b) Some(a)
     else {
@@ -132,15 +164,14 @@ class VersionedTable(spark: SparkSession, baseDir: String, nBuckets: Int = 16) {
     }
   }
 
-  private def versionSchema(v: Int): org.apache.spark.sql.types.StructType =
-    // safe to memoize: a committed version's files are immutable
+  private def versionSchema(v: Int): StructType =
     schemaCache.getOrElseUpdate(v, {
-      val fields = scala.collection.mutable.LinkedHashMap[String, org.apache.spark.sql.types.StructField]()
+      val fields = scala.collection.mutable.LinkedHashMap[String, StructField]()
       // sorted dirs + widest-type merge: the result must not depend on
       // Map iteration order when bucket dirs disagree on a column's
       // width (a narrower cached type can fail or mis-read wider files)
       readManifest(v).values.toSeq.distinct.sorted.foreach { rel =>
-        spark.read.parquet(s"$baseDir/$rel").schema.fields.foreach { f =>
+        dirSchema(rel).fields.foreach { f =>
           fields.get(f.name) match {
             case None => fields(f.name) = f
             case Some(prev) =>
@@ -149,7 +180,7 @@ class VersionedTable(spark: SparkSession, baseDir: String, nBuckets: Int = 16) {
           }
         }
       }
-      org.apache.spark.sql.types.StructType(fields.values.toSeq)
+      StructType(fields.values.toSeq)
     })
 
   /** snapshot read at `version` (default: latest); None if the table
@@ -205,11 +236,12 @@ class VersionedTable(spark: SparkSession, baseDir: String, nBuckets: Int = 16) {
         .collect().map(_.getInt(0)).toSet
       val dirs = man.filter { case (b, _) => want.contains(b) }.values.toSeq.distinct
       val full = versionSchema(v)
-      val hit =
-        if (dirs.isEmpty)
-          spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], full)
-        else unionDirs(dirs.map(rel => s"$baseDir/$rel"), full)
-      hit.join(broadcast(probe.select(keys.map(col): _*).distinct()), keys, "left_semi")
+      // no probed bucket holds rows: the empty frame needs no semi join
+      // (and an empty version's schema has no key column to join on)
+      if (dirs.isEmpty)
+        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], full)
+      else unionDirs(dirs.map(rel => s"$baseDir/$rel"), full)
+        .join(broadcast(probe.select(keys.map(col): _*).distinct()), keys, "left_semi")
     }
 
   /** Write `rows` (which must hold the COMPLETE contents of every
@@ -217,8 +249,8 @@ class VersionedTable(spark: SparkSession, baseDir: String, nBuckets: Int = 16) {
     * untouched buckets inherit the base manifest's files. `statsCols`
     * (numeric) get per-bucket min/max zone maps recorded for
     * [[readPruned]]. Returns the committed version. Throws
-    * [[CommitConflict]] if another writer committed first (retry
-    * against the new base). */
+    * [[VersionedTable.CommitConflict]] if another writer committed
+    * first (retry against the new base). */
   def commit(rows: DataFrame, keys: Seq[String], expectedBase: Option[Int],
              statsCols: Seq[String] = Nil): Int =
     commitInternal(rows, keys, expectedBase, forcedDirty = None, statsCols)
@@ -259,10 +291,12 @@ class VersionedTable(spark: SparkSession, baseDir: String, nBuckets: Int = 16) {
       // …and may not RE-TYPE an existing column (unionByName would
       // silently coerce and make later multi-dir reads depend on which
       // bucket's file is seen first); widening along the numeric
-      // ladder is the one allowed change
+      // ladder is the one allowed change. Stored types are nullable
+      // throughout, so nested nullability is not a re-type.
       updates.schema.fields.foreach { f =>
         baseSchema.find(_.name == f.name).foreach { bf =>
-          require(widest(bf.dataType, f.dataType).contains(f.dataType),
+          val t = asNullable(f.dataType)
+          require(widest(bf.dataType, t).contains(t),
             s"merge re-types column ${f.name}: ${bf.dataType.simpleString} -> " +
               s"${f.dataType.simpleString}; existing columns must keep or widen their type")
         }
@@ -337,31 +371,39 @@ class VersionedTable(spark: SparkSession, baseDir: String, nBuckets: Int = 16) {
     val dataRel = f"data/v$next%06d-" + java.util.UUID.randomUUID().toString.take(8)
 
     // shuffle rows to their bucket before the partitioned write — one
-    // file per bucket instead of (tasks × buckets) small files; persist
-    // so the write and the bucket-stats pass share one computation
+    // file per bucket instead of (tasks × buckets) small files
     val shuffled = rows.withColumn("__bucket", bucketCol(keys))
       .repartition(nBuckets, col("__bucket"))
-    val bucketed = (if (layoutSort.nonEmpty)
-      shuffled.sortWithinPartitions(col("__bucket") +: layoutSort: _*)
-    else shuffled).persist()
+    val laidOut =
+      if (layoutSort.nonEmpty) shuffled.sortWithinPartitions(col("__bucket") +: layoutSort: _*)
+      else shuffled
+    // persist only when the zone-map pass re-reads the shuffle output
+    val bucketed = if (statsCols.nonEmpty) laidOut.persist() else laidOut
     bucketed.write.partitionBy("__bucket").mode("overwrite").parquet(s"$baseDir/$dataRel")
 
-    // which buckets actually hold rows, and their zone-map ranges —
-    // answered from the persisted shuffle output, no file read-back
-    val aggs = statsCols.flatMap(c => Seq(min(col(c)).as(s"__mn_$c"), max(col(c)).as(s"__mx_$c")))
-    val perBucket = bucketed.groupBy("__bucket")
-      .agg(count(lit(1)).as("__n"), aggs: _*)
-      .collect()
-    bucketed.unpersist()
-    val populated = perBucket.map(_.getAs[Int]("__bucket")).toSet
+    // which buckets actually hold rows: the partitioned write creates a
+    // `__bucket=` directory for exactly those (none for an empty write)
+    val populated = {
+      val ls = Files.list(Paths.get(baseDir, dataRel))
+      try ls.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("__bucket=")).map(_.stripPrefix("__bucket=").toInt).toSet
+      finally ls.close()
+    }
+    // zone-map ranges, answered from the persisted shuffle output
+    val perBucket =
+      if (statsCols.isEmpty) Array.empty[org.apache.spark.sql.Row]
+      else try {
+        val aggs = statsCols.flatMap(c => Seq(min(col(c)).as(s"__mn_$c"), max(col(c)).as(s"__mx_$c")))
+        bucketed.groupBy("__bucket").agg(aggs.head, aggs.tail: _*).collect()
+      } finally bucketed.unpersist()
     // dirty = buckets this version logically rewrote (a merge that
     // deletes a bucket empty still owns that bucket); dirty-but-empty
     // buckets simply vanish from the manifest
     val dirty = forcedDirty.getOrElse(populated)
 
     val inherited = base.map(readManifest).getOrElse(Map.empty)
-    val mapping = inherited.filter { case (b, _) => !dirty.contains(b) } ++
-      (dirty & populated).map(b => b -> s"$dataRel/__bucket=$b")
+    val fresh = (dirty & populated).map(b => b -> s"$dataRel/__bucket=$b").toMap
+    val mapping = inherited.filter { case (b, _) => !dirty.contains(b) } ++ fresh
 
     val inheritedStats = base.map(readStats).getOrElse(Map.empty)
       .filter { case ((b, _), _) => !dirty.contains(b) }
@@ -392,6 +434,9 @@ class VersionedTable(spark: SparkSession, baseDir: String, nBuckets: Int = 16) {
         Files.deleteIfExists(tmp)
         throw new CommitConflict(s"version $next already committed by another writer")
     }
+    // the written dirs' schema is the rows' schema, as a read returns it
+    val writtenSchema = asNullable(rows.schema).asInstanceOf[StructType]
+    fresh.values.foreach(dirSchemas.put(_, writtenSchema))
     // stats sidecar lands after the manifest we won; readers that see
     // the manifest before the stats just skip pruning (never wrong)
     if (stats.nonEmpty) {
@@ -486,7 +531,7 @@ class VersionedTable(spark: SparkSession, baseDir: String, nBuckets: Int = 16) {
     // appearing where there was NULL reads as an update
     val dataCols = (pre.toSeq ++ post.toSeq).flatMap(_.columns)
       .distinct.filterNot(keys.contains)
-    val colType: Map[String, org.apache.spark.sql.types.DataType] =
+    val colType: Map[String, DataType] =
       (pre.toSeq ++ post.toSeq).flatMap(_.schema.fields).map(f => f.name -> f.dataType).toMap
     def packed(dfO: Option[DataFrame], as: String): DataFrame = {
       val df = dfO.getOrElse(schema.filter(lit(false)))
@@ -517,10 +562,13 @@ class VersionedTable(spark: SparkSession, baseDir: String, nBuckets: Int = 16) {
         Files.walk(dir).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
       }
     }
-    // data paths are per-version bucket dirs; delete dead ones
+    // data paths are per-version bucket dirs; delete dead ones, and
+    // release their cached schemas with them
     val dead = drop.flatMap(v => readManifest(v).values).toSet -- live
-    dead.foreach(deleteDir)
-    drop.foreach { v => Files.deleteIfExists(manifestPath(v)); Files.deleteIfExists(statsPath(v)) }
+    dead.foreach { rel => deleteDir(rel); dirSchemas.remove(rel) }
+    drop.foreach { v =>
+      Files.deleteIfExists(manifestPath(v)); Files.deleteIfExists(statsPath(v)); schemaCache.remove(v)
+    }
     if (removeOrphans) {
       val dataRoot = Paths.get(baseDir, "data")
       if (Files.exists(dataRoot)) {
@@ -534,4 +582,10 @@ class VersionedTable(spark: SparkSession, baseDir: String, nBuckets: Int = 16) {
       }
     }
   }
+}
+
+object VersionedTable {
+  /** thrown to the writer that loses an optimistic commit race (stale
+    * base, or another writer created the same next version first) */
+  final class CommitConflict(msg: String) extends RuntimeException(msg)
 }

@@ -37,6 +37,7 @@ import graft.core.{Bytes, Commitments, MerkleFrontier}
 class BlockDbAppender(spark: SparkSession, sinkDir: String, quarantineDir: String) {
 
   import spark.implicits._
+  import BlockDbAppender.State
 
   private def sinkHasData: Boolean = {
     val p = Paths.get(sinkDir)
@@ -48,10 +49,6 @@ class BlockDbAppender(spark: SparkSession, sinkDir: String, quarantineDir: Strin
   }
 
   // ---------------------------------------------------------- frontier
-  /** (last accepted block, incremental Merkle spine) — everything the
-    * next append needs; size ≤ 1 + log2(n) hashes. */
-  private final case class State(last: Option[Long], tree: MerkleFrontier)
-
   private val statePath = Paths.get(sinkDir, "_frontier.txt")
 
   /** in-memory state between micro-batches of one appender lifetime;
@@ -146,6 +143,12 @@ class BlockDbAppender(spark: SparkSession, sinkDir: String, quarantineDir: Strin
       .option("checkpointLocation", checkpointDir)
       .foreachBatch((df: DataFrame, id: Long) => processBatch(df, id))
       .start()
+}
+
+object BlockDbAppender {
+  /** (last accepted block, incremental Merkle spine) — everything the
+    * next append needs; size ≤ 1 + log2(n) hashes. */
+  private final case class State(last: Option[Long], tree: MerkleFrontier)
 }
 
 /** Streaming event-time aggregation (the general streaming surface the

@@ -61,7 +61,7 @@ class StorageDbMaintainer(spark: SparkSession, baseDir: String, nBuckets: Int = 
         table.commit(rows, keys, base)
         done = true
       } catch {
-        case _: table.CommitConflict if attempts < 5 => // re-read base, retry
+        case _: VersionedTable.CommitConflict if attempts < 5 => // re-read base, retry
       }
     }
   }

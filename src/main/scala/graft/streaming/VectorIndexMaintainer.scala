@@ -73,7 +73,7 @@ class VectorIndexMaintainer(spark: SparkSession, baseDir: String,
         table.merge(assigned, Seq("vec_id"), table.currentVersion())
         done = true
       } catch {
-        case _: table.CommitConflict if attempts < 5 => // retry on new base
+        case _: VersionedTable.CommitConflict if attempts < 5 => // retry on new base
       }
     }
     // first ingest records the drift baseline the refresh decision
@@ -116,7 +116,7 @@ class VectorIndexMaintainer(spark: SparkSession, baseDir: String,
       nSnap = snap.count()
       fresh = IvfIndex.train(snap, nlist, seed)
       try committed = table.overwrite(IvfIndex.assign(snap, fresh), Seq("vec_id"), base)
-      catch { case _: table.CommitConflict if attempts < 5 => }
+      catch { case _: VersionedTable.CommitConflict if attempts < 5 => }
     }
     try QuantizerStore.save(spark, quantizerDir, Some(fresh), None, nSnap)
     catch { case _: RuntimeException => () } // lost save race; serving model still swaps

@@ -1,9 +1,11 @@
 package graft.sources
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.JobCounter
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, MetadataBuilder, StructType}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -83,7 +85,7 @@ class VersionedTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     // writer 2 commits against base 0 first
     t2.commit(df(Seq((1L, "a", 2L))), Seq("k"), Some(0))
     // writer 1 still believes base is 0 → stale base detected
-    intercept[t1.CommitConflict] {
+    intercept[VersionedTable.CommitConflict] {
       t1.commit(df(Seq((1L, "a", 3L))), Seq("k"), Some(0))
     }
     assert(t1.read().get.head().getLong(2) == 2L, "winner's data visible")
@@ -402,5 +404,110 @@ class VersionedTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     t.overwrite(df(Seq((1L, "a", 1L), (2L, "b", 2L), (3L, "c", 3L))), Seq("k"), Some(0))
     assert(t.read().get.count() == 3, "overwrite must not inherit stale buckets")
     assert(t.read(Some(0)).get.count() == 32, "pinned readers keep the old snapshot")
+  }
+
+  /** bucket → data path of a committed version, read off its manifest */
+  private def manifest(dir: String, v: Int): Map[Int, String] =
+    Files.readString(Paths.get(dir, f"_manifests/v$v%06d.manifest")).split("\n").filter(_.nonEmpty)
+      .map { line => val Array(b, p) = line.split("\t", 2); b.toInt -> p }.toMap
+
+  test("schemas derived from commits equal a cold instance's footer reads, version by version") {
+    val s2 = spark
+    import s2.implicits._
+    val dir = Files.createTempDirectory("vt-parity").toString
+    val keys = Seq("k")
+    val t = new VersionedTable(spark, dir, nBuckets = 4)
+    // `tags` and `meta` are non-nullable down to their elements and
+    // fields in the frame; a parquet read reports them all nullable.
+    // `name` carries field metadata, which the files keep.
+    val label = new MetadataBuilder().putString("comment", "label").build()
+    def rowsOf(ks: Seq[Long]): DataFrame = ks.map(i => (i, s"n$i", i.toInt)).toDF("k", "name", "v")
+      .withColumn("name", col("name").as("name", label))
+      .withColumn("tags", array(lit(1), col("v")))
+      .withColumn("meta", struct(lit("m").as("s"), col("k").as("k2")))
+    val probe = Seq(0L, 3L, 5L, 9L, 4096L).toDF("k")
+
+    def schemas(x: VersionedTable, v: Int): Seq[(String, StructType)] =
+      Seq(
+        "read" -> x.read(Some(v)).get.schema,
+        "readPruned" -> x.readPruned("v", BigDecimal(2), BigDecimal(6), Some(v)).get.schema,
+        "readPruned(none)" -> x.readPruned("v", BigDecimal(-9), BigDecimal(-1), Some(v)).get.schema,
+        "lookup" -> x.lookup(probe, keys, Some(v)).get.schema) ++
+        (if (v == 0) Nil
+         else Seq("diff" -> x.diff(keys, v - 1, v).schema, "cdc" -> x.cdc(keys, v - 1, v).schema))
+    def assertParity(v: Int): Unit = {
+      assert(t.currentVersion().contains(v))
+      val cold = new VersionedTable(spark, dir, nBuckets = 4)
+      val (warm, fresh) = (schemas(t, v), schemas(cold, v))
+      warm.zip(fresh).foreach { case ((what, a), (_, b)) => assert(a == b, s"v$v $what") }
+    }
+
+    t.commit(rowsOf(0L until 16L), keys, None, statsCols = Seq("v"))
+    assertParity(0)
+    assert(t.read().get.schema("tags").dataType == ArrayType(IntegerType, containsNull = true))
+    assert(t.read().get.schema("name").metadata == label)
+
+    // additive evolution: the merge adds `tag`
+    t.merge(rowsOf(Seq(3L, 100L)).withColumn("tag", lit("hot")), keys, Some(0))
+    assertParity(1)
+
+    // widening int → long, and a delete that empties bucket 0
+    val bucket0 = t.read().get.filter(t.bucketCol(keys) === 0).select("k").as[Long].collect().toSeq
+    val widenKey = (0L until 16L).find(k => !bucket0.contains(k)).get
+    assert(bucket0.nonEmpty)
+    t.merge(rowsOf(widenKey +: bucket0).withColumn("v", col("v").cast("long") + 1000000000000L)
+      .withColumn("tag", lit("wide")).withColumn("del", col("k").isin(bucket0: _*)),
+      keys, Some(1), deleteCol = Some("del"))
+    assertParity(2)
+    assert(!manifest(dir, 2).contains(0), "the emptied bucket leaves the manifest")
+    assert(t.read().get.schema("v").dataType == LongType)
+
+    // an empty snapshot owns every bucket and populates none
+    t.overwrite(rowsOf(Nil), keys, Some(2))
+    assertParity(3)
+    assert(manifest(dir, 3).isEmpty && t.dataDirCount(Some(3)) == 0)
+    assert(t.read().get.count() == 0)
+
+    // repopulate (a version without buckets has nothing to compact),
+    // then compact
+    t.overwrite(rowsOf(0L until 12L).withColumn("v", col("v").cast("long")).withColumn("tag", lit("x")),
+      keys, Some(3))
+    assertParity(4)
+    t.compact(keys, Some(4), statsCols = Seq("v"))
+    assertParity(5)
+    assert(t.read().get.count() == 12)
+  }
+
+  test("a commit without zone maps submits fewer jobs than the same commit with them") {
+    val rows = df((0L until 64L).map(i => (i, s"n$i", i)))
+    def commitJobs(statsCols: Seq[String]): (VersionedTable, Int) = {
+      val t = new VersionedTable(spark, Files.createTempDirectory("vt-jobs").toString, nBuckets = 8)
+      (t, JobCounter.count(spark.sparkContext)(t.commit(rows, Seq("k"), None, statsCols = statsCols))._2)
+    }
+    val (plain, plainJobs) = commitJobs(Nil)
+    val (zoned, zonedJobs) = commitJobs(Seq("v"))
+    assert(plainJobs < zonedJobs, s"$plainJobs jobs without statsCols, $zonedJobs with")
+    // both bucket sets (listed vs aggregated) name the same 8 buckets
+    assert(plain.read().get.count() == 64 && zoned.read().get.count() == 64)
+    assert(plain.bucketsFor("v", BigDecimal(0), BigDecimal(64)) == (0 until 8))
+    assert(zoned.bucketsFor("v", BigDecimal(0), BigDecimal(64)) == (0 until 8))
+  }
+
+  test("vacuum releases the cached schemas of the versions and directories it deletes") {
+    val dir = Files.createTempDirectory("vt-cache").toString
+    val t = new VersionedTable(spark, dir, nBuckets = 2)
+    val n = 6
+    (0 until n).foreach { i =>
+      // every commit rewrites both buckets, so each version's dirs are its own
+      t.commit(df((0L until 8L).map(k => (k, s"n$k", i.toLong))), Seq("k"), if (i == 0) None else Some(i - 1))
+      assert(t.read().get.count() == 8)
+    }
+    assert(t.cachedVersions == (0 until n).toSet)
+    val k = 2
+    t.vacuum(keepVersions = k)
+    val kept = (n - k until n).toSet
+    assert(t.cachedVersions.subsetOf(kept), t.cachedVersions)
+    assert(t.cachedDirs.subsetOf(kept.flatMap(v => manifest(dir, v).values)), t.cachedDirs)
+    assert(t.read().get.count() == 8)
   }
 }

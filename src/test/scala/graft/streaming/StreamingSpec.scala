@@ -3,6 +3,7 @@ package graft.streaming
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import org.apache.spark.JobCounter
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -188,6 +189,23 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(c.getAs[Long]("block_number") == changedBlock)
     assert(Bytes.toHex(c.getAs[Array[Byte]]("contract")) == Bytes.toHex(Fixtures.contractAddr(0)))
     assert(c.getAs[String]("change_type") == "update")
+  }
+
+  test("storage-DB maintainer: the committed snapshot is planned without a Spark job") {
+    import graft.pipeline.{Fixtures, ZkPipeline}
+    val cfg = Fixtures.Cfg(nBlocks = 4)
+    val all = Fixtures.entriesSeq(cfg)
+    val maintainer = new StorageDbMaintainer(spark, tmp("sdb-jobs"))
+    val (early, late) = all.partition(_.block_number < cfg.firstBlock + 2)
+    maintainer.processBatch(spark.createDataFrame(early), 0L)
+    maintainer.processBatch(spark.createDataFrame(late), 1L)
+    // the version's schema comes from the commits that wrote it — no
+    // footer-read job per bucket directory before the first action
+    val (snap, jobs) = JobCounter.count(spark.sparkContext)(maintainer.current().get)
+    assert(jobs == 0, s"$jobs jobs to build current()")
+    val want = ZkPipeline.storageDb(spark.createDataFrame(all))
+    assert(snap.columns.toSeq == want.columns.toSeq)
+    assert(snap.count() == want.count())
   }
 
   test("streaming windowed aggregation with watermark emits correct counts") {
