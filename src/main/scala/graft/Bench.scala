@@ -4,18 +4,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.expressions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // ANSI pinned ON (Spark 4 default, but the correctness gate must
-      // not silently lose it to a default flip or ambient conf): abort
-      // on overflow/bad cast instead of silent-null arithmetic.
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session(s"local[$cpus]", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     // warmup: absorb JVM/codegen/parquet-reader init outside the timed
     // loop so the first query's number measures the query

@@ -1,22 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local replica of the driver's t1 smoke: `SparkEntry.entry` must
   * return >0 rows on sf0.001. */
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // ANSI pinned ON (Spark 4 default, but the correctness gate must
-      // not silently lose it to a default flip or ambient conf): abort
-      // on overflow/bad cast instead of silent-null arithmetic.
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session("local[4]", 4)
     spark.sparkContext.setLogLevel("WARN")
     val df = SparkEntry.entry(spark)
     val n = df.count()

@@ -33,6 +33,7 @@ object Graft {
       // on overflow/bad cast instead of silent-null arithmetic.
       .config("spark.sql.ansi.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
       .getOrCreate()
     graft.functions.GraftFunctions.register(s)
     s

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps `explain("formatted")` for the headline queries to a markdown
   * file — the plan-review artifact (pushdown, broadcast, partial
   * aggregation, top-k) the scale claims rest on.
@@ -12,18 +10,7 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.lift(1).getOrElse("PLANS_r1.md")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new graft.expressions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // ANSI pinned ON (Spark 4 default, but the correctness gate must
-      // not silently lose it to a default flip or ambient conf): abort
-      // on overflow/bad cast instead of silent-null arithmetic.
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session("local[4]", 4)
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
     sb.append("# Physical plans (headline queries, `explain formatted`)\n\n")

@@ -1,9 +1,18 @@
 package graft.core
 
-/** Filesystem helpers shared by the query registries' temp-dir
-  * lifecycles (bucketed-table scratch, ORC round trips, store publish
-  * staging). One definition so a fix (symlink handling, delete
-  * logging) propagates to every caller.
+import java.nio.ByteBuffer
+import java.nio.channels.FileChannel
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Path, StandardCopyOption, StandardOpenOption}
+
+/** Filesystem helpers shared by every on-disk store, and the ONE
+  * publish primitive every commit point is built on ([[publishFile]]);
+  * a guard spec keeps raw renames out of the rest of the tree.
+  * Multi-directory stores publish through a generation pointer
+  * ([[publishGeneration]]): `root/CURRENT` names the live generation
+  * `root/g<N>/` plus one caller payload line, so a whole store switches
+  * with a single rename and a crash at any step leaves the old
+  * generation live — no recovery step ever runs on read.
   */
 object Fs {
 
@@ -15,5 +24,85 @@ object Fs {
     if (!java.nio.file.Files.isSymbolicLink(f.toPath))
       Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
     f.delete(): Unit
+  }
+
+  /** spec hook: called before each [[publishFile]] step (`write`,
+    * `force`, `move`); a fault-injection spec makes it throw. */
+  @volatile private[graft] var beforeStep: String => Unit = _ => ()
+
+  /** Atomically publish `bytes` at `path`: a hidden temp file in the
+    * same directory is written, forced to disk, then moved into place,
+    * so a reader sees the previous complete file or the next one —
+    * never an empty or torn one. With `replace = false` an existing
+    * `path` fails the publish with `FileAlreadyExistsException`, so one
+    * of several racing writers wins. (An atomic rename replaces an
+    * existing file on Linux; `link(2)` is just as atomic and refuses
+    * an existing name.) */
+  def publishFile(path: Path, bytes: Array[Byte], replace: Boolean): Unit = {
+    val dir = Files.createDirectories(path.toAbsolutePath.getParent)
+    val tmp = Files.createTempFile(dir, s".${path.getFileName}.", ".tmp")
+    try {
+      beforeStep("write")
+      val ch = FileChannel.open(tmp, StandardOpenOption.WRITE)
+      try {
+        val buf = ByteBuffer.wrap(bytes)
+        while (buf.hasRemaining) ch.write(buf)
+        beforeStep("force")
+        ch.force(true)
+      } finally ch.close()
+      beforeStep("move")
+      if (replace) Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+      else Files.createLink(path, tmp)
+    } finally Files.deleteIfExists(tmp): Unit
+  }
+
+  /** Rename the complete directory `tmp` onto `target`, which must not
+    * exist yet. False if `target` exists (another builder won the
+    * race); `tmp` is then discarded. */
+  def publishDir(tmp: Path, target: Path): Boolean =
+    try { Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE); true }
+    catch {
+      case _: java.io.IOException if Files.exists(target) =>
+        deleteRecursively(tmp.toFile); false
+    }
+
+  /** a store root's live generation: number and payload line. */
+  final case class Generation(n: Long, payload: String) {
+    def dir(root: Path): Path = root.resolve(s"g$n")
+  }
+
+  /** the generation `root/CURRENT` points at; None if never published. */
+  def currentGeneration(root: Path): Option[Generation] = {
+    val p = root.resolve("CURRENT")
+    if (!Files.exists(p)) None
+    else Files.readString(p, UTF_8).split("\n", -1) match {
+      case Array(n, payload, "") if n.nonEmpty && n.forall(_.isDigit) => Some(Generation(n.toLong, payload))
+      case _ => throw new IllegalStateException(s"unreadable generation pointer at $p")
+    }
+  }
+
+  /** point `root/CURRENT` at `g`: a writer that changed a generation in
+    * place (an append) republishes it with its new payload. */
+  def repoint(root: Path, g: Generation): Unit = {
+    require(!g.payload.contains('\n'), "the payload is one line")
+    publishFile(root.resolve("CURRENT"), s"${g.n}\n${g.payload}\n".getBytes(UTF_8), replace = true)
+  }
+
+  /** Publish a new generation of `root`: `write` fills the empty
+    * directory `g<N+1>` (reading the live one meanwhile, if it likes)
+    * and returns the payload; the pointer swaps to it and every other
+    * generation is deleted — a leftover of a publish that died before
+    * its swap included. Single writer per root; readers of the replaced
+    * generation must be drained first. */
+  def publishGeneration(root: Path)(write: Path => String): Generation = {
+    val n = currentGeneration(root).fold(1L)(_.n + 1)
+    val dir = Generation(n, "").dir(root)
+    deleteRecursively(dir.toFile)
+    Files.createDirectories(dir)
+    val next = Generation(n, write(dir))
+    repoint(root, next)
+    root.toFile.listFiles().filter(f => f.getName.matches("g\\d+") && f.getName != s"g$n")
+      .foreach(deleteRecursively)
+    next
   }
 }

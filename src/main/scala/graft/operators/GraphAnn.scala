@@ -1,9 +1,15 @@
 package graft.operators
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
 import java.security.MessageDigest
+import java.util.concurrent.ConcurrentHashMap
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+
+import graft.core.Fs
 
 /** Graph-based ANN serving (the HNSW/NSG family, single-layer): a
   * persisted neighbor graph is the index; a query runs greedy
@@ -442,7 +448,24 @@ object GraphAnn {
       .write.partitionBy("bucket").mode("overwrite").parquet(s"$dir/fx")
     graph.withColumn("bucket", pmod(col("src"), lit(nBuckets.toLong)).cast("int"))
       .write.partitionBy("bucket").mode("overwrite").parquet(s"$dir/edges")
+    advanceGeneration(dir)
   }
+
+  private def generationFile(dir: String) = Paths.get(dir, "_generation")
+
+  /** the store's generation counter: [[writeStores]] and
+    * [[appendStore]] rewrite `dir` in place and end by advancing it, so
+    * anything memoized per store keys on (dir, generation) and never
+    * serves a rewritten store's old snapshot. 0 for a store without
+    * one. */
+  def storeGeneration(dir: String): Long = {
+    val f = generationFile(dir)
+    if (Files.exists(f)) Files.readString(f).trim.toLong else 0L
+  }
+
+  private def advanceGeneration(dir: String): Unit =
+    Fs.publishFile(generationFile(dir),
+      (storeGeneration(dir) + 1).toString.getBytes(UTF_8), replace = true)
 
   /** point read of `ids` from a bucketed store table (pass the table
     * read ONCE per search so its file index is listed once, not per
@@ -631,6 +654,7 @@ object GraphAnn {
       case Some(m) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", m)
       case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
     }
+    advanceGeneration(store.dir)
     isolated
   }
 
@@ -896,40 +920,47 @@ object GraphAnn {
     * the fix at scale is store sharding, not a bigger broadcast. */
   val ServeCsrMaxBytes = 1500000000L
 
-  /** in-JVM memo of loaded snapshots keyed by store dir (the
-    * QuantizerCache load-don't-rebuild discipline): a serving process
-    * snapshots each committed store once, then every batch reuses the
-    * broadcastable CSR. Stores are immutable once published
-    * (publishStore re-keys on any content change), so the memo never
-    * serves a stale layout. */
-  private val csrMemo = new java.util.concurrent.ConcurrentHashMap[String, CsrIndex]()
+  /** in-JVM memo of loaded snapshots per store dir, tagged with the
+    * [[storeGeneration]] they were loaded at (the QuantizerCache
+    * load-don't-rebuild discipline): a serving process snapshots each
+    * committed store once, then every batch reuses the broadcastable
+    * CSR. An in-place rewrite ([[appendStore]]) advances the
+    * generation, so the next lookup reloads instead of serving the old
+    * snapshot. */
+  private val csrMemo = new ConcurrentHashMap[String, (Long, CsrIndex)]()
 
-  /** Broadcast[CsrIndex] memo keyed by store dir (ADVICE r10): without
-    * it every [[searchStoredDistributed]] call re-serialized the
+  /** Broadcast[CsrIndex] memo, same keying (ADVICE r10): without it
+    * every [[searchStoredDistributed]] call re-serialized the
     * ~hundreds-of-MB snapshot into a FRESH broadcast and never released
     * it, so a long-lived serving session accumulated copies in driver
-    * and executor memory. Stores are immutable once published, so the
-    * memoized broadcast can never be stale. */
-  private val csrBcMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.broadcast.Broadcast[CsrIndex]]()
+    * and executor memory. A superseded generation's broadcast is
+    * unpersisted when it is replaced. */
+  private val csrBcMemo = new ConcurrentHashMap[String, (Long, Broadcast[CsrIndex])]()
+
+  /** `store`'s memo entry at its current generation; a stale entry is
+    * released and replaced. */
+  private def memoized[V](memo: ConcurrentHashMap[String, (Long, V)], store: StoredIndex,
+                          release: V => Unit)(load: => V): V = {
+    val gen = storeGeneration(store.dir)
+    memo.compute(store.dir, (_, held) =>
+      if (held != null && held._1 == gen) held
+      else { if (held != null) release(held._2); (gen, load) })._2
+  }
+
+  /** generations of `dir` the memos hold — for specs. */
+  private[operators] def memoizedGenerations(dir: String): Set[Long] =
+    Seq(csrMemo.get(dir), csrBcMemo.get(dir)).flatMap(Option(_)).map(_._1).toSet
 
   /** the broadcast-handle twin of [[loadCsrCached]]. */
   def csrBroadcastCached(spark: org.apache.spark.sql.SparkSession,
-                         store: StoredIndex): org.apache.spark.broadcast.Broadcast[CsrIndex] =
-    csrBcMemo.computeIfAbsent(store.dir,
-      _ => spark.sparkContext.broadcast(loadCsrCached(spark, store)))
+                         store: StoredIndex): Broadcast[CsrIndex] =
+    memoized(csrBcMemo, store, (b: Broadcast[CsrIndex]) => b.unpersist())(
+      spark.sparkContext.broadcast(loadCsrCached(spark, store)))
 
   /** [[loadCsr]] through the in-JVM memo — the serving entry point. */
   def loadCsrCached(spark: org.apache.spark.sql.SparkSession, store: StoredIndex,
-                    maxBytes: Long = ServeCsrMaxBytes): CsrIndex = {
-    val hit = csrMemo.get(store.dir)
-    if (hit != null) hit
-    else {
-      val v = loadCsr(spark, store, maxBytes)
-      val prev = csrMemo.putIfAbsent(store.dir, v)
-      if (prev != null) prev else v
-    }
-  }
+                    maxBytes: Long = ServeCsrMaxBytes): CsrIndex =
+    memoized(csrMemo, store, (_: CsrIndex) => ())(loadCsr(spark, store, maxBytes))
 
   /** one-time snapshot of a committed store into a [[CsrIndex]].
     * Sized from footer counts BEFORE anything is fetched; the collect

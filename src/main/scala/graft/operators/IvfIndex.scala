@@ -3,8 +3,12 @@ package graft.operators
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.linalg.{Vector, Vectors}
 import org.apache.spark.ml.functions.array_to_vector
+import java.nio.file.{Files, Path, Paths}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.core.Fs
 
 /** IVF (inverted-file) approximate nearest-neighbor index — the
   * coarse-quantizer scale path from the builder brief (alternative to
@@ -100,27 +104,54 @@ object IvfIndex {
   }
 
   // ---------------------------------------------------- at-rest store
-  /** per-row generation stamp: the `_stats` epoch the row was written
-    * under. A tombstone at epoch e suppresses rows with `__seq <= e`,
-    * so a later RE-INSERT of a deleted id (higher stamp) is live again
+  // A store root holds `_model` (the quantizer) and a generation
+  // pointer (graft.core.Fs.publishGeneration): `CURRENT` names the live
+  // generation `g<N>/` — the posting lists plus any `_tombstones` — and
+  // carries the store's bookkeeping, `n epoch`: the committed LIVE row
+  // count and the commit counter. Serve paths that size knobs by
+  // corpus size read `n` instead of re-counting the store: at 100 TB a
+  // per-query count() is a full-store job for a number that is a
+  // property of the committed index.
+
+  /** per-row generation stamp: the epoch the row was written under. A
+    * tombstone at epoch e suppresses rows with `__seq <= e`, so a
+    * later RE-INSERT of a deleted id (higher stamp) is live again
     * without touching the tombstone set — the standard sequence-number
     * retract/add contract (Lucene's docvalue generations, Delta's
     * deletion-vector epoch). Underscore-prefixed so it reads as store
     * bookkeeping, not corpus data. */
   val SeqCol = "__seq"
 
+  /** the live generation of the store at `dir` with its bookkeeping. */
+  private final case class Committed(root: Path, gen: Fs.Generation, n: Long, epoch: Long) {
+    def data: String = gen.dir(root).toString
+    def tombstones: java.io.File = new java.io.File(s"$data/_tombstones")
+    def repoint(n: Long, epoch: Long): Unit = Fs.repoint(root, gen.copy(payload = s"$n $epoch"))
+  }
+
+  private def committed(dir: String): Committed = {
+    val root = Paths.get(dir)
+    val gen = Fs.currentGeneration(root)
+      .getOrElse(throw new IllegalStateException(s"no IVF store at $dir"))
+    val Array(n, epoch) = gen.payload.split(" ")
+    Committed(root, gen, n.toLong, epoch.toLong)
+  }
+
   /** Write the assigned corpus as the at-rest serving layout: parquet
     * partitioned BY THE POSTING LIST, so a probe's `list_id IN (…)`
     * filter becomes directory-level partition pruning — the probe
     * reads nprobe/nlist of the data from disk, which is the entire
-    * point of IVF at 100 TB. */
+    * point of IVF at 100 TB. Publishes a new generation (the previous
+    * one, tombstones included, is dropped); the epoch restarts at 1. */
   def writeStore(assigned: DataFrame, dir: String): Unit = {
-    assigned.withColumn(SeqCol, lit(1L))
-      .write.mode("overwrite").partitionBy("list_id").parquet(dir)
-    // a fresh overwrite's footer recount reads exactly the files just
-    // written — O(write), not O(store history); epoch restarts at 1
-    writeStats(assigned.sparkSession, dir,
-      assigned.sparkSession.read.parquet(dir).count(), epoch = 1L)
+    val spark = assigned.sparkSession
+    Fs.publishGeneration(Paths.get(dir)) { g =>
+      assigned.withColumn(SeqCol, lit(1L))
+        .write.mode("overwrite").partitionBy("list_id").parquet(g.toString)
+      // the footer recount reads exactly the files just written —
+      // O(write), not O(store history)
+      s"${spark.read.parquet(g.toString).count()} 1"
+    }
   }
 
   /** Incremental maintenance: assign a delta under the EXISTING model
@@ -130,27 +161,34 @@ object IvfIndex {
     * (IvfIndexSpec pins it); model drift is watched separately via
     * [[distortion]] and a retrain swaps the store wholesale. */
   def appendStore(delta: DataFrame, model: Model, dir: String): Unit =
-    writeAppend(assign(delta, model), dir, extraRemoved = 0L)
+    writeAppend(assign(delta, model), committed(dir), extraRemoved = 0L)
 
-  private def writeAppend(assigned: DataFrame, dir: String, extraRemoved: Long): Unit = {
-    val spark = assigned.sparkSession
-    // the manifest advances INCREMENTALLY (previous value + delta) — a
-    // micro-append never pays an O(all store files) footer listing
-    // that grows with the store. A legacy store with no manifest falls
-    // back to one full footer recount and enters the incremental
-    // regime from there. Stats are read FIRST: the new rows' __seq
-    // stamp is the epoch this append commits.
-    val (prevN, prevEpoch) = readStats(spark, dir, heal = false)
-      .getOrElse((spark.read.parquet(dir).count(), 0L))
-    val a = assigned.withColumn(SeqCol, lit(prevEpoch + 1)).persist()
+  /** append into the live generation, then republish the pointer with
+    * the count advanced INCREMENTALLY (previous value + delta) — a
+    * micro-append never pays an O(all store files) footer listing that
+    * grows with the store. The new rows' `__seq` stamp is the epoch
+    * this append commits. */
+  private def writeAppend(assigned: DataFrame, c: Committed, extraRemoved: Long): Unit = {
+    val a = assigned.withColumn(SeqCol, lit(c.epoch + 1)).persist()
     val deltaN = a.count()
-    a.write.mode("append").partitionBy("list_id").parquet(dir)
+    a.write.mode("append").partitionBy("list_id").parquet(c.data)
     a.unpersist()
-    writeStats(spark, dir, prevN + deltaN - extraRemoved, prevEpoch + 1)
+    c.repoint(c.n + deltaN - extraRemoved, c.epoch + 1)
   }
 
   // ----------------------------------------- retract/add (CDC follow)
-  private def tombDir(dir: String) = new java.io.File(s"$dir/_tombstones")
+  /** the stored rows of `c`'s generation minus tombstoned ones. */
+  private def live(spark: SparkSession, c: Committed): DataFrame = {
+    val store = spark.read.parquet(c.data)
+    if (!c.tombstones.exists()) store
+    else store.join(broadcast(tombSeqs(spark, c)), Seq("vec_id"), "left")
+      .filter(col("__tomb_seq").isNull || col(SeqCol) > col("__tomb_seq"))
+      .drop("__tomb_seq")
+  }
+
+  private def tombSeqs(spark: SparkSession, c: Committed): DataFrame =
+    spark.read.parquet(c.tombstones.getPath)
+      .groupBy("vec_id").agg(max("tomb_seq").as("__tomb_seq"))
 
   /** the LIVE rows of the store: the at-rest scan minus tombstoned
     * generations. With no tombstones this IS the raw scan (zero serve
@@ -159,30 +197,7 @@ object IvfIndex {
     * never O(corpus) — and [[compactStore]] periodically folds it back
     * to zero. Every probe of a maintained store must read THIS:
     * a deleted id must never be served at any nprobe. */
-  def liveStore(spark: SparkSession, dir: String): DataFrame = {
-    val td = tombDir(dir)
-    if (!td.exists()) spark.read.parquet(dir)
-    else {
-      // mergeSchema: a pre-seq legacy store that later took CDC writes
-      // is MIXED-schema parquet, and without merging, which footer wins
-      // inference is arbitrary — if an old file won, post-CDC rows
-      // would read as legacy and a tombstone could suppress an update
-      // postimage along with its preimage (ADVICE r10). Merging makes
-      // __seq present whenever ANY file carries it; rows from pre-seq
-      // files read as null → generation 1 PER ROW, not per store. Only
-      // the tombstoned path pays the extra footer reads.
-      val store = spark.read.option("mergeSchema", "true").parquet(dir)
-      val t = spark.read.parquet(td.getPath)
-        .groupBy("vec_id").agg(max("tomb_seq").as("__tomb_seq"))
-      val withSeq =
-        if (store.columns.contains(SeqCol))
-          store.withColumn(SeqCol, coalesce(col(SeqCol), lit(1L)))
-        else store.withColumn(SeqCol, lit(1L)) // pre-seq legacy layout
-      withSeq.join(broadcast(t), Seq("vec_id"), "left")
-        .filter(col("__tomb_seq").isNull || col(SeqCol) > col("__tomb_seq"))
-        .drop("__tomb_seq")
-    }
-  }
+  def liveStore(spark: SparkSession, dir: String): DataFrame = live(spark, committed(dir))
 
   /** Full CDC follow — the retract/add contract over a
     * [[graft.sources.VersionedTable.cdc]] feed (columns: the corpus
@@ -201,189 +216,82 @@ object IvfIndex {
     * batch heals that window (the re-written tombstones are dominated
     * by the re-appended higher epoch). The idempotency claim is scoped
     * to exactly that window: a crash AFTER the data append but before
-    * the `_stats` swap must be healed by [[verifyStats]] (footer
+    * the pointer republish must be healed by [[verifyStats]] (footer
     * recount), NOT by blind re-apply — re-appending would duplicate
-    * the add rows at the same epoch (ADVICE r10). The `_stats` count
+    * the add rows at the same epoch (ADVICE r10). The pointer's count
     * is maintained as the LIVE row count: + adds − retracts, still
     * O(delta) bookkeeping.
     * Upstream CDC guarantees each retracted id was present in the
     * followed version — this consumes that contract rather than
     * re-checking it with a store scan. */
   def applyCdc(cdc: DataFrame, model: Model, dir: String): Unit = {
-    val spark = cdc.sparkSession
-    val c = cdc.persist()
+    val c = committed(dir)
+    val changes = cdc.persist()
     try {
-      val (prevN, prevEpoch) = readStats(spark, dir, heal = false)
-        .getOrElse((spark.read.parquet(dir).count(), 0L))
-      val removed = c.filter(col("change_type").isin("delete", "update_preimage"))
-        .select(col("vec_id"), lit(prevEpoch).as("tomb_seq"))
+      val removed = changes.filter(col("change_type").isin("delete", "update_preimage"))
+        .select(col("vec_id"), lit(c.epoch).as("tomb_seq"))
       val removedN = removed.count()
       if (removedN > 0)
-        removed.coalesce(1).write.mode("append").parquet(tombDir(dir).getPath)
-      val added = c.filter(col("change_type").isin("insert", "update_postimage"))
+        removed.coalesce(1).write.mode("append").parquet(c.tombstones.getPath)
+      val added = changes.filter(col("change_type").isin("insert", "update_postimage"))
         .drop("change_type")
-      // writeAppend re-reads stats (unchanged by the tombstone write)
-      // and stamps the adds at prevEpoch + 1 > every tombstone
-      writeAppend(assign(added, model), dir, extraRemoved = removedN)
-    } finally c.unpersist()
+      // the adds stamp at epoch + 1 > every tombstone
+      writeAppend(assign(added, model), c, extraRemoved = removedN)
+    } finally changes.unpersist()
   }
 
-  /** Reclaim tombstoned generations: rewrite ONLY the posting lists
-    * that still hold a suppressed row (dirty-list rewrite — the
-    * VersionedTable bucket discipline), then clear the tombstone set.
+  /** Reclaim tombstoned generations into a new store generation:
+    * ONLY the posting lists that still hold a suppressed row are
+    * rewritten (their live rows — the VersionedTable dirty-bucket
+    * discipline); every other list is carried over by hard links, and
+    * the tombstones are dropped by not carrying them. Data writes are
     * O(dirty lists), not O(store); the live row set — and therefore
     * every probe — is bit-identical before and after (IvfIndexSpec
-    * pins it). OFFLINE maintenance: the per-list delete+rename swap
-    * assumes no concurrent reader mid-list (serve traffic should be
-    * drained or pointed at a sibling store during compaction, exactly
-    * like a VersionedTable compact commit). */
+    * pins it). The pointer swap is the commit point: a crash before it
+    * leaves the old generation live, untouched. OFFLINE maintenance:
+    * the publish deletes the old generation, so serve traffic should
+    * be drained or pointed at a sibling store during compaction,
+    * exactly like a VersionedTable compact commit. */
   def compactStore(spark: SparkSession, dir: String): Unit = {
-    // heal a previous interrupted compaction FIRST (see
-    // [[recoverParkedLists]]): through round 10 the swap deleted the
-    // live list dir before renaming the rebuilt copy in, and a re-run
-    // cleared the stage up front — a crash inside that window
-    // permanently lost the list (ADVICE r10, medium). The swap now
-    // parks the live dir aside instead of deleting it, so every crash
-    // point leaves a recoverable copy.
-    recoverParkedLists(dir)
-    val td = tombDir(dir)
-    if (!td.exists()) return
-    val store = spark.read.option("mergeSchema", "true").parquet(dir)
-    val t = spark.read.parquet(td.getPath)
-      .groupBy("vec_id").agg(max("tomb_seq").as("__tomb_seq"))
-    val withSeq =
-      if (store.columns.contains(SeqCol))
-        store.withColumn(SeqCol, coalesce(col(SeqCol), lit(1L)))
-      else store.withColumn(SeqCol, lit(1L))
-    val dirtyLists = withSeq.join(broadcast(t), Seq("vec_id"), "inner")
+    val c = committed(dir)
+    if (!c.tombstones.exists()) return
+    val dirtyLists = spark.read.parquet(c.data).join(broadcast(tombSeqs(spark, c)), Seq("vec_id"))
       .filter(col(SeqCol) <= col("__tomb_seq"))
-      .select("list_id").distinct().collect().map(_.getInt(0))
-    val (prevN, prevEpoch) = readStats(spark, dir, heal = false)
-      .getOrElse((liveStore(spark, dir).count(), 0L))
-    val stage = new java.io.File(s"$dir/_compact")
-    graft.core.Fs.deleteRecursively(stage)
-    dirtyLists.foreach { l =>
-      val listPath = new java.io.File(s"$dir/list_id=$l")
-      val parked = new java.io.File(s"$dir/${ParkedPrefix}list_id=$l")
-      val live = liveStore(spark, dir).filter(col("list_id") === l).drop("list_id")
-      live.write.mode("overwrite").parquet(s"${stage.getPath}/list_id=$l")
-      // park-then-swap: the live dir is RENAMED aside (never deleted
-      // before the rebuilt copy is in place), so between park and swap
-      // the original remains on disk under the parked name and
-      // recovery can always restore it; only after a successful swap
-      // is the parked copy dropped
-      graft.core.Fs.deleteRecursively(parked)
-      if (listPath.exists() && !listPath.renameTo(parked))
-        throw new IllegalStateException(s"compaction park failed for list $l at $dir")
-      val rebuilt = new java.io.File(s"${stage.getPath}/list_id=$l")
-      if (!rebuilt.renameTo(listPath))
-        throw new IllegalStateException(s"compaction swap failed for list $l at $dir")
-      graft.core.Fs.deleteRecursively(parked)
-    }
-    graft.core.Fs.deleteRecursively(stage)
-    graft.core.Fs.deleteRecursively(td)
-    // live count is invariant under compaction; the epoch advances so
-    // post-compaction appends stamp above every reclaimed generation
-    writeStats(spark, dir, prevN, prevEpoch + 1)
-  }
-
-  private val ParkedPrefix = "_compact_parked."
-
-  /** restore lists parked by an interrupted [[compactStore]]: a parked
-    * dir with NO live sibling is the only copy of that list (the crash
-    * landed between park and swap) — rename it back; a parked dir WITH
-    * a live sibling is a completed swap's leftover — drop it. The
-    * underscore prefix keeps parked dirs invisible to every parquet
-    * scan of the store in the meantime. */
-  private def recoverParkedLists(dir: String): Unit = {
-    val files = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty[java.io.File])
-    files.filter(f => f.isDirectory && f.getName.startsWith(ParkedPrefix)).foreach { p =>
-      val livePath = new java.io.File(dir, p.getName.stripPrefix(ParkedPrefix))
-      if (!livePath.exists()) {
-        if (!p.renameTo(livePath))
-          throw new IllegalStateException(s"compaction recovery failed for ${livePath.getName} at $dir")
-      } else graft.core.Fs.deleteRecursively(p)
+      .select("list_id").distinct().collect().map(_.getInt(0)).toSet
+    Fs.publishGeneration(c.root) { g =>
+      live(spark, c).filter(col("list_id").isin(dirtyLists.toSeq: _*))
+        .write.mode("append").partitionBy("list_id").parquet(g.toString)
+      new java.io.File(c.data).listFiles()
+        .filter(l => l.getName.startsWith("list_id=") && !dirtyLists.contains(l.getName.stripPrefix("list_id=").toInt))
+        .foreach { l =>
+          val to = Files.createDirectories(g.resolve(l.getName))
+          l.listFiles().foreach(f => Files.createLink(to.resolve(f.getName), f.toPath))
+        }
+      // live count is invariant under compaction; the epoch advances so
+      // post-compaction appends stamp above every reclaimed generation
+      s"${c.n} ${c.epoch + 1}"
     }
   }
 
-  /** `_stats` manifest maintained at write/append time: the committed
-    * row count of the store. Serve paths that size knobs by corpus
-    * size read THIS instead of re-counting the store: at 100 TB a
-    * per-query count() is a full-store job for a number that is a
-    * property of the committed index. Underscore prefix keeps it
-    * invisible to [[readStore]]'s data scan, like `_model`.
-    *
-    * Swapped in place via the park/rename pair (the StreamingNearDup
-    * compaction discipline): the new manifest lands at `_stats.tmp`,
-    * the live one parks at `_stats.old`, the tmp renames live — so a
-    * reader never sees a half-written manifest and a crash mid-swap
-    * is healed on the next read. `epoch` counts commits; a crash in
-    * the window between the data append and the stats swap leaves the
-    * count stale WITH its epoch unchanged, which [[verifyStats]]
-    * detects by footer recount (a maintenance audit, never the serve
-    * path). */
-  private def writeStats(spark: org.apache.spark.sql.SparkSession, dir: String,
-                         n: Long, epoch: Long): Unit = {
-    import spark.implicits._
-    val tmp = new java.io.File(s"$dir/_stats.tmp")
-    val live = new java.io.File(s"$dir/_stats")
-    val old = new java.io.File(s"$dir/_stats.old")
-    graft.core.Fs.deleteRecursively(tmp)
-    Seq((n, epoch)).toDF("n", "epoch").coalesce(1)
-      .write.mode("overwrite").parquet(tmp.getPath)
-    graft.core.Fs.deleteRecursively(old)
-    if (live.exists() && !live.renameTo(old))
-      throw new IllegalStateException(s"could not park _stats at $dir")
-    if (!tmp.renameTo(live))
-      throw new IllegalStateException(s"could not swap _stats at $dir")
-    graft.core.Fs.deleteRecursively(old)
+  /** committed LIVE row count from the generation pointer (one tiny
+    * file — no scan of the store itself). */
+  def storedCount(spark: SparkSession, dir: String): Long = committed(dir).n
+
+  /** maintenance audit: does the pointer's count match a recount of
+    * the LIVE rows? O(store footers) — for audits and specs; the serve
+    * path never calls it. False = a writer crashed between its data
+    * append and the pointer republish (the count is stale until the
+    * next successful append rewrites it from the stale base — re-run
+    * [[writeStore]]/[[appendStore]] maintenance to restore truth). */
+  def verifyStats(spark: SparkSession, dir: String): Boolean = {
+    val c = committed(dir)
+    c.n == live(spark, c).count()
   }
 
-  /** (n, epoch) from the manifest. None = no manifest (legacy store or
-    * pre-first-write). Pre-epoch single-column manifests read as
-    * epoch 0. With `heal = false` (every read on or near the serve
-    * path) a crashed swap — live manifest absent, parked `_stats.old`
-    * present — is served FROM the parked copy without renaming it:
-    * a rename here could land inside a concurrent writer's park
-    * window and resurrect the manifest its swap is about to replace,
-    * failing the writer spuriously. Only the maintenance audit
-    * ([[verifyStats]]) heals by rename, where single-writer is the
-    * documented precondition. */
-  private def readStats(spark: org.apache.spark.sql.SparkSession,
-                        dir: String, heal: Boolean): Option[(Long, Long)] = {
-    val live = new java.io.File(s"$dir/_stats")
-    val old = new java.io.File(s"$dir/_stats.old")
-    if (heal && !live.exists() && old.exists() && !old.renameTo(live))
-      throw new IllegalStateException(s"_stats recovery failed at $dir")
-    val src = if (live.exists()) Some(live) else if (old.exists()) Some(old) else None
-    src.map { f =>
-      val r = spark.read.parquet(f.getPath).collect()(0)
-      (r.getLong(0), if (r.schema.fieldNames.contains("epoch")) r.getAs[Long]("epoch") else 0L)
-    }
-  }
-
-  /** committed LIVE row count from the `_stats` manifest (one tiny
-    * file — no scan of the store itself). Read-only: a crashed-swap
-    * store is served from the parked copy and healed later by
-    * [[verifyStats]] maintenance, never by a serve-path rename. */
-  def storedCount(spark: org.apache.spark.sql.SparkSession, dir: String): Long =
-    readStats(spark, dir, heal = false).map(_._1).getOrElse(
-      throw new IllegalStateException(s"no _stats manifest at $dir"))
-
-  /** maintenance audit: does the manifest match a recount of the LIVE
-    * rows? O(store footers) — for audits and specs; the serve path
-    * never calls it. Heals a crashed `_stats` swap by rename first
-    * (single-writer maintenance is the precondition here). False = a
-    * writer crashed between its data append and the stats swap (the
-    * count is stale until the next successful append rewrites it from
-    * the stale base — re-run [[writeStore]]/[[appendStore]]
-    * maintenance to restore truth). */
-  def verifyStats(spark: org.apache.spark.sql.SparkSession, dir: String): Boolean =
-    readStats(spark, dir, heal = true).exists(_._1 == liveStore(spark, dir).count())
-
-  /** read the at-rest layout back (list_id is the partition column). */
-  def readStore(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir)
+  /** read the live generation's layout back (list_id is the partition
+    * column). */
+  def readStore(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(committed(dir).data)
 
   /** Persist the quantizer next to its store (`_model` is invisible
     * to the parquet reader), so probes are served by the EXACT model
@@ -391,14 +299,14 @@ object IvfIndex {
     * session (other partitioning/parallelism) may place centroids
     * differently, and a model/store mismatch silently breaks the
     * pruning contract. */
-  def saveModel(spark: org.apache.spark.sql.SparkSession, model: Model, dir: String): Unit = {
+  def saveModel(spark: SparkSession, model: Model, dir: String): Unit = {
     import spark.implicits._
     model.centroids.toSeq.map { case (i, c) => (i, c.toSeq) }
       .toDF("list_id", "centroid")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/_model")
   }
 
-  def loadModel(spark: org.apache.spark.sql.SparkSession, dir: String): Model =
+  def loadModel(spark: SparkSession, dir: String): Model =
     Model(spark.read.parquet(s"$dir/_model").collect()
       .map(r => (r.getInt(0), r.getSeq[Float](1).toArray)).sortBy(_._1))
 

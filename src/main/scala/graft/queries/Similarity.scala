@@ -1945,7 +1945,7 @@ object Similarity {
         // training-code change re-keys the store instead of silently
         // serving a model built by the old path
         val canon = plantedCenterSql("vid", "j", 8) + "|" + plantedJitterSql("vid", "j") +
-          s"|base=$nBase|all=$nAll|nlist=16|trainer=${IvfIndex.TrainerVersion}|seed=42|layout=seq1"
+          s"|base=$nBase|all=$nAll|nlist=16|trainer=${IvfIndex.TrainerVersion}|seed=42|layout=gen1"
         val store = new java.io.File(s"target/ivfstore/planted_${storeTag(canon)}").getAbsolutePath
         publishStore(store) { tmp =>
           val base = corpus.filter(col("vec_id") < nBase)
@@ -1962,9 +1962,9 @@ object Similarity {
           .select("vec_id").collect().map(_.getLong(0)).toSet
         val rebuilt = IvfIndex.probeL2(IvfIndex.assign(corpus, model), model, q, nprobe = 8, k = 10)
           .select("vec_id").collect().map(_.getLong(0)).toSet
-        // committed-size from the store's _stats manifest (maintained
+        // committed-size from the store's generation pointer (maintained
         // at write/append time) — the n_store_rows contract cell now
-        // ALSO verifies the manifest bookkeeping against the oracle's
+        // ALSO verifies the pointer bookkeeping against the oracle's
         // pinned literal, and no serve-path job scans the store for it
         val nStore = IvfIndex.storedCount(s, store)
         // exact spine: the shared integer-L2 ground truth, the same
@@ -2022,7 +2022,7 @@ object Similarity {
         // delta appended from the change feed (ss14's canon/cache
         // discipline, separate key so the two paths can't alias)
         val canon = plantedCenterSql("vid", "j", 8) + "|" + plantedJitterSql("vid", "j") +
-          s"|ss17|base=$nBase|all=$nAll|nlist=16|trainer=${IvfIndex.TrainerVersion}|seed=42|layout=seq1"
+          s"|ss17|base=$nBase|all=$nAll|nlist=16|trainer=${IvfIndex.TrainerVersion}|seed=42|layout=gen1"
         val store = new java.io.File(s"target/ivfstore/cdcfollow_${storeTag(canon)}").getAbsolutePath
         publishStore(store) { tmp =>
           val v0 = vt.read(Some(0)).get
@@ -2116,7 +2116,7 @@ object Similarity {
         // CDC steps applied in order — never a corpus rescan
         val canon = plantedCenterSql("vid", "j", 8) + "|" + plantedJitterSql("vid", "j") +
           s"|ss20|base=$nBase|all=$nAll|del=${delIds.mkString(",")}|upd=1-4" +
-          s"|nlist=16|trainer=${IvfIndex.TrainerVersion}|seed=42|layout=seq1"
+          s"|nlist=16|trainer=${IvfIndex.TrainerVersion}|seed=42|layout=gen1"
         val store = new java.io.File(s"target/ivfstore/cdcfull_${storeTag(canon)}").getAbsolutePath
         publishStore(store) { tmp =>
           val v0 = vt.read(Some(0)).get
@@ -2437,8 +2437,9 @@ object Similarity {
 
   /** Build-once atomic store publish, shared by every committed-store
     * query (ss12/ss14/ss15/ss16/ss17): build into a pid-suffixed temp
-    * dir, mark `_OK`, atomically rename — the loser of a cross-JVM
-    * race discards its temp, and a reader can never observe a
+    * dir, mark `_OK`, publish it with [[graft.core.Fs.publishDir]]
+    * (one atomic rename) — the loser of a cross-JVM race discards its
+    * temp, and a reader can never observe a
     * half-written store. JVM-local build-once under [[IvfStoreLock]]. */
   private def publishStore(root: String)(build: String => Unit): Unit =
     IvfStoreLock.synchronized {
@@ -2452,8 +2453,8 @@ object Similarity {
           graft.core.Fs.deleteRecursively(new java.io.File(tmp)); throw t
         }
         new java.io.File(tmp, "_OK").createNewFile()
-        if (!new java.io.File(tmp).renameTo(new java.io.File(root)))
-          graft.core.Fs.deleteRecursively(new java.io.File(tmp)) // lost the cross-JVM race
+        // false = lost the cross-JVM race; the winner's store is served
+        graft.core.Fs.publishDir(java.nio.file.Paths.get(tmp), java.nio.file.Paths.get(root)): Unit
       }
     }
 

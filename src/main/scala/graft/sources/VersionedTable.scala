@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -19,12 +19,15 @@ import VersionedTable.CommitConflict
   *     version only WRITES its dirty buckets and inherits every
   *     untouched bucket's files from its base manifest — partition-
   *     level copy-on-write, no full-table rewrite.
-  *   - **Atomic commits**: a manifest (bucket → data path) is staged
-  *     to a temp file and atomically renamed to `v%06d.manifest`;
-  *     `CREATE_NEW` rename semantics double as optimistic concurrency
-  *     control — two writers committing the same next version race on
-  *     the rename and exactly one wins ([[VersionedTable.CommitConflict]]
-  *     for the loser). The `LATEST` pointer is then swapped atomically.
+  *   - **Atomic commits**: a manifest (bucket → data path) is
+  *     published as `v%06d.manifest` with [[graft.core.Fs.publishFile]]
+  *     (temp file, forced to disk, atomic link/move — never visible
+  *     empty or torn, even after a power loss). The no-replace publish
+  *     doubles as optimistic concurrency control — two writers
+  *     committing the same next version race on the name and exactly
+  *     one wins ([[VersionedTable.CommitConflict]] for the loser). The
+  *     stats sidecar and the `LATEST` pointer are then published the
+  *     same way, replacing.
   *   - **Snapshot isolation / time travel**: readers resolve a
   *     version once and read only that manifest's immutable files;
   *     later commits never disturb them. [[read]] accepts an explicit
@@ -64,7 +67,7 @@ class VersionedTable(spark: SparkSession, baseDir: String, nBuckets: Int = 16) {
   private def manifestPath(v: Int): Path = manifestDir.resolve(f"v$v%06d.manifest")
   private def statsPath(v: Int): Path = manifestDir.resolve(f"v$v%06d.stats")
 
-  /** The manifest ATOMIC_MOVE is the commit point; LATEST is a cheap
+  /** The manifest publish is the commit point; LATEST is a cheap
     * pointer cache. A writer crashing between the two leaves an
     * orphaned manifest that LATEST never reaches — naively trusting
     * LATEST would then make every later commit compute the same next
@@ -422,16 +425,13 @@ class VersionedTable(spark: SparkSession, baseDir: String, nBuckets: Int = 16) {
     }.toMap
     val stats = inheritedStats ++ freshStats
 
-    Files.createDirectories(manifestDir)
-    val tmp = Files.createTempFile(manifestDir, "stage", ".tmp")
-    Files.writeString(tmp, mapping.toSeq.sortBy(_._1).map { case (b, p) => s"$b\t$p" }.mkString("\n"))
-    try {
-      // ATOMIC_MOVE without REPLACE: exactly one writer can create
-      // v<next> — the losing racer lands here
-      Files.move(tmp, manifestPath(next), StandardCopyOption.ATOMIC_MOVE)
-    } catch {
+    def text(lines: Seq[String]) = lines.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    // the commit point: the no-replace publish lets exactly one writer
+    // create v<next> — the losing racer lands here
+    try graft.core.Fs.publishFile(manifestPath(next),
+      text(mapping.toSeq.sortBy(_._1).map { case (b, p) => s"$b\t$p" }), replace = false)
+    catch {
       case _: java.nio.file.FileAlreadyExistsException =>
-        Files.deleteIfExists(tmp)
         throw new CommitConflict(s"version $next already committed by another writer")
     }
     // the written dirs' schema is the rows' schema, as a read returns it
@@ -439,15 +439,10 @@ class VersionedTable(spark: SparkSession, baseDir: String, nBuckets: Int = 16) {
     fresh.values.foreach(dirSchemas.put(_, writtenSchema))
     // stats sidecar lands after the manifest we won; readers that see
     // the manifest before the stats just skip pruning (never wrong)
-    if (stats.nonEmpty) {
-      val stTmp = Files.createTempFile(manifestDir, "stats", ".tmp")
-      Files.writeString(stTmp, stats.toSeq.sortBy { case ((b, c), _) => (b, c) }
-        .map { case ((b, c), (mn, mx)) => s"$b\t$c\t$mn\t$mx" }.mkString("\n"))
-      Files.move(stTmp, statsPath(next), StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
-    }
-    val ptrTmp = Files.createTempFile(Paths.get(baseDir), "latest", ".tmp")
-    Files.writeString(ptrTmp, next.toString)
-    Files.move(ptrTmp, latestFile, StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
+    if (stats.nonEmpty)
+      graft.core.Fs.publishFile(statsPath(next), text(stats.toSeq.sortBy { case ((b, c), _) => (b, c) }
+        .map { case ((b, c), (mn, mx)) => s"$b\t$c\t$mn\t$mx" }), replace = true)
+    graft.core.Fs.publishFile(latestFile, text(Seq(next.toString)), replace = true)
     next
   }
 

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -27,10 +27,11 @@ import graft.core.{Bytes, Commitments, MerkleFrontier}
   * [[graft.core.MerkleFrontier]]) plus O(batch) rows — it never
   * re-reads or re-hashes history (the reference's IVC carries exactly
   * this frontier between steps, `block/mod.rs:152-207`). The frontier
-  * is persisted per batch next to the sink; on restart it is reloaded
-  * and cross-checked against the sink's max block, and only on a
-  * mismatch (crash between sink append and frontier write) is it
-  * rebuilt with one O(n) leaf scan. `foreachBatch` + checkpoint gives
+  * is persisted per batch next to the sink through [[DriverState]];
+  * on restart it is reloaded and cross-checked against the sink's max
+  * block, and only on a mismatch (crash between sink append and
+  * frontier write) or an unreadable frontier file is it rebuilt with
+  * one O(n) leaf scan. `foreachBatch` + checkpoint gives
   * exactly-once appends; replayed batches are no-ops because
   * duplicates fail the St2 check.
   */
@@ -49,26 +50,28 @@ class BlockDbAppender(spark: SparkSession, sinkDir: String, quarantineDir: Strin
   }
 
   // ---------------------------------------------------------- frontier
-  private val statePath = Paths.get(sinkDir, "_frontier.txt")
+  /** the persisted frontier, a [[DriverState]] file. A sink's older
+    * `_frontier.txt` is ignored: its first batch here rebuilds. */
+  private val statePath = Paths.get(sinkDir, "_frontier.state")
 
   /** in-memory state between micro-batches of one appender lifetime;
     * None until the first batch loads/recovers it. */
   private var cached: Option[State] = None
 
-  private def persistState(st: State): Unit = {
-    val tmpF = Paths.get(sinkDir, "_frontier.tmp")
-    Files.createDirectories(Paths.get(sinkDir))
-    Files.writeString(tmpF, st.last.getOrElse(-1L) + "\n" + st.tree.serialize)
-    Files.move(tmpF, statePath, StandardCopyOption.REPLACE_EXISTING,
-      StandardCopyOption.ATOMIC_MOVE)
-  }
+  private def persistState(st: State): Unit =
+    DriverState.writeAtomic(statePath) { out =>
+      out.writeLong(st.last.getOrElse(-1L))
+      out.writeUTF(st.tree.serialize)
+    }
 
+  /** the persisted frontier; None if absent or unreadable (torn,
+    * truncated, corrupt) — the sink is the source of truth, so any
+    * frontier the appender cannot trust sends it to [[rebuildState]]. */
   private def loadState(): Option[State] =
-    if (Files.exists(statePath)) {
-      val Array(lastLine, spine) = Files.readString(statePath).split("\n", 2)
-      val last = lastLine.trim.toLong
-      Some(State(if (last < 0) None else Some(last), MerkleFrontier.deserialize(spine.trim)))
-    } else None
+    scala.util.Try(DriverState.read(statePath) { in =>
+      val last = in.readLong()
+      State(if (last < 0) None else Some(last), MerkleFrontier.deserialize(in.readUTF()))
+    }).toOption.flatten
 
   /** crash-recovery rebuild: one scan of the (1 row per block) sink. */
   private def rebuildState(): State = {

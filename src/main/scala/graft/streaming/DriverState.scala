@@ -1,31 +1,31 @@
 package graft.streaming
 
 import java.io.{DataInputStream, DataOutputStream, ByteArrayInputStream, ByteArrayOutputStream, EOFException, UTFDataFormatException}
-import java.nio.file.{Files, Path, StandardCopyOption, StandardOpenOption}
+import java.nio.file.{Files, Path}
 
-/** Atomic persistence for the tiny driver-resident MV states
+/** Atomic persistence for the tiny driver-resident states
   * ([[StreamingPipeline.PackingMv]]'s packing manifest,
-  * [[StreamingDrift]]'s profile counters): a streaming pipeline's
-  * exactly-once story is checkpoint + idempotent sink, and a
-  * driver-held accumulator participates only if it (a) survives a
-  * killed JVM and (b) can tell a REPLAYED micro-batch (crash after
-  * the fold, before the checkpoint commit) from a new one. The
-  * format here is write-temp + fsync + atomic rename — a reader sees
-  * either the previous complete state or the next, never a torn
-  * file — and every state carries the last folded batch id so a
-  * redelivered batch is skipped instead of double-counted (the
-  * standard foreachBatch exactly-once recipe, applied to driver
-  * state).
+  * [[StreamingDrift]]'s profile counters, [[BlockDbAppender]]'s
+  * frontier): a streaming pipeline's exactly-once story is
+  * checkpoint + idempotent sink, and a driver-held accumulator
+  * participates only if it (a) survives a killed JVM and (b) can tell
+  * a REPLAYED micro-batch (crash after the fold, before the
+  * checkpoint commit) from a new one. The write is
+  * [[graft.core.Fs.publishFile]] — temp file, forced to disk, atomic
+  * move — so a reader sees either the previous complete state or the
+  * next, never a torn file; and every accumulator state carries the
+  * last folded batch id so a redelivered batch is skipped instead of
+  * double-counted (the standard foreachBatch exactly-once recipe,
+  * applied to driver state).
   *
-  * Durability notes: rename-atomicity alone only covers JVM kills —
-  * on an OS/power crash the rename can persist before the file's
-  * data blocks, leaving a truncated file behind. The write therefore
-  * (1) buffers the payload and prefixes its length, (2) forces the
-  * channel to disk before the rename, and (3) the reader treats a
-  * short/torn file as a LOUD error naming the file (resuming "fresh"
-  * over a half-lost state would silently corrupt the accumulator —
-  * the operator must either restore the file or wipe the stateDir
-  * together with the checkpoint).
+  * On top of the primitive this format prefixes the payload with its
+  * length, and the reader treats a short/torn file (a lost block, a
+  * foreign tool truncating it) as a LOUD error naming the file:
+  * resuming "fresh" over a half-lost accumulator would silently
+  * corrupt it — the operator must either restore the file or wipe
+  * the stateDir together with the checkpoint. A caller whose state
+  * can be rebuilt from its sink (the block-DB frontier) catches the
+  * error and rebuilds instead.
   *
   * Deliberately java.io, not a Spark write: the state is a few dozen
   * longs — a per-batch Spark job to persist it would cost more than
@@ -35,22 +35,13 @@ import java.nio.file.{Files, Path, StandardCopyOption, StandardOpenOption}
 private[streaming] object DriverState {
 
   def writeAtomic(path: Path)(w: DataOutputStream => Unit): Unit = {
-    Files.createDirectories(path.getParent)
     val buf = new ByteArrayOutputStream(256)
     val out = new DataOutputStream(buf)
+    out.writeInt(0) // length prefix, patched below
     w(out); out.flush()
-    val payload = buf.toByteArray
-    val tmp = path.resolveSibling(path.getFileName.toString + ".tmp")
-    val ch = java.nio.channels.FileChannel.open(tmp, StandardOpenOption.CREATE,
-      StandardOpenOption.TRUNCATE_EXISTING, StandardOpenOption.WRITE)
-    try {
-      val hdr = java.nio.ByteBuffer.allocate(4).putInt(payload.length)
-      hdr.flip(); ch.write(hdr)
-      ch.write(java.nio.ByteBuffer.wrap(payload))
-      ch.force(true) // data on disk BEFORE the rename becomes visible
-    } finally ch.close()
-    Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    val bytes = buf.toByteArray
+    java.nio.ByteBuffer.wrap(bytes).putInt(bytes.length - 4)
+    graft.core.Fs.publishFile(path, bytes, replace = true)
   }
 
   def read[T](path: Path)(r: DataInputStream => T): Option[T] =

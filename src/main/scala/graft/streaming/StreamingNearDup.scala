@@ -1,8 +1,12 @@
 package graft.streaming
 
+import java.nio.file.Paths
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+
+import graft.core.Fs
 
 /** Streaming NEAR-duplicate ingest gate over committed signature
   * stores — the streaming cell of the dedup family matrix (exact
@@ -44,6 +48,13 @@ import org.apache.spark.sql.types._
   * seq and ignores them — verdicts recompute identically), the store
   * append drops ids already present (no duplicate store rows), and
   * the verdict sink overwrites per batch id (no duplicate verdicts).
+  * Both stores live in one generation under a
+  * [[graft.core.Fs.publishGeneration]] pointer (`root/CURRENT` →
+  * `root/g<N>/{sig,hash}`): micro-batches append into the live
+  * generation, while [[bootstrap]] and [[compactStore]] each publish
+  * a new one, so both stores switch with a single rename and a crash
+  * at any point leaves a complete generation live — no recovery step
+  * runs before a micro-batch.
   */
 object StreamingNearDup {
 
@@ -88,30 +99,25 @@ object StreamingNearDup {
     rows.repartition(col("bucket"))
       .write.mode(mode).partitionBy("bucket").parquet(dir)
 
-  /** crash-recovery preamble for the compactStore rename pair: a
-    * crash between the park and swap renames leaves the live store
-    * path absent with the pre-compact copy parked at `<store>.old`.
-    * Run from EVERY store-touching entry point (not just the next
-    * compactStore call), so a restarted stream's first micro-batch
-    * heals the store instead of dying on a missing parquet path. */
-  private def recoverStores(root: String): Unit =
-    for (sub <- Seq("sig", "hash")) {
-      val live = new java.io.File(s"$root/$sub")
-      val old = new java.io.File(s"$root/$sub.old")
-      if (!live.exists() && old.exists() && !old.renameTo(live))
-        throw new IllegalStateException(s"store recovery failed for $sub")
-    }
+  /** the live generation of the stores under `root` — `sig` and
+    * `hash` live side by side in it, so every publish switches both
+    * with one pointer swap. */
+  private def liveGeneration(root: String): String =
+    Fs.currentGeneration(Paths.get(root)).map(_.dir(Paths.get(root)).toString)
+      .getOrElse(throw new IllegalStateException(s"no near-dup store at $root (bootstrap first)"))
+
+  /** the live generation's `sub` store directory (`sig` or `hash`). */
+  def storeDir(root: String, sub: String): String = s"${liveGeneration(root)}/$sub"
 
   /** commit the already-ingested corpus as the initial store state —
-    * the one batch pass over the past; the stream is O(delta) after. */
-  def bootstrap(corpus: DataFrame, root: String): Unit = {
-    writeStore(sigRows(corpus), s"$root/sig", "overwrite")
-    writeStore(hashRows(corpus), s"$root/hash", "overwrite")
-    // a bootstrap over a crashed-compaction layout must not leave the
-    // stale parked copy behind to be "recovered" over the new state
-    for (sub <- Seq("sig", "hash"))
-      graft.core.Fs.deleteRecursively(new java.io.File(s"$root/$sub.old"))
-  }
+    * the one batch pass over the past; the stream is O(delta) after.
+    * Publishes a new generation holding both stores. */
+  def bootstrap(corpus: DataFrame, root: String): Unit =
+    Fs.publishGeneration(Paths.get(root)) { g =>
+      writeStore(sigRows(corpus), s"$g/sig", "overwrite")
+      writeStore(hashRows(corpus), s"$g/hash", "overwrite")
+      ""
+    }: Unit
 
   val SigSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType), StructField("seq", LongType),
@@ -139,7 +145,7 @@ object StreamingNearDup {
     * `(doc_id, verdict, match_id)` — materialized (localCheckpoint),
     * so it stays valid after later batches mutate the store. */
   def processBatch(s: SparkSession, batch: DataFrame, root: String): DataFrame = {
-    recoverStores(root)
+    val gen = liveGeneration(root)
     // a micro-batch is small by definition — collapse it to a few
     // partitions so the dozen downstream jobs don't each pay 32-task
     // scheduling for a handful of rows
@@ -157,7 +163,7 @@ object StreamingNearDup {
       sigInt(col("simhash")).as("ia"), col("k"), col("blk"))
     // one pruned sig-store read serves BOTH the near probe and the
     // sig append's presence check (mirrors the hash-store reuse below)
-    val storeSig = probeStore(s, s"$root/sig", sigBuckets, SigSchema).persist()
+    val storeSig = probeStore(s, s"$gen/sig", sigBuckets, SigSchema).persist()
     val storeSide = storeSig
       .select(col("doc_id").as("cid"), col("seq").as("cseq"),
         sigInt(col("simhash")).as("ib"), col("k"), col("blk"))
@@ -184,7 +190,7 @@ object StreamingNearDup {
     // one pruned hash-store read serves BOTH the exact probe and the
     // append's presence check (a second listing of the same dirs
     // would double the per-batch file-system cost)
-    val storeHash = probeStore(s, s"$root/hash", hashBuckets, HashSchema).persist()
+    val storeHash = probeStore(s, s"$gen/hash", hashBuckets, HashSchema).persist()
     val probeH = bh.select(col("doc_id"), col("seq"), col("h"))
     val exact = broadcast(probeH).join(
         storeHash.select(col("doc_id").as("cid"), col("seq").as("cseq"), col("h")), Seq("h"))
@@ -231,8 +237,8 @@ object StreamingNearDup {
       storeHash.select("doc_id", "h").distinct(),
       Seq("doc_id", "h"), "left_anti")
       .select(HashSchema.fieldNames.toSeq.map(col): _*)
-    writeStore(freshSig, s"$root/sig", "append")
-    writeStore(freshHash, s"$root/hash", "append")
+    writeStore(freshSig, s"$gen/sig", "append")
+    writeStore(freshHash, s"$gen/hash", "append")
     storeSig.unpersist(); storeHash.unpersist(); bs.unpersist(); bh.unpersist(); b.unpersist()
     verdicts
   }
@@ -251,34 +257,20 @@ object StreamingNearDup {
   /** Store maintenance: every append adds one file per touched bucket
     * dir, so a long-running gate accumulates small files and probe
     * listings degrade linearly with stream age. Compaction rewrites
-    * each store into the same partition layout with one file per
-    * bucket (content identical — probes before ≡ after, spec-pinned),
-    * the VersionedTable-compact discipline applied here. The rewrite
-    * lands in a temp dir first, then swaps in via two renames with
-    * the pre-compact store parked at `<store>.old`; a crash between
-    * the renames is healed by [[recoverStores]] — which runs at the
-    * top of EVERY store-touching entry point (processBatch and here),
-    * so a restarted stream heals without waiting for the next
-    * compaction — and a failed second rename rolls the old store back
-    * immediately. Single-writer by
+    * both stores into a new generation with the same partition layout
+    * and one file per bucket (content identical — probes before ≡
+    * after, spec-pinned), the VersionedTable-compact discipline
+    * applied here. The pointer swap is the commit point: a crash
+    * before it leaves the old generation live and untouched, so the
+    * next micro-batch needs no recovery step. Single-writer by
     * contract: the caller schedules compaction between micro-batches
     * (same as any table OPTIMIZE). */
   def compactStore(s: SparkSession, root: String): Unit = {
-    recoverStores(root)
-    for ((sub, schema) <- Seq("sig" -> SigSchema, "hash" -> HashSchema)) {
-      val live = new java.io.File(s"$root/$sub")
-      val tmp = new java.io.File(s"$root/$sub.compact")
-      val old = new java.io.File(s"$root/$sub.old")
-      writeStore(probeStore(s, live.getPath, 0 until NBuckets, schema),
-        tmp.getPath, "overwrite")
-      graft.core.Fs.deleteRecursively(old)
-      if (!live.renameTo(old))
-        throw new IllegalStateException(s"compactStore park failed for $sub")
-      if (!tmp.renameTo(live)) {
-        old.renameTo(live)
-        throw new IllegalStateException(s"compactStore swap failed for $sub")
-      }
-      graft.core.Fs.deleteRecursively(old)
-    }
+    val live = liveGeneration(root)
+    Fs.publishGeneration(Paths.get(root)) { g =>
+      for ((sub, schema) <- Seq("sig" -> SigSchema, "hash" -> HashSchema))
+        writeStore(probeStore(s, s"$live/$sub", 0 until NBuckets, schema), s"$g/$sub", "overwrite")
+      ""
+    }: Unit
   }
 }

@@ -1,0 +1,222 @@
+package graft
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.core.Fs
+import graft.operators.IvfIndex
+import graft.sources.VersionedTable
+import graft.streaming.StreamingNearDup
+import graft.streaming.StreamingNearDupSpec.ND
+
+/** Crash safety of every store commit point, by fault injection: each
+  * writer call is re-run with each of its publishes failing at each
+  * step (write, force, move) of [[Fs.publishFile]]. After the fault a
+  * reader must see exactly the old snapshot or the new one, and the
+  * next writer call must behave as it does on that snapshot — with no
+  * recovery step in between. */
+class PublishFaultSpec extends AnyFunSuite with BeforeAndAfterAll {
+
+  private var spark: SparkSession = _
+
+  override def beforeAll(): Unit = {
+    spark = SparkSession.builder()
+      .master("local[2]")
+      .config("spark.sql.session.timeZone", "UTC")
+      .appName("publish-fault-spec")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+  }
+
+  override def afterAll(): Unit = if (spark != null) spark.stop()
+
+  private final class Injected extends RuntimeException("injected publish fault")
+
+  /** run `op` with its `k`-th publish failing at `step`; false if `op`
+    * made fewer than `k` publishes (it then ran to completion). */
+  private def faulted(step: String, k: Int)(op: => Unit): Boolean = {
+    var calls = 0
+    Fs.beforeStep = { s =>
+      if (s == "write") calls += 1
+      if (s == step && calls == k) throw new Injected
+    }
+    try { op; false }
+    catch { case _: Injected => true }
+    finally Fs.beforeStep = _ => ()
+  }
+
+  private def withTmp[T](f: String => T): T = {
+    val d = java.nio.file.Files.createTempDirectory("publish_fault").toString
+    try f(d) finally Fs.deleteRecursively(new java.io.File(d))
+  }
+
+  /** The contract, for `op` over the state `setup` leaves: for every
+    * step and every publish of `op`, a fault leaves `view` equal to the
+    * old or the new snapshot, and `next` (then `view`) returns what it
+    * returns on that snapshot. Returns the number of faults injected. */
+  private def everyFault[V, R](setup: String => Unit, op: String => Unit,
+                               view: String => V, next: String => R): Int = {
+    def reference(applyOp: Boolean) = withTmp { d =>
+      setup(d)
+      if (applyOp) op(d)
+      val v = view(d)
+      (v, (next(d), view(d)))
+    }
+    val (oldView, oldNext) = reference(applyOp = false)
+    val (newView, newNext) = reference(applyOp = true)
+    assert(oldView != newView, "the writer call must change what a reader sees")
+    var injected = 0
+    for (step <- Seq("write", "force", "move")) {
+      var k = 1
+      var more = true
+      while (more) {
+        more = withTmp { d =>
+          setup(d)
+          val fired = faulted(step, k)(op(d))
+          if (fired) {
+            injected += 1
+            val seen = view(d)
+            assert(seen == oldView || seen == newView,
+              s"fault at publish $k, step $step: a reader saw a mix\n$seen")
+            val want = if (seen == oldView) oldNext else newNext
+            assert((next(d), view(d)) == want, s"fault at publish $k, step $step: next writer")
+          }
+          fired
+        }
+        k += 1
+      }
+    }
+    injected
+  }
+
+  private def sorted(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+
+  // ------------------------------------------------------- VersionedTable
+  test("VersionedTable.commit: a fault at any publish leaves the old or the new version") {
+    val s = spark
+    import s.implicits._
+    def rows(vs: Seq[(Long, Long)]) = vs.toDF("k", "v")
+    val v0 = rows((0L until 16L).map(k => (k, k)))
+    val v1 = rows((0L until 8L).map(k => (k, 100 + k)))
+    def table(d: String) = new VersionedTable(spark, d, nBuckets = 4)
+    val n = everyFault[(Option[Int], Seq[String], Seq[String]), Unit](
+      setup = d => table(d).commit(v0, Seq("k"), None, statsCols = Seq("v")): Unit,
+      op = d => table(d).commit(v1, Seq("k"), Some(0), statsCols = Seq("v")): Unit,
+      // a cold reader: version, full read, zone-map-pruned range query
+      // (pruning is a superset guarantee; the caller applies the range)
+      view = { d =>
+        val t = table(d)
+        (t.currentVersion(), sorted(t.read().get),
+          sorted(t.readPruned("v", 100, 200).get.filter(col("v").between(100, 200))))
+      },
+      next = { d =>
+        val t = table(d)
+        t.commit(rows(Seq((3L, -3L))), Seq("k"), t.currentVersion(), statsCols = Seq("v")): Unit
+      })
+    assert(n == 9, "manifest, stats sidecar and LATEST, three steps each")
+  }
+
+  // ------------------------------------------------------------ IvfIndex
+  private val model = IvfIndex.modelFromCenters(Array(
+    Array(0f, 0f, 0f, 0f), Array(20f, 20f, 20f, 20f), Array(40f, 40f, 40f, 40f)))
+
+  private def vectors(ids: Seq[Long]): DataFrame = {
+    val s = spark
+    import s.implicits._
+    ids.map(i => (i, Seq.tabulate(4)(j => ((i * 7 + j * 13) % 45).toFloat))).toDF("vec_id", "embedding")
+  }
+
+  /** what a store reader sees: committed count, live ids, physical rows. */
+  private def ivfView(d: String): (Long, Seq[Long], Long) =
+    (IvfIndex.storedCount(spark, d),
+      IvfIndex.liveStore(spark, d).select("vec_id").collect().map(_.getLong(0)).sorted.toSeq,
+      IvfIndex.readStore(spark, d).count())
+
+  test("IVF writeStore / compactStore: a fault at any publish leaves the old or the new generation") {
+    val base = vectors(0L until 60L)
+    val cdc = vectors(Seq(3L, 7L, 30L)).withColumn("change_type", lit("delete"))
+    val more = vectors(100L until 110L)
+    def written(d: String) = { IvfIndex.writeStore(IvfIndex.assign(base, model), d); IvfIndex.saveModel(spark, model, d) }
+    val writes = everyFault[(Long, Seq[Long], Long), (Long, Seq[Long], Long)](
+      setup = written,
+      op = d => IvfIndex.writeStore(IvfIndex.assign(vectors(0L until 40L), model), d),
+      view = ivfView,
+      next = { d => IvfIndex.appendStore(more, IvfIndex.loadModel(spark, d), d); ivfView(d) })
+    val compactions = everyFault[(Long, Seq[Long], Long), Boolean](
+      setup = d => { written(d); IvfIndex.applyCdc(cdc, model, d) },
+      op = d => IvfIndex.compactStore(spark, d),
+      view = ivfView,
+      next = { d => IvfIndex.appendStore(more, model, d); IvfIndex.verifyStats(spark, d) })
+    assert(writes == 3 && compactions == 3)
+  }
+
+  test("IVF appendStore: a fault at the pointer publish keeps the old count, and the audit flags it") {
+    val base = vectors(0L until 60L)
+    val delta = vectors(100L until 110L)
+    for (step <- Seq("write", "force", "move")) withTmp { d =>
+      IvfIndex.writeStore(IvfIndex.assign(base, model), d)
+      assert(faulted(step, 1)(IvfIndex.appendStore(delta, model, d)))
+      // the pointer is the old one, never torn; the appended rows have
+      // landed — the window between data append and pointer publish
+      // that verifyStats exists to catch
+      assert(IvfIndex.storedCount(spark, d) == 60L)
+      assert(IvfIndex.readStore(spark, d).count() == 70L)
+      assert(!IvfIndex.verifyStats(spark, d))
+      // no recovery step: the next append and a rebuild both succeed
+      IvfIndex.appendStore(vectors(200L until 205L), model, d)
+      assert(IvfIndex.liveStore(spark, d).filter(col("vec_id") >= 200L).count() == 5L)
+      IvfIndex.writeStore(IvfIndex.liveStore(spark, d).drop(IvfIndex.SeqCol), d)
+      assert(IvfIndex.storedCount(spark, d) == 75L && IvfIndex.verifyStats(spark, d))
+    }
+  }
+
+  // ------------------------------------------------------ StreamingNearDup
+  private def docs(rows: Seq[ND]): DataFrame = {
+    val s = spark
+    import s.implicits._
+    rows.toDF()
+  }
+  private val sigA = "0" * 32
+  private val sigB = "1" * 16 + "0" * 16
+  private val corpus = Seq(ND(1L, -100L, "h1", sigA), ND(2L, -90L, "h2", sigB))
+  private val batch0 = Seq(ND(10L, 10L, "h1", "01" * 16), ND(20L, 20L, "h20", "1" + sigA.tail),
+    ND(30L, 30L, "h30", "0011" * 8))
+  private val batch1 = Seq(ND(60L, 60L, "h30", "1" * 32), ND(70L, 70L, "h70", "11" + sigB.drop(2)))
+
+  /** what a store reader sees: both stores' rows and files per bucket. */
+  private def nearDupView(root: String): Seq[Seq[String]] =
+    Seq("sig", "hash").flatMap { sub =>
+      val dir = StreamingNearDup.storeDir(root, sub)
+      Seq(sorted(spark.read.parquet(dir)),
+        new java.io.File(dir).listFiles().filter(_.isDirectory).map { b =>
+          s"${b.getName}:${b.listFiles().count(_.getName.endsWith(".parquet"))}"
+        }.sorted.toSeq)
+    }
+
+  private def verdicts(v: DataFrame): Seq[String] = v.collect().map {
+    case Row(id: Long, verdict: String, m: Long) => s"$id:$verdict:$m"
+  }.sorted.toSeq
+
+  test("near-dup bootstrap / compactStore: a fault at any publish leaves one whole generation; the next micro-batch runs as-is") {
+    def gated(root: String) = {
+      StreamingNearDup.bootstrap(docs(corpus), root)
+      StreamingNearDup.processBatch(spark, docs(batch0), root): Unit
+    }
+    val nextBatch = (root: String) => verdicts(StreamingNearDup.processBatch(spark, docs(batch1), root))
+    val bootstraps = everyFault[Seq[Seq[String]], Seq[String]](
+      setup = gated,
+      op = root => StreamingNearDup.bootstrap(docs(corpus.take(1)), root),
+      view = nearDupView,
+      next = nextBatch)
+    val compactions = everyFault[Seq[Seq[String]], Seq[String]](
+      setup = gated,
+      op = root => StreamingNearDup.compactStore(spark, root),
+      view = nearDupView,
+      next = nextBatch)
+    assert(bootstraps == 3 && compactions == 3)
+  }
+}

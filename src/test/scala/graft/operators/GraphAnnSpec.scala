@@ -439,4 +439,38 @@ class GraphAnnSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(again == 600L * 10)
     qdf.unpersist(); df.unpersist()
   }
+
+  test("distributed serving after an in-place appendStore serves the new store, not a memoized snapshot") {
+    val s2 = spark
+    import s2.implicits._
+    val rows = (4L until 800L).map(id => (id, planted(id, 8)))
+    val df = rows.toDF("vec_id", "f").persist()
+    // each query's near-twin arrives in the append: it is the query's
+    // l2-top-1, so a search still served from the pre-append snapshot
+    // cannot return it
+    val qs = (0L until 4L).map(q => q -> planted(q, 8))
+    val twins = qs.map { case (q, f) => (2000L + q, f.map(_ + 1L)) }.toDF("vec_id", "f")
+    val dir = java.nio.file.Files.createTempDirectory("gann_memo").toString
+    val graph = GraphAnn.buildGraph(df, degree = 16, dims = 16).persist()
+    val entry = GraphAnn.buildEntryLayerConnected(df, graph, dims = 16)
+      .collect().map(_.getLong(0)).toSeq
+    GraphAnn.writeStores(df, graph, dir, 16)
+    val store = GraphAnn.StoredIndex(dir, 16)
+    val qdf = qs.toDF("qid", "q")
+    def serve(csr: Option[GraphAnn.CsrIndex]) =
+      GraphAnn.searchStoredDistributed(spark, store, qdf, entryIds = entry, metric = "l2", csr = csr)
+        .collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(2))).toSeq.sorted
+    val before = serve(None)
+    GraphAnn.appendStore(spark, store, twins, degree = 16, entryIds = entry, metric = "l2")
+    val after = serve(None)
+    // the same search over a snapshot loaded fresh from disk
+    val fresh = serve(Some(GraphAnn.loadCsr(spark, store)))
+    assert(after == fresh, "a memoized pre-append snapshot was served")
+    assert(qs.forall { case (q, _) => after.exists(r => r._1 == q && r._2 == 2000L + q) },
+      "every query must surface its appended twin")
+    assert(after != before)
+    // the superseded generation's snapshot and broadcast were released
+    assert(GraphAnn.memoizedGenerations(dir) == Set(GraphAnn.storeGeneration(dir)))
+    graph.unpersist(); df.unpersist()
+  }
 }

@@ -91,6 +91,26 @@ class VersionedTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(t1.read().get.head().getLong(2) == 2L, "winner's data visible")
   }
 
+  test("two writers past the base check race for one version: exactly one manifest wins") {
+    val dir = Files.createTempDirectory("vt-race").toString
+    val t1 = new VersionedTable(spark, dir, nBuckets = 4)
+    val t2 = new VersionedTable(spark, dir, nBuckets = 4)
+    t1.commit(df(Seq((1L, "a", 1L))), Seq("k"), None)
+    // writer 2 commits v1 while writer 1, its base check passed and its
+    // data written, is about to publish its own v1 manifest
+    var raced = false
+    graft.core.Fs.beforeStep = step => if (step == "move" && !raced) {
+      raced = true
+      t2.commit(df(Seq((1L, "a", 2L))), Seq("k"), Some(0))
+    }
+    try intercept[VersionedTable.CommitConflict] {
+      t1.commit(df(Seq((1L, "a", 3L))), Seq("k"), Some(0))
+    } finally graft.core.Fs.beforeStep = _ => ()
+    assert(raced)
+    assert(t1.currentVersion().contains(1))
+    assert(t1.read().get.head().getLong(2) == 2L, "the winner's manifest must survive")
+  }
+
   test("vacuum drops old versions' files but keeps the retained window readable") {
     val dir = Files.createTempDirectory("vt4").toString
     val t = new VersionedTable(spark, dir, nBuckets = 2)

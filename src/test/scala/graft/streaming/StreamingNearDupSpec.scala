@@ -91,23 +91,23 @@ class StreamingNearDupSpec extends AnyFunSuite with BeforeAndAfterAll {
       val v1 = verdictMap(StreamingNearDup.processBatch(spark, df(batch1), root))
       assert(v0 ++ v1 == expected)
 
-      val sigRows = spark.read.parquet(s"$root/sig").count()
-      val hashRows = spark.read.parquet(s"$root/hash").count()
+      val sigRows = spark.read.parquet(StreamingNearDup.storeDir(root, "sig")).count()
+      val hashRows = spark.read.parquet(StreamingNearDup.storeDir(root, "hash")).count()
       assert(sigRows == (1 + 7) * 4 && hashRows == 1 + 7)
 
       // replayed batch: identical verdicts (its own first-run rows sit
       // at EQUAL seq and are ignored), zero new store rows
       val r1 = verdictMap(StreamingNearDup.processBatch(spark, df(batch1), root))
       assert(r1 == verdictMap(StreamingNearDup.processBatch(spark, df(batch1), root)) && r1 == v1)
-      assert(spark.read.parquet(s"$root/sig").count() == sigRows)
-      assert(spark.read.parquet(s"$root/hash").count() == hashRows)
+      assert(spark.read.parquet(StreamingNearDup.storeDir(root, "sig")).count() == sigRows)
+      assert(spark.read.parquet(StreamingNearDup.storeDir(root, "hash")).count() == hashRows)
 
       // the probe's bucket filter must hit the partition layout — a
       // post-scan filter would mean every batch reads the whole store.
       // The assertion matches a POPULATED PartitionFilters list naming
       // bucket (an empty list prints 'PartitionFilters: []' and would
       // also contain both substrings — vacuously)
-      val plan = StreamingNearDup.probeStore(spark, s"$root/sig", Seq(0, 1, 2),
+      val plan = StreamingNearDup.probeStore(spark, StreamingNearDup.storeDir(root, "sig"), Seq(0, 1, 2),
           StreamingNearDup.SigSchema)
         .queryExecution.executedPlan.toString
       assert("""PartitionFilters: \[[^\]]*bucket[^\]]*IN""".r.findFirstIn(plan).isDefined,
@@ -128,15 +128,15 @@ class StreamingNearDupSpec extends AnyFunSuite with BeforeAndAfterAll {
       StreamingNearDup.bootstrap(df(corpus), root)
       StreamingNearDup.processBatch(spark, df(batch0), root)
       def files(sub: String): Seq[Int] =
-        new java.io.File(s"$root/$sub").listFiles().filter(_.isDirectory)
+        new java.io.File(StreamingNearDup.storeDir(root, sub)).listFiles().filter(_.isDirectory)
           .map(d => d.listFiles().count(_.getName.endsWith(".parquet"))).toSeq
-      val before = spark.read.parquet(s"$root/sig").collect().map(_.toString).sorted.toSeq
+      val before = spark.read.parquet(StreamingNearDup.storeDir(root, "sig")).collect().map(_.toString).sorted.toSeq
       // corpus doc 1 and batch0's near-dups share blocks, so shared
       // bucket dirs hold a bootstrap file AND an append file
       assert(files("sig").exists(_ > 1))
       StreamingNearDup.compactStore(spark, root)
       assert(files("sig").forall(_ <= 1) && files("hash").forall(_ <= 1))
-      val after = spark.read.parquet(s"$root/sig").collect().map(_.toString).sorted.toSeq
+      val after = spark.read.parquet(StreamingNearDup.storeDir(root, "sig")).collect().map(_.toString).sorted.toSeq
       assert(after == before)
       val v1 = verdictMap(StreamingNearDup.processBatch(spark, df(batch1), root))
       assert(v1 == batch1.map(d => d.doc_id -> expected(d.doc_id)).toMap)
@@ -192,8 +192,8 @@ class StreamingNearDupSpec extends AnyFunSuite with BeforeAndAfterAll {
         // (stores appended, verdicts written) but the checkpoint never
         // committed — the restarted stream WILL redeliver batch 1
         StreamingNearDup.sinkBatch(root)(df(batch1), 1L)
-        val sigRows = spark.read.parquet(s"$root/sig").count()
-        val hashRows = spark.read.parquet(s"$root/hash").count()
+        val sigRows = spark.read.parquet(StreamingNearDup.storeDir(root, "sig")).count()
+        val hashRows = spark.read.parquet(StreamingNearDup.storeDir(root, "hash")).count()
 
         val q2 = startQuery() // the restart, same checkpoint
         try q2.processAllAvailable() finally q2.stop()
@@ -201,8 +201,8 @@ class StreamingNearDupSpec extends AnyFunSuite with BeforeAndAfterAll {
         // redelivery must change nothing: same verdicts, zero new
         // store rows — the uninterrupted run's counts exactly
         assert(verdictMap(spark.read.parquet(s"$root/verdicts")) == expected)
-        assert(spark.read.parquet(s"$root/sig").count() == sigRows)
-        assert(spark.read.parquet(s"$root/hash").count() == hashRows)
+        assert(spark.read.parquet(StreamingNearDup.storeDir(root, "sig")).count() == sigRows)
+        assert(spark.read.parquet(StreamingNearDup.storeDir(root, "hash")).count() == hashRows)
         assert(sigRows == (1 + 7) * 4 && hashRows == 1 + 7,
           "post-restart stores must hold exactly the uninterrupted run's rows")
       } finally graft.core.Fs.deleteRecursively(new java.io.File(ckpt))
@@ -216,21 +216,21 @@ class StreamingNearDupSpec extends AnyFunSuite with BeforeAndAfterAll {
       // park a copy of the HASH store, run batch1 (both appends land),
       // then restore the hash copy — simulating a JVM death after the
       // sig append but before the hash append
-      val hashDir = new java.io.File(s"$root/hash")
+      val hashDir = new java.io.File(StreamingNearDup.storeDir(root, "hash"))
       val park = new java.io.File(s"$root/hash.park")
       copyTree(hashDir, park)
       val v1 = verdictMap(StreamingNearDup.processBatch(spark, df(batch1), root))
-      val sigAfter = spark.read.parquet(s"$root/sig").count()
-      val hashAfter = spark.read.parquet(s"$root/hash").count()
+      val sigAfter = spark.read.parquet(StreamingNearDup.storeDir(root, "sig")).count()
+      val hashAfter = spark.read.parquet(StreamingNearDup.storeDir(root, "hash")).count()
       graft.core.Fs.deleteRecursively(hashDir)
       park.renameTo(hashDir)
       // the redelivered batch must land the MISSING hash rows without
       // double-appending the sig rows that already survived
       val v2 = verdictMap(StreamingNearDup.processBatch(spark, df(batch1), root))
       assert(v2 == v1, "replay verdicts must match the first attempt")
-      assert(spark.read.parquet(s"$root/sig").count() == sigAfter,
+      assert(spark.read.parquet(StreamingNearDup.storeDir(root, "sig")).count() == sigAfter,
         "sig rows double-appended after a half-landed batch")
-      assert(spark.read.parquet(s"$root/hash").count() == hashAfter,
+      assert(spark.read.parquet(StreamingNearDup.storeDir(root, "hash")).count() == hashAfter,
         "hash rows missing after replay of a half-landed batch")
     }
   }
@@ -240,23 +240,5 @@ class StreamingNearDupSpec extends AnyFunSuite with BeforeAndAfterAll {
       dst.mkdirs()
       src.listFiles().foreach(f => copyTree(f, new java.io.File(dst, f.getName)))
     } else java.nio.file.Files.copy(src.toPath, dst.toPath)
-  }
-
-  test("a crash between compaction renames is healed by the next processBatch, not only by compactStore") {
-    withRoot { root =>
-      StreamingNearDup.bootstrap(df(corpus), root)
-      StreamingNearDup.processBatch(spark, df(batch0), root)
-      // simulate the torn swap: live parked at .old, nothing live
-      for (sub <- Seq("sig", "hash")) {
-        assert(new java.io.File(s"$root/$sub")
-          .renameTo(new java.io.File(s"$root/$sub.old")))
-      }
-      // a restarted stream's first micro-batch must heal and gate
-      // correctly — no operator intervention (compactStore) required
-      val v1 = verdictMap(StreamingNearDup.processBatch(spark, df(batch1), root))
-      assert(v1 == batch1.map(d => d.doc_id -> expected(d.doc_id)).toMap)
-      assert(new java.io.File(s"$root/sig").exists() &&
-        !new java.io.File(s"$root/sig.old").exists())
-    }
   }
 }

@@ -126,12 +126,14 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows.last.getAs[String]("root_after_hex") ==
       Bytes.toHex(Commitments.merkleRoot(allLeaves)))
     // persisted frontier is the logarithmic spine, not the history
-    val spine = java.nio.file.Files.readString(java.nio.file.Paths.get(sink, "_frontier.txt"))
+    val spine = DriverState.read(java.nio.file.Paths.get(sink, "_frontier.state")) { in =>
+      in.readLong(); in.readUTF()
+    }.get
     assert(spine.count(_ == ':') <= 15, s"spine entries: ${spine.count(_ == ':')}")
 
     // crash recovery: a fresh appender with a deleted frontier file must
     // rebuild from the sink and keep appending bit-identically
-    java.nio.file.Files.delete(java.nio.file.Paths.get(sink, "_frontier.txt"))
+    java.nio.file.Files.delete(java.nio.file.Paths.get(sink, "_frontier.state"))
     val recovered = new BlockDbAppender(spark, sink, tmp("bdb-scale-quar2"))
     recovered.processBatch(
       Seq((n.toLong, bh(n), sr(n))).toDF("block_number", "block_hash", "state_root"), 99L)
@@ -139,6 +141,42 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(after.length == n + 1)
     assert(after.last.getAs[String]("root_after_hex") ==
       Bytes.toHex(Commitments.merkleRoot(allLeaves :+ Commitments.blockLeafHash(n.toLong, bh(n), sr(n)))))
+  }
+
+  test("a torn, truncated or older-format frontier file takes the rebuild path") {
+    val s2 = spark
+    import s2.implicits._
+    val n = 40
+    def bh(i: Int) = graft.core.Keccak.keccak256(graft.core.Bytes.beBytes(i.toLong, 8))
+    def sr(i: Int) = graft.core.Keccak.keccak256(graft.core.Bytes.beBytes(i.toLong + 1000000, 8))
+    def blocks(r: Range) = r.map(i => (i.toLong, bh(i), sr(i))).toDF("block_number", "block_hash", "state_root")
+    val golden = Bytes.toHex(Commitments.merkleRoot(
+      (0 to n).map(i => Commitments.blockLeafHash(i.toLong, bh(i), sr(i)))))
+    val state = "_frontier.state"
+    // a sink holding blocks 0..n-1, then the frontier file(s) the case leaves
+    val cases: Seq[(String, java.nio.file.Path => Unit)] = Seq(
+      "empty" -> { d => Files.write(d.resolve(state), Array.emptyByteArray) },
+      "truncated" -> { d =>
+        val b = Files.readAllBytes(d.resolve(state))
+        Files.write(d.resolve(state), b.take(b.length / 2))
+      },
+      // the older text format under its old name: torn, and (a stale
+      // spine that agrees with the sink's high-water mark) readable
+      "older, empty" -> { d => Files.delete(d.resolve(state)); Files.writeString(d.resolve("_frontier.txt"), "") },
+      "older, stale" -> { d =>
+        Files.delete(d.resolve(state))
+        Files.writeString(d.resolve("_frontier.txt"), s"${n - 1}\n$n;0:${"00" * 32}")
+      })
+    cases.foreach { case (name, corrupt) =>
+      val sink = tmp("bdb-torn-sink")
+      new BlockDbAppender(spark, sink, tmp("bdb-torn-quar")).processBatch(blocks(0 until n), 0L)
+      corrupt(java.nio.file.Paths.get(sink))
+      val restarted = new BlockDbAppender(spark, sink, tmp("bdb-torn-quar2"))
+      restarted.processBatch(blocks(n to n), 1L)
+      val rows = spark.read.parquet(sink).orderBy("block_number").collect()
+      assert(rows.length == n + 1, s"$name: the next block must be accepted")
+      assert(rows.last.getAs[String]("root_after_hex") == golden, s"$name: root after restart")
+    }
   }
 
   test("streaming storage-DB maintenance: incremental snapshots equal full rebuild") {
