@@ -43,7 +43,6 @@ object Graft {
   def buildStorageDb(entries: DataFrame): DataFrame = ZkPipeline.storageDb(entries)
   def buildStateDb(storageDb: DataFrame): DataFrame = ZkPipeline.stateDb(storageDb)
   def buildBlockDb(stateDb: DataFrame, headers: DataFrame): DataFrame = ZkPipeline.blockDb(stateDb, headers)
-  def updateStorageDb(prev: DataFrame, delta: DataFrame): DataFrame = ZkPipeline.storageDbIncremental(prev, delta)
 
   // ------------------------------------------------------------ checks
   def verifyProofs(proofs: DataFrame): DataFrame = ZkPipeline.verifyStorageProofs(proofs)

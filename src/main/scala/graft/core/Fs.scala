@@ -4,6 +4,7 @@ import java.nio.ByteBuffer
 import java.nio.channels.FileChannel
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, StandardCopyOption, StandardOpenOption}
+import scala.jdk.CollectionConverters._
 
 /** Filesystem helpers shared by every on-disk store, and the ONE
   * publish primitive every commit point is built on ([[publishFile]]);
@@ -12,7 +13,11 @@ import java.nio.file.{Files, Path, StandardCopyOption, StandardOpenOption}
   * ([[publishGeneration]]): `root/CURRENT` names the live generation
   * `root/g<N>/` plus one caller payload line, so a whole store switches
   * with a single rename and a crash at any step leaves the old
-  * generation live — no recovery step ever runs on read.
+  * generation live — no recovery step ever runs on read. A new
+  * generation carries unchanged data over from the live one with
+  * [[linkTree]] (hard links: no data copy). Build-once stores
+  * ([[buildOnce]]) are built whole in a temp directory and renamed into
+  * place, so their directory existing means the build finished.
   */
 object Fs {
 
@@ -65,6 +70,39 @@ object Fs {
       case _: java.io.IOException if Files.exists(target) =>
         deleteRecursively(tmp.toFile); false
     }
+
+  /** Build-once directory: if `target` exists it is complete and
+    * nothing runs. Otherwise `build` creates and fills a fresh sibling
+    * path, which [[publishDir]] renames onto `target` — a reader never
+    * sees a half-built directory, a failed build leaves no temp behind,
+    * and the loser of a cross-process race discards its copy. Builds
+    * in one JVM are serialized. */
+  def buildOnce(target: Path)(build: Path => Unit): Unit = buildLock.synchronized {
+    if (!Files.exists(target)) {
+      val tmp = target.resolveSibling(s"${target.getFileName}.tmp-${ProcessHandle.current().pid()}")
+      deleteRecursively(tmp.toFile)
+      try build(tmp)
+      catch { case t: Throwable => deleteRecursively(tmp.toFile); throw t }
+      publishDir(tmp, target): Unit
+    }
+  }
+  private object buildLock
+
+  /** Hard-link every file under `from` whose path relative to `from`
+    * passes `keep` to the same relative path under `to`, creating
+    * directories as needed: an immutable file joins a new generation
+    * without copying its data. */
+  def linkTree(from: Path, to: Path)(keep: Path => Boolean): Unit = {
+    val walk = Files.walk(from)
+    try walk.iterator().asScala.filter(Files.isRegularFile(_)).foreach { f =>
+      val rel = from.relativize(f)
+      if (keep(rel)) {
+        val dst = to.resolve(rel)
+        Files.createDirectories(dst.getParent)
+        Files.createLink(dst, f)
+      }
+    } finally walk.close()
+  }
 
   /** a store root's live generation: number and payload line. */
   final case class Generation(n: Long, payload: String) {

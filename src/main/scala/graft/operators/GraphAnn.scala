@@ -1,7 +1,6 @@
 package graft.operators
 
-import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 import java.security.MessageDigest
 import java.util.concurrent.ConcurrentHashMap
 
@@ -42,7 +41,7 @@ object GraphAnn {
     * previously published store can't be served stale. Knob values
     * are folded into the canon separately — this token only covers
     * what the knobs can't see (the algorithm itself). */
-  val BuildVersion = "gb6"
+  val BuildVersion = "gb7"
 
   /** deterministic ±1 hyperplanes (md5-derived), one independent
     * matrix per hash table `t` — independent instance from the
@@ -431,8 +430,16 @@ object GraphAnn {
   // hop is then a PARTITION-PRUNED point read of only the probed
   // buckets' directories, and one read serves the WHOLE query batch.
 
-  /** a committed on-disk graph index: `dir/fx` (vec_id, f) and
-    * `dir/edges` (src, dst), both partitioned by `bucket`. */
+  /** a committed on-disk graph index under a generation pointer
+    * ([[graft.core.Fs.publishGeneration]]): `dir/CURRENT` names the live
+    * generation `dir/g<N>/`, which holds `fx` (vec_id, f) and `edges`
+    * (src, dst), both partitioned by `bucket`, plus the entry layer
+    * `entry` (vec_id). Every writer — [[writeStores]], [[appendStore]],
+    * [[refreshEntryLayer]] — fills the next generation and then swaps
+    * the pointer, so a reader sees the old store or the new one, never
+    * a mix, and a crash at any step leaves the old one live with no
+    * recovery step. A publish deletes the generation it replaced:
+    * single writer per store, its readers drained first. */
   final case class StoredIndex(dir: String, nBuckets: Int)
 
   /** id → bucket, driver-replicable (plain floorMod — no engine hash
@@ -441,31 +448,35 @@ object GraphAnn {
     * this is the routing key, exactly the `vt_lookup` discipline. */
   def bucketOf(id: Long, nBuckets: Int): Int = math.floorMod(id, nBuckets.toLong).toInt
 
-  /** commit the serving stores. One-time per corpus, alongside the
-    * built graph/entry layer; `overwrite` keeps the commit idempotent. */
-  def writeStores(fx: DataFrame, graph: DataFrame, dir: String, nBuckets: Int = 64): Unit = {
-    fx.withColumn("bucket", pmod(col("vec_id"), lit(nBuckets.toLong)).cast("int"))
-      .write.partitionBy("bucket").mode("overwrite").parquet(s"$dir/fx")
-    graph.withColumn("bucket", pmod(col("src"), lit(nBuckets.toLong)).cast("int"))
-      .write.partitionBy("bucket").mode("overwrite").parquet(s"$dir/edges")
-    advanceGeneration(dir)
-  }
+  /** commit the serving stores — the vectors, the built graph and its
+    * entry layer (a frame with a `vec_id` column) — as a new generation
+    * of the store at `dir`. */
+  def writeStores(fx: DataFrame, graph: DataFrame, entry: DataFrame, dir: String,
+                  nBuckets: Int = 64): Unit =
+    Fs.publishGeneration(Paths.get(dir)) { g =>
+      fx.withColumn("bucket", pmod(col("vec_id"), lit(nBuckets.toLong)).cast("int"))
+        .write.partitionBy("bucket").parquet(s"$g/fx")
+      graph.withColumn("bucket", pmod(col("src"), lit(nBuckets.toLong)).cast("int"))
+        .write.partitionBy("bucket").parquet(s"$g/edges")
+      entry.select("vec_id").write.parquet(s"$g/entry")
+      ""
+    }: Unit
 
-  private def generationFile(dir: String) = Paths.get(dir, "_generation")
+  /** the live generation of the store at `dir`. */
+  private[operators] def liveGeneration(dir: String): Fs.Generation =
+    Fs.currentGeneration(Paths.get(dir))
+      .getOrElse(throw new IllegalStateException(s"no graph store at $dir"))
 
-  /** the store's generation counter: [[writeStores]] and
-    * [[appendStore]] rewrite `dir` in place and end by advancing it, so
-    * anything memoized per store keys on (dir, generation) and never
-    * serves a rewritten store's old snapshot. 0 for a store without
-    * one. */
-  def storeGeneration(dir: String): Long = {
-    val f = generationFile(dir)
-    if (Files.exists(f)) Files.readString(f).trim.toLong else 0L
-  }
+  private def liveDir(dir: String): java.nio.file.Path = liveGeneration(dir).dir(Paths.get(dir))
 
-  private def advanceGeneration(dir: String): Unit =
-    Fs.publishFile(generationFile(dir),
-      (storeGeneration(dir) + 1).toString.getBytes(UTF_8), replace = true)
+  /** path of one table (`fx`, `edges` or `entry`) of the store's live
+    * generation; resolve it per read — a later publish replaces the
+    * generation. */
+  def tablePath(dir: String, table: String): String = liveDir(dir).resolve(table).toString
+
+  /** the committed entry layer's ids, ascending. */
+  def storedEntry(spark: org.apache.spark.sql.SparkSession, dir: String): Seq[Long] =
+    spark.read.parquet(tablePath(dir, "entry")).collect().map(_.getLong(0)).toSeq.sorted
 
   /** point read of `ids` from a bucketed store table (pass the table
     * read ONCE per search so its file index is listed once, not per
@@ -517,12 +528,15 @@ object GraphAnn {
     *     the buckets holding a touched src are re-pruned (per touched
     *     src: top-2·degree by cosine over current ∪ new, the
     *     symmetrized bound; untouched srcs in the same bucket pass
-    *     through byte-identical) and dynamically overwritten, the
-    *     VersionedTable dirty-bucket discipline. Delta vectors append
-    *     into `fx`'s id buckets.
+    *     through byte-identical) and written into the next generation,
+    *     the VersionedTable dirty-bucket discipline. The delta's
+    *     vectors are written beside them into `fx`'s id buckets; every
+    *     other file is hard-linked over, and the pointer swap publishes
+    *     the append atomically.
     *
     * Cost: one budgeted stored search + a rewrite of ≤ touched
-    * buckets; resident data outside them is never read or written.
+    * buckets + one link per other file; resident data outside the
+    * touched buckets is never read or rewritten.
     * GraphAnnSpec + ss15 pin probe(append) ≡ probe(rebuild) on the
     * planted corpus.
     *
@@ -542,8 +556,9 @@ object GraphAnn {
       .map { case (id, f) => id -> f.toArray }
     require(delta.length <= GraphDeltaCap,
       s"appendStore delta ${delta.length} exceeds GraphDeltaCap=$GraphDeltaCap — chunk the ingest")
-    val fxTable = spark.read.parquet(s"${store.dir}/fx")
-    val edgeTable = spark.read.parquet(s"${store.dir}/edges")
+    val live = liveDir(store.dir)
+    val fxTable = spark.read.parquet(s"$live/fx")
+    val edgeTable = spark.read.parquet(s"$live/edges")
 
     // 1. LINK against the resident graph: over-fetch 2·degree
     //    candidates by IP, then rerank by cosine with the fetched
@@ -629,39 +644,37 @@ object GraphAnn {
       .select("src", "dst")
     val rewritten = repaired.unionByName(passThrough)
       .withColumn("bucket", pmod(col("src"), lit(store.nBuckets.toLong)).cast("int"))
-      // the plan references edgeTable on both sides of the rewrite;
-      // materialize BEFORE overwriting the files it reads from
-      .localCheckpoint(eager = true)
-    // idempotent re-run guard: a retried ingest (crash between the
-    // edges overwrite and the fx append, then rerun) must not append
-    // duplicate fx rows — drop delta ids the store already holds. The
-    // check is a pruned point read over the (bounded) delta id set;
-    // the edges side is already idempotent (distinct + dynamic
-    // overwrite of the same touched buckets).
+    // idempotent re-run guard: re-appending a delta (a retried chunked
+    // ingest) must not add duplicate fx rows — drop delta ids the store
+    // already holds. The check is a pruned point read over the
+    // (bounded) delta id set; the edges side is already idempotent
+    // (distinct + rewrite of the same touched buckets).
     val alreadyPresent = prunedRead(fxTable, "vec_id", delta.map(_._1).toSeq, store.nBuckets)
       .select("vec_id").as[Long].collect().toSet
     val freshFx =
       if (alreadyPresent.isEmpty) deltaFx
       else deltaFx.filter(!col("vec_id").isin(alreadyPresent.toSeq: _*))
-    val prevMode = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      rewritten.write.partitionBy("bucket").mode("overwrite").parquet(s"${store.dir}/edges")
+    val touched = touchedBuckets.map(b => s"bucket=$b").toSet
+    Fs.publishGeneration(Paths.get(store.dir)) { g =>
+      rewritten.write.partitionBy("bucket").parquet(s"$g/edges")
       freshFx.select("vec_id", "f")
         .withColumn("bucket", pmod(col("vec_id"), lit(store.nBuckets.toLong)).cast("int"))
-        .write.partitionBy("bucket").mode("append").parquet(s"${store.dir}/fx")
-    } finally prevMode match {
-      case Some(m) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", m)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+        .write.partitionBy("bucket").parquet(s"$g/fx")
+      // carry every other bucket file over; the written tables keep
+      // their own top-level markers
+      Fs.linkTree(live.resolve("edges"), g.resolve("edges"))(rel =>
+        rel.getNameCount > 1 && !touched.contains(rel.getName(0).toString))
+      Fs.linkTree(live.resolve("fx"), g.resolve("fx"))(_.getNameCount > 1)
+      Fs.linkTree(live.resolve("entry"), g.resolve("entry"))(_ => true)
+      ""
     }
-    advanceGeneration(store.dir)
     isolated
   }
 
   /** ENTRY-LAYER MAINTENANCE for a committed store: recompute the
     * component-guaranteed entry layer ([[buildEntryLayerConnected]])
-    * from the CURRENT committed fx/edges tables and overwrite
-    * `dir/<entryName>`. [[appendStore]] repairs neighborhoods but
+    * from the CURRENT committed fx/edges tables and publish it as a new
+    * generation (fx and edges hard-linked over). [[appendStore]] repairs neighborhoods but
     * never touches the entry layer — a long append stream that births
     * a NEW component (a delta batch whose vectors are all nearer each
     * other than any resident survives link-pruning as an island) would
@@ -675,10 +688,10 @@ object GraphAnn {
     * unreachable under the stale entries and exactly-searchable after
     * the refresh. */
   def refreshEntryLayer(spark: org.apache.spark.sql.SparkSession, store: StoredIndex,
-                        entryName: String = "entry",
                         nPlanes: Int = 5, dims: Int = -1): Unit = {
-    val fx = spark.read.parquet(s"${store.dir}/fx").select("vec_id", "f")
-    val edges = spark.read.parquet(s"${store.dir}/edges").select("src", "dst")
+    val live = liveDir(store.dir)
+    val fx = spark.read.parquet(s"$live/fx").select("vec_id", "f")
+    val edges = spark.read.parquet(s"$live/edges").select("src", "dst")
     // dims comes from the COMMITTED vectors by default (`dims = -1`),
     // never a caller guess: a mismatched width null-pads the sign
     // projection's zip_with, every coarse bucket degenerates to one,
@@ -687,11 +700,11 @@ object GraphAnn {
     val useDims =
       if (dims > 0) dims
       else fx.select(size(col("f"))).first().getInt(0)
-    buildEntryLayerConnected(fx, edges, nPlanes, useDims)
-      // materialize before overwriting a path the plan may read from
-      // (entryName could shadow an input on a re-run)
-      .localCheckpoint(eager = true)
-      .write.mode("overwrite").parquet(s"${store.dir}/$entryName")
+    Fs.publishGeneration(Paths.get(store.dir)) { g =>
+      Seq("fx", "edges").foreach(t => Fs.linkTree(live.resolve(t), g.resolve(t))(_ => true))
+      buildEntryLayerConnected(fx, edges, nPlanes, useDims).write.parquet(s"$g/entry")
+      ""
+    }: Unit
   }
 
   /** Ingest an arbitrarily large delta by deterministic RANGE
@@ -717,9 +730,9 @@ object GraphAnn {
     * refresh); pass `autoRefresh = false` — the external-entry-layout
     * opt-out — and rely on a caller-side schedule if the entry layer
     * is managed outside this store (BOTH triggers are disabled: an
-    * isolation-triggered refresh would write an unread `dir/entry`
-    * while the caller's real layer went stale, the exact failure the
-    * opt-out exists to prevent). `entryName`/`entryPlanes`/`entryDims`
+    * isolation-triggered refresh would publish a stored layer nobody
+    * reads while the caller's real layer went stale, the exact failure
+    * the opt-out exists to prevent). `entryPlanes`/`entryDims`
     * parameterize the refreshed layer exactly as [[refreshEntryLayer]]
     * does; `entryDims = -1` (the default) derives the projection width
     * from the store's committed vectors rather than trusting a caller
@@ -728,8 +741,7 @@ object GraphAnn {
                          deltaFx: DataFrame, degree: Int = 16, ef: Int = 48,
                          maxExpand: Int = 80, batch: Int = 8,
                          entryIds: Seq[Long], metric: String = "ip",
-                         pieceCap: Long = GraphDeltaCap,
-                         entryName: String = "entry", refreshEvery: Int = 8,
+                         pieceCap: Long = GraphDeltaCap, refreshEvery: Int = 8,
                          entryPlanes: Int = 5, entryDims: Int = -1,
                          autoRefresh: Boolean = true): Int = {
     // persist: the bisection runs O(tree) counts plus one appendStore
@@ -759,7 +771,7 @@ object GraphAnn {
       val b = cached.agg(min("vec_id"), max("vec_id")).collect()(0)
       val pieces = if (b.isNullAt(0)) 0 else ingest(b.getLong(0), b.getLong(1))
       if (autoRefresh && (isolated > 0 || pieces >= refreshEvery))
-        refreshEntryLayer(spark, store, entryName, entryPlanes, entryDims)
+        refreshEntryLayer(spark, store, entryPlanes, entryDims)
       pieces
     } finally { cached.unpersist(); () }
   }
@@ -816,8 +828,9 @@ object GraphAnn {
     // Memory stays bounded: caching is lazy per partition, so a trickle
     // query materializes only its probed buckets, and a store too big
     // to cache is already past the serve-shard discipline.
-    val fxTable = spark.read.parquet(s"${store.dir}/fx").persist()
-    val edgeTable = spark.read.parquet(s"${store.dir}/edges").persist()
+    val live = liveDir(store.dir)
+    val fxTable = spark.read.parquet(s"$live/fx").persist()
+    val edgeTable = spark.read.parquet(s"$live/edges").persist()
     try {
     def fetchVecs(ids: Seq[Long]): Map[Long, Array[Long]] =
       if (ids.isEmpty) Map.empty
@@ -921,11 +934,11 @@ object GraphAnn {
   val ServeCsrMaxBytes = 1500000000L
 
   /** in-JVM memo of loaded snapshots per store dir, tagged with the
-    * [[storeGeneration]] they were loaded at (the QuantizerCache
-    * load-don't-rebuild discipline): a serving process snapshots each
-    * committed store once, then every batch reuses the broadcastable
-    * CSR. An in-place rewrite ([[appendStore]]) advances the
-    * generation, so the next lookup reloads instead of serving the old
+    * number of the generation they were loaded from (the
+    * QuantizerCache load-don't-rebuild discipline): a serving process
+    * snapshots each committed store once, then every batch reuses the
+    * broadcastable CSR. Every store writer publishes a new generation,
+    * so the next lookup after one reloads instead of serving the old
     * snapshot. */
   private val csrMemo = new ConcurrentHashMap[String, (Long, CsrIndex)]()
 
@@ -941,7 +954,7 @@ object GraphAnn {
     * released and replaced. */
   private def memoized[V](memo: ConcurrentHashMap[String, (Long, V)], store: StoredIndex,
                           release: V => Unit)(load: => V): V = {
-    val gen = storeGeneration(store.dir)
+    val gen = liveGeneration(store.dir).n
     memo.compute(store.dir, (_, held) =>
       if (held != null && held._1 == gen) held
       else { if (held != null) release(held._2); (gen, load) })._2
@@ -969,8 +982,9 @@ object GraphAnn {
   def loadCsr(spark: org.apache.spark.sql.SparkSession, store: StoredIndex,
               maxBytes: Long = ServeCsrMaxBytes): CsrIndex = {
     import spark.implicits._
-    val fxTable = spark.read.parquet(s"${store.dir}/fx").select("vec_id", "f")
-    val edgeTable = spark.read.parquet(s"${store.dir}/edges").select("src", "dst")
+    val live = liveDir(store.dir)
+    val fxTable = spark.read.parquet(s"$live/fx").select("vec_id", "f")
+    val edgeTable = spark.read.parquet(s"$live/edges").select("src", "dst")
     val n = fxTable.count()
     val e = edgeTable.count()
     val dims = if (n == 0) 0

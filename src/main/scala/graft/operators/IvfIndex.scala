@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.linalg.{Vector, Vectors}
 import org.apache.spark.ml.functions.array_to_vector
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Path, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -52,8 +52,8 @@ object IvfIndex {
 
   /** cache-key token for persisted stores: any change to the training
     * path (sampling, layout, k-means params) must bump this so an
-    * `_OK`-gated store built under the old trainer re-keys instead of
-    * being served silently. */
+    * store published under the old trainer re-keys instead of being
+    * served silently. */
   val TrainerVersion = "t2"
 
   /** train the coarse quantizer (k-means over a bounded sample, fixed
@@ -261,12 +261,11 @@ object IvfIndex {
     Fs.publishGeneration(c.root) { g =>
       live(spark, c).filter(col("list_id").isin(dirtyLists.toSeq: _*))
         .write.mode("append").partitionBy("list_id").parquet(g.toString)
-      new java.io.File(c.data).listFiles()
-        .filter(l => l.getName.startsWith("list_id=") && !dirtyLists.contains(l.getName.stripPrefix("list_id=").toInt))
-        .foreach { l =>
-          val to = Files.createDirectories(g.resolve(l.getName))
-          l.listFiles().foreach(f => Files.createLink(to.resolve(f.getName), f.toPath))
-        }
+      Fs.linkTree(Paths.get(c.data), g) { rel =>
+        val list = rel.getName(0).toString
+        rel.getNameCount > 1 && list.startsWith("list_id=") &&
+          !dirtyLists.contains(list.stripPrefix("list_id=").toInt)
+      }
       // live count is invariant under compaction; the epoch advances so
       // post-compaction appends stamp above every reclaimed generation
       s"${c.n} ${c.epoch + 1}"

@@ -58,9 +58,11 @@ object FixtureStore {
   }
 
   /** content-fingerprinted location: a fixture change can never serve
-    * a stale dump (same discipline as the zk_ingest_rpc tmp cache). */
+    * a stale dump (same discipline as the zk_ingest_rpc tmp cache). The
+    * `published` token keys only directories built by [[ensure]]'s
+    * build-once publish, never one written in place. */
   lazy val dir: String = {
-    val canon = (entriesRel.map(e =>
+    val canon = (Seq("published") ++ entriesRel.map(e =>
       s"${e.block_number}|${e.contract}|${e.mapping_slot}|${e.length_slot}|${e.mapping_key}|${e.value}") ++
       headersRel.map(h => s"${h.block_number}|${h.block_hash}|${h.parent_hash}")).mkString("\n")
     val tag = Bytes.toHex(Keccak.keccak256(canon.getBytes("UTF-8")).take(8))
@@ -175,17 +177,12 @@ object FixtureStore {
   def goldenProvingBlockHashHex(minB: Long, maxB: Long): String =
     hx(goldenProvingBlockHashBytes(minB, maxB))
 
-  /** idempotent write-once (marker-gated; synchronized — Verify runs
-    * queries sequentially, but Bench may share the JVM). */
-  def ensure(spark: SparkSession): Unit = synchronized {
-    val marker = new java.io.File(dir, "_OK")
-    if (!marker.exists()) {
+  /** idempotent write-once ([[graft.core.Fs.buildOnce]]: the
+    * directory existing means the dump is complete). */
+  def ensure(spark: SparkSession): Unit =
+    graft.core.Fs.buildOnce(java.nio.file.Paths.get(dir)) { tmp =>
       import spark.implicits._
-      spark.createDataset(entriesRel).toDF().coalesce(1)
-        .write.mode("overwrite").parquet(s"$dir/entries")
-      spark.createDataset(headersRel).toDF().coalesce(1)
-        .write.mode("overwrite").parquet(s"$dir/headers")
-      marker.createNewFile()
+      spark.createDataset(entriesRel).toDF().coalesce(1).write.parquet(s"$tmp/entries")
+      spark.createDataset(headersRel).toDF().coalesce(1).write.parquet(s"$tmp/headers")
     }
-  }
 }

@@ -90,21 +90,6 @@ object ZkPipeline {
     cur.select(groupCols.map(col) :+ col("hash").as("root"): _*)
   }
 
-  /** Incremental storage-DB maintenance (the reference's partial/full
-    * node split — recompute only the dirty path, reuse siblings
-    * (query2/storage/partial_inner.rs) — recast as incremental view
-    * maintenance): groups touched by the delta are rebuilt, untouched
-    * groups are carried over with an anti-join. `delta` must hold the
-    * FULL entry set of each dirty (block, contract) group. At scale
-    * the anti-join keys on the same (block, contract) partitioning the
-    * DB is stored under, so carrying over untouched groups reads only
-    * metadata-pruned partitions. */
-  def storageDbIncremental(prev: DataFrame, delta: DataFrame): DataFrame = {
-    val dirty = delta.select("block_number", "contract").distinct()
-    prev.join(broadcast(dirty), Seq("block_number", "contract"), "left_anti")
-      .unionByName(storageDb(delta))
-  }
-
   /** S2 ingest-time proof validation (eth.rs:310-333): walk each
     * EIP-1186 proof, check keccak linkage + path, and compare the
     * extracted value against the claimed entry value. Embarrassingly
@@ -151,18 +136,6 @@ object ZkPipeline {
         Aggregators.merkleRoot(
           col("contract"),
           stateLeafHash(col("contract"), col("mapping_slot"), col("length_slot"), col("storage_root"))).as("state_root"))
-
-  /** Incremental state-DB maintenance, same dirty-group pattern as
-    * [[storageDbIncremental]]: blocks touched by the storage-DB delta
-    * are re-aggregated, untouched blocks carry over via anti-join. At
-    * rest both sides share the block_number partitioning, so the
-    * carry-over reads only metadata-pruned partitions. */
-  def stateDbIncremental(prevState: DataFrame, storageDbDirty: DataFrame): DataFrame = {
-    val rebuilt = stateDb(storageDbDirty)
-    val dirtyBlocks = storageDbDirty.select("block_number").distinct()
-    prevState.join(dirtyBlocks, Seq("block_number"), "left_anti")
-      .unionByName(rebuilt)
-  }
 
   // ------------------------------------------------------------ §3.1 stage 8
   /** block DB rows: state root bound to the header chain (J3) with the
@@ -558,14 +531,13 @@ object ZkPipeline {
     * (query_erc20/block/full_node.rs) before the root sums them. */
   def erc20PerBlock(entries: DataFrame, contract: Array[Byte], slot: Int, user: Array[Byte],
       rate: BigInteger, totalSupply: BigInteger, minB: Long, maxB: Long): DataFrame = {
-    val scoped = entries
-      .filter(col("contract") === lit(contract) && col("mapping_slot") === slot)
-    // P7: clamp the query range to what the DB actually holds
-    val bounds = scoped.agg(min("block_number").as("db_min"), max("block_number").as("db_max"))
-    val blocks = scoped
-      .crossJoin(broadcast(bounds))
-      .filter(col("block_number") >= greatest(lit(minB), col("db_min")) &&
-        col("block_number") <= least(lit(maxB), col("db_max")))
+    // P7 (clamp the query range to what the DB holds) needs no bounds
+    // side-scan: every scoped row lies inside the DB bounds, so the raw
+    // range selects exactly the clamped range's rows — one scan of the
+    // fact, as in [[erc20Batch]]
+    val blocks = entries
+      .filter(col("contract") === lit(contract) && col("mapping_slot") === slot &&
+        col("block_number").between(minB, maxB))
     // P4: per block, the user's balance or 0 when absent
     blocks
       .groupBy("block_number")

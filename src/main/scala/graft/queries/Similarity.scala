@@ -954,7 +954,7 @@ object Similarity {
         // measured min recall@10 across the 4 queries: 2/10 at deg 8
         // vs 9/10 at deg 16 on the 2000-vector corpus
         val store = graphStoreFor(s, d, base)
-        val entry = s.read.parquet(s"$store/entry").collect().map(_.getLong(0)).toSeq
+        val entry = GraphAnn.storedEntry(s, store)
         val (ann, budgets) = GraphAnn.searchStoredWithBudget(
           s, GraphAnn.StoredIndex(store, 64), qs, k = 10, ef = 48, maxExpand = 80,
           batch = 8, entryIds = entry)
@@ -1377,19 +1377,18 @@ object Similarity {
           // broadcast form is what makes it affordable at 1M.
           val g = GraphAnn.buildGraph(cached, degree = 16, dims = 16,
             tables = 8, refine = 1).persist()
-          GraphAnn.writeStores(cached, g, tmp, nB)
           // nPlanes = 10 ⇒ up to 1024 coarse entries: at 1M vectors
           // a 32-entry layer starts the descent too far from most
           // queries; entries are one shared broadcast scored once per
           // query (1024 × 16-dim ips ≈ a sixth of the expansion
           // budget), so width is the cheapest navigability knob
-          GraphAnn.buildEntryLayerConnected(cached, g, nPlanes = 10, dims = 16)
+          val entry = GraphAnn.buildEntryLayerConnected(cached, g, nPlanes = 10, dims = 16)
             .localCheckpoint(eager = true)
-            .write.mode("overwrite").parquet(s"$tmp/entry")
+          GraphAnn.writeStores(cached, g, entry, tmp, nB)
           g.unpersist(); cached.unpersist(): Unit
         }
         val st = GraphAnn.StoredIndex(store, nB)
-        val entry = s.read.parquet(s"$store/entry").collect().map(_.getLong(0)).toSeq
+        val entry = GraphAnn.storedEntry(s, store)
         val queries = s.range(nq).select(col("id").as("qid"),
           array((0 until 16).map(j => coordExpr("id", j)): _*).as("q"))
         val res = GraphAnn.searchStoredDistributed(s, st, queries, k = 10,
@@ -2223,24 +2222,21 @@ object Similarity {
         val qs = all.filter(col("vec_id") < 4).collect()
           .map(r => r.getLong(0) -> r.getSeq[Long](1).toArray).toSeq.sortBy(_._1)
 
-        // graph=v2: entries moved inside the store dirs (the drift-
-        // gated maintenance layout) — re-key so a pre-change cached
-        // store can't serve the old sibling-entry layout
+        // the graph build/layout token is part of the key, so a layout
+        // change re-keys the store instead of misreading it
         val canon = plantedCenterSql("vid", "j", 8) + "|" + plantedJitterSql("vid", "j") +
-          "|ss15|base=2000|delta=104|deg=16|graph=v2"
+          s"|ss15|base=2000|delta=104|deg=16|graph=${GraphAnn.BuildVersion}"
         val root = new java.io.File(s"target/gstore/upsert_${storeTag(canon)}").getAbsolutePath
         val nB = 16
         publishStore(root) { tmp =>
           val baseC = base.persist()
           val fullC = base.unionByName(delta).persist()
           val gA = GraphAnn.buildGraph(baseC, degree = 16, dims = 16).persist()
-          val eA = GraphAnn.buildEntryLayerConnected(baseC, gA, dims = 16)
-          GraphAnn.writeStores(baseC, gA, s"$tmp/append", nB)
-          // entries live INSIDE the store dir (the refreshEntryLayer
-          // convention) so the chunked ingest's drift gate can
-          // maintain them in place
-          eA.write.mode("overwrite").parquet(s"$tmp/append/entry")
-          val entryA = s.read.parquet(s"$tmp/append/entry").collect().map(_.getLong(0)).toSeq
+          // entries live INSIDE the store, so the chunked ingest's
+          // drift gate can maintain them
+          GraphAnn.writeStores(baseC, gA, GraphAnn.buildEntryLayerConnected(baseC, gA, dims = 16),
+            s"$tmp/append", nB)
+          val entryA = GraphAnn.storedEntry(s, s"$tmp/append")
           // the PRODUCTION ingest path: chunked append whose entry
           // drift gate (isolation signal / every-N-pieces) refreshes
           // the entry layer itself when the delta may have published
@@ -2248,13 +2244,12 @@ object Similarity {
           GraphAnn.appendStoreChunked(s, GraphAnn.StoredIndex(s"$tmp/append", nB), delta,
             degree = 16, entryIds = entryA, metric = "l2", entryDims = 16)
           val gB = GraphAnn.buildGraph(fullC, degree = 16, dims = 16).persist()
-          GraphAnn.writeStores(fullC, gB, s"$tmp/rebuild", nB)
-          GraphAnn.buildEntryLayerConnected(fullC, gB, dims = 16)
-            .write.mode("overwrite").parquet(s"$tmp/rebuild/entry")
+          GraphAnn.writeStores(fullC, gB, GraphAnn.buildEntryLayerConnected(fullC, gB, dims = 16),
+            s"$tmp/rebuild", nB)
           gA.unpersist(); gB.unpersist(); baseC.unpersist(); fullC.unpersist(): Unit
         }
         def probe(which: String): Map[Long, Set[Long]] = {
-          val entry = s.read.parquet(s"$root/$which/entry").collect().map(_.getLong(0)).toSeq
+          val entry = GraphAnn.storedEntry(s, s"$root/$which")
           GraphAnn.searchStoredWithBudget(s, GraphAnn.StoredIndex(s"$root/$which", nB), qs,
             k = 10, ef = 48, maxExpand = 80, batch = 8, entryIds = entry, metric = "l2")._1
             .collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -2378,7 +2373,7 @@ object Similarity {
         // graph: the ss12 committed store (same key — built once,
         // atomically published by graphStoreFor)
         val store = graphStoreFor(s, d, base)
-        val entry = s.read.parquet(s"$store/entry").collect().map(_.getLong(0)).toSeq
+        val entry = GraphAnn.storedEntry(s, store)
         val (gDf, gBudgets) = GraphAnn.searchStoredWithBudget(
           s, GraphAnn.StoredIndex(store, 64), Seq(0L -> qF), k = 10, ef = 48,
           maxExpand = 80, batch = 8, entryIds = entry)
@@ -2422,12 +2417,6 @@ object Similarity {
     ),
   )
 
-  /** guards the ss14 store's build-once section (Bench and Verify can
-    * share a JVM); cross-JVM races are handled by the temp-dir +
-    * atomic-rename publish. */
-  private object IvfStoreLock
-
-
   /** content-fingerprint tag for a committed-store path (the
     * FixtureStore.dir discipline): any change to the canon string —
     * corpus formula, sizes, knobs, trainer version, seed — re-keys
@@ -2435,28 +2424,13 @@ object Similarity {
   private def storeTag(canon: String): String =
     graft.core.Bytes.toHex(graft.core.Keccak.keccak256(canon.getBytes("UTF-8")).take(8))
 
-  /** Build-once atomic store publish, shared by every committed-store
-    * query (ss12/ss14/ss15/ss16/ss17): build into a pid-suffixed temp
-    * dir, mark `_OK`, publish it with [[graft.core.Fs.publishDir]]
-    * (one atomic rename) — the loser of a cross-JVM race discards its
-    * temp, and a reader can never observe a
-    * half-written store. JVM-local build-once under [[IvfStoreLock]]. */
+  /** Build-once committed store, shared by every committed-store query
+    * (ss12/ss14/ss15/ss16/ss17): [[graft.core.Fs.buildOnce]] — the
+    * store is built whole in a temp dir and renamed into place, so a
+    * reader never sees a half-written store and the path existing
+    * means the build finished. */
   private def publishStore(root: String)(build: String => Unit): Unit =
-    IvfStoreLock.synchronized {
-      if (!new java.io.File(root, "_OK").exists()) {
-        val tmp = root + ".tmp-" + ProcessHandle.current().pid()
-        // a FAILED build must not strand the partial temp store (a
-        // retry in a new JVM gets a new pid suffix and would never
-        // reclaim this one)
-        try build(tmp)
-        catch { case t: Throwable =>
-          graft.core.Fs.deleteRecursively(new java.io.File(tmp)); throw t
-        }
-        new java.io.File(tmp, "_OK").createNewFile()
-        // false = lost the cross-JVM race; the winner's store is served
-        graft.core.Fs.publishDir(java.nio.file.Paths.get(tmp), java.nio.file.Paths.get(root)): Unit
-      }
-    }
+    graft.core.Fs.buildOnce(java.nio.file.Paths.get(root))(tmp => build(tmp.toString))
 
   /** exact integer-L2 top-10 spine over (vec_id, embedding) for the
     * held-out query — the ground truth the index-maintenance
@@ -2490,20 +2464,17 @@ object Similarity {
   }
 
   /** Build-once committed graph store over `d`'s embeddings — shared
-    * by ss12 and ss16 (same key ⇒ same store). JVM-local build-once
-    * under [[IvfStoreLock]]; cross-JVM races resolved by the same
-    * pid-suffixed temp-dir + atomic-rename publish as ss14/ss15, so a
-    * reader can never observe a half-written store. The path is the
+    * by ss12 and ss16 (same key ⇒ same store), built once through
+    * [[publishStore]] like every committed store. The path is the
     * storeTag of a canon string folding in every build knob plus
     * [[graft.operators.GraphAnn.BuildVersion]] (same content-
     * fingerprint discipline as the ivfstore paths): a knob edit moves
     * the path automatically, an algorithm edit moves it via the one
     * constant that lives next to the algorithm — no remember-to-bump
-    * path literal here. Under tmp+rename a crashed build never leaves
-    * a partial dir at the published path, and re-keying makes any
-    * older layout simply unreachable — NO teardown of the published
-    * path ever runs (a delete would race another JVM's just-published
-    * store between the `_OK` check and the rm). */
+    * path literal here. A crashed build never leaves a partial dir at
+    * the published path, and re-keying makes any older layout simply
+    * unreachable — NO teardown of the published path ever runs (a
+    * delete would race another JVM's just-published store). */
   private def graphStoreFor(s: SparkSession, d: String, base: DataFrame): String = {
     import graft.operators.GraphAnn
     val canon = s"graphann|${GraphAnn.BuildVersion}|$d|fx=round1e7|vec_id>=4|" +
@@ -2511,8 +2482,8 @@ object Similarity {
     val store = new java.io.File(s"target/gstore/shared_${storeTag(canon)}").getAbsolutePath
     publishStore(store) { tmp =>
       val cached = base.select("vec_id", "f").persist()
-      GraphAnn.writeStores(cached, GraphAnn.buildGraph(cached, degree = 16), tmp, nBuckets = 64)
-      GraphAnn.buildEntryLayer(cached).write.mode("overwrite").parquet(s"$tmp/entry")
+      GraphAnn.writeStores(cached, GraphAnn.buildGraph(cached, degree = 16),
+        GraphAnn.buildEntryLayer(cached), tmp, nBuckets = 64)
       cached.unpersist(): Unit
     }
     store

@@ -862,7 +862,8 @@ object Zk {
         import graft.sources.Eip1186Source
         FixtureStore.ensure(s)
         // cache key includes a content fingerprint of the fixture
-        // proofs, so a fixture change can never serve a stale dump
+        // proofs, so a fixture change can never serve a stale dump; the
+        // dump is built once (the directory existing means it is whole)
         val tag = {
           val h = graft.core.Keccak.keccak256(
             Fixtures.storageProofsSeq(cfg).map(p => graft.core.Bytes.toHex(p.mpt_root))
@@ -870,9 +871,9 @@ object Zk {
           graft.core.Bytes.toHex(h.take(8))
         }
         val dir = new java.io.File(
-          sys.props("java.io.tmpdir"), s"graft_rpc_dump_$tag").getAbsolutePath
-        val marker = new java.io.File(dir, "_SUCCESS")
-        if (!marker.exists()) Eip1186Source.writeFixtureDump(s, dir, cfg)
+          sys.props("java.io.tmpdir"), s"graft_rpc_dump_once_$tag").getAbsolutePath
+        graft.core.Fs.buildOnce(java.nio.file.Paths.get(dir))(tmp =>
+          Eip1186Source.writeFixtureDump(s, tmp.toString, cfg))
         val rows = ZkPipeline.verifyStorageProofs(
           Eip1186Source.toProofRows(Eip1186Source.read(s, dir)))
         rows.agg(

@@ -335,6 +335,20 @@ class VersionedTable(spark: SparkSession, baseDir: String, nBuckets: Int = 16) {
     commitInternal(newRows, keys, expectedBase, forcedDirty = Some(dirty), statsCols)
   }
 
+  /** The one retry policy for optimistic commits: run `attempt` with
+    * the current version as its expected base; when it loses the race
+    * ([[VersionedTable.CommitConflict]] — another writer landed first)
+    * re-read the base and run it again, up to
+    * [[VersionedTable.CommitAttempts]] times in all, then let the
+    * conflict propagate. `attempt` must derive everything it commits
+    * from the base it is handed. */
+  def retrying[T](attempt: Option[Int] => T): T = {
+    def go(tries: Int): T =
+      try attempt(currentVersion())
+      catch { case _: CommitConflict if tries < VersionedTable.CommitAttempts => go(tries + 1) }
+    go(1)
+  }
+
   /** Rewrite EVERY bucket of the current version into fresh files —
     * heals the fragmentation of many small copy-on-write commits
     * (readers pinned to old versions are undisturbed; [[vacuum]]
@@ -583,4 +597,7 @@ object VersionedTable {
   /** thrown to the writer that loses an optimistic commit race (stale
     * base, or another writer created the same next version first) */
   final class CommitConflict(msg: String) extends RuntimeException(msg)
+
+  /** how many times [[VersionedTable.retrying]] runs a losing commit. */
+  private val CommitAttempts = 5
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.pipeline.ZkPipeline
@@ -9,17 +8,20 @@ import graft.sources.VersionedTable
 
 /** Streaming storage-DB maintenance: each micro-batch carries the FULL
   * entry set of the (block, contract) groups it touches; the
-  * maintainer rebuilds exactly those groups (`storageDbIncremental` —
-  * the reference's dirty-path-only recomputation) and commits them to
-  * a [[graft.sources.VersionedTable]]:
+  * maintainer rebuilds exactly those groups' storage-DB rows and
+  * MERGEs them into a [[graft.sources.VersionedTable]] keyed by
+  * (block, contract) — the reference's dirty-path-only recomputation
+  * that reuses siblings (`query2/storage/partial_inner.rs`), at bucket
+  * granularity:
   *
-  *   - only the dirty groups' hash buckets are rewritten — untouched
-  *     buckets inherit the previous version's immutable files
-  *     (partition-level copy-on-write, no full-table rewrite);
-  *   - the manifest + LATEST swap is atomic, so concurrent readers
-  *     always see a consistent snapshot (and can pin/time-travel);
+  *   - only the dirty groups' hash buckets are read and rewritten —
+  *     untouched buckets inherit the previous version's immutable files
+  *     (partition-level copy-on-write, no full-table read or rewrite);
+  *   - the manifest publish is atomic, so concurrent readers always
+  *     see a consistent snapshot (and can pin/time-travel);
   *   - commit conflicts (another writer landed first) retry against
-  *     the new base — optimistic concurrency, single-winner.
+  *     the new base ([[graft.sources.VersionedTable.retrying]]) —
+  *     optimistic concurrency, single-winner.
   */
 class StorageDbMaintainer(spark: SparkSession, baseDir: String, nBuckets: Int = 16) {
 
@@ -40,31 +42,8 @@ class StorageDbMaintainer(spark: SparkSession, baseDir: String, nBuckets: Int = 
   def diff(fromVersion: Int, toVersion: Int): DataFrame =
     table.diff(keys, fromVersion, toVersion)
 
-  def processBatch(delta: DataFrame, batchId: Long): Unit = {
-    if (delta.isEmpty) return
-    var attempts = 0
-    var done = false
-    while (!done) {
-      attempts += 1
-      val base = table.currentVersion()
-      val next = table.read() match {
-        case None       => ZkPipeline.storageDb(delta)
-        case Some(prev) => ZkPipeline.storageDbIncremental(prev, delta)
-      }
-      // a bucket must be written whole: rewrite every bucket the
-      // delta's groups hash into, inherit the rest
-      val dirtyBuckets = delta.select(table.bucketCol(keys).as("b")).distinct()
-        .collect().map(_.getInt(0)).toSet
-      val rows = next.withColumn("__b", table.bucketCol(keys))
-        .filter(col("__b").isin(dirtyBuckets.toSeq: _*)).drop("__b")
-      try {
-        table.commit(rows, keys, base)
-        done = true
-      } catch {
-        case _: VersionedTable.CommitConflict if attempts < 5 => // re-read base, retry
-      }
-    }
-  }
+  def processBatch(delta: DataFrame, batchId: Long): Unit =
+    if (!delta.isEmpty) table.retrying(base => table.merge(ZkPipeline.storageDb(delta), keys, base))
 
   def vacuum(keepVersions: Int): Unit = table.vacuum(keepVersions)
 

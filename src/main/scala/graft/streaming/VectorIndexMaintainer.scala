@@ -1,7 +1,8 @@
 package graft.streaming
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.{IvfIndex, QuantizerStore}
@@ -65,17 +66,7 @@ class VectorIndexMaintainer(spark: SparkSession, baseDir: String,
   def processBatch(batch: DataFrame, batchId: Long): Unit = {
     if (batch.isEmpty) return
     val assigned = IvfIndex.assign(batch, model)
-    var attempts = 0
-    var done = false
-    while (!done) {
-      attempts += 1
-      try {
-        table.merge(assigned, Seq("vec_id"), table.currentVersion())
-        done = true
-      } catch {
-        case _: VersionedTable.CommitConflict if attempts < 5 => // retry on new base
-      }
-    }
+    table.retrying(base => table.merge(assigned, Seq("vec_id"), base))
     // first ingest records the drift baseline the refresh decision
     // compares against
     if (!java.nio.file.Files.exists(baselineFile)) recordBaseline()
@@ -87,10 +78,9 @@ class VectorIndexMaintainer(spark: SparkSession, baseDir: String,
   def distortion(): Double =
     table.read().map(snap => IvfIndex.distortion(snap, _model)).getOrElse(0.0)
 
-  private def recordBaseline(): Unit = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(quantizerDir))
-    java.nio.file.Files.writeString(baselineFile, distortion().toString)
-  }
+  /** published whole (never a torn number for [[baseline]] to read) */
+  private def recordBaseline(): Unit =
+    graft.core.Fs.publishFile(baselineFile, distortion().toString.getBytes(UTF_8), replace = true)
 
   private def baseline(): Option[Double] =
     if (java.nio.file.Files.exists(baselineFile))
@@ -104,19 +94,12 @@ class VectorIndexMaintainer(spark: SparkSession, baseDir: String,
     * retried, so no ingested vector is ever lost. Returns the
     * committed version. */
   def refreshQuantizer(nlist: Int = _model.centroids.length, seed: Long = 42L): Int = {
-    var attempts = 0
-    var committed = -1
-    var fresh: IvfIndex.Model = null
-    var nSnap = -1L
-    while (committed < 0) {
-      attempts += 1
-      val base = table.currentVersion()
+    val (committed, fresh, nSnap) = table.retrying { base =>
       val snap = table.read(base).getOrElse(
         throw new IllegalStateException("index is empty — nothing to rebuild")).drop("list_id")
-      nSnap = snap.count()
-      fresh = IvfIndex.train(snap, nlist, seed)
-      try committed = table.overwrite(IvfIndex.assign(snap, fresh), Seq("vec_id"), base)
-      catch { case _: VersionedTable.CommitConflict if attempts < 5 => }
+      val nSnap = snap.count()
+      val fresh = IvfIndex.train(snap, nlist, seed)
+      (table.overwrite(IvfIndex.assign(snap, fresh), Seq("vec_id"), base), fresh, nSnap)
     }
     try QuantizerStore.save(spark, quantizerDir, Some(fresh), None, nSnap)
     catch { case _: RuntimeException => () } // lost save race; serving model still swaps

@@ -6,9 +6,9 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Fs
-import graft.operators.IvfIndex
+import graft.operators.{GraphAnn, IvfIndex}
 import graft.sources.VersionedTable
-import graft.streaming.StreamingNearDup
+import graft.streaming.{StreamingNearDup, VectorIndexMaintainer}
 import graft.streaming.StreamingNearDupSpec.ND
 
 /** Crash safety of every store commit point, by fault injection: each
@@ -218,5 +218,88 @@ class PublishFaultSpec extends AnyFunSuite with BeforeAndAfterAll {
       view = nearDupView,
       next = nextBatch)
     assert(bootstraps == 3 && compactions == 3)
+  }
+
+  // ------------------------------------------------------------ GraphAnn
+  /** a small graph store's inputs, collected once so every setup
+    * commits the same bytes. */
+  private def graphVecs(ids: Seq[Long]): Seq[(Long, Array[Long])] =
+    ids.map(id => (id, Array.tabulate(8)(j => ((id * 131 + j * 17) % 2000L) - 1000L)))
+
+  private lazy val graphBase: (Seq[(Long, Array[Long])], Seq[(Long, Long)]) = {
+    val s = spark
+    import s.implicits._
+    val vecs = graphVecs(0L until 200L)
+    val edges = GraphAnn.buildGraph(vecs.toDF("vec_id", "f"), degree = 8, dims = 8)
+      .select("src", "dst").as[(Long, Long)].collect().toSeq
+    (vecs, edges)
+  }
+
+  private def writeGraph(d: String, vecs: Seq[(Long, Array[Long])], edges: Seq[(Long, Long)],
+                         entry: Seq[Long]): Unit = {
+    val s = spark
+    import s.implicits._
+    GraphAnn.writeStores(vecs.toDF("vec_id", "f"), edges.toDF("src", "dst"),
+      entry.toDF("vec_id"), d, nBuckets = 8)
+  }
+
+  /** what a store reader sees: the live vectors, edges and entry layer. */
+  private def graphView(d: String): Seq[Seq[String]] = Seq(
+    sorted(spark.read.parquet(GraphAnn.tablePath(d, "fx")).select("vec_id", "f")),
+    sorted(spark.read.parquet(GraphAnn.tablePath(d, "edges")).select("src", "dst")),
+    GraphAnn.storedEntry(spark, d).map(_.toString))
+
+  test("graph writeStores / appendStore / refreshEntryLayer: a fault at any publish leaves the old or the new generation") {
+    val s = spark
+    import s.implicits._
+    val (vecs, edges) = graphBase
+    val setup = (d: String) => writeGraph(d, vecs, edges, entry = Seq(0L, 1L))
+    def store(d: String) = GraphAnn.StoredIndex(d, 8)
+    // the next writer: an append linked from the committed entry layer
+    val nextAppend = (d: String) => GraphAnn.appendStore(spark, store(d),
+      graphVecs(300L until 310L).toDF("vec_id", "f"), degree = 8, entryIds = GraphAnn.storedEntry(spark, d))
+    val writes = everyFault[Seq[Seq[String]], Int](setup,
+      op = d => writeGraph(d, vecs.take(120), edges.filter { case (a, b) => a < 120 && b < 120 }, Seq(5L)),
+      view = graphView, next = nextAppend)
+    val appends = everyFault[Seq[Seq[String]], Int](setup,
+      op = d => GraphAnn.appendStore(spark, store(d), graphVecs(200L until 220L).toDF("vec_id", "f"),
+        degree = 8, entryIds = Seq(0L, 1L)): Unit,
+      view = graphView, next = nextAppend)
+    val refreshes = everyFault[Seq[Seq[String]], Int](setup,
+      op = d => GraphAnn.refreshEntryLayer(spark, store(d)),
+      view = graphView, next = nextAppend)
+    assert(writes == 3 && appends == 3 && refreshes == 3, "one pointer publish per call")
+  }
+
+  // ------------------------------------------------ VectorIndexMaintainer
+  test("vector-index drift baseline: a fault at any step of any publish never leaves a torn baseline") {
+    def baseline(d: String): Option[Double] = {
+      val f = java.nio.file.Paths.get(d, "_quantizer", "BASELINE")
+      if (java.nio.file.Files.exists(f)) Some(java.nio.file.Files.readString(f).toDouble) else None
+    }
+    var injected = 0
+    for (step <- Seq("write", "force", "move")) {
+      var k = 1
+      var more = true
+      while (more) {
+        more = withTmp { d =>
+          val first = new VectorIndexMaintainer(spark, d, model)
+          val fired = faulted(step, k)(first.processBatch(vectors(0L until 40L), 0L))
+          if (fired) {
+            injected += 1
+            baseline(d) // absent or whole: a torn number fails to parse here
+            // no recovery step: a restarted maintainer ingests and
+            // judges drift against the baseline it finds
+            val next = new VectorIndexMaintainer(spark, d, model)
+            next.processBatch(vectors(40L until 60L), 1L)
+            assert(!next.refreshIfDrifted(factor = 1e9))
+            assert(baseline(d).isDefined, s"fault at publish $k, step $step: no baseline after the next batch")
+          }
+          fired
+        }
+        k += 1
+      }
+    }
+    assert(injected == 9, "manifest, LATEST and the baseline, three steps each")
   }
 }

@@ -8,8 +8,9 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The one publish primitive: atomic file publish (replacing and
-  * no-replace), the fault hook, the generation pointer, and the guard
-  * that keeps raw renames out of every other source file. */
+  * no-replace), the fault hook, the generation pointer, build-once
+  * directories, hard-linked carry-over, and the guard that keeps raw
+  * renames and in-place partition overwrites out of the source tree. */
 class FsSpec extends AnyFunSuite {
 
   private def withDir(f: Path => Unit): Unit = {
@@ -99,15 +100,48 @@ class FsSpec extends AnyFunSuite {
     }
   }
 
+  test("buildOnce: builds a missing directory whole; an existing one is kept; a failed build leaves nothing") {
+    withDir { d =>
+      val target = d.resolve("store")
+      intercept[IllegalStateException](Fs.buildOnce(target) { tmp =>
+        Files.createDirectories(tmp).resolve("part").toFile.createNewFile()
+        throw new IllegalStateException("build failed")
+      })
+      assert(names(d).isEmpty, "a failed build must leave no temp and no target")
+      Fs.buildOnce(target)(tmp => Files.writeString(Files.createDirectories(tmp).resolve("part"), "a"))
+      Fs.buildOnce(target)(_ => fail("an existing directory is complete; nothing rebuilds it"))
+      assert(names(d) == Set("store") && Files.readString(target.resolve("part")) == "a")
+    }
+  }
+
+  test("linkTree: carries the kept files over by hard link, creating their directories") {
+    withDir { d =>
+      val from = d.resolve("g1")
+      Files.createDirectories(from.resolve("bucket=0"))
+      Files.createDirectories(from.resolve("bucket=1"))
+      Files.writeString(from.resolve("bucket=0/a.parquet"), "a")
+      Files.writeString(from.resolve("bucket=1/b.parquet"), "b")
+      Files.writeString(from.resolve("_SUCCESS"), "")
+      val to = d.resolve("g2")
+      Fs.linkTree(from, to)(rel => rel.getNameCount > 1 && rel.getName(0).toString != "bucket=1")
+      assert(names(to) == Set("bucket=0") && names(to.resolve("bucket=0")) == Set("a.parquet"))
+      assert(Files.isSameFile(to.resolve("bucket=0/a.parquet"), from.resolve("bucket=0/a.parquet")))
+    }
+  }
+
   test("no raw rename outside Fs: every store publishes through the one primitive") {
     val src = Paths.get("src/main/scala")
     val fs = src.resolve("graft/core/Fs.scala")
     val banned = Seq("renameTo(", "Files.move(", "ATOMIC_MOVE")
+    // an in-place partition overwrite is a second write path beside a
+    // store's publish — banned everywhere, Fs included
+    val bannedEverywhere = Seq("partitionOverwriteMode")
     val walk = Files.walk(src)
     val offenders =
-      try walk.iterator().asScala.filter(p => p.toString.endsWith(".scala") && p != fs).flatMap { p =>
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).flatMap { p =>
         Files.readAllLines(p).asScala.zipWithIndex.collect {
-          case (line, i) if banned.exists(line.contains) => s"$p:${i + 1}: ${line.trim}"
+          case (line, i) if bannedEverywhere.exists(line.contains) || (p != fs && banned.exists(line.contains)) =>
+            s"$p:${i + 1}: ${line.trim}"
         }
       }.toList finally walk.close()
     assert(Files.exists(fs), "run from the project root")

@@ -129,10 +129,12 @@ class GraphAnnSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map(r => r.getLong(0) -> r.getSeq[Long](1).toArray).toSeq.sortBy(_._1)
 
     val graph = GraphAnn.buildGraph(base).persist()
-    val entry = GraphAnn.buildEntryLayer(base).collect().map(_.getLong(0)).toSeq
+    val entryDf = GraphAnn.buildEntryLayer(base).persist()
+    val entry = entryDf.collect().map(_.getLong(0)).toSeq
     val dir = java.nio.file.Files.createTempDirectory("gann_store").toString
     val nB = 16
-    GraphAnn.writeStores(base, graph, dir, nBuckets = nB)
+    GraphAnn.writeStores(base, graph, entryDf, dir, nBuckets = nB)
+    assert(GraphAnn.storedEntry(spark, dir) == entry.sorted, "the entry layer is committed with the store")
 
     // batched stored search == the live per-query search, bit for bit:
     // same entry set, same ef/batch/maxExpand discipline, same tie order
@@ -159,7 +161,7 @@ class GraphAnnSpec extends AnyFunSuite with BeforeAndAfterAll {
     // table's.
     val probeIds = Seq(17L, 33L)
     val wantBuckets = probeIds.map(GraphAnn.bucketOf(_, nB)).toSet
-    val probe = spark.read.parquet(s"$dir/fx")
+    val probe = spark.read.parquet(GraphAnn.tablePath(dir, "fx"))
       .filter(col("bucket").isin(wantBuckets.toSeq: _*) && col("vec_id").isin(probeIds: _*))
     assert(probe.collect().map(_.getAs[Long]("vec_id")).toSet == probeIds.toSet)
     val scan = probe.queryExecution.executedPlan.collectFirst {
@@ -167,7 +169,7 @@ class GraphAnnSpec extends AnyFunSuite with BeforeAndAfterAll {
     }.getOrElse(fail("no FileSourceScanExec in the probe plan"))
     assert(scan.metadata.get("PartitionFilters").exists(_.contains("bucket")),
       s"bucket filter must be a partition filter: ${scan.metadata}")
-    val allFiles = spark.read.parquet(s"$dir/fx").inputFiles
+    val allFiles = spark.read.parquet(GraphAnn.tablePath(dir, "fx")).inputFiles
     val wantFiles = allFiles.count(f => wantBuckets.exists(b => f.contains(s"bucket=$b/")))
     val readFiles = scan.metrics("numFiles").value
     assert(readFiles == wantFiles && readFiles < allFiles.length,
@@ -218,17 +220,17 @@ class GraphAnnSpec extends AnyFunSuite with BeforeAndAfterAll {
     // component-guaranteed entries: the planted corpus builds 8
     // disconnected class islands, and a coarse sign layer alone
     // strands some of them (no budget can reach an enterless island)
-    val entryA = GraphAnn.buildEntryLayerConnected(baseDf, graphA, dims = 16)
-      .collect().map(_.getLong(0)).toSeq
-    GraphAnn.writeStores(baseDf, graphA, dirA, nB)
+    val entryDfA = GraphAnn.buildEntryLayerConnected(baseDf, graphA, dims = 16).persist()
+    val entryA = entryDfA.collect().map(_.getLong(0)).toSeq
+    GraphAnn.writeStores(baseDf, graphA, entryDfA, dirA, nB)
     GraphAnn.appendStore(spark, GraphAnn.StoredIndex(dirA, nB), deltaDf,
       degree = 16, entryIds = entryA, metric = "l2")
 
     val dirB = java.nio.file.Files.createTempDirectory("gann_rebuild").toString
     val graphB = GraphAnn.buildGraph(fullDf, degree = 16, dims = 16).persist()
-    val entryB = GraphAnn.buildEntryLayerConnected(fullDf, graphB, dims = 16)
-      .collect().map(_.getLong(0)).toSeq
-    GraphAnn.writeStores(fullDf, graphB, dirB, nB)
+    val entryDfB = GraphAnn.buildEntryLayerConnected(fullDf, graphB, dims = 16).persist()
+    val entryB = entryDfB.collect().map(_.getLong(0)).toSeq
+    GraphAnn.writeStores(fullDf, graphB, entryDfB, dirB, nB)
 
     def probe(dir: String, entry: Seq[Long]): Map[Long, Set[Long]] =
       GraphAnn.searchStoredWithBudget(spark, GraphAnn.StoredIndex(dir, nB), qs,
@@ -268,9 +270,9 @@ class GraphAnnSpec extends AnyFunSuite with BeforeAndAfterAll {
     val nB = 16
     val dir = java.nio.file.Files.createTempDirectory("gann_chunked").toString
     val graph = GraphAnn.buildGraph(baseDf, degree = 16, dims = 16).persist()
-    val entry = GraphAnn.buildEntryLayerConnected(baseDf, graph, dims = 16)
-      .collect().map(_.getLong(0)).toSeq
-    GraphAnn.writeStores(baseDf, graph, dir, nB)
+    val entryDf = GraphAnn.buildEntryLayerConnected(baseDf, graph, dims = 16).persist()
+    val entry = entryDf.collect().map(_.getLong(0)).toSeq
+    GraphAnn.writeStores(baseDf, graph, entryDf, dir, nB)
     val store = GraphAnn.StoredIndex(dir, nB)
     // pieceCap 40 over a 104-row delta forces >= 3 bisection pieces;
     // later pieces must link against the earlier ones through the store
@@ -291,10 +293,10 @@ class GraphAnnSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
 
     // retried ingest: no duplicate fx rows, identical serving results
-    val rowsAfter = spark.read.parquet(s"$dir/fx").count()
+    val rowsAfter = spark.read.parquet(GraphAnn.tablePath(dir, "fx")).count()
     GraphAnn.appendStoreChunked(spark, store, deltaDf,
       degree = 16, entryIds = entry, metric = "l2", pieceCap = 40L)
-    assert(spark.read.parquet(s"$dir/fx").count() == rowsAfter,
+    assert(spark.read.parquet(GraphAnn.tablePath(dir, "fx")).count() == rowsAfter,
       "a re-run must not append duplicate fx rows")
     assert(probe() == first, "a re-run must not change serving results")
     graph.unpersist(); baseDf.unpersist()
@@ -318,10 +320,9 @@ class GraphAnnSpec extends AnyFunSuite with BeforeAndAfterAll {
     val nB = 16
     val dir = java.nio.file.Files.createTempDirectory("gann_entry_refresh").toString
     val graph = GraphAnn.buildGraph(baseDf, degree = 16, dims = 16).persist()
-    GraphAnn.writeStores(baseDf, graph, dir, nB)
-    GraphAnn.buildEntryLayerConnected(baseDf, graph, dims = 16)
-      .write.mode("overwrite").parquet(s"$dir/entry")
-    val stale = spark.read.parquet(s"$dir/entry").collect().map(_.getLong(0)).toSeq
+    GraphAnn.writeStores(baseDf, graph, GraphAnn.buildEntryLayerConnected(baseDf, graph, dims = 16),
+      dir, nB)
+    val stale = GraphAnn.storedEntry(spark, dir)
     // raw appendStore (no gate): the island publishes AND is reported
     // as isolated — the signal appendStoreChunked's drift gate consumes
     val isolated = GraphAnn.appendStore(spark, GraphAnn.StoredIndex(dir, nB),
@@ -348,7 +349,7 @@ class GraphAnnSpec extends AnyFunSuite with BeforeAndAfterAll {
     // same delta — no duplicate fx rows) whose drift gate sees the
     // isolation signal and refreshes the entry layer ITSELF; no
     // manual refreshEntryLayer call anywhere in this scenario
-    val fxRows = spark.read.parquet(s"$dir/fx").count()
+    val fxRows = spark.read.parquet(GraphAnn.tablePath(dir, "fx")).count()
     // entryDims intentionally NOT passed: the gate must derive the
     // projection width from the committed dims-16 fx, not a caller
     // default (a 64-wide projection null-pads and collapses the
@@ -356,9 +357,9 @@ class GraphAnnSpec extends AnyFunSuite with BeforeAndAfterAll {
     GraphAnn.appendStoreChunked(spark, GraphAnn.StoredIndex(dir, nB),
       islandRows.toDF("vec_id", "f"), degree = 16, entryIds = stale,
       metric = "l2")
-    assert(spark.read.parquet(s"$dir/fx").count() == fxRows,
+    assert(spark.read.parquet(GraphAnn.tablePath(dir, "fx")).count() == fxRows,
       "the gated re-run must not append duplicate fx rows")
-    val fresh = spark.read.parquet(s"$dir/entry").collect().map(_.getLong(0)).toSeq
+    val fresh = GraphAnn.storedEntry(spark, dir)
     assert(fresh != stale, "the drift gate must have refreshed the entry layer")
     assert(probe(fresh) == want,
       "after the gated entry refresh the island must be exactly searchable")
@@ -373,10 +374,10 @@ class GraphAnnSpec extends AnyFunSuite with BeforeAndAfterAll {
     val df = rows.toDF("vec_id", "f").persist()
     val dir = java.nio.file.Files.createTempDirectory("gann_dims").toString
     val g = GraphAnn.buildGraph(df, degree = 8, dims = 16).persist()
-    GraphAnn.writeStores(df, g, dir, nBuckets = 16)
+    GraphAnn.writeStores(df, g, df.limit(1).select("vec_id"), dir, nBuckets = 16)
     // defaults only — no dims hint anywhere
     GraphAnn.refreshEntryLayer(spark, GraphAnn.StoredIndex(dir, 16))
-    val got = spark.read.parquet(s"$dir/entry").collect().map(_.getLong(0)).toSet
+    val got = GraphAnn.storedEntry(spark, dir).toSet
     val expected = GraphAnn.buildEntryLayerConnected(df, g, nPlanes = 5, dims = 16)
       .collect().map(_.getLong(0)).toSet
     assert(got == expected, "refresh must equal an explicit dims-16 rebuild")
@@ -395,8 +396,9 @@ class GraphAnnSpec extends AnyFunSuite with BeforeAndAfterAll {
     val df = rows.toDF("vec_id", "f").persist()
     val qs = (0L until 5L).map(q => q -> planted(q, 8))
     val dir = java.nio.file.Files.createTempDirectory("gann_shard").toString
-    val entry = GraphAnn.buildEntryLayer(df, dims = 16).collect().map(_.getLong(0)).toSeq
-    GraphAnn.writeStores(df, GraphAnn.buildGraph(df, degree = 16, dims = 16), dir, 16)
+    val entryDf = GraphAnn.buildEntryLayer(df, dims = 16).persist()
+    val entry = entryDf.collect().map(_.getLong(0)).toSeq
+    GraphAnn.writeStores(df, GraphAnn.buildGraph(df, degree = 16, dims = 16), entryDf, dir, 16)
     val store = GraphAnn.StoredIndex(dir, 16)
     def run(shard: Int) = {
       val (r, b) = GraphAnn.searchStoredWithBudget(spark, store, qs,
@@ -419,8 +421,9 @@ class GraphAnnSpec extends AnyFunSuite with BeforeAndAfterAll {
     // AND exceeds ServeBatchCap so the driver twin itself shards
     val qs = (0L until 600L).map(q => q -> planted(q % 8, 8).map(_ + q))
     val dir = java.nio.file.Files.createTempDirectory("gann_dist").toString
-    val entry = GraphAnn.buildEntryLayer(df, dims = 16).collect().map(_.getLong(0)).toSeq
-    GraphAnn.writeStores(df, GraphAnn.buildGraph(df, degree = 16, dims = 16), dir, 16)
+    val entryDf = GraphAnn.buildEntryLayer(df, dims = 16).persist()
+    val entry = entryDf.collect().map(_.getLong(0)).toSeq
+    GraphAnn.writeStores(df, GraphAnn.buildGraph(df, degree = 16, dims = 16), entryDf, dir, 16)
     val store = GraphAnn.StoredIndex(dir, 16)
     val qdf = qs.toDF("qid", "q").repartition(7).persist()
     for (metric <- Seq("ip", "l2")) {
@@ -452,9 +455,9 @@ class GraphAnnSpec extends AnyFunSuite with BeforeAndAfterAll {
     val twins = qs.map { case (q, f) => (2000L + q, f.map(_ + 1L)) }.toDF("vec_id", "f")
     val dir = java.nio.file.Files.createTempDirectory("gann_memo").toString
     val graph = GraphAnn.buildGraph(df, degree = 16, dims = 16).persist()
-    val entry = GraphAnn.buildEntryLayerConnected(df, graph, dims = 16)
-      .collect().map(_.getLong(0)).toSeq
-    GraphAnn.writeStores(df, graph, dir, 16)
+    val entryDf = GraphAnn.buildEntryLayerConnected(df, graph, dims = 16).persist()
+    val entry = entryDf.collect().map(_.getLong(0)).toSeq
+    GraphAnn.writeStores(df, graph, entryDf, dir, 16)
     val store = GraphAnn.StoredIndex(dir, 16)
     val qdf = qs.toDF("qid", "q")
     def serve(csr: Option[GraphAnn.CsrIndex]) =
@@ -470,7 +473,7 @@ class GraphAnnSpec extends AnyFunSuite with BeforeAndAfterAll {
       "every query must surface its appended twin")
     assert(after != before)
     // the superseded generation's snapshot and broadcast were released
-    assert(GraphAnn.memoizedGenerations(dir) == Set(GraphAnn.storeGeneration(dir)))
+    assert(GraphAnn.memoizedGenerations(dir) == Set(GraphAnn.liveGeneration(dir).n))
     graph.unpersist(); df.unpersist()
   }
 }

@@ -91,49 +91,11 @@ class ZkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(scalable == inBuffer)
   }
 
-  test("incremental storage-DB rebuild equals full rebuild") {
-    val entries = Fixtures.entries(spark, cfg)
-    val prev = ZkPipeline.storageDb(entries)
-    // delta: block firstBlock+1, contract 0 gets one value flipped
-    val changedBlock = cfg.firstBlock + 1
-    val mutated = entries
-      .withColumn("value",
-        when(col("block_number") === changedBlock &&
-          col("contract") === lit(Fixtures.contractAddr(0)) &&
-          col("mapping_key") === lit(Bytes.leftPad32(Bytes.beBytes(3L, 4))),
-          lit(Bytes.leftPad32(Array[Byte](0x42)))).otherwise(col("value")))
-    val delta = mutated.filter(col("block_number") === changedBlock && col("contract") === lit(Fixtures.contractAddr(0)))
-    val incremental = ZkPipeline.storageDbIncremental(prev, delta)
-    val full = ZkPipeline.storageDb(mutated)
-    def snap(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getAs[Long]("block_number"), Bytes.toHex(r.getAs[Array[Byte]]("contract"))) ->
-        ((r.getAs[Long]("n"), Bytes.toHex(r.getAs[Array[Byte]]("digest")), Bytes.toHex(r.getAs[Array[Byte]]("storage_root")))))
-      .toMap
-    assert(snap(incremental) == snap(full))
-    // and it actually differs from prev in exactly one group
-    val changed = snap(prev).toSet.diff(snap(incremental).toSet)
-    assert(changed.size == 1 && changed.head._1 == ((changedBlock, Bytes.toHex(Fixtures.contractAddr(0)))))
-  }
-
   test("state DB roots match goldens") {
     val got = ZkPipeline.stateDb(ZkPipeline.storageDb(Fixtures.entries(spark, cfg)))
       .collect().map(r => r.getAs[Long]("block_number") -> Bytes.toHex(r.getAs[Array[Byte]]("state_root"))).toMap
     val want = Fixtures.goldenStateDb(cfg).map { case (k, v) => k -> Bytes.toHex(v) }
     assert(got == want)
-  }
-
-  test("incremental state DB: dirty-block rebuild equals full rebuild") {
-    val sdbFull = ZkPipeline.storageDb(Fixtures.entries(spark, cfg))
-    val prevState = ZkPipeline.stateDb(sdbFull)
-    // pretend one block's storage DB changed: re-aggregate just it
-    val dirtyBlock = cfg.firstBlock + 3
-    val dirty = sdbFull.filter(org.apache.spark.sql.functions.col("block_number") === dirtyBlock)
-    val incr = ZkPipeline.stateDbIncremental(prevState, dirty)
-      .collect().map(r => r.getAs[Long]("block_number") -> Bytes.toHex(r.getAs[Array[Byte]]("state_root"))).toMap
-    val full = prevState
-      .collect().map(r => r.getAs[Long]("block_number") -> Bytes.toHex(r.getAs[Array[Byte]]("state_root"))).toMap
-    assert(incr == full, "no-op delta must reproduce the same state DB bit-for-bit")
-    assert(incr.contains(dirtyBlock))
   }
 
   test("block DB: chain linkage, sequencing all hold; root matches golden") {
@@ -317,6 +279,23 @@ class ZkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got.getAs[Long]("range_max") == cfg.firstBlock + cfg.nBlocks - 1) // P7 clamp high
     val want = Fixtures.goldenErc20Sum(cfg, 2, rate, supply, cfg.firstBlock - 50, cfg.firstBlock + cfg.nBlocks + 50)
     assert(U256.fromBytes32(got.getAs[Array[Byte]]("result")) == want)
+  }
+
+  test("QueryERC20: the clamp scans the entries fact once") {
+    // P7's clamp is implied by the raw range (every scoped row lies in
+    // the DB bounds), so no bounds side-scan of the fact may remain. A
+    // parquet fact, as at rest: its scan keeps the full schema in the
+    // optimized plan, where a pruned in-memory relation would not
+    val dir = java.nio.file.Files.createTempDirectory("erc20_scan").toString
+    try {
+      Fixtures.entries(spark, cfg).write.mode("overwrite").parquet(dir)
+      val plan = ZkPipeline.queryErc20(
+        spark.read.parquet(dir), Fixtures.contractAddr(1), cfg.erc20Slot,
+        Fixtures.userAddr(2), BigInteger.valueOf(7L), BigInteger.valueOf(1000L),
+        cfg.firstBlock - 50, cfg.firstBlock + cfg.nBlocks + 50).queryExecution.optimizedPlan
+      val entryScans = plan.collectLeaves().count(_.output.exists(_.name == "mapping_key"))
+      assert(entryScans == 1, s"queryErc20 must scan the fact once, saw $entryScans:\n$plan")
+    } finally graft.core.Fs.deleteRecursively(new java.io.File(dir))
   }
 
   test("ERC20 revelation record: clamped bounds, result, block-DB binding") {

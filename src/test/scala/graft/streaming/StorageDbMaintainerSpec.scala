@@ -1,0 +1,74 @@
+package graft.streaming
+
+import org.apache.spark.FilesRead
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.core.{Bytes, Fs}
+import graft.pipeline.{Fixtures, ZkPipeline}
+import graft.sources.VersionedTable
+
+class StorageDbMaintainerSpec extends AnyFunSuite with BeforeAndAfterAll {
+
+  private var spark: SparkSession = _
+
+  override def beforeAll(): Unit = {
+    spark = SparkSession.builder()
+      .master("local[4]")
+      .config("spark.sql.session.timeZone", "UTC")
+      .appName("storage-db-maintainer-spec")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+  }
+
+  override def afterAll(): Unit = if (spark != null) spark.stop()
+
+  private def rows(df: DataFrame): Seq[String] = df.collect().map { r =>
+    r.schema.fieldNames.map(f => r.getAs[Any](f) match {
+      case b: Array[Byte] => Bytes.toHex(b)
+      case v => String.valueOf(v)
+    }).mkString("|")
+  }.sorted.toSeq
+
+  test("a resubmitted group commits through merge: equals a full rebuild, reading only the dirty buckets") {
+    val cfg = Fixtures.Cfg(nBlocks = 4)
+    val all = Fixtures.entriesSeq(cfg)
+    val changedBlock = cfg.firstBlock + 2
+    def mutated(e: Fixtures.Entry): Boolean =
+      e.block_number == changedBlock && Bytes.toHex(e.contract) == Bytes.toHex(Fixtures.contractAddr(0))
+    def mutate(e: Fixtures.Entry): Fixtures.Entry =
+      if (mutated(e) && Bytes.beLong(e.mapping_key.takeRight(4)) == 2L)
+        e.copy(value = Bytes.leftPad32(Array[Byte](0x13))) else e
+    val delta = all.filter(mutated).map(mutate)
+
+    val dir = java.nio.file.Files.createTempDirectory("sdb_maint").toString
+    try {
+      val keys = Seq("block_number", "contract")
+      val maintainer = new StorageDbMaintainer(spark, dir)
+      maintainer.processBatch(spark.createDataFrame(all), 0L)
+      val (_, read) = FilesRead.of(spark)(maintainer.processBatch(spark.createDataFrame(delta), 1L))
+
+      assert(maintainer.currentVersion().contains("v000001"))
+      assert(rows(maintainer.current().get) ==
+        rows(ZkPipeline.storageDb(spark.createDataFrame(all.map(mutate)))))
+
+      // the second commit reads the base version's files of the dirty
+      // buckets only — never the whole table
+      val table = new VersionedTable(spark, dir)
+      val dirty = spark.createDataFrame(delta).select(table.bucketCol(keys)).distinct()
+        .collect().map(_.getInt(0)).toSet
+      val populated = table.read(Some(0)).get.select(table.bucketCol(keys)).distinct().count()
+      val bucketOf = """.*/__bucket=(\d+)/[^/]+$""".r
+      val readBuckets = read.map {
+        case bucketOf(b) => b.toInt
+        case f => fail(s"read a file outside the bucket layout: $f")
+      }
+      assert(dirty.size == 1 && populated > 1, s"fixture: dirty $dirty of $populated buckets")
+      assert(readBuckets == dirty, s"read buckets $readBuckets, dirty $dirty")
+    } finally Fs.deleteRecursively(new java.io.File(dir))
+  }
+}
