@@ -44,14 +44,11 @@ object Bench {
     // sink evaluates every output column and writes nothing — the
     // honest consumption. (Discovered round 10; the methodology
     // bridge vs the count()-era artifacts is recorded in BASELINE.md.)
-    // SPARK_GRAFT_CONSUME=count replays the pre-round-10 (hollow)
-    // consumption for methodology-bridge artifacts only
-    val legacyCount = sys.env.get("SPARK_GRAFT_CONSUME").contains("count")
     def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
       val ok = try {
         val df = fn(spark, sfDir)
-        if (legacyCount) df.count() else df.write.format("noop").mode("overwrite").save()
+        df.write.format("noop").mode("overwrite").save()
         true
       } catch {
         case t: Throwable => System.err.println(s"[bench] $name FAILED: $t"); false

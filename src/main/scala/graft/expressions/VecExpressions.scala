@@ -15,19 +15,25 @@ object VecKernels {
     * a length mismatch or a null element nulls the result (zip_with
     * pads the short side with null and `acc + null` is null), and
     * overflow aborts (ANSI `*`/`+` semantics via multiplyExact /
-    * addExact — all committed corpora are far inside Long). Returns a
-    * boxed Long or null. */
+    * addExact — all committed corpora are far inside Long). As in that
+    * form, every product of the common prefix is formed, and the sum
+    * runs up to the first null, before a null is returned: an overflow
+    * there aborts even when the result would be null. Returns a boxed
+    * Long or null. */
   def ipFixed(a: ArrayData, b: ArrayData): java.lang.Long = {
-    val n = a.numElements()
-    if (n != b.numElements()) return null
+    val n = math.min(a.numElements(), b.numElements())
     var acc = 0L
+    var sawNull = false
     var i = 0
     while (i < n) {
-      if (a.isNullAt(i) || b.isNullAt(i)) return null
-      acc = Math.addExact(acc, Math.multiplyExact(a.getLong(i), b.getLong(i)))
+      if (a.isNullAt(i) || b.isNullAt(i)) sawNull = true
+      else {
+        val p = Math.multiplyExact(a.getLong(i), b.getLong(i))
+        if (!sawNull) acc = Math.addExact(acc, p)
+      }
       i += 1
     }
-    java.lang.Long.valueOf(acc)
+    if (sawNull || a.numElements() != b.numElements()) null else java.lang.Long.valueOf(acc)
   }
 }
 

@@ -41,10 +41,11 @@ object QuantizerCache {
     }
   }
 
-  /** bumped when the at-rest QuantizerStore row schema changes (v2:
-    * corpus-stats meta row) — a format change re-keys the directory
-    * instead of failing to parse a pre-change snapshot. */
-  private val FormatVersion = 2
+  /** bumped when the at-rest QuantizerStore format changes (v2:
+    * corpus-stats meta row; v3: self-describing VersionedTable
+    * manifests) — a format change re-keys the directory instead of
+    * failing to parse a pre-change snapshot. */
+  private val FormatVersion = 3
 
   private def storeDir(sfDir: String, key: String): String = {
     val tag = sfDir.replaceAll("[^A-Za-z0-9._-]", "_")

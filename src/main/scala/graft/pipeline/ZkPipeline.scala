@@ -48,48 +48,6 @@ object ZkPipeline {
         Aggregators.digestAgg(substring(col("__leaf_commit"), 33, 81)).as("digest"),
         Aggregators.merkleRoot(col("mapping_key"), substring(col("__leaf_commit"), 1, 32)).as("storage_root"))
 
-  /** Scale-out Merkle root (SURVEY §7.4.2 fallback): when a single
-    * group's leaf set exceeds executor memory, the in-buffer
-    * `MerkleRootAgg` fold is replaced by log₂(n) level-wise grouped
-    * reductions — each level pairs positions (2i, 2i+1) → i with an
-    * odd-tail passthrough, exactly [[graft.core.Commitments.merkleRoot]]'s
-    * pairing, so the two paths are bit-identical. Each level is one
-    * shuffle on (group, pos/2) with map-side combine; no single task
-    * ever holds more than a partition of one level.
-    *
-    * Input: one row per leaf with `pos` (0-based dense rank within the
-    * group, in the fixed leaf order) and `hash`. Output: one row per
-    * group with `root`. */
-  def merkleRootScalable(leaves: DataFrame, groupCols: Seq[String]): DataFrame = {
-    val pairHashUdf = udf((l: Array[Byte], r: Array[Byte]) =>
-      if (r == null) l else graft.core.Commitments.innerNodeHash(l, r))
-    var cur = leaves.select(groupCols.map(col) :+ col("pos") :+ col("hash"): _*)
-    var maxN = cur.groupBy(groupCols.map(col): _*).count().agg(max("count")).collect()(0).getLong(0)
-    // Lineage guard: at depth ~40 (10^12 leaves) an unbroken chain of
-    // 40 grouped reductions re-plans and (on executor loss) recomputes
-    // from the raw scan. Materialize + truncate every 8 levels; each
-    // barrier's frame is half the previous barrier's size.
-    var level = 0
-    var pinned: Option[DataFrame] = None
-    while (maxN > 1) {
-      cur = cur
-        .groupBy(groupCols.map(col) :+ (col("pos") / 2).cast("long").as("pos"): _*)
-        .agg(
-          first(when(col("pos") % 2 === 0, col("hash")), ignoreNulls = true).as("l"),
-          first(when(col("pos") % 2 === 1, col("hash")), ignoreNulls = true).as("r"))
-        .select(groupCols.map(col) :+ col("pos") :+ pairHashUdf(col("l"), col("r")).as("hash"): _*)
-      maxN = (maxN + 1) / 2
-      level += 1
-      if (level % 8 == 0 && maxN > 1) {
-        val cp = cur.localCheckpoint(eager = true) // truncates lineage
-        pinned.foreach(_.unpersist())
-        pinned = Some(cp)
-        cur = cp
-      }
-    }
-    cur.select(groupCols.map(col) :+ col("hash").as("root"): _*)
-  }
-
   /** S2 ingest-time proof validation (eth.rs:310-333): walk each
     * EIP-1186 proof, check keccak linkage + path, and compare the
     * extracted value against the claimed entry value. Embarrassingly

@@ -5,9 +5,9 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
-import VersionedTable.CommitConflict
+import VersionedTable.{CommitConflict, Manifest}
 
 /** Transactional versioned table — the reference's appendable
   * versioned block DB (`block/mod.rs:152-293`) generalized into the
@@ -19,15 +19,17 @@ import VersionedTable.CommitConflict
   *     version only WRITES its dirty buckets and inherits every
   *     untouched bucket's files from its base manifest — partition-
   *     level copy-on-write, no full-table rewrite.
-  *   - **Atomic commits**: a manifest (bucket → data path) is
-  *     published as `v%06d.manifest` with [[graft.core.Fs.publishFile]]
-  *     (temp file, forced to disk, atomic link/move — never visible
-  *     empty or torn, even after a power loss). The no-replace publish
-  *     doubles as optimistic concurrency control — two writers
-  *     committing the same next version race on the name and exactly
-  *     one wins ([[VersionedTable.CommitConflict]] for the loser). The
-  *     stats sidecar and the `LATEST` pointer are then published the
-  *     same way, replacing.
+  *   - **One file per version**: a commit publishes exactly one file,
+  *     `v%06d.manifest`, with [[graft.core.Fs.publishFile]] (temp
+  *     file, forced to disk, atomic link — never visible empty or
+  *     torn, even after a power loss). It holds everything a reader
+  *     needs: the version's schema, the bucket → data directory map
+  *     and the per-bucket zone maps. The no-replace publish doubles as
+  *     optimistic concurrency control — two writers committing the
+  *     same next version race on the name and exactly one wins
+  *     ([[VersionedTable.CommitConflict]] for the loser). The current
+  *     version is the newest manifest on disk; there is no pointer to
+  *     reconcile with it.
   *   - **Snapshot isolation / time travel**: readers resolve a
   *     version once and read only that manifest's immutable files;
   *     later commits never disturb them. [[read]] accepts an explicit
@@ -38,7 +40,7 @@ import VersionedTable.CommitConflict
   *     bucket layout is what makes row-level mutation affordable at
   *     scale: cost is O(dirty buckets), not O(table).
   *   - **Zone maps / data skipping**: a commit can record per-bucket
-  *     min/max for chosen numeric columns (`v%06d.stats` sidecar);
+  *     min/max for chosen numeric columns in its manifest;
   *     [[readPruned]] skips every bucket whose range cannot satisfy a
   *     predicate — the manifest-level analog of parquet row-group
   *     pruning, applied before any file is opened.
@@ -48,93 +50,60 @@ import VersionedTable.CommitConflict
   *   - **Retention**: [[vacuum]] deletes data files unreferenced by
   *     the kept manifests (age out old versions without breaking
   *     pinned readers inside the retention window).
-  *   - **Metadata from the commit**: a version's schema is derived
-  *     from its commits — each written bucket directory's schema is
-  *     the committed rows' schema, recorded as the write happens. A
-  *     footer is read only for a directory this instance did not
-  *     write (another writer's, or one from before a restart), once per
-  *     directory. The set of populated buckets is the set of
-  *     `__bucket=` directories the write created, so a commit without
-  *     zone maps runs no job beyond its write. The on-disk format
-  *     (manifests, stats sidecars, data layout) is the same either way.
+  *   - **Metadata from the commit**: a version's schema is its base
+  *     version's schema widened by the committed rows' schema
+  *     ([[overwrite]] and [[compact]] own every bucket, so they record
+  *     the rows' schema), and its populated buckets are the `__bucket=`
+  *     directories the write created. Planning a read, a diff or a CDC
+  *     read of any version runs no Spark job, and a handle holds no
+  *     state: every handle on a directory sees the same tables.
   */
 class VersionedTable(spark: SparkSession, baseDir: String, nBuckets: Int = 16) {
   require(nBuckets > 0)
 
   private val manifestDir = Paths.get(baseDir, "_manifests")
-  private val latestFile = Paths.get(baseDir, "LATEST")
 
   private def manifestPath(v: Int): Path = manifestDir.resolve(f"v$v%06d.manifest")
-  private def statsPath(v: Int): Path = manifestDir.resolve(f"v$v%06d.stats")
 
-  /** The manifest publish is the commit point; LATEST is a cheap
-    * pointer cache. A writer crashing between the two leaves an
-    * orphaned manifest that LATEST never reaches — naively trusting
-    * LATEST would then make every later commit compute the same next
-    * version and conflict forever. Reconcile: the current version is
-    * max(pointer, newest on-disk manifest) — the orphan is ADOPTED
-    * (its manifest is complete and atomic; a missing stats sidecar
-    * only disables pruning, which is always safe). */
-  def currentVersion(): Option[Int] = {
-    val fromPtr =
-      if (Files.exists(latestFile)) Some(Files.readString(latestFile).trim.toInt) else None
-    val fromManifests =
-      if (!Files.exists(manifestDir)) None
-      else Files.list(manifestDir).iterator().asScala
-        .map(_.getFileName.toString)
+  /** every committed version, oldest first. */
+  private def versions(): Seq[Int] =
+    if (!Files.exists(manifestDir)) Nil
+    else {
+      val ls = Files.list(manifestDir)
+      try ls.iterator().asScala.map(_.getFileName.toString)
         .filter(n => n.startsWith("v") && n.endsWith(".manifest"))
-        .map(_.stripPrefix("v").stripSuffix(".manifest").toInt)
-        .maxOption
-    (fromPtr.toSeq ++ fromManifests.toSeq).maxOption
-  }
+        .map(_.stripPrefix("v").stripSuffix(".manifest").toInt).toSeq.sorted
+      finally ls.close()
+    }
+
+  /** the newest manifest on disk — the manifest publish is the commit
+    * point, so nothing else can name a newer version. */
+  def currentVersion(): Option[Int] = versions().lastOption
 
   /** bucket assignment expression for the table key columns. */
   def bucketCol(keys: Seq[String]): Column =
     pmod(xxhash64(keys.map(col): _*), lit(nBuckets.toLong)).cast("int")
 
-  private def readManifest(v: Int): Map[Int, String] =
-    Files.readAllLines(manifestPath(v)).asScala.filter(_.nonEmpty).map { line =>
-      val Array(b, p) = line.split("\t", 2)
-      b.toInt -> p
-    }.toMap
+  private[sources] def readManifest(v: Int): Manifest =
+    Manifest.parse(Files.readAllLines(manifestPath(v)).asScala.toSeq)
 
-  /** (bucket, column) → (min, max), compared as BigDecimal. Missing
-    * entries mean "unknown — never prune". */
-  private def readStats(v: Int): Map[(Int, String), (BigDecimal, BigDecimal)] =
-    if (!Files.exists(statsPath(v))) Map.empty
-    else Files.readAllLines(statsPath(v)).asScala.filter(_.nonEmpty).map { line =>
-      val Array(b, c, mn, mx) = line.split("\t", 4)
-      (b.toInt, c) -> (BigDecimal(mn), BigDecimal(mx))
-    }.toMap
-
-  /** ONE multi-path scan with the version's explicit schema: the
-    * parquet reader fills columns a file lacks with NULL, which makes
-    * the read both additive-evolution-safe AND a single relation —
-    * per-dir `spark.read.parquet` + unionByName would pay one driver
+  /** ONE multi-path scan of `m`'s directories for the buckets `keep`
+    * accepts, with the version's explicit schema: the parquet reader
+    * fills columns a file lacks with NULL, which makes the read both
+    * additive-evolution-safe AND a single relation — per-dir
+    * `spark.read.parquet` + unionByName would pay one driver
     * file-listing/footer pass per bucket dir (O(nBuckets) analysis
-    * time on every action). */
-  private def unionDirs(dirs: Seq[String], schema: StructType): DataFrame =
-    spark.read.schema(schema).parquet(dirs: _*)
+    * time on every action). None if no kept bucket holds rows. */
+  private def scan(m: Manifest, keep: Int => Boolean): Option[DataFrame] = {
+    val dirs = m.files.filter { case (b, _) => keep(b) }.values.toSeq.distinct
+    if (dirs.isEmpty) None
+    else Some(spark.read.schema(m.schema).parquet(dirs.map(rel => s"$baseDir/$rel"): _*))
+  }
 
-  /** the widened schema of `version` = union of every bucket dir's
-    * schema. Partial reads ([[lookup]], [[readPruned]]) conform to this
-    * so their result schema never depends on WHICH buckets were probed
-    * after an evolving merge. Safe to memoize: a committed version's
-    * files are immutable. */
-  private val schemaCache = scala.collection.concurrent.TrieMap.empty[Int, StructType]
-
-  /** schema of each bucket directory (relative path), as a parquet read
-    * reports it. A commit records the dirs it writes; a dir this
-    * instance did not write (another writer's, or one from before a
-    * restart) costs one footer read, once. Data dirs are writer-unique
-    * and immutable, so an entry never goes stale. */
-  private val dirSchemas = scala.collection.concurrent.TrieMap.empty[String, StructType]
-
-  private[sources] def cachedVersions: Set[Int] = schemaCache.keySet.toSet
-  private[sources] def cachedDirs: Set[String] = dirSchemas.keySet.toSet
-
-  private def dirSchema(rel: String): StructType =
-    dirSchemas.getOrElseUpdate(rel, spark.read.parquet(s"$baseDir/$rel").schema)
+  /** no rows, with `m`'s schema: a partial read's result schema never
+    * depends on WHICH buckets were probed. */
+  private def orEmpty(m: Manifest, df: Option[DataFrame]): DataFrame =
+    df.getOrElse(spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], m.schema))
 
   /** `t` as a parquet read of it returns it: Spark writes every field,
     * array element and map value as nullable. */
@@ -167,45 +136,44 @@ class VersionedTable(spark: SparkSession, baseDir: String, nBuckets: Int = 16) {
     }
   }
 
-  private def versionSchema(v: Int): StructType =
-    schemaCache.getOrElseUpdate(v, {
-      val fields = scala.collection.mutable.LinkedHashMap[String, StructField]()
-      // sorted dirs + widest-type merge: the result must not depend on
-      // Map iteration order when bucket dirs disagree on a column's
-      // width (a narrower cached type can fail or mis-read wider files)
-      readManifest(v).values.toSeq.distinct.sorted.foreach { rel =>
-        dirSchema(rel).fields.foreach { f =>
-          fields.get(f.name) match {
-            case None => fields(f.name) = f
-            case Some(prev) =>
-              val w = widest(prev.dataType, f.dataType).getOrElse(prev.dataType)
-              if (w != prev.dataType) fields(f.name) = prev.copy(dataType = w)
-          }
-        }
+  /** `base` with `more`'s new columns appended and each shared column
+    * widened to the wider of the two types (kept as is where neither
+    * widens to the other). */
+  private def widen(base: StructType, more: StructType): StructType = {
+    val fields = scala.collection.mutable.LinkedHashMap(base.fields.toSeq.map(f => f.name -> f): _*)
+    more.fields.foreach { f =>
+      fields.get(f.name) match {
+        case None => fields(f.name) = f
+        case Some(prev) =>
+          val w = widest(prev.dataType, f.dataType).getOrElse(prev.dataType)
+          if (w != prev.dataType) fields(f.name) = prev.copy(dataType = w)
       }
-      StructType(fields.values.toSeq)
-    })
+    }
+    StructType(fields.values.toSeq)
+  }
 
   /** snapshot read at `version` (default: latest); None if the table
     * has no committed version yet. */
   def read(version: Option[Int] = None): Option[DataFrame] =
     version.orElse(currentVersion()).map { v =>
-      unionDirs(readManifest(v).values.toSeq.distinct.map(rel => s"$baseDir/$rel"), versionSchema(v))
+      val m = readManifest(v)
+      orEmpty(m, scan(m, _ => true))
     }
 
-  /** buckets whose recorded [min,max] for `statCol` intersects
+  /** buckets of `m` whose recorded [min,max] for `statCol` intersects
     * [lo,hi] — plus every bucket with no recorded range (unknown is
-    * never prunable). Exposed for spec/introspection. */
-  def bucketsFor(statCol: String, lo: BigDecimal, hi: BigDecimal, version: Option[Int] = None): Seq[Int] =
-    version.orElse(currentVersion()).toSeq.flatMap { v =>
-      val stats = readStats(v)
-      readManifest(v).keys.filter { b =>
-        stats.get((b, statCol)) match {
-          case Some((mn, mx)) => hi >= mn && lo <= mx
-          case None => true
-        }
-      }.toSeq.sorted
+    * never prunable). */
+  private def overlapping(m: Manifest, statCol: String, lo: BigDecimal, hi: BigDecimal): Set[Int] =
+    m.files.keySet.filter { b =>
+      m.zones.get((b, statCol)) match {
+        case Some((mn, mx)) => hi >= mn && lo <= mx
+        case None => true
+      }
     }
+
+  /** the buckets [[readPruned]] keeps. Exposed for spec/introspection. */
+  def bucketsFor(statCol: String, lo: BigDecimal, hi: BigDecimal, version: Option[Int] = None): Seq[Int] =
+    version.orElse(currentVersion()).toSeq.flatMap(v => overlapping(readManifest(v), statCol, lo, hi).toSeq.sorted)
 
   /** snapshot read that SKIPS buckets whose zone map proves they hold
     * no row with `statCol` in [lo,hi]. The caller still applies the
@@ -213,14 +181,8 @@ class VersionedTable(spark: SparkSession, baseDir: String, nBuckets: Int = 16) {
     * as parquet row-group skipping. */
   def readPruned(statCol: String, lo: BigDecimal, hi: BigDecimal, version: Option[Int] = None): Option[DataFrame] =
     version.orElse(currentVersion()).map { v =>
-      val man = readManifest(v)
-      val keep = bucketsFor(statCol, lo, hi, Some(v)).toSet
-      val dirs = man.filter { case (b, _) => keep.contains(b) }.values.toSeq.distinct
-      val full = versionSchema(v)
-      if (dirs.isEmpty)
-        // every bucket pruned: preserve the (widened) schema, no rows
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], full)
-      else unionDirs(dirs.map(rel => s"$baseDir/$rel"), full)
+      val m = readManifest(v)
+      orEmpty(m, scan(m, overlapping(m, statCol, lo, hi)))
     }
 
   /** Point-lookup read: rows of `probe`'s key values, touching ONLY
@@ -234,17 +196,12 @@ class VersionedTable(spark: SparkSession, baseDir: String, nBuckets: Int = 16) {
     */
   def lookup(probe: DataFrame, keys: Seq[String], version: Option[Int] = None): Option[DataFrame] =
     version.orElse(currentVersion()).map { v =>
-      val man = readManifest(v)
+      val m = readManifest(v)
       val want = probe.select(bucketCol(keys).as("__b")).distinct()
         .collect().map(_.getInt(0)).toSet
-      val dirs = man.filter { case (b, _) => want.contains(b) }.values.toSeq.distinct
-      val full = versionSchema(v)
       // no probed bucket holds rows: the empty frame needs no semi join
-      // (and an empty version's schema has no key column to join on)
-      if (dirs.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], full)
-      else unionDirs(dirs.map(rel => s"$baseDir/$rel"), full)
-        .join(broadcast(probe.select(keys.map(col): _*).distinct()), keys, "left_semi")
+      orEmpty(m, scan(m, want).map(
+        _.join(broadcast(probe.select(keys.map(col): _*).distinct()), keys, "left_semi")))
     }
 
   /** Write `rows` (which must hold the COMPLETE contents of every
@@ -256,18 +213,18 @@ class VersionedTable(spark: SparkSession, baseDir: String, nBuckets: Int = 16) {
     * first (retry against the new base). */
   def commit(rows: DataFrame, keys: Seq[String], expectedBase: Option[Int],
              statsCols: Seq[String] = Nil): Int =
-    commitInternal(rows, keys, expectedBase, forcedDirty = None, statsCols)
+    commitInternal(rows, keys, expectedBase, statsCols)
 
   /** Full-snapshot commit: `rows` REPLACE the whole table. Every
     * bucket is owned by this version — a bucket absent from `rows`
     * becomes empty instead of inheriting the base's files (plain
     * [[commit]] would silently resurrect old rows whose bucket the
-    * new snapshot doesn't touch). The overwrite a quantizer refresh /
-    * index rebuild needs. */
+    * new snapshot doesn't touch) — and the version's schema is the
+    * rows' schema. The overwrite a quantizer refresh / index rebuild
+    * needs. */
   def overwrite(rows: DataFrame, keys: Seq[String], expectedBase: Option[Int],
                 statsCols: Seq[String] = Nil): Int =
-    commitInternal(rows, keys, expectedBase,
-      forcedDirty = Some((0 until nBuckets).toSet), statsCols)
+    commitInternal(rows, keys, expectedBase, statsCols, replace = true)
 
   /** MERGE (upsert): for every key in `updates`, replace the current
     * rows with that key; keys absent from the table are inserted; rows
@@ -280,14 +237,14 @@ class VersionedTable(spark: SparkSession, baseDir: String, nBuckets: Int = 16) {
     val base = currentVersion()
     if (base != expectedBase)
       throw new CommitConflict(s"base moved: expected $expectedBase, found $base")
+    val baseManifest = base.map(readManifest)
 
     // additive-only evolution: updates may carry NEW columns, but must
     // carry every EXISTING one — otherwise the allowMissingColumns
     // union below would silently rewrite matched rows with NULLs in
     // the omitted column (fail fast instead of corrupting a bucket)
-    base.foreach { bv =>
-      val baseSchema = versionSchema(bv)
-      val missing = baseSchema.fieldNames.toSet -- updates.columns.toSet
+    baseManifest.foreach { bm =>
+      val missing = bm.schema.fieldNames.toSet -- updates.columns.toSet
       require(missing.isEmpty,
         s"merge updates omit existing column(s) ${missing.mkString(", ")}; " +
           "schema evolution is additive-only")
@@ -297,7 +254,7 @@ class VersionedTable(spark: SparkSession, baseDir: String, nBuckets: Int = 16) {
       // ladder is the one allowed change. Stored types are nullable
       // throughout, so nested nullability is not a re-type.
       updates.schema.fields.foreach { f =>
-        baseSchema.find(_.name == f.name).foreach { bf =>
+        bm.schema.find(_.name == f.name).foreach { bf =>
           val t = asNullable(f.dataType)
           require(widest(bf.dataType, t).contains(t),
             s"merge re-types column ${f.name}: ${bf.dataType.simpleString} -> " +
@@ -314,14 +271,8 @@ class VersionedTable(spark: SparkSession, baseDir: String, nBuckets: Int = 16) {
     // base manifest — file-level pruning, so a merge scans O(dirty
     // buckets) as documented, never O(table) (a read(base) + filter
     // would union every bucket's files before filtering).
-    val survivors = base.map { bv =>
-      val dirtyDirs = readManifest(bv)
-        .filter { case (b, _) => dirty.contains(b) }
-        .values.toSeq.distinct
-      if (dirtyDirs.isEmpty) null
-      else unionDirs(dirtyDirs.map(rel => s"$baseDir/$rel"), versionSchema(bv))
-        .join(updates.select(keys.map(col): _*).distinct(), keys, "left_anti")
-    }.orNull
+    val survivors = baseManifest.flatMap(scan(_, dirty))
+      .map(_.join(updates.select(keys.map(col): _*).distinct(), keys, "left_anti"))
     val inserts = deleteCol match {
       case Some(dc) => updates.filter(!col(dc)).drop(dc)
       case None => updates
@@ -329,10 +280,8 @@ class VersionedTable(spark: SparkSession, baseDir: String, nBuckets: Int = 16) {
     // allowMissingColumns: updates may carry a NEW column (additive
     // schema evolution) — survivors read NULL for it, and only the
     // dirty buckets are rewritten with the widened schema
-    val newRows =
-      if (survivors == null) inserts
-      else survivors.unionByName(inserts, allowMissingColumns = true)
-    commitInternal(newRows, keys, expectedBase, forcedDirty = Some(dirty), statsCols)
+    val newRows = survivors.fold(inserts)(_.unionByName(inserts, allowMissingColumns = true))
+    commitInternal(newRows, keys, expectedBase, statsCols, dirty = Some(dirty))
   }
 
   /** The one retry policy for optimistic commits: run `attempt` with
@@ -361,28 +310,33 @@ class VersionedTable(spark: SparkSession, baseDir: String, nBuckets: Int = 16) {
               statsCols: Seq[String] = Nil, layoutSort: Seq[Column] = Nil): Int = {
     val cur = read(expectedBase)
       .getOrElse(throw new IllegalStateException("nothing to compact"))
-    commitInternal(cur, keys, expectedBase, forcedDirty = None, statsCols, layoutSort)
+    commitInternal(cur, keys, expectedBase, statsCols, layoutSort, replace = true)
   }
 
   /** number of distinct data directories backing `version` — the
     * fragmentation measure compaction collapses to 1 per bucket. */
   def dataDirCount(version: Option[Int] = None): Int =
     version.orElse(currentVersion()).map { v =>
-      readManifest(v).values.map(_.split("/__bucket=")(0)).toSet.size
+      readManifest(v).files.values.map(_.split("/__bucket=")(0)).toSet.size
     }.getOrElse(0)
 
+  /** The one commit path. `dirty` names the buckets this version
+    * logically rewrites (a merge that deletes a bucket empty still owns
+    * that bucket; default: the buckets `rows` populate); `replace`
+    * makes the version own every bucket and take the rows' schema. */
   private def commitInternal(rows: DataFrame, keys: Seq[String], expectedBase: Option[Int],
-                             forcedDirty: Option[Set[Int]], statsCols: Seq[String],
-                             layoutSort: Seq[Column] = Nil): Int = {
+                             statsCols: Seq[String], layoutSort: Seq[Column] = Nil,
+                             dirty: Option[Set[Int]] = None, replace: Boolean = false): Int = {
     val base = currentVersion()
     if (base != expectedBase)
       throw new CommitConflict(s"base moved: expected $expectedBase, found $base")
+    val bm = base.map(readManifest).getOrElse(Manifest(new StructType(), Map.empty, Map.empty))
     val next = base.getOrElse(-1) + 1
     // writer-UNIQUE data directory: two writers racing for the same
     // next version must never share a data path — the loser of the
-    // manifest rename would otherwise have already clobbered the
+    // manifest publish would otherwise have already clobbered the
     // winner's files (overwrite-mode write happens before the atomic
-    // rename decides the race). The manifest records the actual dir,
+    // publish decides the race). The manifest records the actual dir,
     // so losers only ever leave an orphan directory behind (reclaimed
     // by vacuum), never corruption.
     val dataRel = f"data/v$next%06d-" + java.util.UUID.randomUUID().toString.take(8)
@@ -413,18 +367,8 @@ class VersionedTable(spark: SparkSession, baseDir: String, nBuckets: Int = 16) {
         val aggs = statsCols.flatMap(c => Seq(min(col(c)).as(s"__mn_$c"), max(col(c)).as(s"__mx_$c")))
         bucketed.groupBy("__bucket").agg(aggs.head, aggs.tail: _*).collect()
       } finally bucketed.unpersist()
-    // dirty = buckets this version logically rewrote (a merge that
-    // deletes a bucket empty still owns that bucket); dirty-but-empty
-    // buckets simply vanish from the manifest
-    val dirty = forcedDirty.getOrElse(populated)
-
-    val inherited = base.map(readManifest).getOrElse(Map.empty)
-    val fresh = (dirty & populated).map(b => b -> s"$dataRel/__bucket=$b").toMap
-    val mapping = inherited.filter { case (b, _) => !dirty.contains(b) } ++ fresh
-
-    val inheritedStats = base.map(readStats).getOrElse(Map.empty)
-      .filter { case ((b, _), _) => !dirty.contains(b) }
-    val freshStats = perBucket.flatMap { r =>
+    val owned = if (replace) (0 until nBuckets).toSet else dirty.getOrElse(populated)
+    val freshZones = perBucket.flatMap { r =>
       val b = r.getAs[Int]("__bucket")
       statsCols.flatMap { c =>
         // NaN/Infinity (or any non-decimal rendering) ⇒ no recorded
@@ -437,26 +381,23 @@ class VersionedTable(spark: SparkSession, baseDir: String, nBuckets: Int = 16) {
         }
       }
     }.toMap
-    val stats = inheritedStats ++ freshStats
+    // the written dirs' schema is the rows' schema, as a read returns it
+    val written = asNullable(rows.schema).asInstanceOf[StructType]
+    // untouched buckets keep their files and zone maps; owned-but-empty
+    // buckets simply vanish from the manifest
+    val manifest = Manifest(
+      schema = if (replace) written else widen(bm.schema, written),
+      files = bm.files.filter { case (b, _) => !owned(b) } ++
+        (owned & populated).map(b => b -> s"$dataRel/__bucket=$b"),
+      zones = bm.zones.filter { case ((b, _), _) => !owned(b) } ++ freshZones)
 
-    def text(lines: Seq[String]) = lines.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8)
     // the commit point: the no-replace publish lets exactly one writer
     // create v<next> — the losing racer lands here
-    try graft.core.Fs.publishFile(manifestPath(next),
-      text(mapping.toSeq.sortBy(_._1).map { case (b, p) => s"$b\t$p" }), replace = false)
+    try graft.core.Fs.publishFile(manifestPath(next), manifest.render, replace = false)
     catch {
       case _: java.nio.file.FileAlreadyExistsException =>
         throw new CommitConflict(s"version $next already committed by another writer")
     }
-    // the written dirs' schema is the rows' schema, as a read returns it
-    val writtenSchema = asNullable(rows.schema).asInstanceOf[StructType]
-    fresh.values.foreach(dirSchemas.put(_, writtenSchema))
-    // stats sidecar lands after the manifest we won; readers that see
-    // the manifest before the stats just skip pruning (never wrong)
-    if (stats.nonEmpty)
-      graft.core.Fs.publishFile(statsPath(next), text(stats.toSeq.sortBy { case ((b, c), _) => (b, c) }
-        .map { case ((b, c), (mn, mx)) => s"$b\t$c\t$mn\t$mx" }), replace = true)
-    graft.core.Fs.publishFile(latestFile, text(Seq(next.toString)), replace = true)
     next
   }
 
@@ -513,23 +454,15 @@ class VersionedTable(spark: SparkSession, baseDir: String, nBuckets: Int = 16) {
   private def changedImages(keys: Seq[String], fromVersion: Int, toVersion: Int): (DataFrame, Seq[String]) = {
     val mF = readManifest(fromVersion)
     val mT = readManifest(toVersion)
-    val changed = (mF.keySet ++ mT.keySet).filter(b => mF.get(b) != mT.get(b))
-
-    def rowsOf(man: Map[Int, String], v: Int): Option[DataFrame] = {
-      val dirs = man.filter { case (b, _) => changed.contains(b) }.values.toSeq.distinct
-      if (dirs.isEmpty) None
-      else Some(unionDirs(dirs.map(rel => s"$baseDir/$rel"), versionSchema(v)))
-    }
-    val pre  = rowsOf(mF, fromVersion)
-    val post = rowsOf(mT, toVersion)
+    val changed = (mF.files.keySet ++ mT.files.keySet).filter(b => mF.files.get(b) != mT.files.get(b))
+    val pre  = scan(mF, changed)
+    val post = scan(mT, changed)
     val schema = pre.orElse(post).getOrElse {
       // no-op step (e.g. a merge whose update set was empty): changed
       // nothing, so the delta is the EMPTY change set, not an error —
       // a follower must be able to step over it
-      val fallback = versionSchema(toVersion)
-      val empty = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], fallback)
-      val dcs = fallback.fieldNames.toSeq.filterNot(keys.contains)
+      val empty = orEmpty(mT, None)
+      val dcs = mT.schema.fieldNames.toSeq.filterNot(keys.contains)
       def packedEmpty(as: String) =
         empty.select((keys.map(col) :+ struct(dcs.map(col): _*).as(as)): _*)
       return (packedEmpty("__pre").join(packedEmpty("__post"), keys, "full_outer"), dcs)
@@ -559,31 +492,22 @@ class VersionedTable(spark: SparkSession, baseDir: String, nBuckets: Int = 16) {
     * reclaims directories left by writers that lost a commit race. */
   def vacuum(keepVersions: Int, removeOrphans: Boolean = false): Unit = {
     require(keepVersions >= 1)
-    if (!Files.exists(manifestDir)) return
-    val versions = Files.list(manifestDir).iterator().asScala
-      .map(_.getFileName.toString).filter(_.endsWith(".manifest"))
-      .map(n => n.stripPrefix("v").stripSuffix(".manifest").toInt).toSeq.sorted
-    val (drop, keep) = versions.splitAt(math.max(0, versions.size - keepVersions))
-    val live = keep.flatMap(v => readManifest(v).values).toSet
+    val all = versions()
+    val (drop, keep) = all.splitAt(math.max(0, all.size - keepVersions))
+    val live = keep.flatMap(v => readManifest(v).files.values).toSet
     def deleteDir(rel: String): Unit = {
       val dir = Paths.get(baseDir, rel)
       if (Files.exists(dir)) {
         Files.walk(dir).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
       }
     }
-    // data paths are per-version bucket dirs; delete dead ones, and
-    // release their cached schemas with them
-    val dead = drop.flatMap(v => readManifest(v).values).toSet -- live
-    dead.foreach { rel => deleteDir(rel); dirSchemas.remove(rel) }
-    drop.foreach { v =>
-      Files.deleteIfExists(manifestPath(v)); Files.deleteIfExists(statsPath(v)); schemaCache.remove(v)
-    }
+    // data paths are per-version bucket dirs; delete dead ones
+    (drop.flatMap(v => readManifest(v).files.values).toSet -- live).foreach(deleteDir)
+    drop.foreach(v => Files.deleteIfExists(manifestPath(v)))
     if (removeOrphans) {
       val dataRoot = Paths.get(baseDir, "data")
       if (Files.exists(dataRoot)) {
-        val referenced = (keep ++ drop).flatMap(v =>
-          scala.util.Try(readManifest(v).values.toSeq).getOrElse(Nil)).toSet ++ live
-        val referencedDirs = referenced.map(_.split("/__bucket=")(0))
+        val referencedDirs = live.map(_.split("/__bucket=")(0))
         Files.list(dataRoot).iterator().asScala.toSeq
           .map(p => "data/" + p.getFileName.toString)
           .filterNot(referencedDirs.contains)
@@ -600,4 +524,34 @@ object VersionedTable {
 
   /** how many times [[VersionedTable.retrying]] runs a losing commit. */
   private val CommitAttempts = 5
+
+  /** One committed version, as its manifest holds it. The file's first
+    * line is the version's schema (`StructType.json`, one compact
+    * line); then one line per populated bucket, in bucket order:
+    * `bucket \t data dir`, followed by the bucket's zone maps as
+    * `\t column \t min \t max` each. `zones` maps (bucket, column) to
+    * the recorded range; a missing entry means "unknown — never
+    * prune". */
+  private[sources] final case class Manifest(schema: StructType, files: Map[Int, String],
+                                             zones: Map[(Int, String), (BigDecimal, BigDecimal)]) {
+    def render: Array[Byte] = {
+      val buckets = files.toSeq.sortBy(_._1).map { case (b, dir) =>
+        val ranges = zones.toSeq.collect { case ((`b`, c), (mn, mx)) => s"\t$c\t$mn\t$mx" }.sorted
+        s"$b\t$dir" + ranges.mkString
+      }
+      (schema.json +: buckets).mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    }
+  }
+
+  private[sources] object Manifest {
+    def parse(lines: Seq[String]): Manifest = {
+      val buckets = lines.tail.filter(_.nonEmpty).map(_.split("\t", -1))
+      Manifest(
+        DataType.fromJson(lines.head).asInstanceOf[StructType],
+        buckets.map(f => f(0).toInt -> f(1)).toMap,
+        buckets.flatMap { f =>
+          f.drop(2).grouped(3).map { case Array(c, mn, mx) => (f(0).toInt, c) -> (BigDecimal(mn), BigDecimal(mx)) }
+        }.toMap)
+    }
+  }
 }

@@ -23,9 +23,9 @@ import graft.sources.VersionedTable
   *     the new base ([[graft.sources.VersionedTable.retrying]]) —
   *     optimistic concurrency, single-winner.
   */
-class StorageDbMaintainer(spark: SparkSession, baseDir: String, nBuckets: Int = 16) {
+class StorageDbMaintainer(spark: SparkSession, baseDir: String) {
 
-  private val table = new VersionedTable(spark, baseDir, nBuckets)
+  private val table = new VersionedTable(spark, baseDir, nBuckets = 16)
   private val keys = Seq("block_number", "contract")
 
   def currentVersion(): Option[String] = table.currentVersion().map(v => f"v$v%06d")

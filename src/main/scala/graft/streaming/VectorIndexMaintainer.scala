@@ -37,10 +37,9 @@ import graft.sources.VersionedTable
   * wholesale retrain-swap only). A deployment periodically compacts
   * this table into that layout for read-heavy serving.
   */
-class VectorIndexMaintainer(spark: SparkSession, baseDir: String,
-                            initialModel: IvfIndex.Model, nBuckets: Int = 16) {
+class VectorIndexMaintainer(spark: SparkSession, baseDir: String, initialModel: IvfIndex.Model) {
 
-  private val table = new VersionedTable(spark, baseDir, nBuckets)
+  private val table = new VersionedTable(spark, baseDir, nBuckets = 16)
   private val quantizerDir = s"$baseDir/_quantizer"
   private val baselineFile = java.nio.file.Paths.get(quantizerDir, "BASELINE")
 

@@ -117,7 +117,7 @@ class PublishFaultSpec extends AnyFunSuite with BeforeAndAfterAll {
         val t = table(d)
         t.commit(rows(Seq((3L, -3L))), Seq("k"), t.currentVersion(), statsCols = Seq("v")): Unit
       })
-    assert(n == 9, "manifest, stats sidecar and LATEST, three steps each")
+    assert(n == 3, "one manifest publish per commit, three steps")
   }
 
   // ------------------------------------------------------------ IvfIndex
@@ -300,6 +300,6 @@ class PublishFaultSpec extends AnyFunSuite with BeforeAndAfterAll {
         k += 1
       }
     }
-    assert(injected == 9, "manifest, LATEST and the baseline, three steps each")
+    assert(injected == 6, "the manifest and the baseline, three steps each")
   }
 }

@@ -70,27 +70,6 @@ class ZkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(a == b)
   }
 
-  test("scale-out level-wise merkle root equals the in-buffer aggregator") {
-    import org.apache.spark.sql.expressions.Window
-    import graft.functions.GraftFunctions.{mappingLeafHash => mlh}
-    val entries = Fixtures.entries(spark, cfg)
-    // leaf order = sorted mapping_key (the documented convention):
-    // pos via a window rank within each group
-    val w = Window.partitionBy("block_number", "contract").orderBy(col("mapping_key"))
-    val leaves = entries
-      .withColumn("pos", row_number().over(w).cast("long") - 1)
-      .withColumn("hash", mlh(col("mapping_key"), col("value")))
-      .select("block_number", "contract", "pos", "hash")
-    val scalable = ZkPipeline.merkleRootScalable(leaves, Seq("block_number", "contract"))
-      .collect()
-      .map(r => (r.getAs[Long]("block_number"), Bytes.toHex(r.getAs[Array[Byte]]("contract"))) ->
-        Bytes.toHex(r.getAs[Array[Byte]]("root"))).toMap
-    val inBuffer = ZkPipeline.storageDb(entries).collect()
-      .map(r => (r.getAs[Long]("block_number"), Bytes.toHex(r.getAs[Array[Byte]]("contract"))) ->
-        Bytes.toHex(r.getAs[Array[Byte]]("storage_root"))).toMap
-    assert(scalable == inBuffer)
-  }
-
   test("state DB roots match goldens") {
     val got = ZkPipeline.stateDb(ZkPipeline.storageDb(Fixtures.entries(spark, cfg)))
       .collect().map(r => r.getAs[Long]("block_number") -> Bytes.toHex(r.getAs[Array[Byte]]("state_root"))).toMap

@@ -1,11 +1,12 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 import org.apache.spark.JobCounter
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, MetadataBuilder, StructType}
+import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DoubleType, FloatType, IntegerType, LongType,
+  MetadataBuilder, ShortType, StructField, StructType}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -59,10 +60,8 @@ class VersionedTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(before != 777L)
 
     // manifest sharing: v1 inherits 7 of 8 bucket paths from v0
-    val m0 = Files.readString(java.nio.file.Paths.get(dir, f"_manifests/v${0}%06d.manifest"))
-    val m1 = Files.readString(java.nio.file.Paths.get(dir, f"_manifests/v${1}%06d.manifest"))
-    val paths0 = m0.split("\n").map(_.split("\t")(1)).toSet
-    val paths1 = m1.split("\n").map(_.split("\t")(1)).toSet
+    val paths0 = t.readManifest(0).files.values.toSet
+    val paths1 = t.readManifest(1).files.values.toSet
     assert((paths0 intersect paths1).size == paths0.size - 1, "exactly one bucket rewritten")
   }
 
@@ -130,7 +129,7 @@ class VersionedTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = Files.createTempDirectory("vt5").toString
     val t = new VersionedTable(spark, dir, nBuckets = 8)
     t.commit(df((0L until 64L).map(i => (i, s"n$i", i * 10))), Seq("k"), None)
-    val man0 = Files.readString(java.nio.file.Paths.get(dir, "_manifests", "v000000.manifest"))
+    val man0 = t.readManifest(0).files
 
     // update k=3, insert k=100, delete k=5
     val updates = Seq(
@@ -147,9 +146,8 @@ class VersionedTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(now.filter(col("k") === 5L).count() == 0)
 
     // copy-on-write held: buckets untouched by {3,100,5} kept their v0 paths
-    val man1 = Files.readString(java.nio.file.Paths.get(dir, "_manifests", "v000001.manifest"))
-    val v0Lines = man0.split("\n").toSet
-    val inheritedCount = man1.split("\n").count(v0Lines.contains)
+    val man1 = t.readManifest(1).files
+    val inheritedCount = man1.count { case (b, p) => man0.get(b).contains(p) }
     assert(inheritedCount >= 5, s"expected most of 8 buckets inherited, got $inheritedCount:\n$man1")
 
     // time travel still sees the pre-merge row
@@ -397,22 +395,6 @@ class VersionedTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(hot.size == 1, s"only the merged bucket can hold v=5000, got $hot")
   }
 
-  test("orphaned manifest (crash before the LATEST update) is adopted, not deadlocked") {
-    val dir = Files.createTempDirectory("vt-orphan").toString
-    val t = new VersionedTable(spark, dir, nBuckets = 2)
-    t.commit(df(Seq((1L, "a", 1L))), Seq("k"), None) // v0
-    t.commit(df(Seq((1L, "a", 2L))), Seq("k"), Some(0)) // v1
-    // simulate the crash window: manifest v1 landed, pointer did not
-    Files.writeString(java.nio.file.Paths.get(dir, "LATEST"), "0")
-    assert(t.currentVersion().contains(1),
-      "the newest on-disk manifest must win over a stale pointer")
-    assert(t.read().get.head().getLong(2) == 2L, "the orphaned commit's data is served")
-    // and the next commit advances past the orphan instead of
-    // conflicting on the same version number forever
-    assert(t.commit(df(Seq((1L, "a", 3L))), Seq("k"), Some(1)) == 2)
-    assert(t.read().get.head().getLong(2) == 3L)
-  }
-
   test("overwrite owns every bucket: rows absent from the snapshot disappear") {
     val s2 = spark
     import s2.implicits._
@@ -425,11 +407,6 @@ class VersionedTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(t.read().get.count() == 3, "overwrite must not inherit stale buckets")
     assert(t.read(Some(0)).get.count() == 32, "pinned readers keep the old snapshot")
   }
-
-  /** bucket → data path of a committed version, read off its manifest */
-  private def manifest(dir: String, v: Int): Map[Int, String] =
-    Files.readString(Paths.get(dir, f"_manifests/v$v%06d.manifest")).split("\n").filter(_.nonEmpty)
-      .map { line => val Array(b, p) = line.split("\t", 2); b.toInt -> p }.toMap
 
   test("schemas derived from commits equal a cold instance's footer reads, version by version") {
     val s2 = spark
@@ -455,11 +432,26 @@ class VersionedTableSpec extends AnyFunSuite with BeforeAndAfterAll {
         "lookup" -> x.lookup(probe, keys, Some(v)).get.schema) ++
         (if (v == 0) Nil
          else Seq("diff" -> x.diff(keys, v - 1, v).schema, "cdc" -> x.cdc(keys, v - 1, v).schema))
+    // the reference derivation: the widest-type merge of the footer
+    // schemas of every directory the version references, in path order
+    val ladders = Seq(Seq(ByteType, ShortType, IntegerType, LongType), Seq(FloatType, DoubleType))
+    def wider(a: DataType, b: DataType): DataType =
+      ladders.find(l => l.contains(a) && l.contains(b)).fold(a)(l => l(math.max(l.indexOf(a), l.indexOf(b))))
+    def footerSchema(dirs: Seq[String]): StructType =
+      StructType(dirs.sorted.flatMap(rel => spark.read.parquet(s"$dir/$rel").schema.fields)
+        .foldLeft(Seq.empty[StructField]) { (acc, f) =>
+          acc.indexWhere(_.name == f.name) match {
+            case -1 => acc :+ f
+            case i => acc.updated(i, acc(i).copy(dataType = wider(acc(i).dataType, f.dataType)))
+          }
+        })
     def assertParity(v: Int): Unit = {
       assert(t.currentVersion().contains(v))
       val cold = new VersionedTable(spark, dir, nBuckets = 4)
       val (warm, fresh) = (schemas(t, v), schemas(cold, v))
       warm.zip(fresh).foreach { case ((what, a), (_, b)) => assert(a == b, s"v$v $what") }
+      val dirs = t.readManifest(v).files.values.toSeq.distinct
+      if (dirs.nonEmpty) assert(t.read(Some(v)).get.schema == footerSchema(dirs), s"v$v footers")
     }
 
     t.commit(rowsOf(0L until 16L), keys, None, statsCols = Seq("v"))
@@ -479,14 +471,16 @@ class VersionedTableSpec extends AnyFunSuite with BeforeAndAfterAll {
       .withColumn("tag", lit("wide")).withColumn("del", col("k").isin(bucket0: _*)),
       keys, Some(1), deleteCol = Some("del"))
     assertParity(2)
-    assert(!manifest(dir, 2).contains(0), "the emptied bucket leaves the manifest")
+    assert(!t.readManifest(2).files.contains(0), "the emptied bucket leaves the manifest")
     assert(t.read().get.schema("v").dataType == LongType)
 
-    // an empty snapshot owns every bucket and populates none
+    // an empty snapshot owns every bucket and populates none; its
+    // schema is the rows' schema
     t.overwrite(rowsOf(Nil), keys, Some(2))
     assertParity(3)
-    assert(manifest(dir, 3).isEmpty && t.dataDirCount(Some(3)) == 0)
+    assert(t.readManifest(3).files.isEmpty && t.dataDirCount(Some(3)) == 0)
     assert(t.read().get.count() == 0)
+    assert(t.read().get.schema == t.read(Some(0)).get.schema)
 
     // repopulate (a version without buckets has nothing to compact),
     // then compact
@@ -513,21 +507,26 @@ class VersionedTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(zoned.bucketsFor("v", BigDecimal(0), BigDecimal(64)) == (0 until 8))
   }
 
-  test("vacuum releases the cached schemas of the versions and directories it deletes") {
-    val dir = Files.createTempDirectory("vt-cache").toString
-    val t = new VersionedTable(spark, dir, nBuckets = 2)
-    val n = 6
-    (0 until n).foreach { i =>
-      // every commit rewrites both buckets, so each version's dirs are its own
-      t.commit(df((0L until 8L).map(k => (k, s"n$k", i.toLong))), Seq("k"), if (i == 0) None else Some(i - 1))
-      assert(t.read().get.count() == 8)
+  test("a fresh handle plans read, readPruned, diff and cdc of another handle's versions without a Spark job") {
+    val s2 = spark
+    import s2.implicits._
+    val dir = Files.createTempDirectory("vt-cold").toString
+    val writer = new VersionedTable(spark, dir, nBuckets = 4)
+    writer.commit(df((0L until 32L).map(i => (i, s"n$i", i))), Seq("k"), None, statsCols = Seq("v"))
+    writer.merge(Seq((3L, "UPD", 999L, "hot"), (100L, "NEW", 1L, "cold")).toDF("k", "name", "v", "tag"),
+      Seq("k"), Some(0), statsCols = Seq("v"))
+    // the version's manifest is the only file a reader needs
+    val cold = new VersionedTable(spark, dir, nBuckets = 4)
+    val (plans, jobs) = JobCounter.count(spark.sparkContext)(Seq(
+      cold.read().get, cold.read(Some(0)).get, cold.readPruned("v", BigDecimal(0), BigDecimal(8)).get,
+      cold.diff(Seq("k"), 0, 1), cold.cdc(Seq("k"), 0, 1)))
+    assert(jobs == 0, s"$jobs jobs to plan a fresh handle's reads")
+    val warm = Seq(writer.read().get, writer.read(Some(0)).get,
+      writer.readPruned("v", BigDecimal(0), BigDecimal(8)).get, writer.diff(Seq("k"), 0, 1), writer.cdc(Seq("k"), 0, 1))
+    plans.zip(warm).foreach { case (a, b) =>
+      assert(a.schema == b.schema)
+      assert(a.collect().map(_.toString).sorted.sameElements(b.collect().map(_.toString).sorted))
     }
-    assert(t.cachedVersions == (0 until n).toSet)
-    val k = 2
-    t.vacuum(keepVersions = k)
-    val kept = (n - k until n).toSet
-    assert(t.cachedVersions.subsetOf(kept), t.cachedVersions)
-    assert(t.cachedDirs.subsetOf(kept.flatMap(v => manifest(dir, v).values)), t.cachedDirs)
-    assert(t.read().get.count() == 8)
+    assert(plans(0).count() == 33 && plans(3).count() == 2)
   }
 }

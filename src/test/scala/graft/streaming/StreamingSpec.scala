@@ -233,14 +233,21 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     import graft.pipeline.{Fixtures, ZkPipeline}
     val cfg = Fixtures.Cfg(nBlocks = 4)
     val all = Fixtures.entriesSeq(cfg)
-    val maintainer = new StorageDbMaintainer(spark, tmp("sdb-jobs"))
+    val dir = tmp("sdb-jobs")
+    val maintainer = new StorageDbMaintainer(spark, dir)
     val (early, late) = all.partition(_.block_number < cfg.firstBlock + 2)
     maintainer.processBatch(spark.createDataFrame(early), 0L)
     maintainer.processBatch(spark.createDataFrame(late), 1L)
     // the version's schema comes from the commits that wrote it — no
-    // footer-read job per bucket directory before the first action
+    // footer-read job per bucket directory before the first action —
+    // and it lives in the manifest, so a restarted maintainer on the
+    // same directory plans its snapshot without a job too
     val (snap, jobs) = JobCounter.count(spark.sparkContext)(maintainer.current().get)
     assert(jobs == 0, s"$jobs jobs to build current()")
+    val (restarted, coldJobs) =
+      JobCounter.count(spark.sparkContext)(new StorageDbMaintainer(spark, dir).current().get)
+    assert(coldJobs == 0, s"$coldJobs jobs to build a fresh maintainer's current()")
+    assert(restarted.schema == snap.schema)
     val want = ZkPipeline.storageDb(spark.createDataFrame(all))
     assert(snap.columns.toSeq == want.columns.toSeq)
     assert(snap.count() == want.count())

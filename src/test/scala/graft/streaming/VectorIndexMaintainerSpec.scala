@@ -89,7 +89,7 @@ class VectorIndexMaintainerSpec extends AnyFunSuite with BeforeAndAfterAll {
     // deliberately poor bootstrap fit (first 100 rows only)
     val boot = IvfIndex.train(emb.limit(100), nlist = 8)
     val dir = Files.createTempDirectory("vec-idx-refresh").toString
-    val m = new VectorIndexMaintainer(spark, dir, boot, nBuckets = 8)
+    val m = new VectorIndexMaintainer(spark, dir, boot)
     m.processBatch(emb.filter(col("vec_id") =!= 0), 0L)
     val q = emb.filter(col("vec_id") === 0).select("embedding").head().getSeq[Float](0).toArray
 
@@ -107,7 +107,7 @@ class VectorIndexMaintainerSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // restart with the ORIGINAL bootstrap model: the committed store
     // must win, so serving continues on the refreshed quantizer
-    val m2 = new VectorIndexMaintainer(spark, dir, boot, nBuckets = 8)
+    val m2 = new VectorIndexMaintainer(spark, dir, boot)
     assert(m2.model.centroids.map(_._2.toSeq).toSeq == m.model.centroids.map(_._2.toSeq).toSeq)
     assert(fullProbe(m2) == before)
 
