@@ -13,9 +13,11 @@ import scala.jdk.CollectionConverters._
   * ([[publishGeneration]]): `root/CURRENT` names the live generation
   * `root/g<N>/` plus one caller payload line, so a whole store switches
   * with a single rename and a crash at any step leaves the old
-  * generation live — no recovery step ever runs on read. A new
-  * generation carries unchanged data over from the live one with
-  * [[linkTree]] (hard links: no data copy). Build-once stores
+  * generation live — no recovery step ever runs on read. A published
+  * generation is never written again — the one exception is the
+  * near-dup gate's presence-keyed micro-batch appends — so a writer
+  * publishes a new generation and carries unchanged data over from the
+  * live one with [[linkTree]] (hard links: no data copy). Build-once stores
   * ([[buildOnce]]) are built whole in a temp directory and renamed into
   * place, so their directory existing means the build finished.
   */
@@ -119,13 +121,6 @@ object Fs {
     }
   }
 
-  /** point `root/CURRENT` at `g`: a writer that changed a generation in
-    * place (an append) republishes it with its new payload. */
-  def repoint(root: Path, g: Generation): Unit = {
-    require(!g.payload.contains('\n'), "the payload is one line")
-    publishFile(root.resolve("CURRENT"), s"${g.n}\n${g.payload}\n".getBytes(UTF_8), replace = true)
-  }
-
   /** Publish a new generation of `root`: `write` fills the empty
     * directory `g<N+1>` (reading the live one meanwhile, if it likes)
     * and returns the payload; the pointer swaps to it and every other
@@ -138,7 +133,8 @@ object Fs {
     deleteRecursively(dir.toFile)
     Files.createDirectories(dir)
     val next = Generation(n, write(dir))
-    repoint(root, next)
+    require(!next.payload.contains('\n'), "the payload is one line")
+    publishFile(root.resolve("CURRENT"), s"$n\n${next.payload}\n".getBytes(UTF_8), replace = true)
     root.toFile.listFiles().filter(f => f.getName.matches("g\\d+") && f.getName != s"g$n")
       .foreach(deleteRecursively)
     next

@@ -104,210 +104,131 @@ object IvfIndex {
   }
 
   // ---------------------------------------------------- at-rest store
-  // A store root holds `_model` (the quantizer) and a generation
-  // pointer (graft.core.Fs.publishGeneration): `CURRENT` names the live
-  // generation `g<N>/` — the posting lists plus any `_tombstones` — and
-  // carries the store's bookkeeping, `n epoch`: the committed LIVE row
-  // count and the commit counter. Serve paths that size knobs by
-  // corpus size read `n` instead of re-counting the store: at 100 TB a
-  // per-query count() is a full-store job for a number that is a
-  // property of the committed index.
+  // A store root holds a generation pointer (graft.core.Fs.publishGeneration):
+  // `CURRENT` names the live generation `g<N>/` — the posting lists plus
+  // `_model`, the quantizer they were assigned under — and carries `n`,
+  // the committed row count. Every write publishes a NEW generation and
+  // a published one is never written again, so a crash at any step
+  // leaves the old store whole and its count exact. Serve paths that
+  // size knobs by corpus size read `n` instead of re-counting the store:
+  // at 100 TB a per-query count() is a full-store job for a number that
+  // is a property of the committed index.
 
-  /** per-row generation stamp: the epoch the row was written under. A
-    * tombstone at epoch e suppresses rows with `__seq <= e`, so a
-    * later RE-INSERT of a deleted id (higher stamp) is live again
-    * without touching the tombstone set — the standard sequence-number
-    * retract/add contract (Lucene's docvalue generations, Delta's
-    * deletion-vector epoch). Underscore-prefixed so it reads as store
-    * bookkeeping, not corpus data. */
-  val SeqCol = "__seq"
-
-  /** the live generation of the store at `dir` with its bookkeeping. */
-  private final case class Committed(root: Path, gen: Fs.Generation, n: Long, epoch: Long) {
-    def data: String = gen.dir(root).toString
-    def tombstones: java.io.File = new java.io.File(s"$data/_tombstones")
-    def repoint(n: Long, epoch: Long): Unit = Fs.repoint(root, gen.copy(payload = s"$n $epoch"))
+  /** the live generation of the store at `dir`. */
+  private final case class Committed(root: Path, data: Path, n: Long) {
+    def model(spark: SparkSession): Model =
+      Model(spark.read.parquet(data.resolve("_model").toString).collect()
+        .map(r => (r.getInt(0), r.getSeq[Float](1).toArray)).sortBy(_._1))
   }
 
   private def committed(dir: String): Committed = {
     val root = Paths.get(dir)
     val gen = Fs.currentGeneration(root)
       .getOrElse(throw new IllegalStateException(s"no IVF store at $dir"))
-    val Array(n, epoch) = gen.payload.split(" ")
-    Committed(root, gen, n.toLong, epoch.toLong)
+    Committed(root, gen.dir(root), gen.payload.toLong)
   }
 
   /** Write the assigned corpus as the at-rest serving layout: parquet
     * partitioned BY THE POSTING LIST, so a probe's `list_id IN (…)`
     * filter becomes directory-level partition pruning — the probe
     * reads nprobe/nlist of the data from disk, which is the entire
-    * point of IVF at 100 TB. Publishes a new generation (the previous
-    * one, tombstones included, is dropped); the epoch restarts at 1. */
-  def writeStore(assigned: DataFrame, dir: String): Unit = {
+    * point of IVF at 100 TB. The quantizer is committed in the same
+    * generation (`_model` is invisible to the parquet reader), so
+    * probes are served by the EXACT model the store was assigned
+    * under — k-means re-trained in a different session may place
+    * centroids differently, and a model/store mismatch silently breaks
+    * the pruning contract. */
+  def writeStore(assigned: DataFrame, model: Model, dir: String): Unit = {
     val spark = assigned.sparkSession
     Fs.publishGeneration(Paths.get(dir)) { g =>
-      assigned.withColumn(SeqCol, lit(1L))
-        .write.mode("overwrite").partitionBy("list_id").parquet(g.toString)
-      // the footer recount reads exactly the files just written —
-      // O(write), not O(store history)
-      s"${spark.read.parquet(g.toString).count()} 1"
+      assigned.write.mode("append").partitionBy("list_id").parquet(g.toString)
+      import spark.implicits._
+      model.centroids.toSeq.map { case (i, c) => (i, c.toSeq) }
+        .toDF("list_id", "centroid")
+        .coalesce(1).write.parquet(g.resolve("_model").toString)
+      // the footer recount reads exactly the files just written
+      spark.read.parquet(g.toString).count().toString
     }
   }
 
-  /** Incremental maintenance: assign a delta under the EXISTING model
-    * and append it into the per-list directories — no rebuild, no
-    * touch of resident data. Assignment is a pure function of the
-    * model, so probe(append-store) ≡ probe(full rebuild) exactly
-    * (IvfIndexSpec pins it); model drift is watched separately via
-    * [[distortion]] and a retrain swaps the store wholesale. */
-  def appendStore(delta: DataFrame, model: Model, dir: String): Unit =
-    writeAppend(assign(delta, model), committed(dir), extraRemoved = 0L)
+  /** Publish the successor of `c`: `rows` (assigned vectors) are
+    * written partitioned by posting list, and every file of `c` outside
+    * the `rewritten` lists — `_model` included — joins the new
+    * generation by hard link. Data writes are O(rows + rewritten
+    * lists); the rest costs one link per file. */
+  private def publishNext(c: Committed, rows: DataFrame, rewritten: Set[Int], n: Long): Unit =
+    Fs.publishGeneration(c.root) { g =>
+      rows.write.mode("append").partitionBy("list_id").parquet(g.toString)
+      Fs.linkTree(c.data, g) { rel =>
+        val top = rel.getName(0).toString
+        rel.getNameCount > 1 &&
+          !(top.startsWith("list_id=") && rewritten.contains(top.stripPrefix("list_id=").toInt))
+      }
+      n.toString
+    }
 
-  /** append into the live generation, then republish the pointer with
-    * the count advanced INCREMENTALLY (previous value + delta) — a
-    * micro-append never pays an O(all store files) footer listing that
-    * grows with the store. The new rows' `__seq` stamp is the epoch
-    * this append commits. */
-  private def writeAppend(assigned: DataFrame, c: Committed, extraRemoved: Long): Unit = {
-    val a = assigned.withColumn(SeqCol, lit(c.epoch + 1)).persist()
-    val deltaN = a.count()
-    a.write.mode("append").partitionBy("list_id").parquet(c.data)
-    a.unpersist()
-    c.repoint(c.n + deltaN - extraRemoved, c.epoch + 1)
+  /** Incremental maintenance: assign a delta under the store's own
+    * committed model and publish it with every resident file linked
+    * over — no rebuild, no rewrite of resident data. Assignment is a
+    * pure function of the model, so probe(append-store) ≡ probe(full
+    * rebuild) exactly (IvfIndexSpec pins it); model drift is watched
+    * separately via [[distortion]] and a retrain swaps the store
+    * wholesale through [[writeStore]]. The count advances by the delta
+    * — a micro-append never pays a footer listing of the whole store. */
+  def appendStore(delta: DataFrame, dir: String): Unit = {
+    val c = committed(dir)
+    val added = assign(delta, c.model(delta.sparkSession)).persist()
+    try publishNext(c, added, Set.empty, c.n + added.count())
+    finally added.unpersist()
   }
-
-  // ----------------------------------------- retract/add (CDC follow)
-  /** the stored rows of `c`'s generation minus tombstoned ones. */
-  private def live(spark: SparkSession, c: Committed): DataFrame = {
-    val store = spark.read.parquet(c.data)
-    if (!c.tombstones.exists()) store
-    else store.join(broadcast(tombSeqs(spark, c)), Seq("vec_id"), "left")
-      .filter(col("__tomb_seq").isNull || col(SeqCol) > col("__tomb_seq"))
-      .drop("__tomb_seq")
-  }
-
-  private def tombSeqs(spark: SparkSession, c: Committed): DataFrame =
-    spark.read.parquet(c.tombstones.getPath)
-      .groupBy("vec_id").agg(max("tomb_seq").as("__tomb_seq"))
-
-  /** the LIVE rows of the store: the at-rest scan minus tombstoned
-    * generations. With no tombstones this IS the raw scan (zero serve
-    * cost); with tombstones the suppression set is a broadcast hash
-    * lookup sized by the UNRECLAIMED delete/update volume — O(delta),
-    * never O(corpus) — and [[compactStore]] periodically folds it back
-    * to zero. Every probe of a maintained store must read THIS:
-    * a deleted id must never be served at any nprobe. */
-  def liveStore(spark: SparkSession, dir: String): DataFrame = live(spark, committed(dir))
 
   /** Full CDC follow — the retract/add contract over a
     * [[graft.sources.VersionedTable.cdc]] feed (columns: the corpus
-    * columns + `change_type`):
+    * columns + `change_type`), published as one new generation:
     *
-    *   - `insert` / `update_postimage` → assign under the PERSISTED
-    *     model, append at the new epoch (ADD);
-    *   - `delete` / `update_preimage` → tombstone the id at the
-    *     PREVIOUS epoch (RETRACT): every resident generation of that
-    *     id is suppressed, while the postimage appended in this same
-    *     apply (higher stamp) stays live.
+    *   - `delete` / `update_preimage` → RETRACT: the pre-image is
+    *     assigned under the store's model, which names the posting list
+    *     holding it; only those dirty lists are rewritten, without the
+    *     retracted ids;
+    *   - `insert` / `update_postimage` → ADD: assigned and written
+    *     beside them;
+    *   - every other list is carried over by hard link.
     *
-    * One apply = one epoch: the tombstone write lands BEFORE the data
-    * append, so a crash between them leaves extra suppression (the
-    * postimage missing) but never a served ghost; re-applying the SAME
-    * batch heals that window (the re-written tombstones are dominated
-    * by the re-appended higher epoch). The idempotency claim is scoped
-    * to exactly that window: a crash AFTER the data append but before
-    * the pointer republish must be healed by [[verifyStats]] (footer
-    * recount), NOT by blind re-apply — re-appending would duplicate
-    * the add rows at the same epoch (ADVICE r10). The pointer's count
-    * is maintained as the LIVE row count: + adds − retracts, still
-    * O(delta) bookkeeping.
-    * Upstream CDC guarantees each retracted id was present in the
-    * followed version — this consumes that contract rather than
-    * re-checking it with a store scan. */
-  def applyCdc(cdc: DataFrame, model: Model, dir: String): Unit = {
+    * Finding the dirty lists costs O(delta) — no store scan. The
+    * pointer's count is the LIVE row count: + adds − retracts. Upstream
+    * CDC guarantees each retracted id was present in the followed
+    * version — this consumes that contract rather than re-checking it
+    * with a store scan. */
+  def applyCdc(cdc: DataFrame, dir: String): Unit = {
+    val spark = cdc.sparkSession
     val c = committed(dir)
+    val model = c.model(spark)
     val changes = cdc.persist()
     try {
-      val removed = changes.filter(col("change_type").isin("delete", "update_preimage"))
-        .select(col("vec_id"), lit(c.epoch).as("tomb_seq"))
-      val removedN = removed.count()
-      if (removedN > 0)
-        removed.coalesce(1).write.mode("append").parquet(c.tombstones.getPath)
-      val added = changes.filter(col("change_type").isin("insert", "update_postimage"))
-        .drop("change_type")
-      // the adds stamp at epoch + 1 > every tombstone
-      writeAppend(assign(added, model), c, extraRemoved = removedN)
+      def ofType(types: String*) = changes.filter(col("change_type").isin(types: _*)).drop("change_type")
+      val retracted = assign(ofType("delete", "update_preimage"), model).select("vec_id", "list_id")
+      val added = ofType("insert", "update_postimage")
+      val dirty = retracted.select("list_id").distinct().collect().map(_.getInt(0)).toSet
+      val kept = spark.read.parquet(c.data.toString)
+        .filter(col("list_id").isin(dirty.toSeq: _*))
+        .join(broadcast(retracted.select("vec_id")), Seq("vec_id"), "left_anti")
+      publishNext(c, kept.unionByName(assign(added, model)), dirty,
+        c.n + added.count() - retracted.count())
     } finally changes.unpersist()
   }
 
-  /** Reclaim tombstoned generations into a new store generation:
-    * ONLY the posting lists that still hold a suppressed row are
-    * rewritten (their live rows — the VersionedTable dirty-bucket
-    * discipline); every other list is carried over by hard links, and
-    * the tombstones are dropped by not carrying them. Data writes are
-    * O(dirty lists), not O(store); the live row set — and therefore
-    * every probe — is bit-identical before and after (IvfIndexSpec
-    * pins it). The pointer swap is the commit point: a crash before it
-    * leaves the old generation live, untouched. OFFLINE maintenance:
-    * the publish deletes the old generation, so serve traffic should
-    * be drained or pointed at a sibling store during compaction,
-    * exactly like a VersionedTable compact commit. */
-  def compactStore(spark: SparkSession, dir: String): Unit = {
-    val c = committed(dir)
-    if (!c.tombstones.exists()) return
-    val dirtyLists = spark.read.parquet(c.data).join(broadcast(tombSeqs(spark, c)), Seq("vec_id"))
-      .filter(col(SeqCol) <= col("__tomb_seq"))
-      .select("list_id").distinct().collect().map(_.getInt(0)).toSet
-    Fs.publishGeneration(c.root) { g =>
-      live(spark, c).filter(col("list_id").isin(dirtyLists.toSeq: _*))
-        .write.mode("append").partitionBy("list_id").parquet(g.toString)
-      Fs.linkTree(Paths.get(c.data), g) { rel =>
-        val list = rel.getName(0).toString
-        rel.getNameCount > 1 && list.startsWith("list_id=") &&
-          !dirtyLists.contains(list.stripPrefix("list_id=").toInt)
-      }
-      // live count is invariant under compaction; the epoch advances so
-      // post-compaction appends stamp above every reclaimed generation
-      s"${c.n} ${c.epoch + 1}"
-    }
-  }
-
-  /** committed LIVE row count from the generation pointer (one tiny
-    * file — no scan of the store itself). */
+  /** committed row count from the generation pointer (one tiny file —
+    * no scan of the store itself). */
   def storedCount(spark: SparkSession, dir: String): Long = committed(dir).n
 
-  /** maintenance audit: does the pointer's count match a recount of
-    * the LIVE rows? O(store footers) — for audits and specs; the serve
-    * path never calls it. False = a writer crashed between its data
-    * append and the pointer republish (the count is stale until the
-    * next successful append rewrites it from the stale base — re-run
-    * [[writeStore]]/[[appendStore]] maintenance to restore truth). */
-  def verifyStats(spark: SparkSession, dir: String): Boolean = {
-    val c = committed(dir)
-    c.n == live(spark, c).count()
-  }
-
-  /** read the live generation's layout back (list_id is the partition
-    * column). */
+  /** the live generation's rows (list_id is the partition column). A
+    * frame read here is valid until the next write to the store
+    * replaces the generation. */
   def readStore(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(committed(dir).data)
+    spark.read.parquet(committed(dir).data.toString)
 
-  /** Persist the quantizer next to its store (`_model` is invisible
-    * to the parquet reader), so probes are served by the EXACT model
-    * the store was assigned under — k-means re-trained in a different
-    * session (other partitioning/parallelism) may place centroids
-    * differently, and a model/store mismatch silently breaks the
-    * pruning contract. */
-  def saveModel(spark: SparkSession, model: Model, dir: String): Unit = {
-    import spark.implicits._
-    model.centroids.toSeq.map { case (i, c) => (i, c.toSeq) }
-      .toDF("list_id", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/_model")
-  }
-
-  def loadModel(spark: SparkSession, dir: String): Model =
-    Model(spark.read.parquet(s"$dir/_model").collect()
-      .map(r => (r.getInt(0), r.getSeq[Float](1).toArray)).sortBy(_._1))
+  /** the quantizer the live generation was assigned under. */
+  def loadModel(spark: SparkSession, dir: String): Model = committed(dir).model(spark)
 
   /** top-k by L2 distance (IVF-Flat's native metric) over the probed
     * lists, in EXACT integer arithmetic: requires integer-valued

@@ -59,24 +59,15 @@ object QuantizerStore {
 
   private def rowsOf(spark: SparkSession, dir: String): Option[Seq[QRow]] = {
     import spark.implicits._
-    // pre-stats snapshots have no `n` column at all — `.as[QRow]`
-    // would throw an AnalysisException instead of reaching the
-    // missing-meta fallback in statsOf, stranding a restarted
-    // maintainer on its own store. Treat the missing COLUMN exactly
-    // like the missing meta ROW: absent, so the caller retrains into
-    // the new layout.
-    table(spark, dir).read()
-      .filter(_.columns.contains("n"))
-      .map(_.as[QRow].collect().toSeq)
+    table(spark, dir).read().map(_.as[QRow].collect().toSeq)
   }
 
-  /** a snapshot without its meta row predates the stats format, and a
-    * meta row carrying the -1 "unknown" sentinel (a bootstrap save
-    * whose training corpus was caller-side) has no usable stats
-    * either — BOTH read as absent, so a stats-consuming caller
-    * retrains and commits a real count rather than ever sizing a
-    * serving knob from a sentinel. Model-only restores that
-    * legitimately don't need stats go through [[loadIvfModel]]. */
+  /** a meta row carrying the -1 "unknown" sentinel (a bootstrap save
+    * whose training corpus was caller-side) has no usable stats — it
+    * reads as absent, so a stats-consuming caller retrains and commits
+    * a real count rather than ever sizing a serving knob from a
+    * sentinel. Model-only restores that legitimately don't need stats
+    * go through [[loadIvfModel]]. */
   private def statsOf(rows: Seq[QRow]): Option[Long] =
     rows.find(_.kind == "meta").map(_.n).filter(_ >= 0L)
 

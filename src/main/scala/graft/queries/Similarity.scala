@@ -1944,19 +1944,18 @@ object Similarity {
         // training-code change re-keys the store instead of silently
         // serving a model built by the old path
         val canon = plantedCenterSql("vid", "j", 8) + "|" + plantedJitterSql("vid", "j") +
-          s"|base=$nBase|all=$nAll|nlist=16|trainer=${IvfIndex.TrainerVersion}|seed=42|layout=gen1"
+          s"|base=$nBase|all=$nAll|nlist=16|trainer=${IvfIndex.TrainerVersion}|seed=42|layout=gen2"
         val store = new java.io.File(s"target/ivfstore/planted_${storeTag(canon)}").getAbsolutePath
         publishStore(store) { tmp =>
           val base = corpus.filter(col("vec_id") < nBase)
           val model = IvfIndex.train(base, nlist = 16)
-          IvfIndex.writeStore(IvfIndex.assign(base, model), tmp)
-          IvfIndex.saveModel(s, model, tmp)
-          IvfIndex.appendStore(corpus.filter(col("vec_id") >= nBase), model, tmp)
+          IvfIndex.writeStore(IvfIndex.assign(base, model), model, tmp)
+          IvfIndex.appendStore(corpus.filter(col("vec_id") >= nBase), tmp)
         }
         val model = IvfIndex.loadModel(s, store)
         val q = all.filter(col("vec_id") === 0)
           .select("embedding").collect()(0).getSeq[Float](0).toArray
-        val stored = IvfIndex.liveStore(s, store) // ≡ raw scan here (no tombstones): zero serve cost
+        val stored = IvfIndex.readStore(s, store) // the live generation: a plain partitioned scan
         val fromStore = IvfIndex.probeL2(stored, model, q, nprobe = 8, k = 10)
           .select("vec_id").collect().map(_.getLong(0)).toSet
         val rebuilt = IvfIndex.probeL2(IvfIndex.assign(corpus, model), model, q, nprobe = 8, k = 10)
@@ -1989,7 +1988,7 @@ object Similarity {
     // lives in a transactional VersionedTable (v0 = base commit,
     // v1 = MERGE of the newly arrived vectors); the v0→v1 CDC step's
     // `insert` rows — and nothing else — flow into the committed IVF
-    // store via appendStore under the PERSISTED model, exactly how a
+    // store via appendStore under the store's own model, exactly how a
     // production vector store follows its upstream table instead of
     // re-scanning it. Contract: the CDC insert count equals the
     // planted delta, probe(CDC-followed store) ≡ probe(full rebuild)
@@ -2021,19 +2020,18 @@ object Similarity {
         // delta appended from the change feed (ss14's canon/cache
         // discipline, separate key so the two paths can't alias)
         val canon = plantedCenterSql("vid", "j", 8) + "|" + plantedJitterSql("vid", "j") +
-          s"|ss17|base=$nBase|all=$nAll|nlist=16|trainer=${IvfIndex.TrainerVersion}|seed=42|layout=gen1"
+          s"|ss17|base=$nBase|all=$nAll|nlist=16|trainer=${IvfIndex.TrainerVersion}|seed=42|layout=gen2"
         val store = new java.io.File(s"target/ivfstore/cdcfollow_${storeTag(canon)}").getAbsolutePath
         publishStore(store) { tmp =>
           val v0 = vt.read(Some(0)).get
           val model = IvfIndex.train(v0, nlist = 16)
-          IvfIndex.writeStore(IvfIndex.assign(v0, model), tmp)
-          IvfIndex.saveModel(s, model, tmp)
-          IvfIndex.appendStore(inserts, model, tmp)
+          IvfIndex.writeStore(IvfIndex.assign(v0, model), model, tmp)
+          IvfIndex.appendStore(inserts, tmp)
         }
         val model = IvfIndex.loadModel(s, store)
         val q = all.filter(col("vec_id") === 0)
           .select("embedding").collect()(0).getSeq[Float](0).toArray
-        val fromStore = IvfIndex.probeL2(IvfIndex.liveStore(s, store), model, q,
+        val fromStore = IvfIndex.probeL2(IvfIndex.readStore(s, store), model, q,
             nprobe = 8, k = 10)
           .select("vec_id").collect().map(_.getLong(0)).toSet
         val rebuilt = IvfIndex.probeL2(IvfIndex.assign(vt.read().get, model), model, q,
@@ -2069,14 +2067,16 @@ object Similarity {
     // and re-points ids 1–4 at the query's neighborhood (new embedding
     // = query + vid on every coordinate — they become the new exact
     // top-4). The committed IVF store follows BOTH CDC steps via
-    // IvfIndex.applyCdc (retract = generation tombstone, add =
-    // epoch-stamped append), serves through liveStore, and must agree
+    // IvfIndex.applyCdc (each step one new generation: the posting
+    // lists holding a retracted id are rewritten without it, the adds
+    // are written beside them and every other list is hard-linked
+    // over), serves the live generation, and must agree
     // with (a) a full rebuild of v2, (b) the exact integer-L2 top-10
     // the oracle recomputes over the post-update post-delete corpus —
     // so a ghosted delete or a stale update vector is a hash mismatch,
     // not just a flipped flag. ghost_free additionally pins the live
-    // view: zero deleted ids resident, exactly one generation per
-    // updated id. n_live audits the O(delta) stats bookkeeping through
+    // view: zero deleted ids resident, exactly one row per updated
+    // id. n_live audits the O(delta) stats bookkeeping through
     // the mixed apply (21999 − 11 deletes).
     QueryDef(
       "ss20_cdc_full_follow",
@@ -2115,18 +2115,17 @@ object Similarity {
         // CDC steps applied in order — never a corpus rescan
         val canon = plantedCenterSql("vid", "j", 8) + "|" + plantedJitterSql("vid", "j") +
           s"|ss20|base=$nBase|all=$nAll|del=${delIds.mkString(",")}|upd=1-4" +
-          s"|nlist=16|trainer=${IvfIndex.TrainerVersion}|seed=42|layout=gen1"
+          s"|nlist=16|trainer=${IvfIndex.TrainerVersion}|seed=42|layout=gen2"
         val store = new java.io.File(s"target/ivfstore/cdcfull_${storeTag(canon)}").getAbsolutePath
         publishStore(store) { tmp =>
           val v0 = vt.read(Some(0)).get
           val model = IvfIndex.train(v0, nlist = 16)
-          IvfIndex.writeStore(IvfIndex.assign(v0, model), tmp)
-          IvfIndex.saveModel(s, model, tmp)
-          IvfIndex.applyCdc(vt.cdc(Seq("vec_id"), 0, 1), model, tmp)
-          IvfIndex.applyCdc(vt.cdc(Seq("vec_id"), 1, 2), model, tmp)
+          IvfIndex.writeStore(IvfIndex.assign(v0, model), model, tmp)
+          IvfIndex.applyCdc(vt.cdc(Seq("vec_id"), 0, 1), tmp)
+          IvfIndex.applyCdc(vt.cdc(Seq("vec_id"), 1, 2), tmp)
         }
         val model = IvfIndex.loadModel(s, store)
-        val live = IvfIndex.liveStore(s, store)
+        val live = IvfIndex.readStore(s, store)
         val fromStore = IvfIndex.probeL2(live, model, qRow, nprobe = 8, k = 10)
           .select("vec_id").collect().map(_.getLong(0)).toSet
         val finalCorpus = vt.read().get

@@ -33,8 +33,8 @@ import graft.sources.VersionedTable
   * prune by list_id post-scan. The probe-optimized twin is
   * [[graft.operators.IvfIndex.writeStore]]/`appendStore`: parquet
   * partitioned BY POSTING LIST, where the probe's list filter becomes
-  * directory pruning but per-key upserts are not supported (append +
-  * wholesale retrain-swap only). A deployment periodically compacts
+  * directory pruning but a per-key upsert (`applyCdc`) rewrites whole
+  * posting lists. A deployment periodically compacts
   * this table into that layout for read-heavy serving.
   */
 class VectorIndexMaintainer(spark: SparkSession, baseDir: String, initialModel: IvfIndex.Model) {

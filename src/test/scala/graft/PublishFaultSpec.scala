@@ -6,7 +6,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Fs
-import graft.operators.{GraphAnn, IvfIndex}
+import graft.operators.{GraphAnn, IvfIndex, PqIndex, QuantizerStore}
 import graft.sources.VersionedTable
 import graft.streaming.{StreamingNearDup, VectorIndexMaintainer}
 import graft.streaming.StreamingNearDupSpec.ND
@@ -130,48 +130,59 @@ class PublishFaultSpec extends AnyFunSuite with BeforeAndAfterAll {
     ids.map(i => (i, Seq.tabulate(4)(j => ((i * 7 + j * 13) % 45).toFloat))).toDF("vec_id", "embedding")
   }
 
-  /** what a store reader sees: committed count, live ids, physical rows. */
-  private def ivfView(d: String): (Long, Seq[Long], Long) =
-    (IvfIndex.storedCount(spark, d),
-      IvfIndex.liveStore(spark, d).select("vec_id").collect().map(_.getLong(0)).sorted.toSeq,
-      IvfIndex.readStore(spark, d).count())
+  private def centroids(m: IvfIndex.Model): Seq[(Int, Seq[Float])] =
+    m.centroids.map { case (i, c) => (i, c.toSeq) }.toSeq
 
-  test("IVF writeStore / compactStore: a fault at any publish leaves the old or the new generation") {
-    val base = vectors(0L until 60L)
-    val cdc = vectors(Seq(3L, 7L, 30L)).withColumn("change_type", lit("delete"))
-    val more = vectors(100L until 110L)
-    def written(d: String) = { IvfIndex.writeStore(IvfIndex.assign(base, model), d); IvfIndex.saveModel(spark, model, d) }
-    val writes = everyFault[(Long, Seq[Long], Long), (Long, Seq[Long], Long)](
-      setup = written,
-      op = d => IvfIndex.writeStore(IvfIndex.assign(vectors(0L until 40L), model), d),
-      view = ivfView,
-      next = { d => IvfIndex.appendStore(more, IvfIndex.loadModel(spark, d), d); ivfView(d) })
-    val compactions = everyFault[(Long, Seq[Long], Long), Boolean](
-      setup = d => { written(d); IvfIndex.applyCdc(cdc, model, d) },
-      op = d => IvfIndex.compactStore(spark, d),
-      view = ivfView,
-      next = { d => IvfIndex.appendStore(more, model, d); IvfIndex.verifyStats(spark, d) })
-    assert(writes == 3 && compactions == 3)
+  /** what a store reader sees: committed count, live ids, physical
+    * rows and the quantizer the store serves. */
+  private def ivfView(d: String): (Long, Seq[Long], Long, Seq[(Int, Seq[Float])]) = {
+    val rows = IvfIndex.readStore(spark, d)
+    (IvfIndex.storedCount(spark, d),
+      rows.select("vec_id").collect().map(_.getLong(0)).sorted.toSeq,
+      rows.count(),
+      centroids(IvfIndex.loadModel(spark, d)))
   }
 
-  test("IVF appendStore: a fault at the pointer publish keeps the old count, and the audit flags it") {
+  test("IVF writeStore / appendStore / applyCdc: a fault at any publish leaves the old or the new generation") {
+    type View = (Long, Seq[Long], Long, Seq[(Int, Seq[Float])])
     val base = vectors(0L until 60L)
-    val delta = vectors(100L until 110L)
-    for (step <- Seq("write", "force", "move")) withTmp { d =>
-      IvfIndex.writeStore(IvfIndex.assign(base, model), d)
-      assert(faulted(step, 1)(IvfIndex.appendStore(delta, model, d)))
-      // the pointer is the old one, never torn; the appended rows have
-      // landed — the window between data append and pointer publish
-      // that verifyStats exists to catch
-      assert(IvfIndex.storedCount(spark, d) == 60L)
-      assert(IvfIndex.readStore(spark, d).count() == 70L)
-      assert(!IvfIndex.verifyStats(spark, d))
-      // no recovery step: the next append and a rebuild both succeed
-      IvfIndex.appendStore(vectors(200L until 205L), model, d)
-      assert(IvfIndex.liveStore(spark, d).filter(col("vec_id") >= 200L).count() == 5L)
-      IvfIndex.writeStore(IvfIndex.liveStore(spark, d).drop(IvfIndex.SeqCol), d)
-      assert(IvfIndex.storedCount(spark, d) == 75L && IvfIndex.verifyStats(spark, d))
-    }
+    val setup = (d: String) => IvfIndex.writeStore(IvfIndex.assign(base, model), model, d)
+    // the next writer appends under whatever model the store serves
+    val nextAppend = (d: String) => { IvfIndex.appendStore(vectors(200L until 205L), d); ivfView(d) }
+    val moved = IvfIndex.modelFromCenters(Array(
+      Array(5f, 5f, 5f, 5f), Array(25f, 25f, 25f, 25f), Array(45f, 45f, 45f, 45f)))
+    val writes = everyFault[View, View](setup,
+      op = d => IvfIndex.writeStore(IvfIndex.assign(vectors(0L until 40L), moved), moved, d),
+      view = ivfView, next = nextAppend)
+    val appends = everyFault[View, View](setup,
+      op = d => IvfIndex.appendStore(vectors(100L until 110L), d),
+      view = ivfView, next = nextAppend)
+    val cdc = vectors(Seq(3L, 7L, 30L)).withColumn("change_type", lit("delete"))
+      .unionByName(vectors(Seq(9L)).withColumn("change_type", lit("update_preimage")))
+      .unionByName(vectors(Seq(9L)).withColumn("embedding", array(Seq.fill(4)(lit(44f)): _*))
+        .withColumn("change_type", lit("update_postimage")))
+      .unionByName(vectors(Seq(120L)).withColumn("change_type", lit("insert")))
+    val applies = everyFault[View, View](setup,
+      op = d => IvfIndex.applyCdc(cdc, d),
+      view = ivfView, next = nextAppend)
+    assert(writes == 3 && appends == 3 && applies == 3, "one pointer publish per write")
+  }
+
+  // ------------------------------------------------------ QuantizerStore
+  test("QuantizerStore.save: a fault at the manifest publish leaves the old or the new snapshot") {
+    def pq(offset: Float) =
+      PqIndex.Model(2, 2, 2, Array.tabulate(2, 2, 2)((j, i, x) => offset + j * 4 + i * 2 + x))
+    val moved = IvfIndex.modelFromCenters(Array(Array(1f, 2f, 3f, 4f), Array(30f, 30f, 30f, 30f)))
+    // a cold reader: both stats-carrying loaders on fresh handles
+    val view = (d: String) => (
+      QuantizerStore.loadIvf(spark, d).map { case (m, n) => (centroids(m), n) },
+      QuantizerStore.loadPq(spark, d).map { case (m, n) => (m.codebooks.map(_.map(_.toSeq).toSeq).toSeq, n) })
+    val n = everyFault(
+      setup = d => QuantizerStore.save(spark, d, Some(model), Some(pq(0f)), nCorpus = 60L): Unit,
+      op = d => QuantizerStore.save(spark, d, Some(moved), Some(pq(100f)), nCorpus = 80L): Unit,
+      view = view,
+      next = d => QuantizerStore.save(spark, d, Some(model), None, nCorpus = 90L))
+    assert(n == 3, "one manifest publish per save, three steps")
   }
 
   // ------------------------------------------------------ StreamingNearDup

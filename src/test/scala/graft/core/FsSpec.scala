@@ -79,8 +79,8 @@ class FsSpec extends AnyFunSuite {
       }
       assert(g2 == Fs.Generation(2, "p2"))
       assert(names(root) == Set("CURRENT", "g2"))
-      Fs.repoint(root, Fs.Generation(2, "p3"))
-      assert(Fs.currentGeneration(root).contains(Fs.Generation(2, "p3")))
+      intercept[IllegalArgumentException](Fs.publishGeneration(root)(_ => "two\nlines"))
+      assert(Fs.currentGeneration(root).contains(g2), "a refused payload publishes nothing")
       Files.writeString(root.resolve("CURRENT"), "2\n")
       intercept[IllegalStateException](Fs.currentGeneration(root))
     }

@@ -1,5 +1,9 @@
 package graft.operators
 
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -67,9 +71,8 @@ class IvfIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = java.nio.file.Files.createTempDirectory("ivfstore").toString
     val base = emb.filter(col("vec_id") % 5 =!= 0)
     val delta = emb.filter(col("vec_id") % 5 === 0 && col("vec_id") =!= 0)
-    IvfIndex.writeStore(IvfIndex.assign(base, model), dir)
-    IvfIndex.saveModel(spark, model, dir)
-    IvfIndex.appendStore(delta, model, dir)
+    IvfIndex.writeStore(IvfIndex.assign(base, model), model, dir)
+    IvfIndex.appendStore(delta, dir)
 
     // the persisted quantizer is byte-identical to the trained one
     val loaded = IvfIndex.loadModel(spark, dir)
@@ -94,46 +97,92 @@ class IvfIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got == rebuilt, s"store probe $got != rebuild probe $rebuilt")
   }
 
-  test("stats pointer: incremental on append, staleness detectable") {
-    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-    val model = IvfIndex.train(emb, nlist = 8)
-    val dir = java.nio.file.Files.createTempDirectory("ivfstats").toString
-    val base = emb.filter(col("vec_id") % 5 =!= 0)
-    val d1 = emb.filter(col("vec_id") % 10 === 0)
-    val d2 = emb.filter(col("vec_id") % 10 === 5)
-    IvfIndex.writeStore(IvfIndex.assign(base, model), dir)
-    assert(IvfIndex.storedCount(spark, dir) == base.count())
-    // two micro-appends advance the pointer's count incrementally and
-    // it stays exact vs a footer recount
-    IvfIndex.appendStore(d1, model, dir)
-    IvfIndex.appendStore(d2, model, dir)
-    assert(IvfIndex.storedCount(spark, dir) == base.count() + d1.count() + d2.count())
-    assert(IvfIndex.verifyStats(spark, dir))
+  /** the live generation directory of the store at `dir`. */
+  private def liveGen(dir: String): Path = {
+    val root = Paths.get(dir)
+    graft.core.Fs.currentGeneration(root).get.dir(root)
+  }
 
-    // a writer that died between its data append and the pointer
-    // publish leaves a stale count — undetected on the serve path (by
-    // design: no O(store) listing there), but visible to the
-    // verifyStats audit
-    graft.core.Fs.beforeStep = step => if (step == "move") throw new RuntimeException("killed")
-    try intercept[RuntimeException] {
-      IvfIndex.appendStore(d1.withColumn("vec_id", col("vec_id") + 1000000L), model, dir)
-    } finally graft.core.Fs.beforeStep = _ => ()
-    assert(IvfIndex.storedCount(spark, dir) == base.count() + d1.count() + d2.count())
-    assert(!IvfIndex.verifyStats(spark, dir), "audit must flag the stale count")
+  /** every regular file under `d`, relative to it. */
+  private def filesUnder(d: Path): Seq[Path] = {
+    val walk = Files.walk(d)
+    try walk.iterator().asScala.filter(Files.isRegularFile(_)).map(d.relativize).toList
+    finally walk.close()
+  }
+
+  /** run `write` and check each file of the posting lists and the
+    * `_model` of the generation it replaces against the one it
+    * publishes: kept (by hard link, same relative path) where `linked`
+    * holds for its path, absent otherwise. (Each write leaves its own
+    * top-level `_SUCCESS`.) The old generation is deleted by the
+    * publish, so its files are first hard-linked into a snapshot
+    * outside the store. */
+  private def checkLinks(dir: String)(write: => Unit)(linked: Path => Boolean): Unit = {
+    val before = liveGen(dir)
+    val snap = Files.createTempDirectory("ivfsnap")
+    graft.core.Fs.linkTree(before, snap)(_ => true)
+    write
+    val after = liveGen(dir)
+    assert(after != before, "a write publishes a new generation")
+    for (rel <- filesUnder(snap) if rel.getNameCount > 1) {
+      val now = after.resolve(rel)
+      if (linked(rel)) assert(Files.exists(now) && Files.isSameFile(now, snap.resolve(rel)), s"$rel not linked")
+      else assert(!Files.exists(now), s"$rel not rewritten")
+    }
+    graft.core.Fs.deleteRecursively(snap.toFile)
+  }
+
+  test("generations: an append links every resident file, a CDC apply rewrites only the dirty lists") {
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet").select("vec_id", "embedding")
+    val model = IvfIndex.train(emb, nlist = 8)
+    val dir = Files.createTempDirectory("ivfgen").toString
+    val base = emb.filter(col("vec_id") % 5 =!= 0)
+    IvfIndex.writeStore(IvfIndex.assign(base, model), model, dir)
+
+    checkLinks(dir)(IvfIndex.appendStore(emb.filter(col("vec_id") % 5 === 0), dir))(_ => true)
+    assert(IvfIndex.storedCount(spark, dir) == emb.count())
+    assert(IvfIndex.readStore(spark, dir).count() == emb.count())
+
+    // retract two ids and add one: only the lists the retracted ids'
+    // pre-images are assigned to are rewritten
+    val retracted = emb.filter(col("vec_id").isin(3L, 7L))
+    val dirty = IvfIndex.assign(retracted, model).select("list_id").collect().map(r => s"list_id=${r.getInt(0)}").toSet
+    assert(dirty.nonEmpty && dirty.size < model.centroids.length, s"the check needs clean lists: $dirty")
+    val cdc = retracted.withColumn("change_type", lit("delete"))
+      .unionByName(emb.filter(col("vec_id") === 11)
+        .withColumn("vec_id", lit(9000L)).withColumn("change_type", lit("insert")))
+    checkLinks(dir)(IvfIndex.applyCdc(cdc, dir))(rel => !dirty.contains(rel.getName(0).toString))
+    assert(IvfIndex.storedCount(spark, dir) == emb.count() - 1)
+    assert(IvfIndex.readStore(spark, dir).count() == emb.count() - 1)
+
+    // a store that has had an append and a CDC apply still prunes
+    val q = emb.filter(col("vec_id") === 0)
+      .select("embedding").collect()(0).getSeq[Float](0).toArray
+    val plan = IvfIndex.probe(IvfIndex.readStore(spark, dir), IvfIndex.loadModel(spark, dir), q, nprobe = 4, k = 10)
+      .queryExecution.executedPlan.toString
+    assert(plan.contains("PartitionFilters") && plan.contains("list_id"), plan.take(2000))
     graft.core.Fs.deleteRecursively(new java.io.File(dir))
   }
 
-  test("CDC full follow: delete tombstones, update retracts+adds, re-insert revives, compaction reclaims") {
+  test("CDC full follow: delete retracts, update retracts+adds, re-insert revives, each apply one generation") {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
       .select("vec_id", "embedding")
     val model = IvfIndex.train(emb, nlist = 8)
     val dir = java.nio.file.Files.createTempDirectory("ivfcdc").toString
-    IvfIndex.writeStore(IvfIndex.assign(emb, model), dir)
+    IvfIndex.writeStore(IvfIndex.assign(emb, model), model, dir)
     val n0 = emb.count()
 
     def probeIds(assigned: org.apache.spark.sql.DataFrame, q: Array[Float], k: Int) =
       IvfIndex.probeL2(assigned, model, q, nprobe = 8, k = k)
         .select("vec_id").collect().map(_.getLong(0)).toSeq
+    // after every apply: the pointer's count is the physical row count,
+    // and no retract bookkeeping is left beside the posting lists
+    def consistent(): Unit = {
+      assert(IvfIndex.readStore(spark, dir).count() == IvfIndex.storedCount(spark, dir))
+      val walk = Files.walk(Paths.get(dir))
+      try assert(!walk.anyMatch(_.getFileName.toString == "_tombstones"), "no tombstones")
+      finally walk.close()
+    }
 
     // CDC batch: delete 3 and 7, move 5 far away (update), insert 9000
     val moved = emb.filter(col("vec_id") === 5)
@@ -145,14 +194,16 @@ class IvfIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
         .unionByName(moved.withColumn("change_type", lit("update_postimage")))
         .unionByName(emb.filter(col("vec_id") === 11)
           .withColumn("vec_id", lit(9000L)).withColumn("change_type", lit("insert")))
-    IvfIndex.applyCdc(cdc, model, dir)
+    IvfIndex.applyCdc(cdc, dir)
+    consistent()
 
     // the upstream final state, assigned fresh — the rebuild twin
     val finalState = emb.filter(!col("vec_id").isin(3L, 5L, 7L))
       .unionByName(moved)
       .unionByName(emb.filter(col("vec_id") === 11).withColumn("vec_id", lit(9000L)))
-    val live = IvfIndex.liveStore(spark, dir)
+    val live = IvfIndex.readStore(spark, dir)
     assert(live.count() == n0 - 1, "live = base - 2 deletes + 1 insert (update is net 0)")
+    assert(live.filter(col("vec_id").isin(5L, 7L)).count() == 1, "only the moved 5 remains")
 
     // full-store probe (nprobe = nlist): a deleted id must NEVER surface
     val q = emb.filter(col("vec_id") === 0)
@@ -165,28 +216,15 @@ class IvfIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(served == rebuilt, "follow must equal full rebuild")
     assert(served.contains(9000L), "inserted id must be served")
     assert(IvfIndex.storedCount(spark, dir) == n0 - 1)
-    assert(IvfIndex.verifyStats(spark, dir))
 
-    // re-insert a DELETED id: the higher generation outlives the tombstone
+    // re-insert a DELETED id: it is live again, exactly once
     val reborn = emb.filter(col("vec_id") === 3)
-    IvfIndex.applyCdc(reborn.withColumn("change_type", lit("insert")), model, dir)
-    val served2 = probeIds(IvfIndex.liveStore(spark, dir), q, n0.toInt + 10)
+    IvfIndex.applyCdc(reborn.withColumn("change_type", lit("insert")), dir)
+    consistent()
+    val served2 = probeIds(IvfIndex.readStore(spark, dir), q, n0.toInt + 10)
     assert(served2.contains(3L), "re-inserted id must be live again")
-    assert(IvfIndex.liveStore(spark, dir).filter(col("vec_id") === 3).count() == 1)
-
-    // compaction: physical rows shrink to the live set, probes unchanged
-    val before = served2
-    IvfIndex.compactStore(spark, dir)
-    val left = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-    try assert(!left.anyMatch(_.getFileName.toString == "_tombstones"), "tombstones reclaimed")
-    finally left.close()
-    val physical = IvfIndex.readStore(spark, dir)
-    assert(physical.count() == IvfIndex.liveStore(spark, dir).count(),
-      "no suppressed generations left on disk")
-    assert(physical.filter(col("vec_id").isin(5L, 7L)).count() == 1, "only the moved 5 remains")
-    val after = probeIds(IvfIndex.liveStore(spark, dir), q, n0.toInt + 10)
-    assert(after == before, "probe must be bit-identical across compaction")
-    assert(IvfIndex.verifyStats(spark, dir))
+    assert(IvfIndex.readStore(spark, dir).filter(col("vec_id") === 3).count() == 1)
+    assert(IvfIndex.storedCount(spark, dir) == n0)
     graft.core.Fs.deleteRecursively(new java.io.File(dir))
   }
 }
