@@ -30,7 +30,7 @@ object Bench {
         "vt_scale_300k", "vt_scale_3m", "vt_merge").foreach { n =>
       SparkEntry.queries.get(n).foreach { fn =>
         try fn(spark, sfDir).count()
-        catch { case t: Throwable => System.err.println(s"[bench] warm $n failed: $t") }
+        catch { case t: Throwable => Graft.log.warn(s"[bench] warm $n failed: $t") }
       }
     }
     // optional comma-separated name filter for profiling single queries
@@ -51,7 +51,7 @@ object Bench {
         df.write.format("noop").mode("overwrite").save()
         true
       } catch {
-        case t: Throwable => System.err.println(s"[bench] $name FAILED: $t"); false
+        case t: Throwable => Graft.log.error(s"[bench] $name FAILED: $t"); false
       }
       // a crashed query must not pose as a normal timing: record the
       // elapsed time negated as an unambiguous failure sentinel
@@ -127,7 +127,7 @@ object Bench {
       val out = java.nio.file.Paths.get("target/bench.json")
       java.nio.file.Files.createDirectories(out.getParent)
       java.nio.file.Files.writeString(out, json + "\n")
-    } catch { case t: Throwable => System.err.println(s"[bench] bench.json write failed: $t") }
+    } catch { case t: Throwable => Graft.log.warn(s"[bench] bench.json write failed: $t") }
     // The driver's BENCH_r*.json keeps only the last ~2 kB of stdout, so a
     // 160-query map gets head-truncated (BENCH_r06 carried 52/160 queries).
     // Emit a LAST line that is complete within that tail window: total +

@@ -20,6 +20,10 @@ import graft.pipeline.ZkPipeline
   */
 object Graft {
 
+  /** the engine's one diagnostics logger: failures at WARN or above,
+    * so they print under the WARN level the mains set. */
+  private[graft] val log: org.slf4j.Logger = org.slf4j.LoggerFactory.getLogger("graft")
+
   /** SparkSession with the engine's native expressions registered and
     * the configs the synthetic tables need. */
   def session(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession = {

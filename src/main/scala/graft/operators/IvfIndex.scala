@@ -114,11 +114,25 @@ object IvfIndex {
   // at 100 TB a per-query count() is a full-store job for a number that
   // is a property of the committed index.
 
+  /** The one at-rest format of a quantizer: a directory holding one
+    * parquet file of `(list_id, centroid)` rows. Written before the
+    * commit point that names it ([[writeStore]]'s generation pointer,
+    * a [[graft.streaming.VectorIndexMaintainer]] version) and never
+    * written again. */
+  def writeModel(spark: SparkSession, model: Model, dir: String): Unit = {
+    import spark.implicits._
+    model.centroids.toSeq.map { case (i, c) => (i, c.toSeq) }
+      .toDF("list_id", "centroid")
+      .coalesce(1).write.parquet(dir)
+  }
+
+  def readModel(spark: SparkSession, dir: String): Model =
+    Model(spark.read.parquet(dir).collect()
+      .map(r => (r.getInt(0), r.getSeq[Float](1).toArray)).sortBy(_._1))
+
   /** the live generation of the store at `dir`. */
   private final case class Committed(root: Path, data: Path, n: Long) {
-    def model(spark: SparkSession): Model =
-      Model(spark.read.parquet(data.resolve("_model").toString).collect()
-        .map(r => (r.getInt(0), r.getSeq[Float](1).toArray)).sortBy(_._1))
+    def model(spark: SparkSession): Model = readModel(spark, data.resolve("_model").toString)
   }
 
   private def committed(dir: String): Committed = {
@@ -142,10 +156,7 @@ object IvfIndex {
     val spark = assigned.sparkSession
     Fs.publishGeneration(Paths.get(dir)) { g =>
       assigned.write.mode("append").partitionBy("list_id").parquet(g.toString)
-      import spark.implicits._
-      model.centroids.toSeq.map { case (i, c) => (i, c.toSeq) }
-        .toDF("list_id", "centroid")
-        .coalesce(1).write.parquet(g.resolve("_model").toString)
+      writeModel(spark, model, g.resolve("_model").toString)
       // the footer recount reads exactly the files just written
       spark.read.parquet(g.toString).count().toString
     }

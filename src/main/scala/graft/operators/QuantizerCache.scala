@@ -59,7 +59,7 @@ object QuantizerCache {
   /** a failed store commit (lost race with a concurrent writer) keeps
     * the just-trained in-memory model — identical content, fixed seed. */
   private def swallowConflict(f: => Unit): Unit =
-    try f catch { case _: RuntimeException => () }
+    try f catch { case _: graft.sources.VersionedTable.CommitConflict => () }
 
   def ivfStats(spark: SparkSession, sfDir: String, emb: => DataFrame,
                nlist: Int, seed: Long = 42L): (IvfIndex.Model, Long) =

@@ -41,10 +41,7 @@ object QuantizerStore {
            ivf: Option[IvfIndex.Model], pq: Option[PqIndex.Model],
            nCorpus: Long): Int = {
     import spark.implicits._
-    // -1 = "unknown": a model adopted from a caller's bootstrap fit
-    // (VectorIndexMaintainer) has no visible training corpus; the
-    // knob-serving paths (QuantizerCache) always persist a real count
-    require(nCorpus >= -1, s"corpus stats must be a count or -1, got $nCorpus")
+    require(nCorpus >= 0, s"corpus stats must be a count, got $nCorpus")
     val rows =
       ivf.toSeq.flatMap(m => m.centroids.toSeq.map { case (i, c) => QRow("ivf", 0, i, c.toSeq, -1L) }) ++
       pq.toSeq.flatMap(m =>
@@ -62,26 +59,8 @@ object QuantizerStore {
     table(spark, dir).read().map(_.as[QRow].collect().toSeq)
   }
 
-  /** a meta row carrying the -1 "unknown" sentinel (a bootstrap save
-    * whose training corpus was caller-side) has no usable stats — it
-    * reads as absent, so a stats-consuming caller retrains and commits
-    * a real count rather than ever sizing a serving knob from a
-    * sentinel. Model-only restores that legitimately don't need stats
-    * go through [[loadIvfModel]]. */
   private def statsOf(rows: Seq[QRow]): Option[Long] =
-    rows.find(_.kind == "meta").map(_.n).filter(_ >= 0L)
-
-  /** model-only restore: the committed IVF centroids regardless of
-    * whether usable corpus stats exist (tolerates the -1 bootstrap
-    * sentinel the stats-returning loaders refuse) — for callers like
-    * [[graft.streaming.VectorIndexMaintainer]] that restore a serving
-    * model but never size knobs from the load. */
-  def loadIvfModel(spark: SparkSession, dir: String): Option[IvfIndex.Model] =
-    rowsOf(spark, dir).flatMap { rows =>
-      val cents = rows.filter(_.kind == "ivf").sortBy(_.idx)
-      if (cents.isEmpty) None
-      else Some(IvfIndex.Model(cents.map(r => (r.idx, r.vec.toArray)).toArray))
-    }
+    rows.find(_.kind == "meta").map(_.n)
 
   def loadIvf(spark: SparkSession, dir: String): Option[(IvfIndex.Model, Long)] =
     rowsOf(spark, dir).flatMap { rows =>

@@ -1203,7 +1203,7 @@ object Similarity {
         val hits2 = hitsAt(2)
         candidates.unpersist()
         exact.unpersist()
-        System.err.println(s"[ss_recall_1m] r1=$hits1/$nCand1 r2=$hits2/$nCand2")
+        graft.Graft.log.info(s"[ss_recall_1m] r1=$hits1/$nCand1 r2=$hits2/$nCand2")
         s.range(1).select(lit(nq).as("n_queries"),
           lit(nCand1).as("n_candidates_r1"), lit(hits1).as("n_hits_r1"),
           lit(nCand2).as("n_candidates_r2"), lit(hits2).as("n_hits_r2"),
@@ -1395,7 +1395,7 @@ object Similarity {
           ef = 64, maxExpand = 192, batch = 8, entryIds = entry, metric = "l2").persist()
         val nRes = res.count()
         val selfFound = res.filter(col("vec_id") === col("qid") && col("score") === 0L).count()
-        System.err.println(s"[ss_serve_scale] self_found=$selfFound/$nq nRes=$nRes")
+        graft.Graft.log.info(s"[ss_serve_scale] self_found=$selfFound/$nq nRes=$nRes")
         val sampleIds = (0L until 256L).map(_ * (nq / 256L))
         val sampleQs = sampleIds.map(q => q -> Array.tabulate(16)(j => coordOf(q, j)))
         val driver = GraphAnn.searchStoredWithBudget(s, st, sampleQs, k = 10,

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -25,76 +25,50 @@ import graft.core.{Bytes, Commitments, MerkleFrontier}
   * Scale shape: per micro-batch the driver holds the O(log n) IVC
   * frontier (last block number + the Merkle right-spine,
   * [[graft.core.MerkleFrontier]]) plus O(batch) rows — it never
-  * re-reads or re-hashes history (the reference's IVC carries exactly
-  * this frontier between steps, `block/mod.rs:152-207`). The frontier
-  * is persisted per batch next to the sink through [[DriverState]];
-  * on restart it is reloaded and cross-checked against the sink's max
-  * block, and only on a mismatch (crash between sink append and
-  * frontier write) or an unreadable frontier file is it rebuilt with
-  * one O(n) leaf scan. `foreachBatch` + checkpoint gives
-  * exactly-once appends; replayed batches are no-ops because
+  * re-reads or re-hashes history. The frontier travels with the step,
+  * as the reference's IVC carries it between steps
+  * (`block/mod.rs:152-207`): each batch's last accepted row holds the
+  * serialized frontier in `frontier_after` (null on the other rows),
+  * so the sink append is the one commit point and no state file sits
+  * beside it. A restarted appender reads the frontier back from the
+  * sink's newest row (one job per appender lifetime) and refuses the
+  * sink ([[BlockDbAppender.UnresumableSink]]) unless that frontier's
+  * root is the row's `root_after_hex`. `foreachBatch` + checkpoint
+  * gives exactly-once appends; replayed batches are no-ops because
   * duplicates fail the St2 check.
   */
 class BlockDbAppender(spark: SparkSession, sinkDir: String, quarantineDir: String) {
 
   import spark.implicits._
-  import BlockDbAppender.State
-
-  private def sinkHasData: Boolean = {
-    val p = Paths.get(sinkDir)
-    Files.exists(p) && {
-      val s = Files.list(p)
-      try s.anyMatch(f => f.getFileName.toString.endsWith(".parquet"))
-      finally s.close()
-    }
-  }
-
-  // ---------------------------------------------------------- frontier
-  /** the persisted frontier, a [[DriverState]] file. A sink's older
-    * `_frontier.txt` is ignored: its first batch here rebuilds. */
-  private val statePath = Paths.get(sinkDir, "_frontier.state")
+  import BlockDbAppender.{State, UnresumableSink}
 
   /** in-memory state between micro-batches of one appender lifetime;
-    * None until the first batch loads/recovers it. */
+    * None until the first batch restores it from the sink. */
   private var cached: Option[State] = None
 
-  private def persistState(st: State): Unit =
-    DriverState.writeAtomic(statePath) { out =>
-      out.writeLong(st.last.getOrElse(-1L))
-      out.writeUTF(st.tree.serialize)
+  /** the state the sink's newest row carries (a fresh chain for an
+    * empty sink). */
+  private def restore(): State = {
+    val newest =
+      if (!Files.exists(Paths.get(sinkDir))) None
+      else spark.read.schema("block_number LONG, root_after_hex STRING, frontier_after STRING")
+        .parquet(sinkDir).orderBy(col("block_number").desc).take(1).headOption
+    newest.fold(State(None, MerkleFrontier.empty)) { r =>
+      val block = r.getLong(0)
+      val frontier = Option(r.getString(2)).getOrElse(
+        throw new UnresumableSink(sinkDir, s"block $block carries no frontier_after"))
+      val tree = scala.util.Try(MerkleFrontier.deserialize(frontier)).toOption
+        .filter(t => Bytes.toHex(t.root) == r.getString(1))
+        .getOrElse(throw new UnresumableSink(sinkDir,
+          s"the frontier of block $block does not hash to its root_after_hex"))
+      State(Some(block), tree)
     }
-
-  /** the persisted frontier; None if absent or unreadable (torn,
-    * truncated, corrupt) — the sink is the source of truth, so any
-    * frontier the appender cannot trust sends it to [[rebuildState]]. */
-  private def loadState(): Option[State] =
-    scala.util.Try(DriverState.read(statePath) { in =>
-      val last = in.readLong()
-      State(if (last < 0) None else Some(last), MerkleFrontier.deserialize(in.readUTF()))
-    }).toOption.flatten
-
-  /** crash-recovery rebuild: one scan of the (1 row per block) sink. */
-  private def rebuildState(): State = {
-    val existing = spark.read.parquet(sinkDir).select("block_number", "leaf_hash_hex")
-      .as[(Long, String)].collect().sortBy(_._1)
-    State(existing.lastOption.map(_._1),
-      MerkleFrontier(existing.iterator.map { case (_, h) => Bytes.fromHex(h) }))
   }
-
-  /** first-batch initialization: trust the persisted frontier iff it
-    * agrees with the sink's high-water mark (one cheap max() over the
-    * tiny sink, once per appender lifetime — not per batch). */
-  private def initState(): State =
-    if (!sinkHasData) State(None, MerkleFrontier.empty)
-    else {
-      val sinkMax = spark.read.parquet(sinkDir).agg(max("block_number")).as[Long].head()
-      loadState().filter(_.last.contains(sinkMax)).getOrElse(rebuildState())
-    }
 
   /** one micro-batch: strictly-sequential prefix accepted, rest
     * quarantined. Exposed for direct (batch) testing too. */
   def processBatch(batch: DataFrame, batchId: Long): Unit = {
-    var st = cached.getOrElse(initState())
+    var st = cached.getOrElse(restore())
 
     val rows = batch
       .select(col("block_number").cast("long"), col("block_hash"), col("state_root"))
@@ -123,8 +97,10 @@ class BlockDbAppender(spark: SparkSession, sinkDir: String, quarantineDir: Strin
     val acc = accepted.result()
     if (acc.nonEmpty)
       acc.map { case (bn, bh, sr, leaf, root) =>
-        (bn, Bytes.toHex(bh), Bytes.toHex(sr), Bytes.toHex(leaf), Bytes.toHex(root))
-      }.toDF("block_number", "block_hash_hex", "state_root_hex", "leaf_hash_hex", "root_after_hex")
+        val frontier = if (st.last.contains(bn)) Some(st.tree.serialize) else None
+        (bn, Bytes.toHex(bh), Bytes.toHex(sr), Bytes.toHex(leaf), Bytes.toHex(root), frontier)
+      }.toDF("block_number", "block_hash_hex", "state_root_hex", "leaf_hash_hex", "root_after_hex",
+        "frontier_after")
         .repartition(1)
         .write.mode(SaveMode.Append).parquet(sinkDir)
 
@@ -135,7 +111,6 @@ class BlockDbAppender(spark: SparkSession, sinkDir: String, quarantineDir: Strin
         .repartition(1)
         .write.mode(SaveMode.Append).parquet(quarantineDir)
 
-    if (acc.nonEmpty) persistState(st)
     cached = Some(st)
   }
 
@@ -152,6 +127,11 @@ object BlockDbAppender {
   /** (last accepted block, incremental Merkle spine) — everything the
     * next append needs; size ≤ 1 + log2(n) hashes. */
   private final case class State(last: Option[Long], tree: MerkleFrontier)
+
+  /** the sink's newest row does not carry a frontier whose root is
+    * that row's `root_after_hex` — appending would fork the chain. */
+  final class UnresumableSink(sink: String, why: String)
+    extends IllegalStateException(s"block-DB sink $sink cannot be resumed: $why")
 }
 
 /** Streaming event-time aggregation (the general streaming surface the

@@ -4,9 +4,8 @@ import java.io.{DataInputStream, DataOutputStream, ByteArrayInputStream, ByteArr
 import java.nio.file.{Files, Path}
 
 /** Atomic persistence for the tiny driver-resident states
-  * ([[StreamingPipeline.PackingMv]]'s packing manifest,
-  * [[StreamingDrift]]'s profile counters, [[BlockDbAppender]]'s
-  * frontier): a streaming pipeline's exactly-once story is
+  * ([[StreamingPipeline.PackingMv]]'s packing manifest and
+  * [[StreamingDrift]]'s profile counters): a streaming pipeline's exactly-once story is
   * checkpoint + idempotent sink, and a driver-held accumulator
   * participates only if it (a) survives a killed JVM and (b) can tell
   * a REPLAYED micro-batch (crash after the fold, before the
@@ -23,9 +22,7 @@ import java.nio.file.{Files, Path}
   * foreign tool truncating it) as a LOUD error naming the file:
   * resuming "fresh" over a half-lost accumulator would silently
   * corrupt it — the operator must either restore the file or wipe
-  * the stateDir together with the checkpoint. A caller whose state
-  * can be rebuilt from its sink (the block-DB frontier) catches the
-  * error and rebuilds instead.
+  * the stateDir together with the checkpoint.
   *
   * Deliberately java.io, not a Spark write: the state is a few dozen
   * longs — a per-batch Spark job to persist it would cost more than

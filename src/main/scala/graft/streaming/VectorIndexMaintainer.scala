@@ -1,32 +1,41 @@
 package graft.streaming
 
-import java.nio.charset.StandardCharsets.UTF_8
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.MetadataBuilder
 
-import graft.operators.{IvfIndex, QuantizerStore}
+import graft.operators.IvfIndex
 import graft.sources.VersionedTable
 
 /** Streaming ANN index maintenance: embeddings arrive as a stream and
   * the serving index stays continuously queryable — the ingestion-side
   * composition of the IVF index with the transactional versioned sink:
   *
-  *   - the coarse quantizer is trained ONCE (on a bootstrap set) and
-  *     broadcast; per batch, new vectors are assigned to their posting
-  *     list (`IvfIndex.assign`) and MERGEd into the versioned table —
-  *     only the buckets the new vector ids hash into are rewritten;
-  *   - readers probe a SNAPSHOT (`table.read()`): they are never
-  *     disturbed by an in-flight batch, and a probe mid-stream simply
-  *     sees the vectors ingested so far — the index is always
-  *     consistent, just possibly behind the stream head;
+  *   - per batch, new vectors are assigned to their posting list
+  *     (`IvfIndex.assign`) under the quantizer of the version they are
+  *     MERGEd into — only the buckets the new vector ids hash into are
+  *     rewritten;
+  *   - readers probe a SNAPSHOT: rows and quantizer come from one
+  *     resolved version, so an in-flight batch never disturbs them and
+  *     a probe mid-stream simply sees the vectors ingested so far — the
+  *     index is always consistent, just possibly behind the stream head;
   *   - re-training (quantizer drift after heavy ingest) is a separate
   *     offline `compact`-style rebuild ([[refreshQuantizer]]), exactly
   *     like a table-format re-clustering — the serving path never
-  *     blocks on it: the rebuild is one full-rewrite commit, readers
-  *     pinned to older versions keep the old posting lists (and, via
-  *     the versioned [[QuantizerStore]], the old codebooks), and the
-  *     serving pointer swaps only after the commit lands.
+  *     blocks on it: the rebuild is one full-rewrite commit, and readers
+  *     pinned to older versions keep the old posting lists and the old
+  *     quantizer.
+  *
+  * The quantizer is part of the version: the metadata of the `list_id`
+  * field names its centroid directory (`_models/<id>`, written in the
+  * at-rest format of [[IvfIndex.writeModel]] before the manifest
+  * publish, writer-unique like the table's data directories) and
+  * carries the drift baseline. A merge keeps its base's field and an
+  * overwrite records its rows' field, so the table commit is the one
+  * commit point: a crash anywhere leaves the old version with its
+  * quantizer or the new one with its own. Until the first commit the
+  * constructor's `initialModel` serves; the constructor writes nothing.
   *
   * Layout trade: this table buckets by vec_id (upsert-optimized —
   * merges rewrite only dirty buckets), so probes scan all buckets and
@@ -39,79 +48,88 @@ import graft.sources.VersionedTable
   */
 class VectorIndexMaintainer(spark: SparkSession, baseDir: String, initialModel: IvfIndex.Model) {
 
-  private val table = new VersionedTable(spark, baseDir, nBuckets = 16)
-  private val quantizerDir = s"$baseDir/_quantizer"
-  private val baselineFile = java.nio.file.Paths.get(quantizerDir, "BASELINE")
+  import VectorIndexMaintainer._
 
-  /** current serving quantizer — restored from the committed store on
-    * construction, so a restarted maintainer serves the refreshed
-    * quantizer, not the bootstrap one. */
-  @volatile private var _model: IvfIndex.Model =
-    QuantizerStore.loadIvfModel(spark, quantizerDir).getOrElse {
-      // nCorpus = -1: the bootstrap fit happened caller-side, its
-      // corpus size is unknown here; refreshQuantizer records the real
-      // snapshot count when it retrains
-      try QuantizerStore.save(spark, quantizerDir, Some(initialModel), None, -1L)
-      catch { case _: RuntimeException => () } // lost save race: identical content
-      initialModel
+  private val table = new VersionedTable(spark, baseDir, nBuckets = 16)
+
+  /** the last centroid directory read: directories are immutable, so
+    * the memo cannot go stale. */
+  @volatile private var loaded: Option[(String, IvfIndex.Model)] = None
+
+  private def modelAt(dir: String): IvfIndex.Model = loaded match {
+    case Some((`dir`, m)) => m
+    case _ =>
+      val m = IvfIndex.readModel(spark, s"$baseDir/$dir")
+      loaded = Some(dir -> m)
+      m
+  }
+
+  /** `version`'s rows, the quantizer they were assigned under and its
+    * drift baseline, all from the one manifest. */
+  private def snapshot(version: Option[Int]): Option[(DataFrame, IvfIndex.Model, Double)] =
+    table.read(version).map { rows =>
+      val meta = rows.schema("list_id").metadata
+      if (!meta.contains(ModelKey))
+        throw new IllegalStateException(s"vector index at $baseDir: list_id names no quantizer")
+      (rows, modelAt(meta.getString(ModelKey)), meta.getDouble(BaselineKey))
     }
 
-  def model: IvfIndex.Model = _model
+  /** `assigned` with its quantizer recorded on `list_id`: the centroids
+    * in a fresh `_models/<id>` and the drift baseline, the rows' mean
+    * distortion under `model`. */
+  private def withQuantizer(assigned: DataFrame, model: IvfIndex.Model): DataFrame = {
+    val dir = s"_models/${java.util.UUID.randomUUID()}"
+    IvfIndex.writeModel(spark, model, s"$baseDir/$dir")
+    val meta = new MetadataBuilder().putString(ModelKey, dir)
+      .putDouble(BaselineKey, IvfIndex.distortion(assigned, model)).build()
+    assigned.withColumn("list_id", col("list_id").as("list_id", meta))
+  }
+
+  /** the serving quantizer: the current version's, else `initialModel`. */
+  def model: IvfIndex.Model = snapshot(None).fold(initialModel)(_._2)
 
   def currentVersion(): Option[Int] = table.currentVersion()
 
   def indexedCount(): Long = table.read().map(_.count()).getOrElse(0L)
 
-  def processBatch(batch: DataFrame, batchId: Long): Unit = {
-    if (batch.isEmpty) return
-    val assigned = IvfIndex.assign(batch, model)
-    table.retrying(base => table.merge(assigned, Seq("vec_id"), base))
-    // first ingest records the drift baseline the refresh decision
-    // compares against
-    if (!java.nio.file.Files.exists(baselineFile)) recordBaseline()
-  }
+  /** Assign `batch` under the base version's quantizer and merge it.
+    * The first commit records `initialModel`. */
+  def processBatch(batch: DataFrame, batchId: Long): Unit =
+    if (!batch.isEmpty) table.retrying { base =>
+      base.flatMap(v => snapshot(Some(v))) match {
+        case Some((_, m, _)) => table.merge(IvfIndex.assign(batch, m), Seq("vec_id"), base)
+        case None =>
+          table.merge(withQuantizer(IvfIndex.assign(batch, initialModel), initialModel), Seq("vec_id"), base)
+      }
+    }
 
   /** mean L2² of the indexed vectors to their stored posting-list
     * centroid (the layout's residual distortion — rises as ingested
     * data walks away from the trained centroids). */
   def distortion(): Double =
-    table.read().map(snap => IvfIndex.distortion(snap, _model)).getOrElse(0.0)
-
-  /** published whole (never a torn number for [[baseline]] to read) */
-  private def recordBaseline(): Unit =
-    graft.core.Fs.publishFile(baselineFile, distortion().toString.getBytes(UTF_8), replace = true)
-
-  private def baseline(): Option[Double] =
-    if (java.nio.file.Files.exists(baselineFile))
-      Some(java.nio.file.Files.readString(baselineFile).trim.toDouble)
-    else None
+    snapshot(None).fold(0.0) { case (rows, m, _) => IvfIndex.distortion(rows, m) }
 
   /** Retrain the coarse quantizer on the CURRENT snapshot and rebuild
     * every posting list under it — the offline compact-style rebuild.
-    * One full-rewrite commit; on a base conflict (a stream batch
-    * landed mid-rebuild) the snapshot is re-read and the rebuild
-    * retried, so no ingested vector is ever lost. Returns the
-    * committed version. */
-  def refreshQuantizer(nlist: Int = _model.centroids.length, seed: Long = 42L): Int = {
-    val (committed, fresh, nSnap) = table.retrying { base =>
+    * One full-rewrite commit that carries the new quantizer and its
+    * baseline; on a base conflict (a stream batch landed mid-rebuild)
+    * the snapshot is re-read and the rebuild retried, so no ingested
+    * vector is ever lost. Returns the committed version. */
+  def refreshQuantizer(nlist: Int = model.centroids.length, seed: Long = 42L): Int =
+    table.retrying { base =>
       val snap = table.read(base).getOrElse(
         throw new IllegalStateException("index is empty — nothing to rebuild")).drop("list_id")
-      val nSnap = snap.count()
       val fresh = IvfIndex.train(snap, nlist, seed)
-      (table.overwrite(IvfIndex.assign(snap, fresh), Seq("vec_id"), base), fresh, nSnap)
+      table.overwrite(withQuantizer(IvfIndex.assign(snap, fresh), fresh), Seq("vec_id"), base)
     }
-    try QuantizerStore.save(spark, quantizerDir, Some(fresh), None, nSnap)
-    catch { case _: RuntimeException => () } // lost save race; serving model still swaps
-    _model = fresh
-    recordBaseline()
-    committed
-  }
 
   /** rebuild only when the layout's distortion drifted past `factor`
-    * × the recorded baseline. Returns true if a rebuild happened. */
+    * × the baseline recorded with the current quantizer. Returns true
+    * if a rebuild happened. */
   def refreshIfDrifted(factor: Double = 1.5): Boolean =
-    baseline() match {
-      case Some(b) if b > 0 && distortion() > factor * b => refreshQuantizer(); true
+    snapshot(None) match {
+      case Some((rows, m, b)) if b > 0 && IvfIndex.distortion(rows, m) > factor * b =>
+        refreshQuantizer(); true
       case _ => false
     }
 
@@ -129,8 +147,15 @@ class VectorIndexMaintainer(spark: SparkSession, baseDir: String, initialModel: 
   /** top-k probe against the CURRENT snapshot (same plan as the batch
     * `IvfIndex.probe`). */
   def probe(query: Array[Float], nprobe: Int, k: Int): DataFrame = {
-    val snapshot = table.read().getOrElse(
+    val (rows, m, _) = snapshot(None).getOrElse(
       throw new IllegalStateException("index is empty — nothing ingested yet"))
-    IvfIndex.probe(snapshot, model, query, nprobe, k)
+    IvfIndex.probe(rows, m, query, nprobe, k)
   }
+}
+
+object VectorIndexMaintainer {
+  /** `list_id` field metadata: the version's centroid directory,
+    * relative to the table root, and its drift baseline. */
+  private val ModelKey = "ivf_model"
+  private val BaselineKey = "drift_baseline"
 }

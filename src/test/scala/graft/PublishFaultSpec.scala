@@ -37,16 +37,19 @@ class PublishFaultSpec extends AnyFunSuite with BeforeAndAfterAll {
   private final class Injected extends RuntimeException("injected publish fault")
 
   /** run `op` with its `k`-th publish failing at `step`; false if `op`
-    * made fewer than `k` publishes (it then ran to completion). */
+    * made fewer than `k` publishes (it then ran to completion). A fault
+    * that `op` swallows counts as fired too: what it left is checked. */
   private def faulted(step: String, k: Int)(op: => Unit): Boolean = {
     var calls = 0
+    var fired = false
     Fs.beforeStep = { s =>
       if (s == "write") calls += 1
-      if (s == step && calls == k) throw new Injected
+      if (s == step && calls == k) { fired = true; throw new Injected }
     }
-    try { op; false }
-    catch { case _: Injected => true }
+    try op
+    catch { case _: Injected => () }
     finally Fs.beforeStep = _ => ()
+    fired
   }
 
   private def withTmp[T](f: String => T): T = {
@@ -283,34 +286,34 @@ class PublishFaultSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   // ------------------------------------------------ VectorIndexMaintainer
-  test("vector-index drift baseline: a fault at any step of any publish never leaves a torn baseline") {
-    def baseline(d: String): Option[Double] = {
-      val f = java.nio.file.Paths.get(d, "_quantizer", "BASELINE")
-      if (java.nio.file.Files.exists(f)) Some(java.nio.file.Files.readString(f).toDouble) else None
+  /** what a fresh maintainer serves: its model and every indexed row's
+    * posting list. Each row must sit in the list that model assigns it
+    * to, and no quantizer state may live beside the table. */
+  private def maintainerView(d: String): (Seq[(Int, Seq[Float])], Seq[(Long, Int)]) = {
+    val served = new VectorIndexMaintainer(spark, d, model).model
+    val rows = new VersionedTable(spark, d).read().toSeq
+      .flatMap(_.select("vec_id", "embedding", "list_id").collect())
+    rows.foreach { r =>
+      assert(served.nearest(r.getSeq[Float](1).toArray, 1).head == r.getInt(2),
+        s"vec ${r.getLong(0)} sits in list ${r.getInt(2)}, not where the served quantizer puts it")
     }
-    var injected = 0
-    for (step <- Seq("write", "force", "move")) {
-      var k = 1
-      var more = true
-      while (more) {
-        more = withTmp { d =>
-          val first = new VectorIndexMaintainer(spark, d, model)
-          val fired = faulted(step, k)(first.processBatch(vectors(0L until 40L), 0L))
-          if (fired) {
-            injected += 1
-            baseline(d) // absent or whole: a torn number fails to parse here
-            // no recovery step: a restarted maintainer ingests and
-            // judges drift against the baseline it finds
-            val next = new VectorIndexMaintainer(spark, d, model)
-            next.processBatch(vectors(40L until 60L), 1L)
-            assert(!next.refreshIfDrifted(factor = 1e9))
-            assert(baseline(d).isDefined, s"fault at publish $k, step $step: no baseline after the next batch")
-          }
-          fired
-        }
-        k += 1
-      }
-    }
-    assert(injected == 6, "the manifest and the baseline, three steps each")
+    val leftovers = Seq("_quantizer", "BASELINE").filter(f => java.nio.file.Files.exists(java.nio.file.Paths.get(d, f)))
+    assert(leftovers.isEmpty, s"quantizer state beside the table: $leftovers")
+    (centroids(served), rows.map(r => (r.getLong(0), r.getInt(2))).sorted)
+  }
+
+  test("vector-index processBatch / refreshQuantizer: after a fault at any publish every row sits under the served quantizer") {
+    type View = (Seq[(Int, Seq[Float])], Seq[(Long, Int)])
+    def ingest(d: String, ids: Seq[Long], batchId: Long): Unit =
+      new VectorIndexMaintainer(spark, d, model).processBatch(vectors(ids), batchId)
+    // the next writer: a restarted maintainer ingests one more batch
+    val nextBatch = (d: String) => { ingest(d, 60L until 80L, 2L); maintainerView(d) }
+    val firsts = everyFault[View, View](setup = _ => (),
+      op = d => ingest(d, 0L until 40L, 0L),
+      view = maintainerView, next = nextBatch)
+    val refreshes = everyFault[View, View](setup = d => ingest(d, 0L until 40L, 0L),
+      op = d => new VectorIndexMaintainer(spark, d, model).refreshQuantizer(): Unit,
+      view = maintainerView, next = nextBatch)
+    assert(firsts == 3 && refreshes == 3, "one manifest publish per writer call")
   }
 }

@@ -65,24 +65,6 @@ class QuantizerStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(nLatest == 600L, "a refresh must also refresh the corpus stats")
   }
 
-  test("the -1 bootstrap sentinel never reaches a stats consumer; model-only restore still works") {
-    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-    val dir = Files.createTempDirectory("qstore_sentinel").toString
-    val m = IvfIndex.train(emb, nlist = 8)
-    QuantizerStore.save(spark, dir, Some(m), None, nCorpus = -1L)
-    // stats loaders read the sentinel snapshot as ABSENT — the caller
-    // retrains and commits a real count, a knob is never sized from -1
-    assert(QuantizerStore.loadIvf(spark, dir).isEmpty)
-    // model-only restore (VectorIndexMaintainer's path) still serves
-    // the committed centroids
-    val restored = QuantizerStore.loadIvfModel(spark, dir).get
-    assert(restored.centroids.map(_._2.toSeq).toSeq == m.centroids.map(_._2.toSeq).toSeq)
-    // once a real count commits, the stats loaders see the snapshot
-    QuantizerStore.save(spark, dir, Some(m), None, nCorpus = 500L)
-    assert(QuantizerStore.loadIvf(spark, dir).get._2 == 500L)
-    graft.core.Fs.deleteRecursively(new java.io.File(dir))
-  }
-
   test("warm serve path reads model + stats without touching the corpus") {
     // unique pseudo-sf key so the cache cannot be warm from another test
     val key = Files.createTempDirectory("qcache_sf").toString

@@ -104,7 +104,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(quar.contains((headers(4).block_number, "gap")))
   }
 
-  test("St1 at scale: 2k-block append via O(log n) frontier, bit-equal to batch root") {
+  test("St1 at scale: 2k-block append, O(log n) frontier in the sink") {
     val s2 = spark
     import s2.implicits._
     val n = 2000
@@ -125,57 +125,59 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val allLeaves = (0 until n).map(i => Commitments.blockLeafHash(i.toLong, bh(i), sr(i)))
     assert(rows.last.getAs[String]("root_after_hex") ==
       Bytes.toHex(Commitments.merkleRoot(allLeaves)))
-    // persisted frontier is the logarithmic spine, not the history
-    val spine = DriverState.read(java.nio.file.Paths.get(sink, "_frontier.state")) { in =>
-      in.readLong(); in.readUTF()
-    }.get
+    // each batch's last row carries the frontier: the logarithmic
+    // spine, not the history
+    val frontiers = rows.filter(_.getAs[String]("frontier_after") != null)
+    assert(frontiers.map(_.getAs[Long]("block_number")).toSeq == Seq(499L, 999L, 1499L, 1999L))
+    val spine = frontiers.last.getAs[String]("frontier_after")
     assert(spine.count(_ == ':') <= 15, s"spine entries: ${spine.count(_ == ':')}")
-
-    // crash recovery: a fresh appender with a deleted frontier file must
-    // rebuild from the sink and keep appending bit-identically
-    java.nio.file.Files.delete(java.nio.file.Paths.get(sink, "_frontier.state"))
-    val recovered = new BlockDbAppender(spark, sink, tmp("bdb-scale-quar2"))
-    recovered.processBatch(
-      Seq((n.toLong, bh(n), sr(n))).toDF("block_number", "block_hash", "state_root"), 99L)
-    val after = spark.read.parquet(sink).orderBy("block_number").collect()
-    assert(after.length == n + 1)
-    assert(after.last.getAs[String]("root_after_hex") ==
-      Bytes.toHex(Commitments.merkleRoot(allLeaves :+ Commitments.blockLeafHash(n.toLong, bh(n), sr(n)))))
   }
 
-  test("a torn, truncated or older-format frontier file takes the rebuild path") {
+  test("a restarted appender resumes from the sink; a replay is quarantined; a bad frontier is refused") {
     val s2 = spark
     import s2.implicits._
     val n = 40
     def bh(i: Int) = graft.core.Keccak.keccak256(graft.core.Bytes.beBytes(i.toLong, 8))
     def sr(i: Int) = graft.core.Keccak.keccak256(graft.core.Bytes.beBytes(i.toLong + 1000000, 8))
     def blocks(r: Range) = r.map(i => (i.toLong, bh(i), sr(i))).toDF("block_number", "block_hash", "state_root")
-    val golden = Bytes.toHex(Commitments.merkleRoot(
-      (0 to n).map(i => Commitments.blockLeafHash(i.toLong, bh(i), sr(i)))))
-    val state = "_frontier.state"
-    // a sink holding blocks 0..n-1, then the frontier file(s) the case leaves
-    val cases: Seq[(String, java.nio.file.Path => Unit)] = Seq(
-      "empty" -> { d => Files.write(d.resolve(state), Array.emptyByteArray) },
-      "truncated" -> { d =>
-        val b = Files.readAllBytes(d.resolve(state))
-        Files.write(d.resolve(state), b.take(b.length / 2))
-      },
-      // the older text format under its old name: torn, and (a stale
-      // spine that agrees with the sink's high-water mark) readable
-      "older, empty" -> { d => Files.delete(d.resolve(state)); Files.writeString(d.resolve("_frontier.txt"), "") },
-      "older, stale" -> { d =>
-        Files.delete(d.resolve(state))
-        Files.writeString(d.resolve("_frontier.txt"), s"${n - 1}\n$n;0:${"00" * 32}")
-      })
-    cases.foreach { case (name, corrupt) =>
-      val sink = tmp("bdb-torn-sink")
-      new BlockDbAppender(spark, sink, tmp("bdb-torn-quar")).processBatch(blocks(0 until n), 0L)
-      corrupt(java.nio.file.Paths.get(sink))
-      val restarted = new BlockDbAppender(spark, sink, tmp("bdb-torn-quar2"))
-      restarted.processBatch(blocks(n to n), 1L)
-      val rows = spark.read.parquet(sink).orderBy("block_number").collect()
-      assert(rows.length == n + 1, s"$name: the next block must be accepted")
-      assert(rows.last.getAs[String]("root_after_hex") == golden, s"$name: root after restart")
+    def contents(sink: String) = spark.read.parquet(sink).collect().map(_.toString).sorted.toSeq
+    def noStateFile(sink: String) =
+      assert(!new java.io.File(sink).list().exists(_.startsWith("_frontier")), "no state file beside the sink")
+
+    // one appender lifetime …
+    val straight = tmp("bdb-straight-sink")
+    val one = new BlockDbAppender(spark, straight, tmp("bdb-straight-quar"))
+    one.processBatch(blocks(0 until 20), 0L)
+    one.processBatch(blocks(20 until n), 1L)
+    // … and a restart between the batches, where the stream redelivers
+    // batch 0 (a crash after its append, before its checkpoint)
+    val sink = tmp("bdb-resume-sink")
+    val quar = tmp("bdb-resume-quar")
+    new BlockDbAppender(spark, sink, quar).processBatch(blocks(0 until 20), 0L)
+    noStateFile(sink)
+    val restarted = new BlockDbAppender(spark, sink, quar)
+    restarted.processBatch(blocks(0 until 20), 0L)
+    restarted.processBatch(blocks(20 until n), 1L)
+    assert(contents(sink) == contents(straight), "the restarted chain must equal the uninterrupted one")
+    val replayed = spark.read.parquet(quar).select("block_number", "reason").as[(Long, String)].collect()
+    assert(replayed.sorted.toSeq == (0L until 20L).map(_ -> "duplicate_or_reorder"))
+    noStateFile(sink)
+
+    // a newest row whose frontier does not hash to its root, and a
+    // sink written without the column, are refused — nothing appended
+    val wrong = graft.core.MerkleFrontier((0 until n - 1).map(i => Commitments.blockLeafHash(i.toLong, bh(i), sr(i))))
+    val forged = tmp("bdb-forged-sink")
+    spark.read.parquet(sink)
+      .withColumn("frontier_after",
+        when(col("block_number") === n - 1, lit(wrong.serialize)).otherwise(col("frontier_after")))
+      .write.mode("overwrite").parquet(forged)
+    val legacy = tmp("bdb-legacy-sink")
+    spark.read.parquet(sink).drop("frontier_after").write.mode("overwrite").parquet(legacy)
+    Seq(forged, legacy).foreach { bad =>
+      val e = intercept[BlockDbAppender.UnresumableSink](
+        new BlockDbAppender(spark, bad, tmp("bdb-bad-quar")).processBatch(blocks(n to n), 2L))
+      assert(e.getMessage.contains(bad))
+      assert(spark.read.parquet(bad).count() == n)
     }
   }
 

@@ -122,5 +122,29 @@ class VectorIndexMaintainerSpec extends AnyFunSuite with BeforeAndAfterAll {
     m.processBatch(shifted, 1L)
     assert(m.refreshIfDrifted(factor = 2.0), "10x-scaled ingest must trip the drift threshold")
     assert(!m.refreshIfDrifted(factor = 2.0), "baseline re-records after a rebuild")
+    assert(Seq("_quantizer", "BASELINE").forall(f => !Files.exists(java.nio.file.Paths.get(dir, f))),
+      "the quantizer and its baseline live in the table's versions")
+  }
+
+  test("a handle built before another handle's refresh ingests under the refreshed quantizer") {
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
+      .select("vec_id", "embedding", "label")
+    val boot = IvfIndex.train(emb.limit(100), nlist = 8)
+    val dir = Files.createTempDirectory("vec-idx-handles").toString
+    val refresher = new VectorIndexMaintainer(spark, dir, boot)
+    val ingester = new VectorIndexMaintainer(spark, dir, boot)
+    refresher.processBatch(emb.filter(col("vec_id") < 300), 0L)
+    refresher.refreshQuantizer()
+    ingester.processBatch(emb.filter(col("vec_id") >= 300), 1L)
+
+    def centroids(m: IvfIndex.Model) = m.centroids.map { case (i, c) => (i, c.toSeq) }.toSeq
+    val served = refresher.model
+    assert(centroids(served) != centroids(boot), "the refresh must change the quantizer")
+    assert(centroids(ingester.model) == centroids(served))
+    val rows = new graft.sources.VersionedTable(spark, dir).read().get
+      .select("vec_id", "embedding", "list_id").collect()
+    assert(rows.length == emb.count())
+    val misplaced = rows.filter(r => served.nearest(r.getSeq[Float](1).toArray, 1).head != r.getInt(2))
+    assert(misplaced.isEmpty, s"${misplaced.length} rows sit in a list the served quantizer does not assign them to")
   }
 }
