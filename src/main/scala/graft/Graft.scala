@@ -3,6 +3,7 @@ package graft
 import java.math.BigInteger
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation
 
 import graft.pipeline.ZkPipeline
 
@@ -38,6 +39,14 @@ object Graft {
       .config("spark.sql.ansi.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      // ConvertToLocalRelation evaluates a projection over driver rows
+      // (a createDataFrame batch, a MemoryStream micro-batch) serially
+      // inside the optimizer, once per planned query, and only
+      // Unevaluable expressions opt out. The engine's per-row kernels
+      // cost 10-100 µs, so folding them is never cheaper than a
+      // distributed pass: a streaming append re-ran
+      // `mapping_leaf_commit` over every entry on the driver per query.
+      .config("spark.sql.optimizer.excludedRules", ConvertToLocalRelation.ruleName)
       .getOrCreate()
     graft.functions.GraftFunctions.register(s)
     s

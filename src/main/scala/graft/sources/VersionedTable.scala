@@ -66,7 +66,7 @@ class VersionedTable(spark: SparkSession, baseDir: String, nBuckets: Int = 16) {
   private def manifestPath(v: Int): Path = manifestDir.resolve(f"v$v%06d.manifest")
 
   /** every committed version, oldest first. */
-  private def versions(): Seq[Int] =
+  def versions(): Seq[Int] =
     if (!Files.exists(manifestDir)) Nil
     else {
       val ls = Files.list(manifestDir)
@@ -86,6 +86,10 @@ class VersionedTable(spark: SparkSession, baseDir: String, nBuckets: Int = 16) {
 
   private[sources] def readManifest(v: Int): Manifest =
     Manifest.parse(Files.readAllLines(manifestPath(v)).asScala.toSeq)
+
+  /** version `v`'s schema, field metadata included, from its manifest
+    * alone. */
+  def schemaAt(v: Int): StructType = readManifest(v).schema
 
   /** ONE multi-path scan of `m`'s directories for the buckets `keep`
     * accepts, with the version's explicit schema: the parquet reader
@@ -270,9 +274,10 @@ class VersionedTable(spark: SparkSession, baseDir: String, nBuckets: Int = 16) {
     // being updated. Read ONLY the dirty buckets' directories from the
     // base manifest — file-level pruning, so a merge scans O(dirty
     // buckets) as documented, never O(table) (a read(base) + filter
-    // would union every bucket's files before filtering).
+    // would union every bucket's files before filtering). Duplicate
+    // build keys cannot change a left-anti join, so no distinct.
     val survivors = baseManifest.flatMap(scan(_, dirty))
-      .map(_.join(updates.select(keys.map(col): _*).distinct(), keys, "left_anti"))
+      .map(_.join(updates.select(keys.map(col): _*), keys, "left_anti"))
     val inserts = deleteCol match {
       case Some(dc) => updates.filter(!col(dc)).drop(dc)
       case None => updates
@@ -342,9 +347,12 @@ class VersionedTable(spark: SparkSession, baseDir: String, nBuckets: Int = 16) {
     val dataRel = f"data/v$next%06d-" + java.util.UUID.randomUUID().toString.take(8)
 
     // shuffle rows to their bucket before the partitioned write — one
-    // file per bucket instead of (tasks × buckets) small files
+    // file per written bucket instead of (tasks × buckets) small files.
+    // Hash partitioning never splits a bucket and AQE's coalescing only
+    // merges partitions, so the write runs as many tasks as its rows
+    // need: a one-key merge is one task, not nBuckets
     val shuffled = rows.withColumn("__bucket", bucketCol(keys))
-      .repartition(nBuckets, col("__bucket"))
+      .repartition(col("__bucket"))
     val laidOut =
       if (layoutSort.nonEmpty) shuffled.sortWithinPartitions(col("__bucket") +: layoutSort: _*)
       else shuffled

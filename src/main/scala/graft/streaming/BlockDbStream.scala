@@ -33,9 +33,11 @@ import graft.core.{Bytes, Commitments, MerkleFrontier}
   * beside it. A restarted appender reads the frontier back from the
   * sink's newest row (one job per appender lifetime) and refuses the
   * sink ([[BlockDbAppender.UnresumableSink]]) unless that frontier's
-  * root is the row's `root_after_hex`. `foreachBatch` + checkpoint
-  * gives exactly-once appends; replayed batches are no-ops because
-  * duplicates fail the St2 check.
+  * root is the row's `root_after_hex`. A batch's accepted rows, and
+  * its quarantined ones, are built on the driver and each written as
+  * one file in one task (`coalesce(1)`, no shuffle). `foreachBatch` +
+  * checkpoint gives exactly-once appends; replayed batches are no-ops
+  * because duplicates fail the St2 check.
   */
 class BlockDbAppender(spark: SparkSession, sinkDir: String, quarantineDir: String) {
 
@@ -101,14 +103,14 @@ class BlockDbAppender(spark: SparkSession, sinkDir: String, quarantineDir: Strin
         (bn, Bytes.toHex(bh), Bytes.toHex(sr), Bytes.toHex(leaf), Bytes.toHex(root), frontier)
       }.toDF("block_number", "block_hash_hex", "state_root_hex", "leaf_hash_hex", "root_after_hex",
         "frontier_after")
-        .repartition(1)
+        .coalesce(1)
         .write.mode(SaveMode.Append).parquet(sinkDir)
 
     val rej = rejected.result()
     if (rej.nonEmpty)
       rej.toDF("block_number", "reason")
         .withColumn("batch_id", lit(batchId))
-        .repartition(1)
+        .coalesce(1)
         .write.mode(SaveMode.Append).parquet(quarantineDir)
 
     cached = Some(st)

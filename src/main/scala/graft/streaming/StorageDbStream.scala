@@ -42,8 +42,11 @@ class StorageDbMaintainer(spark: SparkSession, baseDir: String) {
   def diff(fromVersion: Int, toVersion: Int): DataFrame =
     table.diff(keys, fromVersion, toVersion)
 
+  /** `head(1)`, not `isEmpty`: on a batch of driver rows it takes the
+    * first row without a Spark job, where `isEmpty`'s column-less
+    * projection plans one. */
   def processBatch(delta: DataFrame, batchId: Long): Unit =
-    if (!delta.isEmpty) table.retrying(base => table.merge(ZkPipeline.storageDb(delta), keys, base))
+    if (delta.head(1).nonEmpty) table.retrying(base => table.merge(ZkPipeline.storageDb(delta), keys, base))
 
   def vacuum(keepVersions: Int): Unit = table.vacuum(keepVersions)
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.MetadataBuilder
 
+import graft.core.Fs
 import graft.operators.IvfIndex
 import graft.sources.VersionedTable
 
@@ -95,7 +96,7 @@ class VectorIndexMaintainer(spark: SparkSession, baseDir: String, initialModel: 
   /** Assign `batch` under the base version's quantizer and merge it.
     * The first commit records `initialModel`. */
   def processBatch(batch: DataFrame, batchId: Long): Unit =
-    if (!batch.isEmpty) table.retrying { base =>
+    if (batch.head(1).nonEmpty) table.retrying { base =>
       base.flatMap(v => snapshot(Some(v))) match {
         case Some((_, m, _)) => table.merge(IvfIndex.assign(batch, m), Seq("vec_id"), base)
         case None =>
@@ -132,6 +133,23 @@ class VectorIndexMaintainer(spark: SparkSession, baseDir: String, initialModel: 
         refreshQuantizer(); true
       case _ => false
     }
+
+  /** [[VersionedTable.vacuum]], then delete the centroid directories
+    * that only the dropped versions named. With `removeOrphans` (same
+    * contract: no writer in flight, whose model no version names yet)
+    * also delete every `_models/<id>` no kept version names — those of
+    * commits that lost a race or faulted at the publish. */
+  def vacuum(keepVersions: Int, removeOrphans: Boolean = false): Unit = {
+    def named(versions: Seq[Int]): Set[String] = versions.flatMap { v =>
+      Some(table.schemaAt(v)("list_id").metadata).filter(_.contains(ModelKey)).map(_.getString(ModelKey))
+    }.toSet
+    val before = named(table.versions())
+    table.vacuum(keepVersions, removeOrphans)
+    val candidates =
+      if (!removeOrphans) before
+      else Option(new java.io.File(baseDir, "_models").list()).toSet.flatten.map(id => s"_models/$id")
+    (candidates -- named(table.versions())).foreach(dir => Fs.deleteRecursively(new java.io.File(baseDir, dir)))
+  }
 
   /** `trigger` defaults to draining the available backlog and
     * stopping (spec/bench shape); pass a processing-time trigger for

@@ -507,6 +507,31 @@ class VersionedTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(zoned.bucketsFor("v", BigDecimal(0), BigDecimal(64)) == (0 until 8))
   }
 
+  test("a one-key merge into 16 buckets runs a write sized to its rows, one file per written bucket") {
+    val s2 = spark
+    import s2.implicits._
+    val dir = Files.createTempDirectory("vt-fanout").toString
+    val t = new VersionedTable(spark, dir, nBuckets = 16)
+    // parquet files per bucket directory the version's write created
+    def filesPerBucket(v: Int): Map[Int, Int] = t.readManifest(v).files.collect {
+      case (b, rel) if rel.startsWith(f"data/v$v%06d-") =>
+        b -> new java.io.File(s"$dir/$rel").list().count(_.endsWith(".parquet"))
+    }
+    t.commit(df((0L until 64L).map(i => (i, s"n$i", i))), Seq("k"), None)
+    // more populated buckets than the session has partitions: a write
+    // task holds several buckets and still writes one file per bucket
+    val base = filesPerBucket(0)
+    assert(base.size > 4 && base.values.forall(_ == 1), s"files per bucket $base")
+
+    val (_, counts) = JobCounter.measure(spark.sparkContext)(
+      t.merge(Seq((3L, "UPD", 999L)).toDF("k", "name", "v"), Seq("k"), Some(0)))
+    assert(filesPerBucket(1).values.toSeq == Seq(1), s"files per bucket ${filesPerBucket(1)}")
+    // no stage of the merge runs one task per bucket
+    assert(counts.stages.nonEmpty && counts.stages.forall(_.tasks < 16), s"stages ${counts.stages}")
+    assert(t.read().get.filter(col("k") === 3L).select("name").as[String].collect().toSeq == Seq("UPD"))
+    assert(t.read().get.count() == 64)
+  }
+
   test("a fresh handle plans read, readPruned, diff and cdc of another handle's versions without a Spark job") {
     val s2 = spark
     import s2.implicits._

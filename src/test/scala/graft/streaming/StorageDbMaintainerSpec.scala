@@ -1,12 +1,14 @@
 package graft.streaming
 
-import org.apache.spark.FilesRead
+import org.apache.spark.{FilesRead, JobCounter}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.Graft
 import graft.core.{Bytes, Fs}
+import graft.expressions.MappingLeafCommitExpr
 import graft.pipeline.{Fixtures, ZkPipeline}
 import graft.sources.VersionedTable
 
@@ -15,13 +17,9 @@ class StorageDbMaintainerSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var spark: SparkSession = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("storage-db-maintainer-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the program's session: the maintainer runs under the optimizer
+    // configuration it ships with
+    spark = Graft.session("local[4]", 4)
     spark.sparkContext.setLogLevel("WARN")
   }
 
@@ -69,6 +67,24 @@ class StorageDbMaintainerSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
       assert(dirty.size == 1 && populated > 1, s"fixture: dirty $dirty of $populated buckets")
       assert(readBuckets == dirty, s"read buckets $readBuckets, dirty $dirty")
+    } finally Fs.deleteRecursively(new java.io.File(dir))
+  }
+
+  test("a batch of driver rows keeps its commitment kernel in the plan, not in the optimizer") {
+    val entries = spark.createDataFrame(Fixtures.entriesSeq(Fixtures.Cfg(nBlocks = 2)))
+    val plan = ZkPipeline.storageDb(entries).queryExecution.optimizedPlan
+    assert(plan.exists(_.expressions.exists(_.exists(_.isInstanceOf[MappingLeafCommitExpr]))),
+      s"the optimizer evaluated mapping_leaf_commit on the driver:\n$plan")
+  }
+
+  test("an empty batch of driver rows submits no job and commits nothing") {
+    val dir = java.nio.file.Files.createTempDirectory("sdb_empty").toString
+    try {
+      val maintainer = new StorageDbMaintainer(spark, dir)
+      val empty = spark.createDataFrame(Seq.empty[Fixtures.Entry])
+      val (_, jobs) = JobCounter.count(spark.sparkContext)(maintainer.processBatch(empty, 0L))
+      assert(jobs == 0, s"$jobs jobs for an empty batch")
+      assert(maintainer.currentVersion().isEmpty)
     } finally Fs.deleteRecursively(new java.io.File(dir))
   }
 }

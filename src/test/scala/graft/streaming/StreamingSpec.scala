@@ -10,6 +10,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.Graft
 import graft.core.{Bytes, Commitments}
 import graft.pipeline.Fixtures
 
@@ -20,13 +21,9 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var spark: SparkSession = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("streaming-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the program's session: the appender and the maintainer run under
+    // the optimizer configuration they ship with
+    spark = Graft.session("local[4]", 4)
     spark.sparkContext.setLogLevel("WARN")
   }
 
@@ -179,6 +176,26 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(e.getMessage.contains(bad))
       assert(spark.read.parquet(bad).count() == n)
     }
+  }
+
+  test("a local batch's block-DB rows and quarantine are each written in one stage with one task") {
+    val s2 = spark
+    import s2.implicits._
+    val cfg = Fixtures.Cfg(nBlocks = 4)
+    val states = Fixtures.goldenStateDb(cfg)
+    // blocks 0, 1, 3: block 3 leaves a gap and is quarantined
+    val batch = Fixtures.headersSeq(cfg).filter(_.block_number != cfg.firstBlock + 2)
+      .map(h => (h.block_number, h.block_hash, states(h.block_number)))
+      .toDF("block_number", "block_hash", "state_root")
+    val (sink, quarantine) = (tmp("bdb-sink"), tmp("bdb-quar"))
+    val appender = new BlockDbAppender(spark, sink, quarantine)
+    val (_, counts) = JobCounter.measure(spark.sparkContext)(appender.processBatch(batch, 0L))
+    // one stage collects the batch, then one stage per written file
+    assert(counts.stages.size == 3 && !counts.stages.exists(_.shuffle) &&
+      counts.stages.drop(1).forall(_.tasks == 1), s"stages ${counts.stages}")
+    def files(dir: String) = new java.io.File(dir).list().count(_.endsWith(".parquet"))
+    assert(files(sink) == 1 && files(quarantine) == 1)
+    assert(spark.read.parquet(sink).count() == 2 && spark.read.parquet(quarantine).count() == 1)
   }
 
   test("streaming storage-DB maintenance: incremental snapshots equal full rebuild") {

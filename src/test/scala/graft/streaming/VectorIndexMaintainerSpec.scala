@@ -8,7 +8,9 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.core.Fs
 import graft.operators.IvfIndex
+import graft.sources.VersionedTable
 
 /** Streaming ANN index maintenance: the index must stay probeable
   * mid-stream (seeing exactly what has been ingested) and, once the
@@ -146,5 +148,43 @@ class VectorIndexMaintainerSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows.length == emb.count())
     val misplaced = rows.filter(r => served.nearest(r.getSeq[Float](1).toArray, 1).head != r.getInt(2))
     assert(misplaced.isEmpty, s"${misplaced.length} rows sit in a list the served quantizer does not assign them to")
+  }
+
+  test("vacuum reclaims the models of dropped versions and, with removeOrphans, of faulted commits") {
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
+      .select("vec_id", "embedding", "label")
+    val boot = IvfIndex.train(emb.limit(100), nlist = 8)
+    val dir = Files.createTempDirectory("vec-idx-vacuum").toString
+    val m = new VectorIndexMaintainer(spark, dir, boot)
+    val batch = emb.filter(col("vec_id") =!= 0)
+    def models(): Set[String] = Option(new java.io.File(dir, "_models").list()).toSet.flatten
+    def served(): String = {
+      val t = new VersionedTable(spark, dir)
+      t.schemaAt(t.currentVersion().get)("list_id").metadata.getString("ivf_model").stripPrefix("_models/")
+    }
+
+    // the first batch faults at its manifest publish: its model
+    // directory is left behind, named by no version
+    Fs.beforeStep = s => if (s == "move") throw new IllegalStateException("injected")
+    try intercept[IllegalStateException](m.processBatch(batch, 0L))
+    finally Fs.beforeStep = _ => ()
+    val orphan = models()
+    assert(orphan.size == 1 && m.currentVersion().isEmpty)
+
+    m.processBatch(batch, 0L)
+    val first = models() -- orphan
+    m.refreshQuantizer()
+    m.refreshQuantizer()
+    assert(models().size == 4 && m.currentVersion().contains(2))
+    val q = emb.filter(col("vec_id") === 0).select("embedding").head().getSeq[Float](0).toArray
+    def fullProbe(): Seq[Long] = m.probe(q, nprobe = 8, k = 10).select("vec_id").collect().map(_.getLong(0)).toSeq
+    val before = fullProbe()
+
+    // dropping v0 reclaims the bootstrap model; the orphan needs removeOrphans
+    m.vacuum(2)
+    assert(first.size == 1 && models().intersect(first).isEmpty && models().size == 3 && orphan.subsetOf(models()))
+    m.vacuum(1, removeOrphans = true)
+    assert(models() == Set(served()))
+    assert(fullProbe() == before)
   }
 }
