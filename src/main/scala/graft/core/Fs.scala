@@ -9,17 +9,21 @@ import scala.jdk.CollectionConverters._
 /** Filesystem helpers shared by every on-disk store, and the ONE
   * publish primitive every commit point is built on ([[publishFile]]);
   * a guard spec keeps raw renames out of the rest of the tree.
-  * Multi-directory stores publish through a generation pointer
+  * Multi-directory stores that take writes — the IVF store (also
+  * behind the streaming vector-index maintainer), the graph-ANN store
+  * and the near-dup gate — publish through a generation pointer
   * ([[publishGeneration]]): `root/CURRENT` names the live generation
   * `root/g<N>/` plus one caller payload line, so a whole store switches
   * with a single rename and a crash at any step leaves the old
-  * generation live — no recovery step ever runs on read. A published
-  * generation is never written again — the one exception is the
-  * near-dup gate's presence-keyed micro-batch appends — so a writer
-  * publishes a new generation and carries unchanged data over from the
-  * live one with [[linkTree]] (hard links: no data copy). Build-once stores
-  * ([[buildOnce]]) are built whole in a temp directory and renamed into
-  * place, so their directory existing means the build finished.
+  * generation live — no recovery step ever runs on read. One writing
+  * handle per root. A published generation is never written again —
+  * the one exception is the near-dup gate's presence-keyed micro-batch
+  * appends — so a writer publishes a new generation and carries
+  * unchanged data over from the live one with [[linkTree]] (hard links:
+  * no data copy). Build-once stores ([[buildOnce]]: the committed query
+  * stores, the fixture dumps, the quantizer cache's entries) are built
+  * whole in a temp directory and renamed into place, so their directory
+  * existing means the build finished.
   */
 object Fs {
 

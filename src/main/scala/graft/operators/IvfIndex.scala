@@ -95,30 +95,37 @@ object IvfIndex {
 
   /** mean L2² of assigned vectors to their posting-list centroid —
     * the residual-distortion measure quantizer drift is judged by
-    * (rises as ingested data walks away from the trained centroids). */
-  def distortion(assigned: DataFrame, model: Model): Double = {
+    * (rises as ingested data walks away from the trained centroids).
+    * 0.0 over no rows: no distortion, and no drift baseline. */
+  def distortion(assigned: DataFrame, model: Model): Double = countAndDistortion(assigned, model)._2
+
+  /** row count and [[distortion]] in one pass. */
+  private def countAndDistortion(assigned: DataFrame, model: Model): (Long, Double) = {
     val bc = assigned.sparkSession.sparkContext.broadcast(model)
     val dUdf = udf((emb: Seq[Float], l: Int) =>
       l2(emb.toArray, bc.value.centroids.find(_._1 == l).get._2))
-    assigned.select(avg(dUdf(col("embedding"), col("list_id")))).head().getDouble(0)
+    val r = assigned.select(count(lit(1)), avg(dUdf(col("embedding"), col("list_id")))).head()
+    (r.getLong(0), if (r.isNullAt(1)) 0.0 else r.getDouble(1))
   }
 
   // ---------------------------------------------------- at-rest store
   // A store root holds a generation pointer (graft.core.Fs.publishGeneration):
   // `CURRENT` names the live generation `g<N>/` — the posting lists plus
-  // `_model`, the quantizer they were assigned under — and carries `n`,
-  // the committed row count. Every write publishes a NEW generation and
-  // a published one is never written again, so a crash at any step
-  // leaves the old store whole and its count exact. Serve paths that
-  // size knobs by corpus size read `n` instead of re-counting the store:
-  // at 100 TB a per-query count() is a full-store job for a number that
-  // is a property of the committed index.
+  // `_model`, the quantizer they were assigned under — and carries the
+  // payload `<n> <baseline>`: the committed row count and the drift
+  // baseline, the mean distortion under `_model` of the rows
+  // [[writeStore]] wrote. Every write publishes a NEW generation and a
+  // published one is never written again, so a crash at any step leaves
+  // the old store whole and its count exact. Serve paths that size
+  // knobs by corpus size read `n` instead of re-counting the store: at
+  // 100 TB a per-query count() is a full-store job for a number that is
+  // a property of the committed index. One writing handle per root;
+  // a frame read from a generation stays valid until the next write.
 
   /** The one at-rest format of a quantizer: a directory holding one
     * parquet file of `(list_id, centroid)` rows. Written before the
     * commit point that names it ([[writeStore]]'s generation pointer,
-    * a [[graft.streaming.VectorIndexMaintainer]] version) and never
-    * written again. */
+    * a [[QuantizerCache]] entry's directory) and never written again. */
   def writeModel(spark: SparkSession, model: Model, dir: String): Unit = {
     import spark.implicits._
     model.centroids.toSeq.map { case (i, c) => (i, c.toSeq) }
@@ -131,16 +138,24 @@ object IvfIndex {
       .map(r => (r.getInt(0), r.getSeq[Float](1).toArray)).sortBy(_._1))
 
   /** the live generation of the store at `dir`. */
-  private final case class Committed(root: Path, data: Path, n: Long) {
+  private final case class Committed(root: Path, data: Path, n: Long, baseline: Double) {
     def model(spark: SparkSession): Model = readModel(spark, data.resolve("_model").toString)
   }
+
+  private def payload(n: Long, baseline: Double): String = s"$n $baseline"
 
   private def committed(dir: String): Committed = {
     val root = Paths.get(dir)
     val gen = Fs.currentGeneration(root)
       .getOrElse(throw new IllegalStateException(s"no IVF store at $dir"))
-    Committed(root, gen.dir(root), gen.payload.toLong)
+    gen.payload.split(" ") match {
+      case Array(n, b) => Committed(root, gen.dir(root), n.toLong, b.toDouble)
+      case _ => throw new IllegalStateException(s"unreadable IVF store payload at $dir: ${gen.payload}")
+    }
   }
+
+  /** whether `dir` holds a published store. */
+  def storeExists(dir: String): Boolean = Fs.currentGeneration(Paths.get(dir)).isDefined
 
   /** Write the assigned corpus as the at-rest serving layout: parquet
     * partitioned BY THE POSTING LIST, so a probe's `list_id IN (…)`
@@ -151,46 +166,62 @@ object IvfIndex {
     * probes are served by the EXACT model the store was assigned
     * under — k-means re-trained in a different session may place
     * centroids differently, and a model/store mismatch silently breaks
-    * the pruning contract. */
+    * the pruning contract. The count and the drift baseline come from
+    * one pass over exactly the files just written. */
   def writeStore(assigned: DataFrame, model: Model, dir: String): Unit = {
     val spark = assigned.sparkSession
     Fs.publishGeneration(Paths.get(dir)) { g =>
       assigned.write.mode("append").partitionBy("list_id").parquet(g.toString)
       writeModel(spark, model, g.resolve("_model").toString)
-      // the footer recount reads exactly the files just written
-      spark.read.parquet(g.toString).count().toString
+      val (n, baseline) = countAndDistortion(spark.read.schema(assigned.schema).parquet(g.toString), model)
+      payload(n, baseline)
     }
   }
 
-  /** Publish the successor of `c`: `rows` (assigned vectors) are
-    * written partitioned by posting list, and every file of `c` outside
-    * the `rewritten` lists — `_model` included — joins the new
-    * generation by hard link. Data writes are O(rows + rewritten
-    * lists); the rest costs one link per file. */
-  private def publishNext(c: Committed, rows: DataFrame, rewritten: Set[Int], n: Long): Unit =
+  /** The one incremental rewrite: publish the successor of `c` in which
+    * the `dirty` lists hold their rows minus the `dropped` ids, `added`
+    * (assigned rows) is written beside them, and every other file of
+    * `c` — `_model` included — joins by hard link. Data writes are
+    * O(added + dirty lists); the rest costs one link per file. The
+    * drift baseline carries forward with the quantizer. */
+  private def publishNext(c: Committed, added: DataFrame, dirty: Set[Int], dropped: DataFrame,
+                          n: Long): Unit = {
+    val kept = added.sparkSession.read.parquet(c.data.toString)
+      .filter(col("list_id").isin(dirty.toSeq: _*))
+      .join(broadcast(dropped.select("vec_id")), Seq("vec_id"), "left_anti")
     Fs.publishGeneration(c.root) { g =>
-      rows.write.mode("append").partitionBy("list_id").parquet(g.toString)
+      kept.unionByName(added).write.mode("append").partitionBy("list_id").parquet(g.toString)
       Fs.linkTree(c.data, g) { rel =>
         val top = rel.getName(0).toString
         rel.getNameCount > 1 &&
-          !(top.startsWith("list_id=") && rewritten.contains(top.stripPrefix("list_id=").toInt))
+          !(top.startsWith("list_id=") && dirty.contains(top.stripPrefix("list_id=").toInt))
       }
-      n.toString
+      payload(n, c.baseline)
     }
+  }
 
-  /** Incremental maintenance: assign a delta under the store's own
-    * committed model and publish it with every resident file linked
-    * over — no rebuild, no rewrite of resident data. Assignment is a
-    * pure function of the model, so probe(append-store) ≡ probe(full
-    * rebuild) exactly (IvfIndexSpec pins it); model drift is watched
-    * separately via [[distortion]] and a retrain swaps the store
-    * wholesale through [[writeStore]]. The count advances by the delta
-    * — a micro-append never pays a footer listing of the whole store. */
-  def appendStore(delta: DataFrame, dir: String): Unit = {
+  /** Keyed incremental write: `rows` are assigned under the store's own
+    * committed model and written keyed by `vec_id` — each incoming id
+    * replaces its resident row wherever that sat, and a new id is
+    * simply added. The lists holding an incoming id are found from the
+    * live generation's `vec_id` and `list_id` columns alone; only they
+    * are rewritten, so a batch of new ids rewrites nothing and links
+    * every resident file, and a replayed batch leaves one row per id.
+    * Assignment is a pure function of the model, so probe(store) ≡
+    * probe(full rebuild) exactly (IvfIndexSpec pins it); model drift is
+    * watched separately via [[distortion]] and a retrain swaps the
+    * store wholesale through [[writeStore]]. `rows` holds each id at
+    * most once. */
+  def upsertStore(rows: DataFrame, dir: String): Unit = {
+    val spark = rows.sparkSession
     val c = committed(dir)
-    val added = assign(delta, c.model(delta.sparkSession)).persist()
-    try publishNext(c, added, Set.empty, c.n + added.count())
-    finally added.unpersist()
+    val added = assign(rows, c.model(spark)).persist()
+    try {
+      val resident = spark.read.parquet(c.data.toString).select("vec_id", "list_id")
+        .join(broadcast(added.select("vec_id")), Seq("vec_id"), "left_semi")
+        .groupBy("list_id").count().collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+      publishNext(c, added, resident.keySet, added, c.n + added.count() - resident.values.sum)
+    } finally added.unpersist()
   }
 
   /** Full CDC follow — the retract/add contract over a
@@ -211,26 +242,25 @@ object IvfIndex {
     * version — this consumes that contract rather than re-checking it
     * with a store scan. */
   def applyCdc(cdc: DataFrame, dir: String): Unit = {
-    val spark = cdc.sparkSession
     val c = committed(dir)
-    val model = c.model(spark)
+    val model = c.model(cdc.sparkSession)
     val changes = cdc.persist()
     try {
       def ofType(types: String*) = changes.filter(col("change_type").isin(types: _*)).drop("change_type")
       val retracted = assign(ofType("delete", "update_preimage"), model).select("vec_id", "list_id")
       val added = ofType("insert", "update_postimage")
       val dirty = retracted.select("list_id").distinct().collect().map(_.getInt(0)).toSet
-      val kept = spark.read.parquet(c.data.toString)
-        .filter(col("list_id").isin(dirty.toSeq: _*))
-        .join(broadcast(retracted.select("vec_id")), Seq("vec_id"), "left_anti")
-      publishNext(c, kept.unionByName(assign(added, model)), dirty,
-        c.n + added.count() - retracted.count())
+      publishNext(c, assign(added, model), dirty, retracted, c.n + added.count() - retracted.count())
     } finally changes.unpersist()
   }
 
   /** committed row count from the generation pointer (one tiny file —
     * no scan of the store itself). */
   def storedCount(spark: SparkSession, dir: String): Long = committed(dir).n
+
+  /** the drift baseline the live generation carries: the mean
+    * distortion of the rows its quantizer was last written with. */
+  def storedBaseline(dir: String): Double = committed(dir).baseline
 
   /** the live generation's rows (list_id is the partition column). A
     * frame read here is valid until the next write to the store

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Product quantization (PQ) — the vector-compression scale path for
@@ -106,6 +106,25 @@ object PqIndex {
       }}), Duration.Inf).toArray
     slices.unpersist()
     Model(m, ksub, subDim, books)
+  }
+
+  /** The at-rest format of the codebooks: a directory holding one
+    * parquet file of `(subspace, idx, centroid)` rows, beside
+    * [[IvfIndex.writeModel]]'s centroids in a [[QuantizerCache]]
+    * entry. The shape (m, ksub, subDim) is read back from the rows. */
+  def writeModel(spark: SparkSession, model: Model, dir: String): Unit = {
+    import spark.implicits._
+    (for (j <- 0 until model.m; i <- 0 until model.ksub) yield (j, i, model.codebooks(j)(i).toSeq))
+      .toDF("subspace", "idx", "centroid")
+      .coalesce(1).write.parquet(dir)
+  }
+
+  def readModel(spark: SparkSession, dir: String): Model = {
+    val rows = spark.read.parquet(dir).collect()
+      .map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Float](2).toArray)).toMap
+    val m = rows.keys.map(_._1).max + 1
+    val ksub = rows.keys.map(_._2).max + 1
+    Model(m, ksub, rows.head._2.length, Array.tabulate(m, ksub)((j, i) => rows((j, i))))
   }
 
   /** attach the `code` column (array<int>, length m). */

@@ -1,27 +1,30 @@
 package graft.operators
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.core.Fs
+
 /** Load-don't-retrain serving path for the vector indexes: a trained
   * quantizer is fetched from the in-JVM memo, else loaded from its
-  * committed [[QuantizerStore]] table, else trained ONCE, committed,
-  * and memoized. Queries that share a parameterization (e.g. the
-  * IVF-16 coarse quantizer used by probing, diversity sampling and
-  * IVF-PQ routing) pay for exactly one k-means fit per process — and
-  * zero once a store commit exists on disk.
+  * committed store entry, else trained ONCE, written and memoized.
+  * Queries that share a parameterization (e.g. the IVF-16 coarse
+  * quantizer used by probing, diversity sampling and IVF-PQ routing)
+  * pay for exactly one k-means fit per process — and zero once the
+  * entry exists on disk.
   *
-  * Every entry carries the TRAIN-TIME CORPUS STATS alongside the
-  * model (the `*Stats` variants return both): serving knobs derived
-  * from corpus size read the committed `n` like they read the
-  * codebooks, so a warm serve path never runs an action over the
-  * corpus — the `emb` parameter is by-name and is not even evaluated
-  * on a store/memo hit (spec-pinned with a poisoned corpus).
-  *
-  * Training is deterministic (fixed seed, bounded sample), so a
-  * concurrent writer losing the store's commit race can keep its
-  * identical in-memory model; the conflict is swallowed.
+  * An entry is a build-once directory ([[graft.core.Fs.buildOnce]])
+  * in the one model format: the centroids as `ivf/`
+  * ([[IvfIndex.writeModel]]), the codebooks as `pq/`
+  * ([[PqIndex.writeModel]]) and `n`, the TRAIN-TIME CORPUS COUNT,
+  * beside them. Serving knobs derived from corpus size read `n` like
+  * they read the codebooks, so a warm serve path never runs an action
+  * over the corpus — the `emb` parameter is by-name and is not even
+  * evaluated on a store/memo hit (spec-pinned with a poisoned corpus).
+  * An entry is never rewritten: a different fit has a different key.
   */
 object QuantizerCache {
 
@@ -41,38 +44,43 @@ object QuantizerCache {
     }
   }
 
-  /** bumped when the at-rest QuantizerStore format changes (v2:
-    * corpus-stats meta row; v3: self-describing VersionedTable
-    * manifests) — a format change re-keys the directory instead of
-    * failing to parse a pre-change snapshot. */
-  private val FormatVersion = 3
+  /** bumped when the at-rest entry format changes (v2: corpus-stats
+    * meta row; v3: self-describing VersionedTable manifests; v4: a
+    * build-once directory of model files) — a format change re-keys
+    * the directory instead of failing to parse a pre-change entry. */
+  private val FormatVersion = 4
 
-  private def storeDir(sfDir: String, key: String): String = {
+  private[graft] def storeDir(sfDir: String, key: String): Path = {
     val tag = sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-    new java.io.File(s"target/qstore/v$FormatVersion/$tag/$key").getAbsolutePath
+    Paths.get(s"target/qstore/v$FormatVersion/$tag/$key").toAbsolutePath
   }
 
   /** test hook: drop the in-JVM memo so the next lookup exercises the
     * committed-store load path. */
-  private[operators] def invalidate(): Unit = memo.clear()
+  private[graft] def invalidate(): Unit = memo.clear()
 
-  /** a failed store commit (lost race with a concurrent writer) keeps
-    * the just-trained in-memory model — identical content, fixed seed. */
-  private def swallowConflict(f: => Unit): Unit =
-    try f catch { case _: graft.sources.VersionedTable.CommitConflict => () }
+  /** entry `key` of `sfDir`: built once — `build` trains, writes the
+    * model files into the fresh directory and returns the corpus
+    * count — then `load`ed from disk with its count. */
+  private def entry[T](sfDir: String, key: String)(build: Path => Long)
+                      (load: Path => T): (T, Long) =
+    cached(s"$sfDir#$key") {
+      val dir = storeDir(sfDir, key)
+      Fs.buildOnce(dir) { tmp =>
+        val n = build(tmp)
+        // forced to disk before the rename publishes the entry
+        Fs.publishFile(tmp.resolve("n"), n.toString.getBytes(UTF_8), replace = false)
+      }
+      (load(dir), Files.readString(dir.resolve("n"), UTF_8).toLong)
+    }
 
   def ivfStats(spark: SparkSession, sfDir: String, emb: => DataFrame,
                nlist: Int, seed: Long = 42L): (IvfIndex.Model, Long) =
-    cached(s"$sfDir#ivf-$nlist-$seed") {
-      val dir = storeDir(sfDir, s"ivf-$nlist-$seed")
-      QuantizerStore.loadIvf(spark, dir).getOrElse {
-        val frame = emb
-        val n = frame.count()
-        val m = IvfIndex.train(frame, nlist, seed)
-        swallowConflict(QuantizerStore.save(spark, dir, Some(m), None, n))
-        (m, n)
-      }
-    }
+    entry(sfDir, s"ivf-$nlist-$seed") { tmp =>
+      val frame = emb
+      IvfIndex.writeModel(spark, IvfIndex.train(frame, nlist, seed), tmp.resolve("ivf").toString)
+      frame.count()
+    }(dir => IvfIndex.readModel(spark, dir.resolve("ivf").toString))
 
   def ivf(spark: SparkSession, sfDir: String, emb: => DataFrame,
           nlist: Int, seed: Long = 42L): IvfIndex.Model =
@@ -80,16 +88,11 @@ object QuantizerCache {
 
   def pqStats(spark: SparkSession, sfDir: String, emb: => DataFrame,
               m: Int, ksub: Int, seed: Long = 42L): (PqIndex.Model, Long) =
-    cached(s"$sfDir#pq-$m-$ksub-$seed") {
-      val dir = storeDir(sfDir, s"pq-$m-$ksub-$seed")
-      QuantizerStore.loadPq(spark, dir).getOrElse {
-        val frame = emb
-        val n = frame.count()
-        val model = PqIndex.train(frame, m, ksub, seed)
-        swallowConflict(QuantizerStore.save(spark, dir, None, Some(model), n))
-        (model, n)
-      }
-    }
+    entry(sfDir, s"pq-$m-$ksub-$seed") { tmp =>
+      val frame = emb
+      PqIndex.writeModel(spark, PqIndex.train(frame, m, ksub, seed), tmp.resolve("pq").toString)
+      frame.count()
+    }(dir => PqIndex.readModel(spark, dir.resolve("pq").toString))
 
   def pq(spark: SparkSession, sfDir: String, emb: => DataFrame,
          m: Int, ksub: Int, seed: Long = 42L): PqIndex.Model =
@@ -99,19 +102,19 @@ object QuantizerCache {
     * residual PQ fit is new work when the IVF half is already known. */
   def ivfPqStats(spark: SparkSession, sfDir: String, emb: => DataFrame,
                  nlist: Int, m: Int, ksub: Int, seed: Long = 42L): (IvfPq.Model, Long) =
-    cached(s"$sfDir#ivfpq-$nlist-$m-$ksub-$seed") {
-      val dir = storeDir(sfDir, s"ivfpq-$nlist-$m-$ksub-$seed")
-      QuantizerStore.loadIvfPq(spark, dir).getOrElse {
-        val frame = emb
-        // resolve the coarse half through ivfStats and ADOPT its
-        // corpus count — the nested miss already counted the corpus
-        // once; a second count() action here doubled the cold-path
-        // scans on exactly the serve path the stats exist to shorten
-        val (coarse, n) = ivfStats(spark, sfDir, frame, nlist, seed)
-        val model = IvfPq.train(frame, coarse, m, ksub, seed)
-        swallowConflict(QuantizerStore.save(spark, dir, Some(model.ivf), Some(model.pq), n))
-        (model, n)
-      }
+    entry(sfDir, s"ivfpq-$nlist-$m-$ksub-$seed") { tmp =>
+      val frame = emb
+      // resolve the coarse half through ivfStats and ADOPT its corpus
+      // count — the nested miss already counted the corpus once; a
+      // second count() action here doubled the cold-path scans on
+      // exactly the serve path the stats exist to shorten
+      val (coarse, n) = ivfStats(spark, sfDir, frame, nlist, seed)
+      IvfIndex.writeModel(spark, coarse, tmp.resolve("ivf").toString)
+      PqIndex.writeModel(spark, IvfPq.train(frame, coarse, m, ksub, seed).pq, tmp.resolve("pq").toString)
+      n
+    } { dir =>
+      IvfPq.Model(IvfIndex.readModel(spark, dir.resolve("ivf").toString),
+        PqIndex.readModel(spark, dir.resolve("pq").toString))
     }
 
   def ivfPq(spark: SparkSession, sfDir: String, emb: => DataFrame,

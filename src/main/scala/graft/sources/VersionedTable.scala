@@ -66,7 +66,7 @@ class VersionedTable(spark: SparkSession, baseDir: String, nBuckets: Int = 16) {
   private def manifestPath(v: Int): Path = manifestDir.resolve(f"v$v%06d.manifest")
 
   /** every committed version, oldest first. */
-  def versions(): Seq[Int] =
+  private def versions(): Seq[Int] =
     if (!Files.exists(manifestDir)) Nil
     else {
       val ls = Files.list(manifestDir)
@@ -86,10 +86,6 @@ class VersionedTable(spark: SparkSession, baseDir: String, nBuckets: Int = 16) {
 
   private[sources] def readManifest(v: Int): Manifest =
     Manifest.parse(Files.readAllLines(manifestPath(v)).asScala.toSeq)
-
-  /** version `v`'s schema, field metadata included, from its manifest
-    * alone. */
-  def schemaAt(v: Int): StructType = readManifest(v).schema
 
   /** ONE multi-path scan of `m`'s directories for the buckets `keep`
     * accepts, with the version's explicit schema: the parquet reader

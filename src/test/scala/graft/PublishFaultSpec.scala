@@ -6,7 +6,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Fs
-import graft.operators.{GraphAnn, IvfIndex, PqIndex, QuantizerStore}
+import graft.operators.{GraphAnn, IvfIndex, QuantizerCache}
 import graft.sources.VersionedTable
 import graft.streaming.{StreamingNearDup, VectorIndexMaintainer}
 import graft.streaming.StreamingNearDupSpec.ND
@@ -146,19 +146,20 @@ class PublishFaultSpec extends AnyFunSuite with BeforeAndAfterAll {
       centroids(IvfIndex.loadModel(spark, d)))
   }
 
-  test("IVF writeStore / appendStore / applyCdc: a fault at any publish leaves the old or the new generation") {
+  test("IVF writeStore / upsertStore / applyCdc: a fault at any publish leaves the old or the new generation") {
     type View = (Long, Seq[Long], Long, Seq[(Int, Seq[Float])])
     val base = vectors(0L until 60L)
     val setup = (d: String) => IvfIndex.writeStore(IvfIndex.assign(base, model), model, d)
     // the next writer appends under whatever model the store serves
-    val nextAppend = (d: String) => { IvfIndex.appendStore(vectors(200L until 205L), d); ivfView(d) }
+    val nextAppend = (d: String) => { IvfIndex.upsertStore(vectors(200L until 205L), d); ivfView(d) }
     val moved = IvfIndex.modelFromCenters(Array(
       Array(5f, 5f, 5f, 5f), Array(25f, 25f, 25f, 25f), Array(45f, 45f, 45f, 45f)))
     val writes = everyFault[View, View](setup,
       op = d => IvfIndex.writeStore(IvfIndex.assign(vectors(0L until 40L), moved), moved, d),
       view = ivfView, next = nextAppend)
-    val appends = everyFault[View, View](setup,
-      op = d => IvfIndex.appendStore(vectors(100L until 110L), d),
+    // new ids and resident ones: the resident ids' lists are rewritten
+    val upserts = everyFault[View, View](setup,
+      op = d => IvfIndex.upsertStore(vectors((100L until 110L) ++ Seq(3L, 9L)), d),
       view = ivfView, next = nextAppend)
     val cdc = vectors(Seq(3L, 7L, 30L)).withColumn("change_type", lit("delete"))
       .unionByName(vectors(Seq(9L)).withColumn("change_type", lit("update_preimage")))
@@ -168,24 +169,28 @@ class PublishFaultSpec extends AnyFunSuite with BeforeAndAfterAll {
     val applies = everyFault[View, View](setup,
       op = d => IvfIndex.applyCdc(cdc, d),
       view = ivfView, next = nextAppend)
-    assert(writes == 3 && appends == 3 && applies == 3, "one pointer publish per write")
+    assert(writes == 3 && upserts == 3 && applies == 3, "one pointer publish per write")
   }
 
-  // ------------------------------------------------------ QuantizerStore
-  test("QuantizerStore.save: a fault at the manifest publish leaves the old or the new snapshot") {
-    def pq(offset: Float) =
-      PqIndex.Model(2, 2, 2, Array.tabulate(2, 2, 2)((j, i, x) => offset + j * 4 + i * 2 + x))
-    val moved = IvfIndex.modelFromCenters(Array(Array(1f, 2f, 3f, 4f), Array(30f, 30f, 30f, 30f)))
-    // a cold reader: both stats-carrying loaders on fresh handles
-    val view = (d: String) => (
-      QuantizerStore.loadIvf(spark, d).map { case (m, n) => (centroids(m), n) },
-      QuantizerStore.loadPq(spark, d).map { case (m, n) => (m.codebooks.map(_.map(_.toSeq).toSeq).toSeq, n) })
-    val n = everyFault(
-      setup = d => QuantizerStore.save(spark, d, Some(model), Some(pq(0f)), nCorpus = 60L): Unit,
-      op = d => QuantizerStore.save(spark, d, Some(moved), Some(pq(100f)), nCorpus = 80L): Unit,
-      view = view,
-      next = d => QuantizerStore.save(spark, d, Some(model), None, nCorpus = 90L))
-    assert(n == 3, "one manifest publish per save, three steps")
+  // ------------------------------------------------------ QuantizerCache
+  test("QuantizerCache: a build that throws leaves no entry directory; the next lookup trains and serves the same model") {
+    val corpus = vectors(0L until 60L)
+    val sfKey = java.nio.file.Files.createTempDirectory("publish_fault_qcache").toString
+    val entry = QuantizerCache.storeDir(sfKey, "ivf-3-42").toFile
+    def entries(): Seq[String] = Option(entry.getParentFile.list()).toSeq.flatten.sorted
+    val want = centroids(IvfIndex.train(corpus, nlist = 3))
+    for (step <- Seq("write", "force", "move")) {
+      QuantizerCache.invalidate()
+      Fs.deleteRecursively(entry.getParentFile)
+      // the model files are written; the count beside them faults
+      assert(faulted(step, 1)(QuantizerCache.ivfStats(spark, sfKey, corpus, nlist = 3)), step)
+      assert(entries().isEmpty, s"fault at $step left ${entries()}")
+      val (m, n) = QuantizerCache.ivfStats(spark, sfKey, corpus, nlist = 3)
+      assert(centroids(m) == want && n == 60L)
+      assert(entries() == Seq(entry.getName))
+    }
+    Fs.deleteRecursively(entry.getParentFile)
+    Fs.deleteRecursively(new java.io.File(sfKey))
   }
 
   // ------------------------------------------------------ StreamingNearDup
@@ -286,34 +291,40 @@ class PublishFaultSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   // ------------------------------------------------ VectorIndexMaintainer
-  /** what a fresh maintainer serves: its model and every indexed row's
-    * posting list. Each row must sit in the list that model assigns it
-    * to, and no quantizer state may live beside the table. */
+  /** what a fresh maintainer serves: its model, every indexed row's
+    * posting list and its committed count. Each row must sit in the
+    * list that model assigns it to, and the count must be the rows'. */
   private def maintainerView(d: String): (Seq[(Int, Seq[Float])], Seq[(Long, Int)]) = {
-    val served = new VectorIndexMaintainer(spark, d, model).model
-    val rows = new VersionedTable(spark, d).read().toSeq
-      .flatMap(_.select("vec_id", "embedding", "list_id").collect())
+    val m = new VectorIndexMaintainer(spark, d, model)
+    val served = m.model
+    val rows = if (!IvfIndex.storeExists(d)) Nil
+      else IvfIndex.readStore(spark, d).select("vec_id", "embedding", "list_id").collect().toSeq
     rows.foreach { r =>
       assert(served.nearest(r.getSeq[Float](1).toArray, 1).head == r.getInt(2),
         s"vec ${r.getLong(0)} sits in list ${r.getInt(2)}, not where the served quantizer puts it")
     }
-    val leftovers = Seq("_quantizer", "BASELINE").filter(f => java.nio.file.Files.exists(java.nio.file.Paths.get(d, f)))
-    assert(leftovers.isEmpty, s"quantizer state beside the table: $leftovers")
+    assert(m.indexedCount() == rows.length, s"pointer count ${m.indexedCount()} vs ${rows.length} rows")
     (centroids(served), rows.map(r => (r.getLong(0), r.getInt(2))).sorted)
   }
 
   test("vector-index processBatch / refreshQuantizer: after a fault at any publish every row sits under the served quantizer") {
     type View = (Seq[(Int, Seq[Float])], Seq[(Long, Int)])
-    def ingest(d: String, ids: Seq[Long], batchId: Long): Unit =
-      new VectorIndexMaintainer(spark, d, model).processBatch(vectors(ids), batchId)
+    def ingest(d: String, batch: DataFrame, batchId: Long): Unit =
+      new VectorIndexMaintainer(spark, d, model).processBatch(batch, batchId)
     // the next writer: a restarted maintainer ingests one more batch
-    val nextBatch = (d: String) => { ingest(d, 60L until 80L, 2L); maintainerView(d) }
+    val nextBatch = (d: String) => { ingest(d, vectors(60L until 80L), 2L); maintainerView(d) }
     val firsts = everyFault[View, View](setup = _ => (),
-      op = d => ingest(d, 0L until 40L, 0L),
+      op = d => ingest(d, vectors(0L until 40L), 0L),
       view = maintainerView, next = nextBatch)
-    val refreshes = everyFault[View, View](setup = d => ingest(d, 0L until 40L, 0L),
-      op = d => new VectorIndexMaintainer(spark, d, model).refreshQuantizer(): Unit,
+    // id 0 sits in list 1; re-pointed at the last centroid it moves to list 2
+    val moved = vectors(Seq(0L)).withColumn("embedding", array(Seq.fill(4)(lit(44f)): _*))
+      .unionByName(vectors(Seq(100L)))
+    val upserts = everyFault[View, View](setup = d => ingest(d, vectors(0L until 40L), 0L),
+      op = d => ingest(d, moved, 1L),
       view = maintainerView, next = nextBatch)
-    assert(firsts == 3 && refreshes == 3, "one manifest publish per writer call")
+    val refreshes = everyFault[View, View](setup = d => ingest(d, vectors(0L until 40L), 0L),
+      op = d => new VectorIndexMaintainer(spark, d, model).refreshQuantizer(),
+      view = maintainerView, next = nextBatch)
+    assert(firsts == 3 && upserts == 3 && refreshes == 3, "one pointer publish per writer call")
   }
 }

@@ -72,7 +72,7 @@ class IvfIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     val base = emb.filter(col("vec_id") % 5 =!= 0)
     val delta = emb.filter(col("vec_id") % 5 === 0 && col("vec_id") =!= 0)
     IvfIndex.writeStore(IvfIndex.assign(base, model), model, dir)
-    IvfIndex.appendStore(delta, dir)
+    IvfIndex.upsertStore(delta, dir)
 
     // the persisted quantizer is byte-identical to the trained one
     val loaded = IvfIndex.loadModel(spark, dir)
@@ -139,7 +139,14 @@ class IvfIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     val base = emb.filter(col("vec_id") % 5 =!= 0)
     IvfIndex.writeStore(IvfIndex.assign(base, model), model, dir)
 
-    checkLinks(dir)(IvfIndex.appendStore(emb.filter(col("vec_id") % 5 === 0), dir))(_ => true)
+    checkLinks(dir)(IvfIndex.upsertStore(emb.filter(col("vec_id") % 5 === 0), dir))(_ => true)
+    assert(IvfIndex.storedCount(spark, dir) == emb.count())
+    assert(IvfIndex.readStore(spark, dir).count() == emb.count())
+
+    // re-writing resident ids rewrites only the lists that hold them
+    val resident = emb.filter(col("vec_id").isin(2L, 4L))
+    val holding = IvfIndex.assign(resident, model).select("list_id").collect().map(r => s"list_id=${r.getInt(0)}").toSet
+    checkLinks(dir)(IvfIndex.upsertStore(resident, dir))(rel => !holding.contains(rel.getName(0).toString))
     assert(IvfIndex.storedCount(spark, dir) == emb.count())
     assert(IvfIndex.readStore(spark, dir).count() == emb.count())
 
@@ -225,6 +232,18 @@ class IvfIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(served2.contains(3L), "re-inserted id must be live again")
     assert(IvfIndex.readStore(spark, dir).filter(col("vec_id") === 3).count() == 1)
     assert(IvfIndex.storedCount(spark, dir) == n0)
+    graft.core.Fs.deleteRecursively(new java.io.File(dir))
+  }
+
+  test("distortion over an empty frame is 0.0, the no-baseline value") {
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet").select("vec_id", "embedding")
+    val model = IvfIndex.train(emb, nlist = 8)
+    val empty = IvfIndex.assign(emb.limit(0), model)
+    assert(IvfIndex.distortion(empty, model) == 0.0)
+    // a store written from no rows records that baseline and count
+    val dir = Files.createTempDirectory("ivfempty").toString
+    IvfIndex.writeStore(empty, model, dir)
+    assert(IvfIndex.storedCount(spark, dir) == 0L && IvfIndex.storedBaseline(dir) == 0.0)
     graft.core.Fs.deleteRecursively(new java.io.File(dir))
   }
 }

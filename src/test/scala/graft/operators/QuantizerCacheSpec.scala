@@ -6,39 +6,34 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The quantizer store must round-trip models bit-exactly (a loaded
-  * quantizer routes every vector to the same posting list as the
-  * trained one) and version refreshes atomically (latest snapshot
-  * wins; old versions stay readable for pinned readers).
+import graft.Graft
+
+/** The quantizer cache's model format must round-trip models
+  * bit-exactly (a loaded quantizer routes every vector to the same
+  * posting list as the trained one), and a warm lookup must be served
+  * by the committed entry alone.
   */
-class QuantizerStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
+class QuantizerCacheSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
   private val sf = "/root/testdata/sf0.01"
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("quantizer-store-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    spark = Graft.session("local[4]", 4)
     spark.sparkContext.setLogLevel("WARN")
   }
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
-  test("IVF + PQ models round-trip bit-exactly; refresh commits a new version") {
+  test("IVF centroids and PQ codebooks round-trip bit-exactly through the model format") {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-    val dir = Files.createTempDirectory("qstore").toString
+    val dir = Files.createTempDirectory("qmodel").toString
 
     val ivfPq = IvfPq.train(emb, nlist = 8, m = 8, ksub = 16)
-    val v0 = QuantizerStore.save(spark, dir, Some(ivfPq.ivf), Some(ivfPq.pq), nCorpus = 500L)
+    IvfIndex.writeModel(spark, ivfPq.ivf, s"$dir/ivf")
+    PqIndex.writeModel(spark, ivfPq.pq, s"$dir/pq")
+    val loaded = IvfPq.Model(IvfIndex.readModel(spark, s"$dir/ivf"), PqIndex.readModel(spark, s"$dir/pq"))
 
-    val (loaded, nLoaded) = QuantizerStore.loadIvfPq(spark, dir).get
-    assert(nLoaded == 500L,
-      "train-time corpus stats must round-trip with the codebooks")
     assert(loaded.ivf.centroids.map(_._1).toSeq == ivfPq.ivf.centroids.map(_._1).toSeq)
     assert(loaded.ivf.centroids.map(_._2.toSeq).toSeq == ivfPq.ivf.centroids.map(_._2.toSeq).toSeq,
       "IVF centroids must survive the store byte-for-byte")
@@ -54,15 +49,7 @@ class QuantizerStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       some.map(v => ivfPq.ivf.nearest(v, 1)).toSeq)
     assert(some.map(v => loaded.pq.encodeOne(v).toSeq).toSeq ==
       some.map(v => ivfPq.pq.encodeOne(v).toSeq).toSeq)
-
-    // refresh: a different fit commits as the next version and wins
-    val fresh = IvfIndex.train(emb, nlist = 8, seed = 7L)
-    val v1 = QuantizerStore.save(spark, dir, Some(fresh), None, nCorpus = 600L)
-    assert(v1 == v0 + 1)
-    val (latest, nLatest) = QuantizerStore.loadIvf(spark, dir).get
-    assert(latest.centroids.map(_._2.toSeq).toSeq == fresh.centroids.map(_._2.toSeq).toSeq,
-      "latest snapshot must serve the refreshed quantizer")
-    assert(nLatest == 600L, "a refresh must also refresh the corpus stats")
+    graft.core.Fs.deleteRecursively(new java.io.File(dir))
   }
 
   test("warm serve path reads model + stats without touching the corpus") {

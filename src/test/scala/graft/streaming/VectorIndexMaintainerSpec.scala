@@ -1,16 +1,17 @@
 package graft.streaming
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
+import org.apache.spark.JobCounter
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.Graft
 import graft.core.Fs
 import graft.operators.IvfIndex
-import graft.sources.VersionedTable
 
 /** Streaming ANN index maintenance: the index must stay probeable
   * mid-stream (seeing exactly what has been ingested) and, once the
@@ -23,13 +24,7 @@ class VectorIndexMaintainerSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val sf = "/root/testdata/sf0.01"
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("vector-index-maintainer-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    spark = Graft.session("local[4]", 4)
     spark.sparkContext.setLogLevel("WARN")
   }
 
@@ -124,8 +119,7 @@ class VectorIndexMaintainerSpec extends AnyFunSuite with BeforeAndAfterAll {
     m.processBatch(shifted, 1L)
     assert(m.refreshIfDrifted(factor = 2.0), "10x-scaled ingest must trip the drift threshold")
     assert(!m.refreshIfDrifted(factor = 2.0), "baseline re-records after a rebuild")
-    assert(Seq("_quantizer", "BASELINE").forall(f => !Files.exists(java.nio.file.Paths.get(dir, f))),
-      "the quantizer and its baseline live in the table's versions")
+    assert(storeRoot(dir).size == 2, s"the quantizer and its baseline live in the generation: ${storeRoot(dir)}")
   }
 
   test("a handle built before another handle's refresh ingests under the refreshed quantizer") {
@@ -143,48 +137,74 @@ class VectorIndexMaintainerSpec extends AnyFunSuite with BeforeAndAfterAll {
     val served = refresher.model
     assert(centroids(served) != centroids(boot), "the refresh must change the quantizer")
     assert(centroids(ingester.model) == centroids(served))
-    val rows = new graft.sources.VersionedTable(spark, dir).read().get
-      .select("vec_id", "embedding", "list_id").collect()
+    val rows = IvfIndex.readStore(spark, dir).select("vec_id", "embedding", "list_id").collect()
     assert(rows.length == emb.count())
     val misplaced = rows.filter(r => served.nearest(r.getSeq[Float](1).toArray, 1).head != r.getInt(2))
     assert(misplaced.isEmpty, s"${misplaced.length} rows sit in a list the served quantizer does not assign them to")
   }
 
-  test("vacuum reclaims the models of dropped versions and, with removeOrphans, of faulted commits") {
-    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-      .select("vec_id", "embedding", "label")
-    val boot = IvfIndex.train(emb.limit(100), nlist = 8)
-    val dir = Files.createTempDirectory("vec-idx-vacuum").toString
-    val m = new VectorIndexMaintainer(spark, dir, boot)
-    val batch = emb.filter(col("vec_id") =!= 0)
-    def models(): Set[String] = Option(new java.io.File(dir, "_models").list()).toSet.flatten
-    def served(): String = {
-      val t = new VersionedTable(spark, dir)
-      t.schemaAt(t.currentVersion().get)("list_id").metadata.getString("ivf_model").stripPrefix("_models/")
-    }
+  /** the names under a store root: `CURRENT` and the live `g<N>`. */
+  private def storeRoot(dir: String): Set[String] = new java.io.File(dir).list().toSet
 
-    // the first batch faults at its manifest publish: its model
-    // directory is left behind, named by no version
+  private def embeddings() = spark.read.parquet(s"$sf/embeddings.parquet").select("vec_id", "embedding", "label")
+
+  test("after a faulted first batch, two batches and two refreshes the root holds CURRENT and one generation") {
+    val emb = embeddings()
+    val dir = Files.createTempDirectory("vec-idx-root").toString
+    val m = new VectorIndexMaintainer(spark, dir, IvfIndex.train(emb.limit(100), nlist = 8))
+    // the first batch faults at its pointer publish: its generation
+    // directory is written and named by nothing
     Fs.beforeStep = s => if (s == "move") throw new IllegalStateException("injected")
-    try intercept[IllegalStateException](m.processBatch(batch, 0L))
+    try intercept[IllegalStateException](m.processBatch(emb.filter(col("vec_id") < 200), 0L))
     finally Fs.beforeStep = _ => ()
-    val orphan = models()
-    assert(orphan.size == 1 && m.currentVersion().isEmpty)
+    assert(m.indexedCount() == 0L)
 
+    m.processBatch(emb.filter(col("vec_id") < 200), 0L)
+    m.processBatch(emb.filter(col("vec_id") >= 200), 1L)
+    m.refreshQuantizer()
+    m.refreshQuantizer()
+    val gen = Fs.currentGeneration(Paths.get(dir)).get
+    assert(storeRoot(dir) == Set("CURRENT", s"g${gen.n}"), storeRoot(dir))
+    assert(m.indexedCount() == emb.count())
+    Fs.deleteRecursively(new java.io.File(dir))
+  }
+
+  test("a replayed batch and an upsert that moves an id leave one row per id; the pointer counts the rows") {
+    val emb = embeddings()
+    val model = IvfIndex.train(emb, nlist = 8)
+    val dir = Files.createTempDirectory("vec-idx-upsert").toString
+    val m = new VectorIndexMaintainer(spark, dir, model)
+    val batch = emb.filter(col("vec_id") < 300)
     m.processBatch(batch, 0L)
-    val first = models() -- orphan
-    m.refreshQuantizer()
-    m.refreshQuantizer()
-    assert(models().size == 4 && m.currentVersion().contains(2))
-    val q = emb.filter(col("vec_id") === 0).select("embedding").head().getSeq[Float](0).toArray
-    def fullProbe(): Seq[Long] = m.probe(q, nprobe = 8, k = 10).select("vec_id").collect().map(_.getLong(0)).toSeq
-    val before = fullProbe()
+    m.processBatch(batch, 0L) // a replay after a crash before the checkpoint
+    // id 7 re-pointed at a far vector: it must leave its old list
+    val v7 = emb.filter(col("vec_id") === 7).select("embedding").head().getSeq[Float](0).toArray
+    val farthest = model.centroids.maxBy { case (_, c) => c.zip(v7).map { case (a, b) => (a - b) * (a - b) }.sum }
+    val moved = emb.filter(col("vec_id") === 7)
+      .withColumn("embedding", array(farthest._2.map(x => lit(x)): _*))
+    assert(model.nearest(farthest._2, 1).head != model.nearest(v7, 1).head, "the check needs a list change")
+    m.processBatch(moved.unionByName(emb.filter(col("vec_id").between(300L, 309L))), 1L)
 
-    // dropping v0 reclaims the bootstrap model; the orphan needs removeOrphans
-    m.vacuum(2)
-    assert(first.size == 1 && models().intersect(first).isEmpty && models().size == 3 && orphan.subsetOf(models()))
-    m.vacuum(1, removeOrphans = true)
-    assert(models() == Set(served()))
-    assert(fullProbe() == before)
+    val rows = IvfIndex.readStore(spark, dir).select("vec_id", "list_id").collect()
+      .map(r => r.getLong(0) -> r.getInt(1))
+    assert(rows.map(_._1).distinct.length == rows.length, "one row per id")
+    assert(rows.length == 310 && m.indexedCount() == rows.length.toLong)
+    assert(rows.toMap.apply(7L) == model.nearest(farthest._2, 1).head, "id 7 sits in its new list only")
+    Fs.deleteRecursively(new java.io.File(dir))
+  }
+
+  test("the probe plan prunes posting lists at rest; indexedCount runs no Spark job") {
+    val emb = embeddings()
+    val model = IvfIndex.train(emb, nlist = 8)
+    val dir = Files.createTempDirectory("vec-idx-probe").toString
+    val m = new VectorIndexMaintainer(spark, dir, model)
+    m.processBatch(emb, 0L)
+    val q = emb.filter(col("vec_id") === 0).select("embedding").head().getSeq[Float](0).toArray
+    val plan = m.probe(q, nprobe = 2, k = 10).queryExecution.executedPlan.toString
+    val partitionFilters = "PartitionFilters: \\[([^\\]]*)\\]".r.findAllMatchIn(plan).map(_.group(1)).toSeq
+    assert(partitionFilters.exists(_.contains("list_id")), plan.take(2000))
+    val (n, jobs) = JobCounter.count(spark.sparkContext)(m.indexedCount())
+    assert(n == emb.count() && jobs == 0, s"indexedCount ran $jobs jobs")
+    Fs.deleteRecursively(new java.io.File(dir))
   }
 }
