@@ -12,27 +12,7 @@ object Bench {
       import org.apache.spark.sql.functions._
       spark.range(100000).groupBy((col("id") % 10).as("k")).count().count()
       spark.read.parquet(s"$sfDir/nation.parquet").count()
-    } catch { case _: Throwable => () }
-    // pre-timed index warm: commit the trained quantizer / graph /
-    // bucketed serving stores so the timed pass measures SERVING. The
-    // driver benches in a fresh env where target/ is empty — without
-    // this the ss-family numbers record k-means training + graph
-    // construction (a one-time commit cost), not the query (measured
-    // 10× inflation in BENCH_r05 vs the warm-store local run).
-    // vt_scale_* share the same discipline: their session-scoped
-    // transactional fixture (v0 commit + v1 merge) is a one-time
-    // build; warming it here makes the timed rows measure the
-    // repeatable O(delta) side (CDC, MV advance, pruned read)
-    Seq("ss5_ann_ivf", "ss6_ann_pq", "ss10_ann_ivfpq",
-        "ss11_diverse_sample", "ss12_graph_ann", "ss14_ivf_upsert",
-        "ss15_graph_upsert", "ss16_ann_matrix", "ss17_cdc_index_follow",
-        "ss20_cdc_full_follow", "ss_serve_scale",
-        "vt_scale_300k", "vt_scale_3m", "vt_merge").foreach { n =>
-      SparkEntry.queries.get(n).foreach { fn =>
-        try fn(spark, sfDir).count()
-        catch { case t: Throwable => Graft.log.warn(s"[bench] warm $n failed: $t") }
-      }
-    }
+    } catch { case t: Throwable => Graft.log.warn(s"[bench] JIT warm-up failed: $t") }
     // optional comma-separated name filter for profiling single queries
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     // Consume each query through the NOOP SINK, not count(): count()
@@ -58,68 +38,38 @@ object Bench {
       val secs = (System.nanoTime() - t0) / 1e9
       if (ok) secs else -secs
     }
-    // per-query MEDIAN of 3 in-JVM repeats for sub-3s queries: the
-    // per-round artifact carries attributable numbers instead of ±40%
-    // single-shot noise. Heavy queries (≥ 3s) get ONE extra run with
-    // the MIN recorded: a wandering in-suite GC/JIT penalty lands on a
-    // different heavy query per run (dd_scale_10m measured
-    // 14.1/14.5/19.0/46.2 s same-code same-day — BASELINE.md round 9),
-    // and a single unlucky shot would otherwise pose as that query's
-    // cost for the whole round. The max−min spread is recorded next to
-    // the value, so an outlier remains visible in the artifact.
-    // GC hygiene between iterations (the JMH discipline): a heavy
-    // query leaves 10²-10³ MB of just-unpersisted cache blocks and
-    // shuffle buffers dead on the heap, and the NEXT heavy query then
-    // pays the collection inside its own timed wall (dd_scale_10m
-    // measured 13-14s in small subsets vs a consistent 22s after 180
-    // suite queries). Collect OUTSIDE the timed regions, and only
-    // after heavy rows — ~25 collections per suite, not 600.
-    def gcAfterHeavy(secs: Double): Unit = if (secs >= 3.0) System.gc()
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-      .map { case (name, fn) =>
-        val t1 = timeOnce(name, fn)
-        gcAfterHeavy(math.abs(t1))
-        if (t1 < 0) (name, t1, None, Seq(t1))
-        // very heavy rows (≥ 60 s: the 10M crypto rung, the 100k-query
-        // serve) run ONCE — a min-of-2 would double the suite wall for
-        // rows whose cost is intrinsic compute, not cache luck
-        else if (t1 >= 60.0) (name, t1, None, Seq(t1))
-        else if (t1 >= 3.0) {
-          val t2 = timeOnce(name, fn)
-          gcAfterHeavy(math.abs(t2))
-          if (t2 < 0) (name, t2, None, Seq(t1, t2))
-          else (name, math.min(t1, t2), Some(math.abs(t1 - t2)), Seq(t1, t2))
-        } else {
-          val runs = Seq(t1, timeOnce(name, fn), timeOnce(name, fn))
-          if (runs.exists(_ < 0)) (name, runs.find(_ < 0).get, None, runs)
-          else (name, runs.sorted.apply(1), Some(runs.max - runs.min), runs)
-        }
-      }
-    val failed = results.collect { case (k, v, _, _) if v < 0 => s"\"$k\"" }
-    val qs = results.map { case (k, v, _, _) => s"\"" + k + "\":" + v }
+      .map { case (name, fn) => name -> sample(name, () => timeOnce(name, fn)) }
+    val failed = results.collect { case (k, r) if r.value < 0 => s"\"$k\"" }
+    val qs = results.map { case (k, r) => s"\"" + k + "\":" + r.value }
       .mkString("{", ",", "}")
-    val spreads = results.collect { case (k, _, Some(sp), _) => s"\"" + k + "\":" + sp }
+    val spreads = results.collect { case (k, Sampled(_, Some(sp), _, _)) => s"\"" + k + "\":" + sp }
       .mkString("{", ",", "}")
     // raw per-repeat walls next to the summarized value: min-of-2 /
     // median-of-3 is the recorded number, but methodology changes must
     // stay auditable round-over-round — the raw pair shows what the
     // summary folded (ADVICE r9: a min can mask a regression up to the
     // old noise band if only the summary survives)
-    val raw = results.map { case (k, _, _, rs) =>
-      s"\"" + k + "\":" + rs.map(math.abs).mkString("[", ",", "]") }
+    val raw = results.map { case (k, r) =>
+      s"\"" + k + "\":" + r.runs.map(math.abs).mkString("[", ",", "]") }
       .mkString("{", ",", "}")
-    val total = results.collect { case (_, v, _, _) if v >= 0 => v }.sum
+    // the discarded runs that built a store, kept out of every value
+    // above but recorded so the one-time cost stays visible
+    val builds = results.collect { case (k, r) if r.builds.nonEmpty =>
+      s"\"" + k + "\":" + r.builds.mkString("[", ",", "]") }
+      .mkString("{", ",", "}")
+    val total = results.collect { case (_, r) if r.value >= 0 => r.value }.sum
     // scale-tier accounting (BASELINE.md round-11 note): decade rungs are
     // run-once, spread-less rows that absorb every future scale-up — list
     // them as a separate subtotal so round-over-round totals stay
     // interpretable. Membership = the single-shot set (first wall >= 60 s,
     // the same rule that decides run-once above), so the tier is derived
     // from the run, not a hand-kept list.
-    val tierOnce = results.collect { case (k, v, _, rs) if v >= 0 && rs.length == 1 && v >= 60.0 => (k, v) }
+    val tierOnce = results.collect { case (k, Sampled(v, _, rs, _)) if v >= 0 && rs.length == 1 && v >= 60.0 => (k, v) }
     val tierJson = tierOnce.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
     val tierSum = tierOnce.map(_._2).sum
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$spreads,"runs":$raw,"scale_tier":$tierJson,"scale_tier_total":$tierSum,"failed":${failed.mkString("[", ",", "]")},"sf":"$sfDir"}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$spreads,"runs":$raw,"builds":$builds,"scale_tier":$tierJson,"scale_tier_total":$tierSum,"failed":${failed.mkString("[", ",", "]")},"sf":"$sfDir"}"""
     // full per-query record first (for terminal readers + the committed
     // BENCH_LOCAL artifact), then persist it as a file artifact
     println(json)
@@ -137,9 +87,72 @@ object Bench {
     // Locale.ROOT: the f interpolator honors the JVM default locale, and a
     // comma-decimal locale would break the JSON the driver parses
     def ms(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val hq = results.collect { case (k, v, _, _) if headlineSet.contains(k) && v >= 0 =>
-      s"\"" + k + "\":" + ms(v) }.mkString("{", ",", "}")
+    val hq = results.collect { case (k, r) if headlineSet.contains(k) && r.value >= 0 =>
+      s"\"" + k + "\":" + ms(r.value) }.mkString("{", ",", "}")
     println(s"""{"metric":"total","value":${ms(total)},"unit":"sec","queries":$hq,"nqueries":${results.size},"failed":${failed.mkString("[", ",", "]")},"sf":"$sfDir","full":"target/bench.json"}""")
     spark.stop()
+  }
+
+  /** one query's record: the summarized wall (negated on failure), the
+    * max−min spread of its samples, the raw samples, and the walls of
+    * the discarded runs that built a store. */
+  private[graft] final case class Sampled(value: Double, spread: Option[Double],
+                                          runs: Seq[Double], builds: Seq[Double])
+
+  /** The sampling rule for one query; `timeOnce` runs it once and
+    * returns its wall in seconds, negated on failure.
+    *
+    * One-time work is observed, not declared: every store or fixture a
+    * query commits is built through [[graft.core.Fs.buildOnce]], so a
+    * run during which [[graft.core.Fs.buildCount]] moved paid a build
+    * (the driver benches over an empty `target/`). That run is
+    * discarded and the query runs again; the first run that built
+    * nothing is the first sample. A query that builds on two runs in a
+    * row has no serving cost to time and is recorded as failed.
+    *
+    * Per-query MEDIAN of 3 in-JVM repeats for sub-3s queries: the
+    * per-round artifact carries attributable numbers instead of ±40%
+    * single-shot noise. Heavy queries (≥ 3s) get ONE extra run with
+    * the MIN recorded: a wandering in-suite GC/JIT penalty lands on a
+    * different heavy query per run (dd_scale_10m measured
+    * 14.1/14.5/19.0/46.2 s same-code same-day — BASELINE.md round 9),
+    * and a single unlucky shot would otherwise pose as that query's
+    * cost for the whole round. The max−min spread is recorded next to
+    * the value, so an outlier remains visible in the artifact.
+    * GC hygiene between iterations (the JMH discipline): a heavy
+    * query leaves 10²-10³ MB of just-unpersisted cache blocks and
+    * shuffle buffers dead on the heap, and the NEXT heavy query then
+    * pays the collection inside its own timed wall (dd_scale_10m
+    * measured 13-14s in small subsets vs a consistent 22s after 180
+    * suite queries). Collect OUTSIDE the timed regions, and only
+    * after heavy rows — ~25 collections per suite, not 600. */
+  private[graft] def sample(name: String, timeOnce: () => Double): Sampled = {
+    def run(): (Double, Boolean) = {
+      val before = graft.core.Fs.buildCount
+      val t = timeOnce()
+      if (math.abs(t) >= 3.0) System.gc()
+      (t, graft.core.Fs.buildCount != before)
+    }
+    val (first, built) = run()
+    val builds = if (built && first >= 0) Seq(first) else Nil
+    val t1 = if (builds.isEmpty) first else run() match {
+      case (t, false) => t
+      case (t, true) =>
+        Graft.log.error(s"[bench] $name built a store on two runs in a row")
+        -math.abs(t)
+    }
+    // very heavy rows (≥ 60 s: the 10M crypto rung, the 100k-query
+    // serve) run ONCE — a min-of-2 would double the suite wall for
+    // rows whose cost is intrinsic compute, not cache luck
+    val runs =
+      if (t1 < 0 || t1 >= 60.0) Seq(t1)
+      else if (t1 >= 3.0) Seq(t1, run()._1)
+      else Seq(t1, run()._1, run()._1)
+    runs.find(_ < 0) match {
+      case Some(failed) => Sampled(failed, None, runs, builds)
+      case None =>
+        val value = if (runs.size == 3) runs.sorted.apply(1) else runs.min
+        Sampled(value, Option.when(runs.size > 1)(runs.max - runs.min), runs, builds)
+    }
   }
 }

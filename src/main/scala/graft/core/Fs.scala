@@ -82,9 +82,15 @@ object Fs {
     * path, which [[publishDir]] renames onto `target` — a reader never
     * sees a half-built directory, a failed build leaves no temp behind,
     * and the loser of a cross-process race discards its copy. Builds
-    * in one JVM are serialized. */
+    * in one JVM are serialized and counted ([[buildCount]]). Every
+    * one-time build behind a registry query goes through here — the
+    * committed ANN stores, the quantizer cache, the zk fixture dumps
+    * and the versioned-table fixtures — so a caller that sees the
+    * count move knows one-time work ran (how [[graft.Bench]] keeps it
+    * out of a timed sample). */
   def buildOnce(target: Path)(build: Path => Unit): Unit = buildLock.synchronized {
     if (!Files.exists(target)) {
+      builds += 1
       val tmp = target.resolveSibling(s"${target.getFileName}.tmp-${ProcessHandle.current().pid()}")
       deleteRecursively(tmp.toFile)
       try build(tmp)
@@ -93,6 +99,11 @@ object Fs {
     }
   }
   private object buildLock
+  @volatile private var builds = 0L
+
+  /** builds [[buildOnce]] has started in this JVM, failed ones
+    * included; a directory that already exists is not counted. */
+  def buildCount: Long = builds
 
   /** Hard-link every file under `from` whose path relative to `from`
     * passes `keep` to the same relative path under `to`, creating

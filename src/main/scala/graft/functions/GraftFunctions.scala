@@ -145,16 +145,17 @@ object GraftFunctions {
   def blockLeafHash(blockNumber: Column, blockHash: Column, stateRoot: Column): Column =
     blockLeafHashUdf(blockNumber, blockHash, stateRoot)
 
-  /** SQL registration so every function is usable from spark.sql too. */
+  /** SQL registration of the functions that have no native
+    * expression. The native ones (`keccak256`, `mapping_leaf_hash`,
+    * `mapping_leaf_digest`, …) are injected by
+    * [[graft.expressions.GraftExtensions]]; a UDF of the same name
+    * registered here would replace them in the session. */
   def register(spark: SparkSession): Unit = {
-    spark.udf.register("keccak256", (b: Array[Byte]) => Keccak.keccak256(b))
     spark.udf.register("keccak256_hex", (b: Array[Byte]) => Bytes.toHex(Keccak.keccak256(b)))
     spark.udf.register("left_pad32", (b: Array[Byte]) => Bytes.leftPad32(b))
     spark.udf.register("long_to_bytes32", (v: Long) => Bytes.leftPad32(Bytes.beBytes(v, 8)))
     spark.udf.register("mapping_mpt_key", (k: Array[Byte], s: Int) => StorageKey.mappingMptKey(k, s))
     spark.udf.register("rlp_leaf_value", (n: Array[Byte]) => Rlp.extractLeafValue32(n))
     spark.udf.register("header_number", (h: Array[Byte]) => Rlp.headerFields(h).number)
-    spark.udf.register("mapping_leaf_digest", (k: Array[Byte], v: Array[Byte]) => Commitments.mappingLeafDigest(k, v))
-    spark.udf.register("mapping_leaf_hash", (k: Array[Byte], v: Array[Byte]) => Commitments.mappingLeafHash(k, v))
   }
 }

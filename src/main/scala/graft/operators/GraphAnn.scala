@@ -687,25 +687,26 @@ object GraphAnn {
     * GraphAnnSpec pins the scenario: a planted post-append island is
     * unreachable under the stale entries and exactly-searchable after
     * the refresh. */
-  def refreshEntryLayer(spark: org.apache.spark.sql.SparkSession, store: StoredIndex,
-                        nPlanes: Int = 5, dims: Int = -1): Unit = {
+  def refreshEntryLayer(spark: org.apache.spark.sql.SparkSession, store: StoredIndex): Unit = {
     val live = liveDir(store.dir)
     val fx = spark.read.parquet(s"$live/fx").select("vec_id", "f")
     val edges = spark.read.parquet(s"$live/edges").select("src", "dst")
-    // dims comes from the COMMITTED vectors by default (`dims = -1`),
-    // never a caller guess: a mismatched width null-pads the sign
-    // projection's zip_with, every coarse bucket degenerates to one,
-    // and the refreshed layer silently loses its spread (one tiny
-    // first() against the fx footprint — maintenance path only)
-    val useDims =
-      if (dims > 0) dims
-      else fx.select(size(col("f"))).first().getInt(0)
+    // dims comes from the COMMITTED vectors, never a caller guess: a
+    // mismatched width null-pads the sign projection's zip_with, every
+    // coarse bucket degenerates to one, and the refreshed layer
+    // silently loses its spread (one tiny first() against the fx
+    // footprint — maintenance path only)
+    val dims = fx.select(size(col("f"))).first().getInt(0)
     Fs.publishGeneration(Paths.get(store.dir)) { g =>
       Seq("fx", "edges").foreach(t => Fs.linkTree(live.resolve(t), g.resolve(t))(_ => true))
-      buildEntryLayerConnected(fx, edges, nPlanes, useDims).write.parquet(s"$g/entry")
+      buildEntryLayerConnected(fx, edges, dims = dims).write.parquet(s"$g/entry")
       ""
     }: Unit
   }
+
+  /** chunked-ingest pieces after which the entry layer is refreshed
+    * even when no piece reported an isolated vector. */
+  private val EntryRefreshEvery = 8
 
   /** Ingest an arbitrarily large delta by deterministic RANGE
     * BISECTION into ≤ `pieceCap` pieces: count the id range, recurse
@@ -722,28 +723,17 @@ object GraphAnn {
     * automatically when EITHER (a) any piece reported isolated delta
     * vectors — the island signal: a group that linked only to itself
     * may be a new connected component the committed entries cannot
-    * reach at any budget — or (b) the ingest landed ≥ `refreshEvery`
-    * pieces, catching the gradual reachability drift the isolation
-    * proxy can miss. A production append stream therefore never
-    * strands an island by forgetting the maintenance call
-    * (GraphAnnSpec pins the planted-island scenario with no manual
-    * refresh); pass `autoRefresh = false` — the external-entry-layout
-    * opt-out — and rely on a caller-side schedule if the entry layer
-    * is managed outside this store (BOTH triggers are disabled: an
-    * isolation-triggered refresh would publish a stored layer nobody
-    * reads while the caller's real layer went stale, the exact failure
-    * the opt-out exists to prevent). `entryPlanes`/`entryDims`
-    * parameterize the refreshed layer exactly as [[refreshEntryLayer]]
-    * does; `entryDims = -1` (the default) derives the projection width
-    * from the store's committed vectors rather than trusting a caller
-    * default that may not match the corpus. */
+    * reach at any budget — or (b) the ingest landed ≥
+    * `EntryRefreshEvery` pieces, catching the gradual reachability
+    * drift the isolation proxy can miss. A production append stream
+    * therefore never strands an island by forgetting the maintenance
+    * call (GraphAnnSpec pins the planted-island scenario with no
+    * manual refresh). */
   def appendStoreChunked(spark: org.apache.spark.sql.SparkSession, store: StoredIndex,
                          deltaFx: DataFrame, degree: Int = 16, ef: Int = 48,
                          maxExpand: Int = 80, batch: Int = 8,
                          entryIds: Seq[Long], metric: String = "ip",
-                         pieceCap: Long = GraphDeltaCap, refreshEvery: Int = 8,
-                         entryPlanes: Int = 5, entryDims: Int = -1,
-                         autoRefresh: Boolean = true): Int = {
+                         pieceCap: Long = GraphDeltaCap): Int = {
     // persist: the bisection runs O(tree) counts plus one appendStore
     // per piece — without the cache an expensive upstream plan would
     // re-execute at every node
@@ -770,8 +760,7 @@ object GraphAnn {
       }
       val b = cached.agg(min("vec_id"), max("vec_id")).collect()(0)
       val pieces = if (b.isNullAt(0)) 0 else ingest(b.getLong(0), b.getLong(1))
-      if (autoRefresh && (isolated > 0 || pieces >= refreshEvery))
-        refreshEntryLayer(spark, store, entryPlanes, entryDims)
+      if (isolated > 0 || pieces >= EntryRefreshEvery) refreshEntryLayer(spark, store)
       pieces
     } finally { cached.unpersist(); () }
   }

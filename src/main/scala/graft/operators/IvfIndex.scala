@@ -133,9 +133,16 @@ object IvfIndex {
       .coalesce(1).write.parquet(dir)
   }
 
-  def readModel(spark: SparkSession, dir: String): Model =
-    Model(spark.read.parquet(dir).collect()
+  /** reads the model's parquet files by explicit path: handed a store's
+    * `_model` directory, Spark's source resolution would treat the
+    * `_`-prefixed path as hidden and warn on every read. */
+  def readModel(spark: SparkSession, dir: String): Model = {
+    val files = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty[java.io.File])
+      .map(_.getPath).filter(_.endsWith(".parquet")).sorted
+    require(files.nonEmpty, s"no IVF model at $dir")
+    Model(spark.read.parquet(files.toSeq: _*).collect()
       .map(r => (r.getInt(0), r.getSeq[Float](1).toArray)).sortBy(_._1))
+  }
 
   /** the live generation of the store at `dir`. */
   private final case class Committed(root: Path, data: Path, n: Long, baseline: Double) {

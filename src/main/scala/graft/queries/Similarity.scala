@@ -2242,7 +2242,7 @@ object Similarity {
           // the entry layer itself when the delta may have published
           // an unreachable component — no manual maintenance call
           GraphAnn.appendStoreChunked(s, GraphAnn.StoredIndex(s"$tmp/append", nB), delta,
-            degree = 16, entryIds = entryA, metric = "l2", entryDims = 16)
+            degree = 16, entryIds = entryA, metric = "l2")
           val gB = GraphAnn.buildGraph(fullC, degree = 16, dims = 16).persist()
           GraphAnn.writeStores(fullC, gB, GraphAnn.buildEntryLayerConnected(fullC, gB, dims = 16),
             s"$tmp/rebuild", nB)
@@ -2421,7 +2421,7 @@ object Similarity {
     * FixtureStore.dir discipline): any change to the canon string —
     * corpus formula, sizes, knobs, trainer version, seed — re-keys
     * the store, so a stale cache can never serve a mismatched build. */
-  private def storeTag(canon: String): String =
+  private[queries] def storeTag(canon: String): String =
     graft.core.Bytes.toHex(graft.core.Keccak.keccak256(canon.getBytes("UTF-8")).take(8))
 
   /** Build-once committed store, shared by every committed-store query

@@ -6,6 +6,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
 
 import graft.{QueryDef, Tables}
+import graft.core.Fs
+import graft.sources.VersionedTable
 import graft.queries.Relational._
 
 /** Versioned-table (table-format) registry, split out of
@@ -16,69 +18,65 @@ import graft.queries.Relational._
   */
 object VersionedTables {
 
-  /** versioned-table fixture shared by vt_merge / vt_diff: base commit
-    * (v0) + one MERGE (v1), built once per (session, sfDir) — both
-    * queries read the same deterministic two-version table, so the
-    * transactional build cost is paid once per session, not per query.
-    * One slot, compared by session reference and rebuilt when the
-    * session or sfDir changes (or the session was stopped) — no
-    * unbounded growth, no hash-collision aliasing. */
-  private var vtCached: Option[(SparkSession, String, graft.sources.VersionedTable)] = None
-
-  private def vtFixture(s: SparkSession, d: String): graft.sources.VersionedTable = synchronized {
-    vtCached match {
-      case Some((sess, dir, vt)) if (sess eq s) && dir == d && !sess.sparkContext.isStopped => vt
-      case _ =>
-        val vt = buildVtFixture(s, d)
-        vtCached = Some((s, d, vt))
-        vt
-    }
+  /** A two-version fixture table — a v0 commit and one MERGE (v1) —
+    * as a build-once directory under `target/vtstore`
+    * ([[graft.core.Fs.buildOnce]]): the transactional build is the
+    * one-time commit cost a deployment pays once, so it runs once per
+    * key, not per query or session, and [[graft.Bench]] sees it in the
+    * build count and keeps it out of the timed samples. `canon` folds
+    * in every input of the build (the storeTag discipline of the ANN
+    * stores), so a changed rule re-keys the directory instead of
+    * serving a stale table. A [[VersionedTable]] handle
+    * holds no state, so each call opens a fresh one; every query body
+    * below only reads the table. */
+  private def vtStore(s: SparkSession, kind: String, canon: String, nBuckets: Int)
+                     (build: VersionedTable => Unit): VersionedTable = {
+    val dir = new java.io.File(s"target/vtstore/${kind}_${Similarity.storeTag(canon)}").getAbsolutePath
+    Fs.buildOnce(java.nio.file.Paths.get(dir))(tmp => build(new VersionedTable(s, tmp.toString, nBuckets)))
+    new VersionedTable(s, dir, nBuckets)
   }
 
-  /** session-scoped transactional SCALE fixture: the v0 commit (n
-    * synthetic rows) + the 10% MERGE (v1), built ONCE per
-    * (session, n) — the ss-family warm-store discipline
-    * ([[graft.Bench]] pre-commits the ANN stores so the timed pass
-    * measures serving, not one-time index construction) applied to
-    * the table format. The build is the one-time commit cost every
-    * deployment pays exactly once; what the scale rows must prove
-    * REPEATABLY is the O(delta) side — CDC classification, MV
-    * advance, zone-map-pruned serving reads — and that is what the
-    * timed query body measures. Build walls are recorded separately
-    * in BASELINE.md. Two slots ever (the 300k and 3M rungs);
-    * stopped-session entries are pruned on access so a test-suite
-    * session churn can't accumulate dead table dirs. */
-  private val vtScaleCached =
-    scala.collection.mutable.Map.empty[(SparkSession, Long, Int), graft.sources.VersionedTable]
-
-  private def vtScaleFixture(s: SparkSession, n: Long, nBuckets: Int): graft.sources.VersionedTable =
-    synchronized {
-      vtScaleCached.filterInPlace { case ((sess, _, _), _) => !sess.sparkContext.isStopped }
-      // nBuckets is part of the key: a future rung reusing an n with a
-      // different bucket count must get its own fixture, not silently
-      // serve one laid out under the wrong bucketing
-      vtScaleCached.getOrElseUpdate((s, n, nBuckets), {
-        val dir = java.nio.file.Files.createTempDirectory(s"vt_scale_$n").toString
-        // the JVMs that reach here (Verify / Bench / test suites) exit
-        // per run; the hook reclaims the ~10² MB of parquet on exit
-        // since the session cache intentionally outlives each query
-        Runtime.getRuntime.addShutdownHook(new Thread(() =>
-          graft.core.Fs.deleteRecursively(new java.io.File(dir))))
-        val vt = new graft.sources.VersionedTable(s, dir, nBuckets = nBuckets)
-        val base = s.range(n).select(col("id").as("k"),
-          (col("id") % 1000).as("grp"), (col("id") % 997).cast("double").as("v"))
-        vt.commit(base, Seq("k"), None, statsCols = Seq("k"))
-        // 10% of keys updated, 2% fresh inserts, 1% deletes
-        val updates = s.range(n / 10).select(
-          (col("id") * 10).as("k"), (col("id") % 1000).as("grp"),
-          lit(-1.0).as("v"), (col("id") % 10 === 9).as("del"))
-          .union(s.range(n, n + n / 50).select(col("id").as("k"),
-            (col("id") % 1000).as("grp"), lit(5.0).as("v"), lit(false).as("del")))
-        vt.merge(updates, Seq("k"), Some(0), deleteCol = Some("del"), statsCols = Seq("k"))
-        vt
-      })
+  /** the fixture behind vt_merge / vt_diff / vt_incr_mv / vt_lookup /
+    * vt_time_travel: `orders` minus every 7th key (v0), then a MERGE
+    * doubling the price of every 3rd key and deleting every 15th (v1).
+    * The oracles restate the same rule in SQL. */
+  private def vtFixture(s: SparkSession, d: String): VersionedTable =
+    vtStore(s, "merge", s"vt_merge|$d|nBuckets=16|base=o_orderkey%7<>0|" +
+      "upd=o_orderkey%3=0:o_totalprice*2|del=o_orderkey%15=0", nBuckets = 16) { vt =>
+      val base = Tables.orders(s, d)
+        .filter(col("o_orderkey") % 7 =!= 0)
+        .select("o_orderkey", "o_custkey", "o_totalprice")
+      vt.commit(base, Seq("o_orderkey"), None)
+      val updates = Tables.orders(s, d)
+        .filter(col("o_orderkey") % 3 === 0)
+        .select(
+          col("o_orderkey"),
+          col("o_custkey"),
+          (col("o_totalprice") * 2).as("o_totalprice"),
+          (col("o_orderkey") % 15 === 0).as("del"))
+      vt.merge(updates, Seq("o_orderkey"), Some(0), deleteCol = Some("del"))
     }
 
+  /** the transactional SCALE fixture: n synthetic rows (v0) and a MERGE
+    * updating 10% of the keys (every 10th of those a delete) and
+    * inserting n/50 fresh ones (v1). What the scale rows prove
+    * repeatably is the O(delta) side — CDC classification, MV advance,
+    * zone-map-pruned serving reads — and that is what the timed query
+    * body measures. */
+  private def vtScaleFixture(s: SparkSession, n: Long, nBuckets: Int): VersionedTable =
+    vtStore(s, "scale", s"vt_scale|n=$n|nBuckets=$nBuckets|base=k<n:grp=k%1000,v=k%997|" +
+      "upd=k%10=0&k<n:v=-1.0|del=k%100=90|ins=n<=k<n+n/50:v=5.0", nBuckets) { vt =>
+      val base = s.range(n).select(col("id").as("k"),
+        (col("id") % 1000).as("grp"), (col("id") % 997).cast("double").as("v"))
+      vt.commit(base, Seq("k"), None, statsCols = Seq("k"))
+      // 10% of keys updated, 2% fresh inserts, 1% deletes
+      val updates = s.range(n / 10).select(
+        (col("id") * 10).as("k"), (col("id") % 1000).as("grp"),
+        lit(-1.0).as("v"), (col("id") % 10 === 9).as("del"))
+        .union(s.range(n, n + n / 50).select(col("id").as("k"),
+          (col("id") % 1000).as("grp"), lit(5.0).as("v"), lit(false).as("del")))
+      vt.merge(updates, Seq("k"), Some(0), deleteCol = Some("del"), statsCols = Seq("k"))
+    }
 
   val all: Seq[QueryDef] = Seq(
     // MERGE (upsert) through the transactional versioned sink: base
@@ -269,7 +267,7 @@ object VersionedTables {
         s.conf.set("spark.sql.adaptive.enabled", "false")
         try {
         val dir = java.nio.file.Files.createTempDirectory("vt_compact").toString
-        val vt = new graft.sources.VersionedTable(s, dir, nBuckets = 16)
+        val vt = new VersionedTable(s, dir, nBuckets = 16)
         val base = s.range(n).select(col("id").as("k"),
           (col("id") % 100).as("grp"), (col("id") % 97).cast("double").as("v"))
         vt.commit(base, Seq("k"), None, statsCols = Seq("k"))
@@ -299,7 +297,7 @@ object VersionedTables {
           try s2.count() finally s2.close()
         }
         // every read above has collected — reclaim the temp table
-        graft.core.Fs.deleteRecursively(new java.io.File(dir))
+        Fs.deleteRecursively(new java.io.File(dir))
         import s.implicits._
         Seq((n, fragBefore > 1, dirsAfter, sumBefore, sumAfter == sumBefore,
           pruned, pinnedOk, sumPostVacuum == sumBefore, diskDirs))
@@ -343,9 +341,9 @@ object VersionedTables {
     QueryDef(
       name,
       (s, _) => {
-        // the v0 commit + v1 merge come from the session-scoped
-        // fixture (one-time build cost, like the pre-committed ANN
-        // stores); everything BELOW is read-only against the committed
+        // the v0 commit + v1 merge come from the build-once fixture
+        // (one-time build cost, like the pre-committed ANN stores);
+        // everything BELOW is read-only against the committed
         // two-version table, so the row re-runs deterministically
         val vt = vtScaleFixture(s, n, nBuckets)
         val d = vt.diff(Seq("k"), 0, 1)
@@ -379,27 +377,5 @@ object VersionedTables {
               |  CAST(${n / 3} - (SELECT count(*) FROM del WHERE k <= $prunedHi) AS BIGINT) AS n_pruned_read,
               |  TRUE AS mv_ok""".stripMargin),
     )
-  }
-
-
-
-  private def buildVtFixture(s: SparkSession, d: String): graft.sources.VersionedTable = {
-    {
-      val dir = java.nio.file.Files.createTempDirectory("vt_fixture").toString
-      val vt = new graft.sources.VersionedTable(s, dir, nBuckets = 16)
-      val base = Tables.orders(s, d)
-        .filter(col("o_orderkey") % 7 =!= 0)
-        .select("o_orderkey", "o_custkey", "o_totalprice")
-      vt.commit(base, Seq("o_orderkey"), None)
-      val updates = Tables.orders(s, d)
-        .filter(col("o_orderkey") % 3 === 0)
-        .select(
-          col("o_orderkey"),
-          col("o_custkey"),
-          (col("o_totalprice") * 2).as("o_totalprice"),
-          (col("o_orderkey") % 15 === 0).as("del"))
-      vt.merge(updates, Seq("o_orderkey"), Some(0), deleteCol = Some("del"))
-      vt
-    }
   }
 }

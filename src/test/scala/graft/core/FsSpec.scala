@@ -114,6 +114,20 @@ class FsSpec extends AnyFunSuite {
     }
   }
 
+  test("buildOnce: counts a build it starts, not a directory that already exists") {
+    withDir { d =>
+      val target = d.resolve("store")
+      val before = Fs.buildCount
+      Fs.buildOnce(target)(tmp => Files.createDirectories(tmp): Unit)
+      assert(Fs.buildCount == before + 1, "a missing directory is built, and counted")
+      Fs.buildOnce(target)(_ => fail("an existing directory is complete"))
+      assert(Fs.buildCount == before + 1, "an existing directory is not a build")
+      intercept[IllegalStateException](Fs.buildOnce(d.resolve("broken"))(_ =>
+        throw new IllegalStateException("build failed")))
+      assert(Fs.buildCount == before + 2, "a failed build still ran one-time work")
+    }
+  }
+
   test("linkTree: carries the kept files over by hard link, creating their directories") {
     withDir { d =>
       val from = d.resolve("g1")
@@ -134,9 +148,10 @@ class FsSpec extends AnyFunSuite {
     val fs = src.resolve("graft/core/Fs.scala")
     val banned = Seq("renameTo(", "Files.move(", "ATOMIC_MOVE")
     // an in-place partition overwrite is a second write path beside a
-    // store's publish, and a swallowed RuntimeException hides a failed
-    // one — both banned everywhere, Fs included
-    val bannedEverywhere = Seq("partitionOverwriteMode", "case _: RuntimeException => ()")
+    // store's publish, and a swallowed RuntimeException or Throwable
+    // hides a failed one — all banned everywhere, Fs included
+    val bannedEverywhere = Seq("partitionOverwriteMode", "case _: RuntimeException => ()",
+      "case _: Throwable => ()")
     val walk = Files.walk(src)
     val offenders =
       try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).flatMap { p =>

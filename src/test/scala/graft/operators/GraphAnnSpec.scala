@@ -350,10 +350,9 @@ class GraphAnnSpec extends AnyFunSuite with BeforeAndAfterAll {
     // isolation signal and refreshes the entry layer ITSELF; no
     // manual refreshEntryLayer call anywhere in this scenario
     val fxRows = spark.read.parquet(GraphAnn.tablePath(dir, "fx")).count()
-    // entryDims intentionally NOT passed: the gate must derive the
-    // projection width from the committed dims-16 fx, not a caller
-    // default (a 64-wide projection null-pads and collapses the
-    // coarse layer to one bucket)
+    // the gate derives the projection width from the committed
+    // dims-16 fx, not a caller default (a 64-wide projection null-pads
+    // and collapses the coarse layer to one bucket)
     GraphAnn.appendStoreChunked(spark, GraphAnn.StoredIndex(dir, nB),
       islandRows.toDF("vec_id", "f"), degree = 16, entryIds = stale,
       metric = "l2")
@@ -375,7 +374,7 @@ class GraphAnnSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = java.nio.file.Files.createTempDirectory("gann_dims").toString
     val g = GraphAnn.buildGraph(df, degree = 8, dims = 16).persist()
     GraphAnn.writeStores(df, g, df.limit(1).select("vec_id"), dir, nBuckets = 16)
-    // defaults only — no dims hint anywhere
+    // no dims hint anywhere
     GraphAnn.refreshEntryLayer(spark, GraphAnn.StoredIndex(dir, 16))
     val got = GraphAnn.storedEntry(spark, dir).toSet
     val expected = GraphAnn.buildEntryLayerConnected(df, g, nPlanes = 5, dims = 16)

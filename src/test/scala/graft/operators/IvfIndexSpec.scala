@@ -4,6 +4,10 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.core.LogEvent
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -95,6 +99,27 @@ class IvfIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
       IvfIndex.assign(base.unionByName(delta), model), model, q, nprobe = 4, k = 10)
       .select("vec_id").collect().map(_.getLong(0)).toSeq
     assert(got == rebuilt, s"store probe $got != rebuild probe $rebuilt")
+  }
+
+  test("loadModel reads a store's model without Spark's hidden-path warning") {
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet").limit(400)
+    val model = IvfIndex.train(emb, nlist = 4)
+    val dir = Files.createTempDirectory("ivf_model_log").toString
+    IvfIndex.writeStore(IvfIndex.assign(emb, model), model, dir)
+    val logged = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("ivf-model-log", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = logged.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val root = LogManager.getRootLogger.asInstanceOf[org.apache.logging.log4j.core.Logger]
+    root.addAppender(capture)
+    val loaded =
+      try IvfIndex.loadModel(spark, dir)
+      finally { root.removeAppender(capture); capture.stop() }
+    assert(loaded.centroids.map(_._1).toSeq == model.centroids.map(_._1).toSeq)
+    assert(loaded.centroids.zip(model.centroids).forall { case ((_, a), (_, b)) => a.sameElements(b) })
+    assert(!logged.asScala.exists(_.contains("All paths were ignored")), logged.asScala.mkString("\n"))
+    graft.core.Fs.deleteRecursively(new java.io.File(dir))
   }
 
   /** the live generation directory of the store at `dir`. */
