@@ -58,7 +58,7 @@ object FixtureStore {
   }
 
   /** content-fingerprinted location: a fixture change can never serve
-    * a stale dump (same discipline as the zk_ingest_rpc tmp cache). The
+    * a stale dump (same discipline as the zk_ingest_rpc dump). The
     * `published` token keys only directories built by [[ensure]]'s
     * build-once publish, never one written in place. */
   lazy val dir: String = {

@@ -41,7 +41,7 @@ object VersionedTables {
     * doubling the price of every 3rd key and deleting every 15th (v1).
     * The oracles restate the same rule in SQL. */
   private def vtFixture(s: SparkSession, d: String): VersionedTable =
-    vtStore(s, "merge", s"vt_merge|$d|nBuckets=16|base=o_orderkey%7<>0|" +
+    vtStore(s, "merge", s"vt_merge|$d|nBuckets=16|bucket=leading-key|base=o_orderkey%7<>0|" +
       "upd=o_orderkey%3=0:o_totalprice*2|del=o_orderkey%15=0", nBuckets = 16) { vt =>
       val base = Tables.orders(s, d)
         .filter(col("o_orderkey") % 7 =!= 0)
@@ -64,7 +64,7 @@ object VersionedTables {
     * zone-map-pruned serving reads — and that is what the timed query
     * body measures. */
   private def vtScaleFixture(s: SparkSession, n: Long, nBuckets: Int): VersionedTable =
-    vtStore(s, "scale", s"vt_scale|n=$n|nBuckets=$nBuckets|base=k<n:grp=k%1000,v=k%997|" +
+    vtStore(s, "scale", s"vt_scale|n=$n|nBuckets=$nBuckets|bucket=leading-key|base=k<n:grp=k%1000,v=k%997|" +
       "upd=k%10=0&k<n:v=-1.0|del=k%100=90|ins=n<=k<n+n/50:v=5.0", nBuckets) { vt =>
       val base = s.range(n).select(col("id").as("k"),
         (col("id") % 1000).as("grp"), (col("id") % 997).cast("double").as("v"))

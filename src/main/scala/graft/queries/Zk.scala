@@ -861,17 +861,17 @@ object Zk {
       (s, _) => {
         import graft.sources.Eip1186Source
         FixtureStore.ensure(s)
-        // cache key includes a content fingerprint of the fixture
-        // proofs, so a fixture change can never serve a stale dump; the
-        // dump is built once (the directory existing means it is whole)
+        // cache key: the dump writer's format and a content fingerprint
+        // of the fixture proofs, so neither a writer change nor a
+        // fixture change can serve a stale dump; the dump is built once
+        // under target/ (the directory existing means it is whole)
         val tag = {
           val h = graft.core.Keccak.keccak256(
-            Fixtures.storageProofsSeq(cfg).map(p => graft.core.Bytes.toHex(p.mpt_root))
-              .sorted.mkString("|").getBytes("UTF-8"))
+            (Eip1186Source.FixtureDumpFormat +: Fixtures.storageProofsSeq(cfg)
+              .map(p => graft.core.Bytes.toHex(p.mpt_root)).sorted).mkString("|").getBytes("UTF-8"))
           graft.core.Bytes.toHex(h.take(8))
         }
-        val dir = new java.io.File(
-          sys.props("java.io.tmpdir"), s"graft_rpc_dump_once_$tag").getAbsolutePath
+        val dir = new java.io.File(s"target/rpc_dump_$tag").getAbsolutePath
         graft.core.Fs.buildOnce(java.nio.file.Paths.get(dir))(tmp =>
           Eip1186Source.writeFixtureDump(s, tmp.toString, cfg))
         val rows = ZkPipeline.verifyStorageProofs(

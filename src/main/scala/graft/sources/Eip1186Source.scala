@@ -98,6 +98,11 @@ object Eip1186Source {
     "0x" + (if (h.isEmpty) "0" else h)
   }
 
+  /** the format of [[writeFixtureDump]]'s output. A build-once dump is
+    * keyed by it: change it with any change to what the writer emits,
+    * so a dump written the old way is never read. */
+  val FixtureDumpFormat = "eth_getProof-jsonl-v1"
+
   /** serialize the deterministic fixture proofs
     * ([[graft.pipeline.Fixtures.storageProofsSeq]]) as an
     * `eth_getProof` dump — one line per queried slot, mirroring

@@ -7,7 +7,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
-import VersionedTable.{CommitConflict, Manifest}
+import VersionedTable.{CommitConflict, Layout, LayoutMismatch, Manifest}
 
 /** Transactional versioned table — the reference's appendable
   * versioned block DB (`block/mod.rs:152-293`) generalized into the
@@ -15,18 +15,26 @@ import VersionedTable.{CommitConflict, Manifest}
   * reduced to its essentials), for sinks that need concurrent-reader
   * correctness at scale:
   *
-  *   - **Immutable data files**, hash-bucketed by the table key; a
-  *     version only WRITES its dirty buckets and inherits every
-  *     untouched bucket's files from its base manifest — partition-
-  *     level copy-on-write, no full-table rewrite.
+  *   - **Immutable data files**, hash-bucketed by the table key's
+  *     leading column; a version only WRITES its dirty buckets and
+  *     inherits every untouched bucket's files from its base manifest
+  *     — partition-level copy-on-write, no full-table rewrite. Order
+  *     the keys so that the leading column follows how rows arrive:
+  *     the storage DB keys on `(block_number, contract)`, so an append
+  *     of new blocks dirties one bucket per block instead of scattering
+  *     its (block, contract) groups over most buckets.
   *   - **One file per version**: a commit publishes exactly one file,
   *     `v%06d.manifest`, with [[graft.core.Fs.publishFile]] (temp
   *     file, forced to disk, atomic link — never visible empty or
   *     torn, even after a power loss). It holds everything a reader
-  *     needs: the version's schema, the bucket → data directory map
-  *     and the per-bucket zone maps. The no-replace publish doubles as
-  *     optimistic concurrency control — two writers committing the
-  *     same next version race on the name and exactly one wins
+  *     needs: the version's schema, its bucket layout (bucket count and
+  *     bucket column), the bucket → data directory map and the
+  *     per-bucket zone maps. A handle whose layout differs from its
+  *     base's is refused ([[VersionedTable.LayoutMismatch]]) before it
+  *     reads or writes a bucket: it would route rows to the wrong
+  *     buckets. The no-replace publish doubles as optimistic
+  *     concurrency control — two writers committing the same next
+  *     version race on the name and exactly one wins
   *     ([[VersionedTable.CommitConflict]] for the loser). The current
   *     version is the newest manifest on disk; there is no pointer to
   *     reconcile with it.
@@ -80,9 +88,23 @@ class VersionedTable(spark: SparkSession, baseDir: String, nBuckets: Int = 16) {
     * point, so nothing else can name a newer version. */
   def currentVersion(): Option[Int] = versions().lastOption
 
-  /** bucket assignment expression for the table key columns. */
+  /** bucket assignment expression for the table key columns: the
+    * hash of the LEADING key column only, so every row of one leading
+    * value lands in one bucket. For a single-key table this is the
+    * hash of the whole key. */
   def bucketCol(keys: Seq[String]): Column =
-    pmod(xxhash64(keys.map(col): _*), lit(nBuckets.toLong)).cast("int")
+    pmod(xxhash64(col(keys.head)), lit(nBuckets.toLong)).cast("int")
+
+  /** `m` with this handle's layout for `keys`, or [[LayoutMismatch]]:
+    * a base bucketed another way (or recording no layout) would have
+    * its rows routed to the wrong buckets. */
+  private def checked(m: Manifest, v: Int, keys: Seq[String]): Manifest = {
+    val want = Layout(nBuckets, keys.head)
+    if (!m.layout.contains(want))
+      throw new LayoutMismatch(s"table $baseDir: version $v is laid out as " +
+        m.layout.fold("(no layout recorded)")(_.toString) + s", the handle writes $want")
+    m
+  }
 
   private[sources] def readManifest(v: Int): Manifest =
     Manifest.parse(Files.readAllLines(manifestPath(v)).asScala.toSeq)
@@ -196,7 +218,7 @@ class VersionedTable(spark: SparkSession, baseDir: String, nBuckets: Int = 16) {
     */
   def lookup(probe: DataFrame, keys: Seq[String], version: Option[Int] = None): Option[DataFrame] =
     version.orElse(currentVersion()).map { v =>
-      val m = readManifest(v)
+      val m = checked(readManifest(v), v, keys)
       val want = probe.select(bucketCol(keys).as("__b")).distinct()
         .collect().map(_.getInt(0)).toSet
       // no probed bucket holds rows: the empty frame needs no semi join
@@ -237,7 +259,7 @@ class VersionedTable(spark: SparkSession, baseDir: String, nBuckets: Int = 16) {
     val base = currentVersion()
     if (base != expectedBase)
       throw new CommitConflict(s"base moved: expected $expectedBase, found $base")
-    val baseManifest = base.map(readManifest)
+    val baseManifest = base.map(v => checked(readManifest(v), v, keys))
 
     // additive-only evolution: updates may carry NEW columns, but must
     // carry every EXISTING one — otherwise the allowMissingColumns
@@ -331,7 +353,9 @@ class VersionedTable(spark: SparkSession, baseDir: String, nBuckets: Int = 16) {
     val base = currentVersion()
     if (base != expectedBase)
       throw new CommitConflict(s"base moved: expected $expectedBase, found $base")
-    val bm = base.map(readManifest).getOrElse(Manifest(new StructType(), Map.empty, Map.empty))
+    val layout = Layout(nBuckets, keys.head)
+    val bm = base.map(v => checked(readManifest(v), v, keys))
+      .getOrElse(Manifest(new StructType(), Some(layout), Map.empty, Map.empty))
     val next = base.getOrElse(-1) + 1
     // writer-UNIQUE data directory: two writers racing for the same
     // next version must never share a data path — the loser of the
@@ -391,6 +415,7 @@ class VersionedTable(spark: SparkSession, baseDir: String, nBuckets: Int = 16) {
     // buckets simply vanish from the manifest
     val manifest = Manifest(
       schema = if (replace) written else widen(bm.schema, written),
+      layout = Some(layout),
       files = bm.files.filter { case (b, _) => !owned(b) } ++
         (owned & populated).map(b => b -> s"$dataRel/__bucket=$b"),
       zones = bm.zones.filter { case ((b, _), _) => !owned(b) } ++ freshZones)
@@ -526,32 +551,48 @@ object VersionedTable {
     * base, or another writer created the same next version first) */
   final class CommitConflict(msg: String) extends RuntimeException(msg)
 
+  /** thrown, before anything is read or written, to a write or lookup
+    * whose handle lays rows out differently from its base version (a
+    * different bucket count or bucket column), or whose base records
+    * no layout. Retrying cannot help: open the table with its layout. */
+  final class LayoutMismatch(msg: String) extends RuntimeException(msg)
+
+  /** how rows map to buckets: `pmod(xxhash64(column), nBuckets)`. */
+  private[sources] final case class Layout(nBuckets: Int, column: String) {
+    override def toString: String = s"pmod(xxhash64($column), $nBuckets)"
+  }
+
   /** how many times [[VersionedTable.retrying]] runs a losing commit. */
   private val CommitAttempts = 5
 
   /** One committed version, as its manifest holds it. The file's first
     * line is the version's schema (`StructType.json`, one compact
-    * line); then one line per populated bucket, in bucket order:
+    * line); the second is its layout, `layout \t nBuckets \t bucket
+    * column`; then one line per populated bucket, in bucket order:
     * `bucket \t data dir`, followed by the bucket's zone maps as
     * `\t column \t min \t max` each. `zones` maps (bucket, column) to
     * the recorded range; a missing entry means "unknown — never
-    * prune". */
-  private[sources] final case class Manifest(schema: StructType, files: Map[Int, String],
+    * prune". A manifest without the layout line parses with no
+    * layout, which every write and lookup refuses. */
+  private[sources] final case class Manifest(schema: StructType, layout: Option[Layout], files: Map[Int, String],
                                              zones: Map[(Int, String), (BigDecimal, BigDecimal)]) {
     def render: Array[Byte] = {
       val buckets = files.toSeq.sortBy(_._1).map { case (b, dir) =>
         val ranges = zones.toSeq.collect { case ((`b`, c), (mn, mx)) => s"\t$c\t$mn\t$mx" }.sorted
         s"$b\t$dir" + ranges.mkString
       }
-      (schema.json +: buckets).mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      val header = schema.json +: layout.toSeq.map(l => s"layout\t${l.nBuckets}\t${l.column}")
+      (header ++ buckets).mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8)
     }
   }
 
   private[sources] object Manifest {
     def parse(lines: Seq[String]): Manifest = {
-      val buckets = lines.tail.filter(_.nonEmpty).map(_.split("\t", -1))
+      val (layoutLines, buckets) = lines.tail.filter(_.nonEmpty).map(_.split("\t", -1))
+        .partition(_(0) == "layout")
       Manifest(
         DataType.fromJson(lines.head).asInstanceOf[StructType],
+        layoutLines.headOption.map(f => Layout(f(1).toInt, f(2))),
         buckets.map(f => f(0).toInt -> f(1)).toMap,
         buckets.flatMap { f =>
           f.drop(2).grouped(3).map { case Array(c, mn, mx) => (f(0).toInt, c) -> (BigDecimal(mn), BigDecimal(mx)) }

@@ -16,7 +16,12 @@ import graft.sources.VersionedTable
   *
   *   - only the dirty groups' hash buckets are read and rewritten —
   *     untouched buckets inherit the previous version's immutable files
-  *     (partition-level copy-on-write, no full-table read or rewrite);
+  *     (partition-level copy-on-write, no full-table read or rewrite).
+  *     The key leads with `block_number` because the table buckets by
+  *     its key's leading column: every group of one block shares a
+  *     bucket, so an append of new blocks reads and rewrites at most
+  *     one bucket per new block, where a (block, contract) hash would
+  *     scatter a block's groups over most of the buckets;
   *   - the manifest publish is atomic, so concurrent readers always
   *     see a consistent snapshot (and can pin/time-travel);
   *   - commit conflicts (another writer landed first) retry against

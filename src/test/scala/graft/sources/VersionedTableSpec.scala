@@ -2,6 +2,8 @@ package graft.sources
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.JobCounter
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -553,5 +555,74 @@ class VersionedTableSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(a.collect().map(_.toString).sorted.sameElements(b.collect().map(_.toString).sorted))
     }
     assert(plans(0).count() == 33 && plans(3).count() == 2)
+  }
+
+  /** every file under `dir` with its size: what a refused call must
+    * leave exactly as it found it. */
+  private def filesUnder(dir: String): Map[String, Long] = {
+    val root = java.nio.file.Paths.get(dir)
+    val walk = Files.walk(root)
+    try walk.iterator().asScala.filter(Files.isRegularFile(_))
+      .map(p => root.relativize(p).toString -> Files.size(p)).toMap
+    finally walk.close()
+  }
+
+  test("a handle laid out differently from its base is refused with LayoutMismatch, changing nothing") {
+    val s2 = spark
+    import s2.implicits._
+    val dir = Files.createTempDirectory("vt-layout").toString
+    val t = new VersionedTable(spark, dir, nBuckets = 8)
+    t.commit(df((0L until 32L).map(i => (i, s"n$i", i))), Seq("k"), None)
+    t.merge(Seq((3L, "UPD", 999L)).toDF("k", "name", "v"), Seq("k"), Some(0))
+    val before = filesUnder(dir)
+    val upd = Seq((5L, "X", 1L)).toDF("k", "name", "v")
+    def refused(what: String)(call: => Any): Unit = {
+      val e = intercept[VersionedTable.LayoutMismatch](call)
+      assert(e.getMessage.contains(dir), s"$what: the error names no table: ${e.getMessage}")
+      assert(t.currentVersion().contains(1), s"$what moved the version")
+      assert(filesUnder(dir) == before, s"$what changed the table's files")
+    }
+    // another bucket count
+    val other = new VersionedTable(spark, dir, nBuckets = 4)
+    refused("merge")(other.merge(upd, Seq("k"), Some(1)))
+    refused("commit")(other.commit(upd, Seq("k"), Some(1)))
+    refused("overwrite")(other.overwrite(upd, Seq("k"), Some(1)))
+    refused("lookup")(other.lookup(upd, Seq("k")))
+    // another bucket column
+    refused("merge keyed by another leading column")(t.merge(upd, Seq("name", "k"), Some(1)))
+
+    // a manifest that records no layout (one written before the field
+    // existed): the hash it was bucketed by is unknown
+    val m1 = java.nio.file.Paths.get(dir, "_manifests", "v000001.manifest")
+    val lines = Files.readAllLines(m1).asScala
+    assert(lines.count(_.startsWith("layout\t")) == 1, s"manifest: $lines")
+    Files.write(m1, lines.filterNot(_.startsWith("layout\t")).asJava)
+    val bare = filesUnder(dir)
+    val e = intercept[VersionedTable.LayoutMismatch](t.merge(upd, Seq("k"), Some(1)))
+    assert(e.getMessage.contains(dir) && e.getMessage.contains("no layout"), e.getMessage)
+    intercept[VersionedTable.LayoutMismatch](t.commit(upd, Seq("k"), Some(1)))
+    intercept[VersionedTable.LayoutMismatch](t.lookup(upd, Seq("k")))
+    assert(t.currentVersion().contains(1) && filesUnder(dir) == bare)
+    // reads need no layout: the snapshot stays readable
+    assert(t.read().get.count() == 32)
+  }
+
+  test("rows are bucketed by the leading key column; a single-key table's buckets are pmod(xxhash64(k), n)") {
+    val s2 = spark
+    import s2.implicits._
+    val keys = Seq(0L, 1L, 7L, 42L, 1000L, 123456789L, -1L, Long.MaxValue)
+    // XXH64 (seed 42) of each key, mod 16: the layout every single-key
+    // table has had, pinned so that it cannot move
+    val pinned = Seq(12, 2, 1, 14, 7, 15, 2, 6)
+    val t = new VersionedTable(spark, Files.createTempDirectory("vt-hash").toString, nBuckets = 16)
+    val ks = keys.toDF("k")
+    assert(ks.select(t.bucketCol(Seq("k"))).as[Int].collect().toSeq == pinned)
+    assert(ks.select(pmod(xxhash64(col("k")), lit(16L)).cast("int")).as[Int].collect().toSeq == pinned)
+    t.commit(keys.map(k => (k, s"n$k", k)).toDF("k", "name", "v"), Seq("k"), None)
+    assert(t.readManifest(0).files.keySet == pinned.toSet)
+    // a composite key is bucketed by its leading column alone: every
+    // row of one leading value shares a bucket
+    val composite = keys.flatMap(k => Seq((k, "a"), (k, "b"), (k, "c"))).toDF("k", "name")
+    assert(composite.select(t.bucketCol(Seq("k", "name"))).as[Int].collect().toSeq == pinned.flatMap(b => Seq(b, b, b)))
   }
 }

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.{FilesRead, JobCounter}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -67,6 +69,44 @@ class StorageDbMaintainerSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
       assert(dirty.size == 1 && populated > 1, s"fixture: dirty $dirty of $populated buckets")
       assert(readBuckets == dirty, s"read buckets $readBuckets, dirty $dirty")
+    } finally Fs.deleteRecursively(new java.io.File(dir))
+  }
+
+  test("an append of new blocks reads and writes only the new blocks' buckets") {
+    val cfg = Fixtures.Cfg(nBlocks = 10)
+    val all = Fixtures.entriesSeq(cfg)
+    val newBlocks = Set(cfg.firstBlock + 8, cfg.firstBlock + 9)
+    val (appended, base) = all.partition(e => newBlocks(e.block_number))
+
+    val dir = java.nio.file.Files.createTempDirectory("sdb_append").toString
+    try {
+      val maintainer = new StorageDbMaintainer(spark, dir)
+      maintainer.processBatch(spark.createDataFrame(base), 0L)
+      val (_, read) = FilesRead.of(spark)(maintainer.processBatch(spark.createDataFrame(appended), 1L))
+      assert(maintainer.currentVersion().contains("v000001"))
+      assert(rows(maintainer.current().get) == rows(ZkPipeline.storageDb(spark.createDataFrame(all))))
+
+      // the buckets blocks' numbers hash into, at most one per block
+      def bucketsOf(es: Seq[Fixtures.Entry]): Set[Int] = spark.createDataFrame(es)
+        .select(pmod(xxhash64(col("block_number")), lit(16L)).cast("int")).distinct()
+        .collect().map(_.getInt(0)).toSet
+      val newBuckets = bucketsOf(appended)
+      val bucketOf = """.*/__bucket=(\d+)/[^/]+$""".r
+      val readBuckets = read.map {
+        case bucketOf(b) => b.toInt
+        case f => fail(s"read a file outside the bucket layout: $f")
+      }
+      // the append reads the base rows that share a new block's bucket,
+      // and nothing else
+      val shared = newBuckets intersect bucketsOf(base)
+      assert(shared.nonEmpty, s"fixture: no base block shares a bucket with $newBuckets")
+      assert(readBuckets == shared, s"read buckets $readBuckets, new blocks' buckets $newBuckets")
+      val written = java.nio.file.Files.list(java.nio.file.Paths.get(dir, "data")).iterator().asScala
+        .filter(_.getFileName.toString.startsWith("v000001-")).toSeq
+      assert(written.size == 1, s"data directories of v1: $written")
+      val writtenBuckets = java.nio.file.Files.list(written.head).iterator().asScala
+        .map(_.getFileName.toString).filter(_.startsWith("__bucket=")).toSeq
+      assert(writtenBuckets.size <= 2, s"the append wrote buckets $writtenBuckets")
     } finally Fs.deleteRecursively(new java.io.File(dir))
   }
 
