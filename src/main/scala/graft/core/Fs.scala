@@ -16,14 +16,13 @@ import scala.jdk.CollectionConverters._
   * `root/g<N>/` plus one caller payload line, so a whole store switches
   * with a single rename and a crash at any step leaves the old
   * generation live — no recovery step ever runs on read. One writing
-  * handle per root. A published generation is never written again —
-  * the one exception is the near-dup gate's presence-keyed micro-batch
-  * appends — so a writer publishes a new generation and carries
-  * unchanged data over from the live one with [[linkTree]] (hard links:
-  * no data copy). Build-once stores ([[buildOnce]]: the committed query
-  * stores, the fixture dumps, the quantizer cache's entries) are built
-  * whole in a temp directory and renamed into place, so their directory
-  * existing means the build finished.
+  * handle per root. A published generation is never written again, so
+  * every write publishes a new generation and carries unchanged data
+  * over from the live one with [[linkTree]] (hard links: no data copy).
+  * Build-once stores ([[buildOnce]]: the committed query stores, the
+  * fixture dumps, the quantizer cache's entries) are built whole in a
+  * temp directory and renamed into place, so their directory existing
+  * means the build finished.
   */
 object Fs {
 

@@ -132,7 +132,7 @@ object StreamIngest {
     // arrival-ordered micro-batches; each batch is gated by
     // directory-PRUNED store probes (pigeonhole block equi-join +
     // hamming ≤ 3 for near, content hash for exact) plus batch-local
-    // earlier-arrival comparison, and its signatures append into the
+    // earlier-arrival comparison, and its signatures land in the
     // same layout — the write-time routing key is the read-time
     // index, so a batch of B docs reads ≤ min(4B, NBuckets) store
     // dirs, never the whole store. Verdicts depend only on the arrival

@@ -430,40 +430,22 @@ class VersionedTable(spark: SparkSession, baseDir: String, nBuckets: Int = 16) {
     next
   }
 
-  /** CDC read: the row-level changes between two committed versions,
-    * classified `insert` / `delete` / `update`. Only buckets whose
-    * manifest entry CHANGED between the versions are read — untouched
-    * buckets are byte-identical files, so they provably hold no
-    * changes. Inside the changed buckets a full-outer join on the key
-    * separates inserted (no pre image), deleted (no post image),
-    * updated (both, differing), and untouched rows (both, equal —
-    * dropped). Emits the post image for insert/update and the pre
-    * image for delete, plus a `change_type` column.
+  /** CDC read with BOTH images: the row-level changes between two
+    * committed versions. Only buckets whose manifest entry CHANGED
+    * between the versions are read — untouched buckets are
+    * byte-identical files, so they provably hold no changes. Inside the
+    * changed buckets a full-outer join on the key separates inserted
+    * (no pre image: `insert`, post image), deleted (no post image:
+    * `delete`, pre image), updated (both, differing: two rows,
+    * `update_preimage` with the old values and `update_postimage` with
+    * the new) and untouched rows (both, equal — dropped). This is the
+    * contract incremental consumers need to RETRACT old contributions
+    * and ADD new ones (e.g. maintaining an aggregate materialized view
+    * by delta application instead of recompute): every change row
+    * carries a well-defined sign.
     *
     * At scale this is the incremental-consumer contract: a downstream
     * job reads O(changed buckets), not O(table), per version step.
-    */
-  def diff(keys: Seq[String], fromVersion: Int, toVersion: Int): DataFrame = {
-    val (j, dataCols) = changedImages(keys, fromVersion, toVersion)
-    val changeType = when(col("__pre").isNull, "insert")
-      .when(col("__post").isNull, "delete")
-      // null-safe struct compare: a changed-to/from-NULL field is a
-      // change, not a no-op
-      .when(!(col("__pre") <=> col("__post")), "update")
-    val img = when(col("__post").isNull, col("__pre")).otherwise(col("__post"))
-    j.withColumn("change_type", changeType)
-      .filter(col("change_type").isNotNull)
-      .select(keys.map(col) ++ dataCols.map(c => img.getField(c).as(c)) :+ col("change_type"): _*)
-  }
-
-  /** CDC read with BOTH images: like [[diff]], but an update emits two
-    * rows — `update_preimage` (old values) and `update_postimage` (new
-    * values) — alongside `insert` (post) and `delete` (pre). This is
-    * the contract incremental consumers need to RETRACT old
-    * contributions and ADD new ones (e.g. maintaining an aggregate
-    * materialized view by delta application instead of recompute):
-    * every change row carries a well-defined sign. Reads the same
-    * changed-buckets-only set as [[diff]].
     */
   def cdc(keys: Seq[String], fromVersion: Int, toVersion: Int): DataFrame = {
     val (j, dataCols) = changedImages(keys, fromVersion, toVersion)
@@ -471,12 +453,21 @@ class VersionedTable(spark: SparkSession, baseDir: String, nBuckets: Int = 16) {
       struct((dataCols.map(c => img.getField(c).as(c)) :+ lit(tpe).as("change_type")): _*)
     val events = when(col("__pre").isNull, array(event(col("__post"), "insert")))
       .when(col("__post").isNull, array(event(col("__pre"), "delete")))
+      // null-safe struct compare: a changed-to/from-NULL field is a
+      // change, not a no-op
       .when(!(col("__pre") <=> col("__post")),
         array(event(col("__pre"), "update_preimage"), event(col("__post"), "update_postimage")))
     j.withColumn("__ev", explode(events))
       .select(keys.map(col) ++ dataCols.map(c => col("__ev").getField(c).as(c))
         :+ col("__ev").getField("change_type").as("change_type"): _*)
   }
+
+  /** [[cdc]] with one row per changed key: `insert` and `update` carry
+    * the post image, `delete` the pre image. */
+  def diff(keys: Seq[String], fromVersion: Int, toVersion: Int): DataFrame =
+    cdc(keys, fromVersion, toVersion).filter(col("change_type") =!= "update_preimage")
+      .withColumn("change_type",
+        when(col("change_type") === "update_postimage", "update").otherwise(col("change_type")))
 
   /** shared by [[diff]]/[[cdc]]: full-outer key join of the pre/post
     * images of ONLY the buckets whose manifest entry changed. */
@@ -524,12 +515,7 @@ class VersionedTable(spark: SparkSession, baseDir: String, nBuckets: Int = 16) {
     val all = versions()
     val (drop, keep) = all.splitAt(math.max(0, all.size - keepVersions))
     val live = keep.flatMap(v => readManifest(v).files.values).toSet
-    def deleteDir(rel: String): Unit = {
-      val dir = Paths.get(baseDir, rel)
-      if (Files.exists(dir)) {
-        Files.walk(dir).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-      }
-    }
+    def deleteDir(rel: String): Unit = graft.core.Fs.deleteRecursively(Paths.get(baseDir, rel).toFile)
     // data paths are per-version bucket dirs; delete dead ones
     (drop.flatMap(v => readManifest(v).files.values).toSet -- live).foreach(deleteDir)
     drop.foreach(v => Files.deleteIfExists(manifestPath(v)))
@@ -537,10 +523,12 @@ class VersionedTable(spark: SparkSession, baseDir: String, nBuckets: Int = 16) {
       val dataRoot = Paths.get(baseDir, "data")
       if (Files.exists(dataRoot)) {
         val referencedDirs = live.map(_.split("/__bucket=")(0))
-        Files.list(dataRoot).iterator().asScala.toSeq
+        val ls = Files.list(dataRoot)
+        try ls.iterator().asScala.toSeq
           .map(p => "data/" + p.getFileName.toString)
           .filterNot(referencedDirs.contains)
           .foreach(deleteDir)
+        finally ls.close()
       }
     }
   }

@@ -69,7 +69,7 @@ object StreamingChunkDedup {
     (bb.getLong, bb.getLong)
   }
 
-  /** shared per-group fold: the first (doc_id, idx)-ordered occurrence
+  /** per-group fold: the first (doc_id, idx)-ordered occurrence
     * of a never-filed chunk is kept; the retention lease renews on
     * every observation. */
   private def fold(stateTtl: Option[java.time.Duration])(
@@ -95,34 +95,22 @@ object StreamingChunkDedup {
       out.iterator
     }
 
-  /** one row per chunk occurrence: (doc_id, idx, keep). By default the
-    * state (and the shuffle) is keyed by [[contentKey]]; pass
-    * `hashKeys = false` for the raw-string keying — kept only so the
-    * spec can measure the resident-state saving against it. */
-  def keeps(docs: Dataset[Doc], stateTtl: Option[java.time.Duration] = None,
-            hashKeys: Boolean = true): DataFrame = {
+  /** one row per chunk occurrence: (doc_id, idx, keep). The state
+    * (and the shuffle) is keyed by [[contentKey]]. */
+  def keeps(docs: Dataset[Doc], stateTtl: Option[java.time.Duration] = None): DataFrame = {
     import docs.sparkSession.implicits._
     val timeoutConf =
       if (stateTtl.isDefined) GroupStateTimeout.ProcessingTimeTimeout
       else GroupStateTimeout.NoTimeout
-    val keyed =
-      if (hashKeys)
-        docs.flatMap(chunksOf _)
-          // the chunk text is dropped BEFORE the shuffle: both the
-          // exchange payload and the state key carry 16 hash bytes
-          .map { o => val (a, b) = contentKey(o.chunk); HashedOcc(a, b, o.doc_id, o.idx) }
-          .groupByKey(o => (o.k1, o.k2))
-          .flatMapGroupsWithState[ChunkState, KeepRow](OutputMode.Append, timeoutConf) {
-            (_: (Long, Long), it: Iterator[HashedOcc], state: GroupState[ChunkState]) =>
-              fold(stateTtl)(it.map(o => (o.doc_id, o.idx)), state)
-          }
-      else
-        docs.flatMap(chunksOf _)
-          .groupByKey(_.chunk)
-          .flatMapGroupsWithState[ChunkState, KeepRow](OutputMode.Append, timeoutConf) {
-            (_: String, it: Iterator[ChunkOcc], state: GroupState[ChunkState]) =>
-              fold(stateTtl)(it.map(o => (o.doc_id, o.idx)), state)
-          }
-    keyed.toDF()
+    docs.flatMap(chunksOf _)
+      // the chunk text is dropped BEFORE the shuffle: both the
+      // exchange payload and the state key carry 16 hash bytes
+      .map { o => val (a, b) = contentKey(o.chunk); HashedOcc(a, b, o.doc_id, o.idx) }
+      .groupByKey(o => (o.k1, o.k2))
+      .flatMapGroupsWithState[ChunkState, KeepRow](OutputMode.Append, timeoutConf) {
+        (_: (Long, Long), it: Iterator[HashedOcc], state: GroupState[ChunkState]) =>
+          fold(stateTtl)(it.map(o => (o.doc_id, o.idx)), state)
+      }
+      .toDF()
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.Paths
+import java.nio.file.{Path, Paths}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -37,24 +37,27 @@ import graft.core.Fs
   * signatures, content hash for exact), so a micro-batch of B docs
   * reads ≤ min(4B, [[NBuckets]]) signature dirs and ≤ min(B,
   * [[NBuckets]]) hash dirs — directory-pruned point lookups, never a
-  * full-store scan; appends land in the same layout. The write-time
+  * full-store scan; each batch's rows land in the same layout. The write-time
   * routing key IS the read-time index (the IvfIndex store
   * discipline). Everything seen is indexed — kept or dropped —
   * because "have I seen this before" must include previously dropped
   * arrivals.
   *
-  * Replay safety: probes exclude candidates at `seq` ≥ the probe's
-  * own (a retried micro-batch finds its own first-run rows at EQUAL
-  * seq and ignores them — verdicts recompute identically), the store
-  * append drops ids already present (no duplicate store rows), and
-  * the verdict sink overwrites per batch id (no duplicate verdicts).
-  * Both stores live in one generation under a
+  * Replay safety: both stores live in one generation under a
   * [[graft.core.Fs.publishGeneration]] pointer (`root/CURRENT` →
-  * `root/g<N>/{sig,hash}`): micro-batches append into the live
-  * generation, while [[bootstrap]] and [[compactStore]] each publish
-  * a new one, so both stores switch with a single rename and a crash
-  * at any point leaves a complete generation live — no recovery step
-  * runs before a micro-batch.
+  * `root/g<N>/{sig,hash}`), and every write — [[bootstrap]], each
+  * micro-batch, [[compactStore]] — publishes a new one, so both stores
+  * switch with a single rename and a crash at any step leaves a
+  * complete generation live. The pointer's payload is the store's
+  * mark: the highest `seq` it indexes. A micro-batch wholly at or
+  * below the mark is a replay — its verdicts recompute identically
+  * (probes exclude candidates at `seq` ≥ the probe's own, so its own
+  * first-run rows are ignored) and nothing is published; a batch
+  * wholly above it is indexed and publishes the new mark; a batch
+  * that straddles it breaks the arrival-order contract and is refused
+  * ([[OutOfOrderBatch]]) before anything is written. The verdict sink
+  * overwrites per batch id, so a redelivered batch leaves no duplicate
+  * verdicts either. No recovery step runs before a micro-batch.
   */
 object StreamingNearDup {
 
@@ -89,35 +92,52 @@ object StreamingNearDup {
     docs.select(col("doc_id"), col("seq"), col("h"))
       .withColumn("bucket", bucketOf(col("h")))
 
-  /** partitioned store write: repartition ON the partition column
-    * first so each bucket's rows land in ONE task = one file per
-    * bucket per write — without it every input partition opens a
-    * file in every bucket dir it touches (measured ~2k files for an
-    * 18k-row store at 32 tasks × 64 dirs before this fix, with the
-    * probes then paying the listing on every micro-batch). */
-  private def writeStore(rows: DataFrame, dir: String, mode: String): Unit =
-    rows.repartition(col("bucket"))
-      .write.mode(mode).partitionBy("bucket").parquet(dir)
+  /** partitioned store write into a new generation's empty `dir`:
+    * repartition ON the partition column first so each bucket's rows
+    * land in ONE task = one file per bucket per write — without it
+    * every input partition opens a file in every bucket dir it touches
+    * (measured ~2k files for an 18k-row store at 32 tasks × 64 dirs
+    * before this fix, with the probes then paying the listing on every
+    * micro-batch). */
+  private def writeStore(rows: DataFrame, dir: String): Unit =
+    rows.repartition(col("bucket")).write.partitionBy("bucket").parquet(dir)
 
-  /** the live generation of the stores under `root` — `sig` and
-    * `hash` live side by side in it, so every publish switches both
-    * with one pointer swap. */
-  private def liveGeneration(root: String): String =
-    Fs.currentGeneration(Paths.get(root)).map(_.dir(Paths.get(root)).toString)
+  /** thrown, before anything is written, to a micro-batch whose `seq`
+    * range straddles the store's mark: part of it is indexed and part
+    * is not, so it is neither a replay nor the next batch in arrival
+    * order. */
+  final class OutOfOrderBatch(msg: String) extends RuntimeException(msg)
+
+  /** the live generation of the stores under `root` — `sig` and `hash`
+    * live side by side in it — and its mark, the highest `seq` the
+    * stores index (`Long.MinValue` for none). A generation whose
+    * payload is not a mark is refused. */
+  private def live(root: String): (Path, Long) = {
+    val r = Paths.get(root)
+    val g = Fs.currentGeneration(r)
       .getOrElse(throw new IllegalStateException(s"no near-dup store at $root (bootstrap first)"))
+    val mark = g.payload.toLongOption.getOrElse(throw new IllegalStateException(
+      s"near-dup store $root: generation ${g.n} records no seq mark (payload '${g.payload}')"))
+    (g.dir(r), mark)
+  }
 
-  /** the live generation's `sub` store directory (`sig` or `hash`). */
-  def storeDir(root: String, sub: String): String = s"${liveGeneration(root)}/$sub"
+  /** the live generation's `sub` store directory (`sig` or `hash`). A
+    * frame read from it is valid until the next write. */
+  def storeDir(root: String, sub: String): String = live(root)._1.resolve(sub).toString
 
   /** commit the already-ingested corpus as the initial store state —
     * the one batch pass over the past; the stream is O(delta) after.
-    * Publishes a new generation holding both stores. */
-  def bootstrap(corpus: DataFrame, root: String): Unit =
+    * Publishes a new generation holding both stores, marked with the
+    * corpus's largest `seq`. */
+  def bootstrap(corpus: DataFrame, root: String): Unit = {
+    val mark = Option(corpus.agg(max(col("seq").cast(LongType))).head().get(0))
+      .fold(Long.MinValue)(_.asInstanceOf[Long])
     Fs.publishGeneration(Paths.get(root)) { g =>
-      writeStore(sigRows(corpus), s"$g/sig", "overwrite")
-      writeStore(hashRows(corpus), s"$g/hash", "overwrite")
-      ""
+      writeStore(sigRows(corpus), s"$g/sig")
+      writeStore(hashRows(corpus), s"$g/hash")
+      mark.toString
     }: Unit
+  }
 
   val SigSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType), StructField("seq", LongType),
@@ -141,106 +161,91 @@ object StreamingNearDup {
     s.read.schema(schema).parquet(dir).filter(col("bucket").isin(buckets: _*))
 
   /** Gate one micro-batch `(doc_id, seq, h, simhash)` against the
-    * store, append its rows, and return its verdict frame
-    * `(doc_id, verdict, match_id)` — materialized (localCheckpoint),
-    * so it stays valid after later batches mutate the store. */
+    * store and return its verdict frame `(doc_id, verdict, match_id)`
+    * — materialized (localCheckpoint), so it stays valid after later
+    * writes replace the generation it read. A batch above the store's
+    * mark publishes one new generation: the live one's files linked,
+    * the batch's `sig` and `hash` rows written beside them, and the
+    * batch's largest `seq` as the new mark. A replay (every `seq` at or
+    * below the mark) publishes nothing; a batch straddling the mark is
+    * refused with [[OutOfOrderBatch]]. */
   def processBatch(s: SparkSession, batch: DataFrame, root: String): DataFrame = {
-    val gen = liveGeneration(root)
+    val (gen, mark) = live(root)
     // a micro-batch is small by definition — collapse it to a few
     // partitions so the dozen downstream jobs don't each pay 32-task
     // scheduling for a handful of rows
     val b = batch.select("doc_id", "seq", "h", "simhash").coalesce(4).persist()
     val bs = sigRows(b).persist()
     val bh = hashRows(b).persist()
-    // ONE job collects both probe-bucket lists (≤ 2·NBuckets ints)
-    val bks = bs.select(lit("s").as("t"), col("bucket"))
-      .unionByName(bh.select(lit("h").as("t"), col("bucket")))
-      .distinct().collect()
-    val sigBuckets = bks.collect { case r if r.getString(0) == "s" => r.getInt(1) }.toSeq
-    val hashBuckets = bks.collect { case r if r.getString(0) == "h" => r.getInt(1) }.toSeq
+    try {
+      // ONE job collects both probe-bucket lists (≤ 2·NBuckets rows)
+      // and the batch's seq range (every doc has a hash row)
+      val bks = bs.select(lit("s").as("t"), col("bucket"), col("seq"))
+        .unionByName(bh.select(lit("h").as("t"), col("bucket"), col("seq")))
+        .groupBy("t", "bucket").agg(min("seq"), max("seq")).collect()
+      val sigBuckets = bks.collect { case r if r.getString(0) == "s" => r.getInt(1) }.toSeq
+      val hashBuckets = bks.collect { case r if r.getString(0) == "h" => r.getInt(1) }.toSeq
+      val lo = bks.map(_.getLong(2)).minOption.getOrElse(Long.MaxValue)
+      val hi = bks.map(_.getLong(3)).maxOption.getOrElse(Long.MinValue)
+      if (lo <= mark && hi > mark)
+        throw new OutOfOrderBatch(s"near-dup store $root: batch seq [$lo, $hi] straddles the mark $mark")
 
-    val probeSide = bs.select(col("doc_id"), col("seq"),
-      sigInt(col("simhash")).as("ia"), col("k"), col("blk"))
-    // one pruned sig-store read serves BOTH the near probe and the
-    // sig append's presence check (mirrors the hash-store reuse below)
-    val storeSig = probeStore(s, s"$gen/sig", sigBuckets, SigSchema).persist()
-    val storeSide = storeSig
-      .select(col("doc_id").as("cid"), col("seq").as("cseq"),
+      val probeSide = bs.select(col("doc_id"), col("seq"),
+        sigInt(col("simhash")).as("ia"), col("k"), col("blk"))
+      val storeSide = probeStore(s, gen.resolve("sig").toString, sigBuckets, SigSchema)
+        .select(col("doc_id").as("cid"), col("seq").as("cseq"),
+          sigInt(col("simhash")).as("ib"), col("k"), col("blk"))
+      val localSide = bs.select(col("doc_id").as("cid"), col("seq").as("cseq"),
         sigInt(col("simhash")).as("ib"), col("k"), col("blk"))
-    val localSide = bs.select(col("doc_id").as("cid"), col("seq").as("cseq"),
-      sigInt(col("simhash")).as("ib"), col("k"), col("blk"))
-    // near candidates = block-mates strictly earlier by seq, from the
-    // store (corpus + prior batches) and from this batch itself; a
-    // doc in c candidate pairs is Hamming-checked c times but each
-    // check is 32 char compares — the blocking is what bounds c.
-    // Batch sides are broadcast: the STORE is the big side and must
-    // only be map-joined, never shuffled — at scale this is the whole
-    // point of the probe (matches, not the store, hit the shuffle)
-    val near = broadcast(probeSide).join(storeSide, Seq("k", "blk"))
-      .unionByName(broadcast(probeSide).join(localSide, Seq("k", "blk")))
-      .filter(col("cseq") < col("seq"))
-      // no distinct: a pair found via several blocks is Hamming-checked
-      // once per block (one xor+popcount), which is cheaper than the
-      // extra shuffle a dedup stage would cost — and min(cid) is
-      // insensitive to duplicates
-      .select("doc_id", "cid", "ia", "ib")
-      .filter(expr("bit_count(ia ^ ib)") <= 3)
-      .groupBy("doc_id").agg(min("cid").as("nm"))
+      // near candidates = block-mates strictly earlier by seq, from the
+      // store (corpus + prior batches) and from this batch itself; a
+      // doc in c candidate pairs is Hamming-checked c times but each
+      // check is 32 char compares — the blocking is what bounds c.
+      // Batch sides are broadcast: the STORE is the big side and must
+      // only be map-joined, never shuffled — at scale this is the whole
+      // point of the probe (matches, not the store, hit the shuffle)
+      val near = broadcast(probeSide).join(storeSide, Seq("k", "blk"))
+        .unionByName(broadcast(probeSide).join(localSide, Seq("k", "blk")))
+        .filter(col("cseq") < col("seq"))
+        // no distinct: a pair found via several blocks is Hamming-checked
+        // once per block (one xor+popcount), which is cheaper than the
+        // extra shuffle a dedup stage would cost — and min(cid) is
+        // insensitive to duplicates
+        .select("doc_id", "cid", "ia", "ib")
+        .filter(expr("bit_count(ia ^ ib)") <= 3)
+        .groupBy("doc_id").agg(min("cid").as("nm"))
 
-    // one pruned hash-store read serves BOTH the exact probe and the
-    // append's presence check (a second listing of the same dirs
-    // would double the per-batch file-system cost)
-    val storeHash = probeStore(s, s"$gen/hash", hashBuckets, HashSchema).persist()
-    val probeH = bh.select(col("doc_id"), col("seq"), col("h"))
-    val exact = broadcast(probeH).join(
-        storeHash.select(col("doc_id").as("cid"), col("seq").as("cseq"), col("h")), Seq("h"))
-      .unionByName(broadcast(probeH).join(
-        bh.select(col("doc_id").as("cid"), col("seq").as("cseq"), col("h")), Seq("h")))
-      .filter(col("cseq") < col("seq"))
-      .groupBy("doc_id").agg(min("cid").as("em"))
+      val probeH = bh.select(col("doc_id"), col("seq"), col("h"))
+      val exact = broadcast(probeH).join(
+          probeStore(s, gen.resolve("hash").toString, hashBuckets, HashSchema)
+            .select(col("doc_id").as("cid"), col("seq").as("cseq"), col("h")), Seq("h"))
+        .unionByName(broadcast(probeH).join(
+          bh.select(col("doc_id").as("cid"), col("seq").as("cseq"), col("h")), Seq("h")))
+        .filter(col("cseq") < col("seq"))
+        .groupBy("doc_id").agg(min("cid").as("em"))
 
-    val verdicts = b.select("doc_id")
-      .join(exact, Seq("doc_id"), "left")
-      .join(near, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        when(col("em").isNotNull, "exact_dup")
-          .when(col("nm").isNotNull, "near_dup")
-          .otherwise("keep").as("verdict"),
-        coalesce(col("em"), col("nm"), lit(-1L)).as("match_id"))
-      .localCheckpoint()
+      // materialized before the publish, which deletes the generation
+      // the probes read
+      val verdicts = b.select("doc_id")
+        .join(exact, Seq("doc_id"), "left")
+        .join(near, Seq("doc_id"), "left")
+        .select(col("doc_id"),
+          when(col("em").isNotNull, "exact_dup")
+            .when(col("nm").isNotNull, "near_dup")
+            .otherwise("keep").as("verdict"),
+          coalesce(col("em"), col("nm"), lit(-1L)).as("match_id"))
+        .localCheckpoint()
 
-    // idempotent appends: EACH store's append is presence-keyed on
-    // that store's OWN contents — sig rows on (doc_id, k, simhash),
-    // hash rows on (doc_id, h). Keying both appends on one store left
-    // a crash window: a JVM death between the two writes meant the
-    // redelivered batch re-appended the half that HAD landed (its
-    // rows were absent from the other store's key set), permanently
-    // duplicating store rows. Self-keyed, whichever half survived the
-    // crash excludes itself on replay and the missing half lands.
-    // Presence stays exact under the replay contract (Spark
-    // redelivers micro-batches byte-identical, so a retried row
-    // probes the same pruned bucket and finds itself), and a doc_id
-    // reused with DIFFERENT content is a new observation and gets
-    // indexed — "everything seen is indexed".
-    // canonicalize to the declared store column order before the
-    // append: the using-columns anti-join above front-loads its key
-    // columns, and appending that layout next to bootstrap files
-    // makes the store layout-heterogeneous — a schema-less read's
-    // column order then depends on which file's footer wins, and
-    // compaction (which rewrites through the declared schema)
-    // visibly reorders rows' physical layout.
-    val freshSig = bs.join(
-      storeSig.select("doc_id", "k", "simhash").distinct(),
-      Seq("doc_id", "k", "simhash"), "left_anti")
-      .select(SigSchema.fieldNames.toSeq.map(col): _*)
-    val freshHash = bh.join(
-      storeHash.select("doc_id", "h").distinct(),
-      Seq("doc_id", "h"), "left_anti")
-      .select(HashSchema.fieldNames.toSeq.map(col): _*)
-    writeStore(freshSig, s"$gen/sig", "append")
-    writeStore(freshHash, s"$gen/hash", "append")
-    storeSig.unpersist(); storeHash.unpersist(); bs.unpersist(); bh.unpersist(); b.unpersist()
-    verdicts
+      if (hi > mark)
+        Fs.publishGeneration(Paths.get(root)) { g =>
+          for ((sub, rows) <- Seq("sig" -> bs, "hash" -> bh)) {
+            writeStore(rows, s"$g/$sub")
+            Fs.linkTree(gen.resolve(sub), g.resolve(sub))(_.getNameCount > 1)
+          }
+          hi.toString
+        }: Unit
+      verdicts
+    } finally { bs.unpersist(); bh.unpersist(); b.unpersist() }
   }
 
   /** foreachBatch sink: gate the micro-batch and land its verdicts
@@ -254,23 +259,21 @@ object StreamingNearDup {
     ()
   }
 
-  /** Store maintenance: every append adds one file per touched bucket
-    * dir, so a long-running gate accumulates small files and probe
-    * listings degrade linearly with stream age. Compaction rewrites
-    * both stores into a new generation with the same partition layout
-    * and one file per bucket (content identical — probes before ≡
-    * after, spec-pinned), the VersionedTable-compact discipline
-    * applied here. The pointer swap is the commit point: a crash
-    * before it leaves the old generation live and untouched, so the
-    * next micro-batch needs no recovery step. Single-writer by
+  /** Store maintenance: every micro-batch adds one file per touched
+    * bucket dir, so a long-running gate accumulates small files, and
+    * probe listings and each batch's links grow with stream age.
+    * Compaction rewrites both stores into a new generation with the
+    * same partition layout, one file per bucket and the same mark
+    * (content identical — probes before ≡ after, spec-pinned), the
+    * VersionedTable-compact discipline applied here. Single-writer by
     * contract: the caller schedules compaction between micro-batches
     * (same as any table OPTIMIZE). */
   def compactStore(s: SparkSession, root: String): Unit = {
-    val live = liveGeneration(root)
+    val (gen, mark) = live(root)
     Fs.publishGeneration(Paths.get(root)) { g =>
       for ((sub, schema) <- Seq("sig" -> SigSchema, "hash" -> HashSchema))
-        writeStore(probeStore(s, s"$live/$sub", 0 until NBuckets, schema), s"$g/$sub", "overwrite")
-      ""
+        writeStore(probeStore(s, gen.resolve(sub).toString, 0 until NBuckets, schema), s"$g/$sub")
+      mark.toString
     }: Unit
   }
 }

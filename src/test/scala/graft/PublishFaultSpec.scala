@@ -220,12 +220,14 @@ class PublishFaultSpec extends AnyFunSuite with BeforeAndAfterAll {
     case Row(id: Long, verdict: String, m: Long) => s"$id:$verdict:$m"
   }.sorted.toSeq
 
+  private def gated(root: String): Unit = {
+    StreamingNearDup.bootstrap(docs(corpus), root)
+    StreamingNearDup.processBatch(spark, docs(batch0), root): Unit
+  }
+  private def nextBatch(root: String): Seq[String] =
+    verdicts(StreamingNearDup.processBatch(spark, docs(batch1), root))
+
   test("near-dup bootstrap / compactStore: a fault at any publish leaves one whole generation; the next micro-batch runs as-is") {
-    def gated(root: String) = {
-      StreamingNearDup.bootstrap(docs(corpus), root)
-      StreamingNearDup.processBatch(spark, docs(batch0), root): Unit
-    }
-    val nextBatch = (root: String) => verdicts(StreamingNearDup.processBatch(spark, docs(batch1), root))
     val bootstraps = everyFault[Seq[Seq[String]], Seq[String]](
       setup = gated,
       op = root => StreamingNearDup.bootstrap(docs(corpus.take(1)), root),
@@ -237,6 +239,20 @@ class PublishFaultSpec extends AnyFunSuite with BeforeAndAfterAll {
       view = nearDupView,
       next = nextBatch)
     assert(bootstraps == 3 && compactions == 3)
+  }
+
+  test("near-dup processBatch: a fault at its publish leaves the old or the new generation; the replay leaves the uninterrupted run") {
+    // on the old generation the next call is batch1's first run, on the
+    // new one its replay
+    val batches = everyFault[Seq[Seq[String]], Seq[String]](
+      setup = gated,
+      op = root => StreamingNearDup.processBatch(spark, docs(batch1), root): Unit,
+      view = nearDupView,
+      next = nextBatch)
+    assert(batches == 3, "one pointer publish per micro-batch")
+    val once = withTmp { d => gated(d); (nextBatch(d), nearDupView(d)) }
+    val replayed = withTmp { d => gated(d); nextBatch(d); (nextBatch(d), nearDupView(d)) }
+    assert(replayed == once, "a replayed batch must leave the uninterrupted run's rows and verdicts")
   }
 
   // ------------------------------------------------------------ GraphAnn

@@ -125,6 +125,23 @@ class VersionedTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     intercept[Exception] { t.read(Some(0)).get.count() } // vacuumed away
   }
 
+  test("vacuum with removeOrphans closes its directory listings: repeated calls hold no more descriptors") {
+    val dir = Files.createTempDirectory("vt-fd").toString
+    val t = new VersionedTable(spark, dir, nBuckets = 2)
+    t.commit(df(Seq((1L, "a", 1L), (2L, "b", 2L))), Seq("k"), None)
+    def openFds(): Int = {
+      System.gc()
+      val ls = Files.list(java.nio.file.Paths.get("/proc/self/fd"))
+      try ls.count().toInt finally ls.close()
+    }
+    t.vacuum(1, removeOrphans = true)
+    val before = openFds()
+    (0 until 50).foreach(_ => t.vacuum(1, removeOrphans = true))
+    val after = openFds()
+    assert(after - before < 25, s"open descriptors went $before -> $after over 50 vacuums")
+    assert(t.read().get.count() == 2)
+  }
+
   test("merge: update + insert + delete by key, untouched buckets inherited") {
     val s2 = spark
     import s2.implicits._

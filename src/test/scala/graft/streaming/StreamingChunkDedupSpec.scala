@@ -33,26 +33,22 @@ class StreamingChunkDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select("doc_id", "text").orderBy("doc_id").limit(n).collect()
       .map(r => StreamingChunkDedup.Doc(r.getLong(0), r.getString(1)))
 
-  private def runStream(batches: Seq[Seq[StreamingChunkDedup.Doc]], name: String,
-                        hashKeys: Boolean = true): (org.apache.spark.sql.DataFrame, Long) = {
+  private def runStream(batches: Seq[Seq[StreamingChunkDedup.Doc]], name: String): org.apache.spark.sql.DataFrame = {
     val s = spark
     import s.implicits._
     implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
     val es = MemoryStream[StreamingChunkDedup.Doc]
-    val q = StreamingChunkDedup.keeps(es.toDS(), hashKeys = hashKeys)
+    val q = StreamingChunkDedup.keeps(es.toDS())
       .writeStream.format("memory").queryName(name)
       .outputMode("append").start()
-    val stateBytes =
-      try {
-        batches.foreach { b => es.addData(b); q.processAllAvailable() }
-        q.lastProgress.stateOperators.map(_.memoryUsedBytes).sum
-      } finally q.stop()
-    (spark.table(name), stateBytes)
+    try batches.foreach { b => es.addData(b); q.processAllAvailable() }
+    finally q.stop()
+    spark.table(name)
   }
 
   test("in-order arrival across micro-batches equals the batch d22 per-doc summary") {
     val all = docs(60)
-    val got = runStream(Seq(all.take(20), all.slice(20, 40), all.drop(40)), "scd_in_order")._1
+    val got = runStream(Seq(all.take(20), all.slice(20, 40), all.drop(40)), "scd_in_order")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_chunks"),
         sum(when(col("keep"), 1L).otherwise(0L)).as("n_kept"))
@@ -112,26 +108,11 @@ class StreamingChunkDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally q.stop()
   }
 
-  test("hash-keyed state makes identical keep decisions with less resident state than string keys") {
-    val all = docs(60)
-    val batches = Seq(all.take(20), all.slice(20, 40), all.drop(40))
-    val (hashed, hashedBytes) = runStream(batches, "scd_hashkey", hashKeys = true)
-    val (strung, strungBytes) = runStream(batches, "scd_strkey", hashKeys = false)
-    def snap(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
-    assert(snap(hashed) == snap(strung),
-      "16-byte content keys must not change any keep verdict")
-    assert(hashedBytes < strungBytes,
-      s"hash-keyed state ($hashedBytes B) must be smaller than string-keyed ($strungBytes B)")
-    info(s"resident state: hash-keyed $hashedBytes B vs string-keyed $strungBytes B " +
-      f"(${strungBytes.toDouble / hashedBytes}%.2fx)")
-  }
-
   test("out-of-order arrival still keeps each distinct chunk exactly once") {
     val all = docs(60)
     val shuffled = all.reverse
     val rows = runStream(
-      Seq(shuffled.take(15), shuffled.slice(15, 45), shuffled.drop(45)), "scd_ooo")._1
+      Seq(shuffled.take(15), shuffled.slice(15, 45), shuffled.drop(45)), "scd_ooo")
     val nKept = rows.filter(col("keep")).count()
     val nDistinct = spark.createDataFrame(
       spark.sparkContext.parallelize(all.flatMap(StreamingChunkDedup.chunksOf)))

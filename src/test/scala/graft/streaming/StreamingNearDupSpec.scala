@@ -1,16 +1,24 @@
 package graft.streaming
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.JobCounter
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.Graft
+import graft.core.Fs
 
 /** StreamingNearDup contract: exact/near/keep gate semantics in
   * arrival order, verdicts independent of micro-batch boundaries
   * (1 batch ≡ 3 batches ≡ a real foreachBatch stream), replayed
-  * batches idempotent (same verdicts, no duplicate store rows), and
-  * store probes pruned at the partition-directory level. */
+  * batches idempotent (same verdicts, no duplicate store rows, no new
+  * generation), batches straddling the store's mark refused, and store
+  * probes pruned at the partition-directory level. */
 object StreamingNearDupSpec {
   final case class ND(doc_id: Long, seq: Long, h: String, simhash: String)
 }
@@ -20,13 +28,7 @@ class StreamingNearDupSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var spark: SparkSession = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("streaming-neardup-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    spark = Graft.session("local[4]", 4)
     spark.sparkContext.setLogLevel("WARN")
   }
 
@@ -79,26 +81,43 @@ class StreamingNearDupSpec extends AnyFunSuite with BeforeAndAfterAll {
     v.collect().map(r => r.getLong(0) -> (r.getString(1), r.getLong(2))).toMap
 
   private def withRoot(f: String => Unit): Unit = {
-    val root = java.nio.file.Files.createTempDirectory("neardup_spec").toString
+    val root = Files.createTempDirectory("neardup_spec").toString
     try f(root)
-    finally graft.core.Fs.deleteRecursively(new java.io.File(root))
+    finally Fs.deleteRecursively(new java.io.File(root))
+  }
+
+  private def generation(root: String): Fs.Generation = Fs.currentGeneration(Paths.get(root)).get
+
+  /** every file under `root` with its size. */
+  private def filesUnder(root: String): Seq[(String, Long)] = {
+    val walk = Files.walk(Paths.get(root))
+    try walk.iterator().asScala.filter(Files.isRegularFile(_))
+      .map(p => p.toString -> Files.size(p)).toSeq.sorted
+    finally walk.close()
   }
 
   test("gate semantics in arrival order; replay is idempotent; probes prune") {
     withRoot { root =>
       StreamingNearDup.bootstrap(df(corpus), root)
+      assert(generation(root) == Fs.Generation(1, "-100"), "bootstrap marks the corpus's largest seq")
       val v0 = verdictMap(StreamingNearDup.processBatch(spark, df(batch0), root))
       val v1 = verdictMap(StreamingNearDup.processBatch(spark, df(batch1), root))
       assert(v0 ++ v1 == expected)
+      // each batch publishes one generation marked with its largest seq
+      val published = generation(root)
+      assert(published == Fs.Generation(3, "70"))
 
       val sigRows = spark.read.parquet(StreamingNearDup.storeDir(root, "sig")).count()
       val hashRows = spark.read.parquet(StreamingNearDup.storeDir(root, "hash")).count()
       assert(sigRows == (1 + 7) * 4 && hashRows == 1 + 7)
 
-      // replayed batch: identical verdicts (its own first-run rows sit
-      // at EQUAL seq and are ignored), zero new store rows
+      // replayed batches: identical verdicts (a batch's own first-run
+      // rows sit at EQUAL seq and are ignored), zero new store rows,
+      // and no publish — the generation number does not move
       val r1 = verdictMap(StreamingNearDup.processBatch(spark, df(batch1), root))
       assert(r1 == verdictMap(StreamingNearDup.processBatch(spark, df(batch1), root)) && r1 == v1)
+      assert(verdictMap(StreamingNearDup.processBatch(spark, df(batch0), root)) == v0)
+      assert(generation(root) == published, "a replay must not publish")
       assert(spark.read.parquet(StreamingNearDup.storeDir(root, "sig")).count() == sigRows)
       assert(spark.read.parquet(StreamingNearDup.storeDir(root, "hash")).count() == hashRows)
 
@@ -132,9 +151,10 @@ class StreamingNearDupSpec extends AnyFunSuite with BeforeAndAfterAll {
           .map(d => d.listFiles().count(_.getName.endsWith(".parquet"))).toSeq
       val before = spark.read.parquet(StreamingNearDup.storeDir(root, "sig")).collect().map(_.toString).sorted.toSeq
       // corpus doc 1 and batch0's near-dups share blocks, so shared
-      // bucket dirs hold a bootstrap file AND an append file
+      // bucket dirs hold a bootstrap file AND a batch file
       assert(files("sig").exists(_ > 1))
       StreamingNearDup.compactStore(spark, root)
+      assert(generation(root).payload == "50", "compaction carries the mark forward")
       assert(files("sig").forall(_ <= 1) && files("hash").forall(_ <= 1))
       val after = spark.read.parquet(StreamingNearDup.storeDir(root, "sig")).collect().map(_.toString).sorted.toSeq
       assert(after == before)
@@ -150,7 +170,7 @@ class StreamingNearDupSpec extends AnyFunSuite with BeforeAndAfterAll {
       import s.implicits._
       implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
       val es = MemoryStream[ND]
-      val ckpt = java.nio.file.Files.createTempDirectory("neardup_ckpt").toString
+      val ckpt = Files.createTempDirectory("neardup_ckpt").toString
       val q = es.toDS().toDF()
         .writeStream.option("checkpointLocation", ckpt)
         .foreachBatch(StreamingNearDup.sinkBatch(root) _)
@@ -160,7 +180,7 @@ class StreamingNearDupSpec extends AnyFunSuite with BeforeAndAfterAll {
         es.addData(batch1); q.processAllAvailable()
       } finally {
         q.stop()
-        graft.core.Fs.deleteRecursively(new java.io.File(ckpt))
+        Fs.deleteRecursively(new java.io.File(ckpt))
       }
       assert(verdictMap(spark.read.parquet(s"$root/verdicts")) == expected)
       // a redelivered micro-batch overwrites its own batch_id
@@ -177,7 +197,7 @@ class StreamingNearDupSpec extends AnyFunSuite with BeforeAndAfterAll {
       val s = spark
       import s.implicits._
       implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
-      val ckpt = java.nio.file.Files.createTempDirectory("neardup_kill_ckpt").toString
+      val ckpt = Files.createTempDirectory("neardup_kill_ckpt").toString
       try {
         val es = MemoryStream[ND]
         def startQuery() = es.toDS().toDF()
@@ -189,7 +209,7 @@ class StreamingNearDupSpec extends AnyFunSuite with BeforeAndAfterAll {
         es.addData(batch1)
         q1.stop() // the kill: batch 1 offsets exist, commit may be missing
         // the crash window: the first attempt's SINK write landed
-        // (stores appended, verdicts written) but the checkpoint never
+        // (stores published, verdicts written) but the checkpoint never
         // committed — the restarted stream WILL redeliver batch 1
         StreamingNearDup.sinkBatch(root)(df(batch1), 1L)
         val sigRows = spark.read.parquet(StreamingNearDup.storeDir(root, "sig")).count()
@@ -205,40 +225,47 @@ class StreamingNearDupSpec extends AnyFunSuite with BeforeAndAfterAll {
         assert(spark.read.parquet(StreamingNearDup.storeDir(root, "hash")).count() == hashRows)
         assert(sigRows == (1 + 7) * 4 && hashRows == 1 + 7,
           "post-restart stores must hold exactly the uninterrupted run's rows")
-      } finally graft.core.Fs.deleteRecursively(new java.io.File(ckpt))
+      } finally Fs.deleteRecursively(new java.io.File(ckpt))
     }
   }
 
-  test("a crash between the two store appends self-heals on replay (self-keyed appends)") {
+  test("a batch straddling the store's mark is refused before anything is written") {
     withRoot { root =>
       StreamingNearDup.bootstrap(df(corpus), root)
       StreamingNearDup.processBatch(spark, df(batch0), root)
-      // park a copy of the HASH store, run batch1 (both appends land),
-      // then restore the hash copy — simulating a JVM death after the
-      // sig append but before the hash append
-      val hashDir = new java.io.File(StreamingNearDup.storeDir(root, "hash"))
-      val park = new java.io.File(s"$root/hash.park")
-      copyTree(hashDir, park)
-      val v1 = verdictMap(StreamingNearDup.processBatch(spark, df(batch1), root))
-      val sigAfter = spark.read.parquet(StreamingNearDup.storeDir(root, "sig")).count()
-      val hashAfter = spark.read.parquet(StreamingNearDup.storeDir(root, "hash")).count()
-      graft.core.Fs.deleteRecursively(hashDir)
-      park.renameTo(hashDir)
-      // the redelivered batch must land the MISSING hash rows without
-      // double-appending the sig rows that already survived
-      val v2 = verdictMap(StreamingNearDup.processBatch(spark, df(batch1), root))
-      assert(v2 == v1, "replay verdicts must match the first attempt")
-      assert(spark.read.parquet(StreamingNearDup.storeDir(root, "sig")).count() == sigAfter,
-        "sig rows double-appended after a half-landed batch")
-      assert(spark.read.parquet(StreamingNearDup.storeDir(root, "hash")).count() == hashAfter,
-        "hash rows missing after replay of a half-landed batch")
+      val gen = generation(root)
+      val files = filesUnder(root)
+      // seq 45 is at or below the mark 50, seq 60 and 70 above it
+      val straddle = df(ND(45L, 45L, "h45", sigE) +: batch1)
+      val e = intercept[StreamingNearDup.OutOfOrderBatch](StreamingNearDup.processBatch(spark, straddle, root))
+      assert(e.getMessage.contains(root), e.getMessage)
+      assert(generation(root) == gen && gen.payload == "50")
+      assert(filesUnder(root) == files)
+      // the stream goes on from the unchanged store
+      assert(verdictMap(StreamingNearDup.processBatch(spark, df(batch1), root)) ==
+        batch1.map(d => d.doc_id -> expected(d.doc_id)).toMap)
     }
   }
 
-  private def copyTree(src: java.io.File, dst: java.io.File): Unit = {
-    if (src.isDirectory) {
-      dst.mkdirs()
-      src.listFiles().foreach(f => copyTree(f, new java.io.File(dst, f.getName)))
-    } else java.nio.file.Files.copy(src.toPath, dst.toPath)
+  test("a store whose generation carries no seq mark is refused") {
+    withRoot { root =>
+      StreamingNearDup.bootstrap(df(corpus), root)
+      Fs.publishFile(Paths.get(root, "CURRENT"), "1\n\n".getBytes("UTF-8"), replace = true)
+      val files = filesUnder(root)
+      val e = intercept[IllegalStateException](StreamingNearDup.processBatch(spark, df(batch0), root))
+      assert(e.getMessage.contains(root) && e.getMessage.contains("no seq mark"), e.getMessage)
+      intercept[IllegalStateException](StreamingNearDup.compactStore(spark, root))
+      assert(filesUnder(root) == files)
+    }
+  }
+
+  test("a micro-batch submits no more Spark jobs than it did with presence-checked appends") {
+    withRoot { root =>
+      StreamingNearDup.bootstrap(df(corpus), root)
+      val (_, jobs) = JobCounter.count(spark.sparkContext)(StreamingNearDup.processBatch(spark, df(batch0), root))
+      // 22-23 with the two presence anti-joins and their store persists,
+      // 17 with one publish; one job of slack for adaptive re-planning
+      assert(jobs <= 18, s"processBatch submitted $jobs jobs")
+    }
   }
 }
